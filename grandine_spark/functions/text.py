@@ -178,20 +178,6 @@ def minhash_salt(p: int) -> int:
     return (p * 0x9E3779B97F4A7C15) & ((1 << 60) - 1)
 
 
-def minhash_signature(shingles: Column, n_perm: int = 16) -> list[Column]:
-    """MinHash signatures: sig_p = min over shingles of (h XOR salt_p), with
-    h the md5-derived 60-bit hash (one md5 per shingle total). The XOR family
-    permutes the keyspace per p; md5+conv are identical across Spark/DuckDB →
-    oracle-checkable."""
-    hashes = shingle_hashes(shingles)
-    return [
-        F.array_min(
-            F.transform(hashes, lambda h: h.bitwiseXOR(F.lit(minhash_salt(p))))
-        ).alias(f"mh{p}")
-        for p in range(n_perm)
-    ]
-
-
 def simhash64ish(text: Column, bits: int = 32) -> Column:
     """SimHash over whitespace tokens using the MSB of each md5 hex nibble as
     the bit source (bit b of token t = md5(t)[b] ∈ {8..f}), majority-weighted

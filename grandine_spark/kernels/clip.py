@@ -236,11 +236,6 @@ def _ring_depth(i: int, soup) -> int:
     return depth
 
 
-def _pts_bbox(pts) -> tuple[float, float, float, float]:
-    xs, ys = zip(*pts)
-    return (min(xs), min(ys), max(xs), max(ys))
-
-
 def _cut_soup(soup, axis: int, v: float, sign: float):
     """Cut an even-odd ring soup by the half-plane sign·(p[axis] − v) ≥ 0.
 

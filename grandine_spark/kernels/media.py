@@ -1,14 +1,16 @@
 """Real media codecs in pure stdlib + numpy: PNG (RFC 2083), GIF (87a/89a,
-LZW), baseline JPEG (SOF0), WAV PCM, and uncompressed AVI video.
+LZW), JPEG (baseline SOF0 and progressive SOF2), WAV PCM, and uncompressed
+AVI video.
 
-The container ships no imaging/AV library, but PNG needs only zlib (stdlib)
-plus the five scanline filters, GIF is a palette + a ~100-line LZW, WAV PCM
-/ uncompressed AVI are plain struct parsing, and baseline JPEG is canonical
-huffman tables (read from the stream itself) + an 8x8 DCT matmul — so ALL
-of these formats get REAL decoders (and encoders, used by tests and the
-synthetic-media generator). Progressive JPEG and compressed video (H.264
-etc.) stay honestly stubbed in operators/multimodal.py — those really are
-libraries, not kernels.
+No imaging/AV library is required: PNG needs only zlib (stdlib) plus the
+five scanline filters, GIF is a palette + a ~100-line LZW, WAV PCM /
+uncompressed AVI are plain struct parsing, and JPEG is canonical huffman
+tables (read from the stream itself) + an 8x8 DCT matmul, with progressive
+scans adding spectral selection and successive approximation — so ALL of
+these formats get REAL decoders (and encoders, used by tests and the
+synthetic-media generator). Compressed video (H.264 etc.) and other image
+formats (WebP, TIFF) stay stubbed in operators/multimodal.py — those really
+are libraries, not kernels.
 
 Supported PNG subset (documented, asserted): 8-bit depth, color types
 0 (gray), 2 (RGB), 4 (gray+alpha), 6 (RGBA), no interlace. All five row

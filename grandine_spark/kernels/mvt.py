@@ -1,9 +1,12 @@
 """Mapbox Vector Tile encoding: projection, geometry commands, protobuf.
 
-Exact-semantics port of lib/mvt/project.go + lib/mvt/codec.go with a
-hand-rolled protobuf wire encoder (the vector_tile.proto schema is tiny and
-the `protobuf` package is not available here; wire bytes are identical for
-the same field order, which golang/protobuf emits in field-number order).
+Exact-semantics port of lib/mvt/project.go + lib/mvt/codec.go — the scalar
+encoder and the decoder. The vector_tile.proto messages are written with the
+shared wire helpers of kernels/protowire.py (no `protobuf` dependency; wire
+bytes are identical for the same field order, which golang/protobuf emits in
+field-number order). kernels/mvt_batch.py is the batched encoder the tiler
+runs; it is byte-identical to encode_tile here, which tests use as its
+reference.
 
 DETERMINISM NOTE (SURVEY.md §7): the reference iterates Go maps for layers
 (lib/mvt/codec.go:70) and feature tags (lib/mvt/codec.go:164), so its own
@@ -19,7 +22,17 @@ import math
 
 import numpy as np
 
-from .protowire import unzigzag as _pw_unzigzag, zigzag64 as _pw_zigzag64
+from .protowire import (
+    iter_fields,
+    ld,
+    packed_varints,
+    read_packed,
+    tag,
+    unzigzag,
+    varint,
+    zigzag32,
+    zigzag64,
+)
 
 from . import clip as _clip
 from . import geometry as _geometry
@@ -126,10 +139,6 @@ def _cmd(c: int, count: int) -> int:
     return (c & 0x7) | (count << 3)
 
 
-def _zigzag32(i: int) -> int:
-    return ((i << 1) ^ (i >> 31)) & 0xFFFFFFFF
-
-
 def _encode_line(ln: np.ndarray, cur: list[int]) -> list[int]:
     """encodeLine (lib/mvt/codec.go:239-261): MoveTo(1) first point,
     LineTo(n-1) rest; deltas zigzag-encoded; cursor carried."""
@@ -146,11 +155,11 @@ def _encode_line(ln: np.ndarray, cur: list[int]) -> list[int]:
         dx, dy = tx - cur[0], ty - cur[1]
         cur[0], cur[1] = tx, ty
         if i == 0:
-            commands[1] = _zigzag32(dx)
-            commands[2] = _zigzag32(dy)
+            commands[1] = zigzag32(dx)
+            commands[2] = zigzag32(dy)
         else:
-            commands[i + i + 2] = _zigzag32(dx)
-            commands[i + i + 3] = _zigzag32(dy)
+            commands[i + i + 2] = zigzag32(dx)
+            commands[i + i + 3] = zigzag32(dy)
     return commands
 
 
@@ -162,7 +171,7 @@ def encode_geometry(geoms: list[tuple[int, object]]) -> list[int]:
         cur = [0, 0]
         if geom_type == 1:
             dx, dy = int(coords[0]) - cur[0], int(coords[1]) - cur[1]
-            commands += [_cmd(CMD_MOVETO, 1), _zigzag32(dx), _zigzag32(dy)]
+            commands += [_cmd(CMD_MOVETO, 1), zigzag32(dx), zigzag32(dy)]
         elif geom_type == 2:
             commands += _encode_line(coords, cur)
         elif geom_type == 3:
@@ -177,66 +186,29 @@ def encode_geometry(geoms: list[tuple[int, object]]) -> list[int]:
 # --------------------------------------------------------------------------
 
 
-def _varint_slow(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-# command ints and zigzag deltas are overwhelmingly small — a 16k-entry
-# table turns the hottest call in the encoder (2.1M/36k tiles) into a list
-# index; identical bytes by construction
-_VARINT_TABLE = [_varint_slow(v) for v in range(1 << 14)]
-
-
-def _varint(v: int) -> bytes:
-    if 0 <= v < (1 << 14):
-        return _VARINT_TABLE[v]
-    return _varint_slow(v)
-
-
-def _tag(field: int, wire: int) -> bytes:
-    return _varint((field << 3) | wire)
-
-
-def _ld(field: int, payload: bytes) -> bytes:
-    return _tag(field, 2) + _varint(len(payload)) + payload
-
-
-def _packed_varints(field: int, values) -> bytes:
-    body = b"".join(_varint(int(v)) for v in values)
-    return _ld(field, body)
-
-
 def _encode_value(v) -> bytes:
     """Tile_Value (lib/mvt/codec.go:107-137): string→f1, double→f3,
     int→sint f6, bool→f7. Everything else is stringified like the Go default."""
     import struct as _struct
 
     if isinstance(v, bool):
-        return _tag(7, 0) + _varint(1 if v else 0)
+        return tag(7, 0) + varint(1 if v else 0)
     if isinstance(v, str):
         b = v.encode("utf-8")
-        return _ld(1, b)
+        return ld(1, b)
     if isinstance(v, int):
-        return _tag(6, 0) + _varint(_pw_zigzag64(v))
+        return tag(6, 0) + varint(zigzag64(v))
     if isinstance(v, float):
-        return _tag(3, 1) + _struct.pack("<d", v)
-    return _ld(1, str(v).encode("utf-8"))
+        return tag(3, 1) + _struct.pack("<d", v)
+    return ld(1, str(v).encode("utf-8"))
 
 
 def _encode_feature(tags: list[int], geom_type: int, commands: list[int]) -> bytes:
     out = bytearray()
     if tags:
-        out += _packed_varints(2, tags)
-    out += _tag(3, 0) + _varint(geom_type)  # vt geom enum == our geom enum
-    out += _packed_varints(4, commands)
+        out += packed_varints(2, tags)
+    out += tag(3, 0) + varint(geom_type)  # vt geom enum == our geom enum
+    out += packed_varints(4, commands)
     return bytes(out)
 
 
@@ -248,15 +220,15 @@ def _encode_layer(
     extent: int,
 ) -> bytes:
     out = bytearray()
-    out += _ld(1, name.encode("utf-8"))
+    out += ld(1, name.encode("utf-8"))
     for fb in feature_blobs:
-        out += _ld(2, fb)
+        out += ld(2, fb)
     for k in keys:
-        out += _ld(3, k.encode("utf-8"))
+        out += ld(3, k.encode("utf-8"))
     for vb in values:
-        out += _ld(4, vb)
-    out += _tag(5, 0) + _varint(extent)
-    out += _tag(15, 0) + _varint(2)  # layer version 2 (lib/mvt/codec.go:29)
+        out += ld(4, vb)
+    out += tag(5, 0) + varint(extent)
+    out += tag(15, 0) + varint(2)  # layer version 2 (lib/mvt/codec.go:29)
     return bytes(out)
 
 
@@ -290,7 +262,7 @@ def encode_tile(features_by_layer: dict[str, list[dict]], x: int, y: int, z: int
     for layer_name in sorted(features_by_layer.keys()):
         blob = assemble_layer(layer_name, features_by_layer[layer_name], x, y, z)
         if blob is not None:
-            out += _ld(3, blob)
+            out += ld(3, blob)
     if not out:
         return None
     return bytes(out)
@@ -360,16 +332,6 @@ def gzip_tile(buf: bytes) -> bytes:
 # --------------------------------------------------------------------------
 
 
-def _read_packed(buf: bytes) -> list[int]:
-    from . import protowire as _pw
-
-    out, i = [], 0
-    while i < len(buf):
-        v, i = _pw.read_varint(buf, i)
-        out.append(v)
-    return out
-
-
 def decode_geometry(geom_type: int, commands: list[int]):
     """Command ints → coords in tile pixel space, mirroring
     encode_geometry's input shapes: point → (x, y) (or list if count>1),
@@ -384,13 +346,13 @@ def decode_geometry(geom_type: int, commands: list[int]):
         i += 1
         if cmd == CMD_MOVETO:
             for _ in range(count):
-                cx += _pw_unzigzag(commands[i]); cy += _pw_unzigzag(commands[i + 1])
+                cx += unzigzag(commands[i]); cy += unzigzag(commands[i + 1])
                 i += 2
                 cur = [[cx, cy]]
                 parts.append(cur)  # type: ignore[arg-type]
         elif cmd == CMD_LINETO:
             for _ in range(count):
-                cx += _pw_unzigzag(commands[i]); cy += _pw_unzigzag(commands[i + 1])
+                cx += unzigzag(commands[i]); cy += unzigzag(commands[i + 1])
                 i += 2
                 cur.append([cx, cy])
         elif cmd == CMD_CLOSEPATH:
@@ -411,16 +373,13 @@ def decode_geometry(geom_type: int, commands: list[int]):
 def _decode_value(buf: bytes):
     import struct as _struct
 
-    from . import protowire as _pw
-
-    for field, wire, v in _pw.iter_fields(buf):
+    for field, wire, v in iter_fields(buf):
         if field == 1:
             return v.decode("utf-8")
         if field == 3:
             return _struct.unpack("<d", v)[0]
         if field == 6:
-            u = v
-            return (u >> 1) ^ -(u & 1)
+            return unzigzag(v)
         if field == 7:
             return bool(v)
     return None
@@ -433,19 +392,17 @@ def decode_tile(buf: bytes) -> dict:
     (gzip-sniffed, so sink output feeds straight back in)."""
     import gzip as _gz
 
-    from . import protowire as _pw
-
     if buf[:2] == b"\x1f\x8b":
         buf = _gz.decompress(buf)
     layers: dict = {}
-    for field, wire, layer_buf in _pw.iter_fields(bytes(buf)):
+    for field, wire, layer_buf in iter_fields(bytes(buf)):
         if field != 3:
             continue
         name, extent, version = None, EXTENT, 2
         keys: list[str] = []
         values: list = []
         feature_blobs: list[bytes] = []
-        for f, w, v in _pw.iter_fields(layer_buf):
+        for f, w, v in iter_fields(layer_buf):
             if f == 1:
                 name = v.decode("utf-8")
             elif f == 2:
@@ -463,13 +420,13 @@ def decode_tile(buf: bytes) -> dict:
             tags: list[int] = []
             gtype = 0
             commands: list[int] = []
-            for f, w, v in _pw.iter_fields(fb):
+            for f, w, v in iter_fields(fb):
                 if f == 2:
-                    tags = _read_packed(v)
+                    tags = read_packed(v)
                 elif f == 3:
                     gtype = v
                 elif f == 4:
-                    commands = _read_packed(v)
+                    commands = read_packed(v)
             props = {
                 keys[tags[t]]: values[tags[t + 1]] for t in range(0, len(tags), 2)
             }

@@ -1,9 +1,12 @@
-"""Batched MVT tile encoding — an Arrow-batch-wide twin of mvt.encode_tile.
+"""Batched MVT tile encoding — the encoder the tiler runs
+(operators/tiling.py), one call per Arrow batch of tiles.
 
-Byte-identical to the scalar kernel by construction: every floating-point
-expression is the SAME IEEE-double operation sequence as kernels/mvt.py
-(the affine is shared code, the zigzag/varint integer identities are exact),
-and tests/test_mvt_batch.py asserts tile-for-tile byte equality on seeded
+Byte-identical to the scalar mvt.encode_tile, which tests use as its
+reference: every floating-point expression is the SAME IEEE-double operation
+sequence as kernels/mvt.py (the pixel affine repeats mvt.tile_affine_np's
+expression, the zigzag/varint integer identities are exact, and protobuf
+framing uses the shared kernels/protowire.py helpers), and
+tests/test_mvt_batch.py asserts tile-for-tile byte equality on seeded
 corpora plus the reference goldens.
 
 Reference semantics: lib/mvt/codec.go:57-261 (EncodeTile/assembleLayer/
@@ -30,22 +33,12 @@ Clipping is untouched: the scalar kernels/clip.py path runs per
 
 from __future__ import annotations
 
-import gzip as _gzip
-
 import numpy as np
 
 from . import clip as _clip
 from . import geometry as _geometry
-from .mvt import (
-    EXTENT,
-    TileParams,
-    _encode_value,
-    _full_rect,
-    _ld,
-    _tag,
-    _varint,
-    tile_affine_np,
-)
+from .mvt import EXTENT, TileParams, _encode_value, _full_rect
+from .protowire import ld, tag, varint
 
 _CMD_MOVETO1 = (1 & 0x7) | (1 << 3)  # MoveTo, count 1
 _CMD_CLOSE1 = (7 & 0x7) | (1 << 3)  # ClosePath, count 1
@@ -59,7 +52,7 @@ def varints_np(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Vectorized protobuf varint encoding of a non-negative int64 array.
 
     Returns (byte buffer, per-value byte counts). Identical bytes to
-    b"".join(_varint(v) for v in values) — asserted for values < 2**35,
+    b"".join(varint(v) for v in values) — asserted for values < 2**35,
     which covers every command int and zigzag32 the encoder emits.
     """
     if len(values) == 0:
@@ -176,24 +169,6 @@ def _encode_value_memo(v) -> bytes:
     return blob
 
 
-# optional phase accounting for scripts/profile_encode.py (set
-# GS_MVTB_TIMING=1): a handful of monotonic() calls per Arrow batch
-import os as _os
-
-_PHASE_T = bool(_os.environ.get("GS_MVTB_TIMING"))
-PHASE_ACC: dict = {}
-
-
-def _tick(t, name: str) -> None:
-    if not t:
-        return
-    import time as _time
-
-    now = _time.monotonic()
-    PHASE_ACC[name] = PHASE_ACC.get(name, 0.0) + (now - t[0])
-    t[0] = now
-
-
 def mercator_of(gt: int, coords):
     """Mercator (3857) projection of a geometry's raw coords — the
     tile-INDEPENDENT half of tilePoint, memoized per geometry by callers.
@@ -224,7 +199,6 @@ def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
     twin of coords (per-geometry memo computed by the caller, mercator_of;
     computed here when absent).
     """
-    _t = _PHASE_T and [__import__("time").monotonic()]
     # ---- pass 1a (scalar walk): collect every to-be-projected part of the
     # batch; the pixel-space affine then runs ONCE over the concatenation.
     # Slots keep the per-layer feature order (cc-literals interleave with
@@ -277,7 +251,6 @@ def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
             layers_here.append((layer_name, slots))
         tile_slots.append(layers_here)
 
-    _tick(_t, "walk")
     # ---- pass 1b (numpy): batch affine into pixel space
     pix_parts: list[np.ndarray] = []
     if part_mx:
@@ -301,7 +274,6 @@ def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
         starts = ends - plen
         pix_parts = [P[s:e] for s, e in zip(starts, ends)]
 
-    _tick(_t, "affine")
     # ---- pass 1c: clip per pending feature. The polygon fast-path decider
     # (does the ring cross the tile border?) runs batched first — one numpy
     # pass over every single-ring (polygon, tile) pair instead of a Python
@@ -334,7 +306,6 @@ def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
             _clip.clip_geom(gt, projected, clip_mask, None if h < 0 else bool(h))
         )
 
-    _tick(_t, "clip")
     # ---- pass 1d (scalar): merge + per-layer dict-encode, batch collection
     feats_gt: list[int] = []  # per emitted feature
     feats_tags: list[list[int]] = []
@@ -397,7 +368,6 @@ def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
             )
         tile_layers.append(out_layers)
 
-    _tick(_t, "merge+tags")
     n_feats = len(feats_gt)
 
     # ---- pass 2 (numpy): weave command ints + varint both int streams
@@ -425,7 +395,6 @@ def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
     cview = cbuf.tobytes()
     tview = tbuf.tobytes()
 
-    _tick(_t, "weave+varint")
     # ---- pass 3 (scalar): protobuf assembly from the varint slices
     out: list = []
     for layers_here in tile_layers:
@@ -439,28 +408,23 @@ def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
                 fb = bytearray()
                 if tag_counts[fi]:
                     tb_slice = tview[int(tbyte_start[fi]) : int(tbyte_end[fi])]
-                    fb += b"\x12" + _varint(len(tb_slice)) + tb_slice
-                fb += b"\x18" + _varint(feats_gt[fi])
-                fb += b"\x22" + _varint(clen)
+                    fb += b"\x12" + varint(len(tb_slice)) + tb_slice
+                fb += b"\x18" + varint(feats_gt[fi])
+                fb += b"\x22" + varint(clen)
                 fb += cview[int(cbyte_start[fi]) : int(cbyte_end[fi])]
                 feature_blobs.append(bytes(fb))
             if not feature_blobs:
                 continue
             lb = bytearray()
-            lb += _ld(1, layer_name.encode("utf-8"))
+            lb += ld(1, layer_name.encode("utf-8"))
             for fb in feature_blobs:
-                lb += _ld(2, fb)
+                lb += ld(2, fb)
             for k in keys:
-                lb += _ld(3, k.encode("utf-8"))
+                lb += ld(3, k.encode("utf-8"))
             for v in val_order:
-                lb += _ld(4, _encode_value_memo(v))
-            lb += _tag(5, 0) + _varint(EXTENT)
-            lb += _tag(15, 0) + _varint(2)
-            tile_out += _ld(3, bytes(lb))
+                lb += ld(4, _encode_value_memo(v))
+            lb += tag(5, 0) + varint(EXTENT)
+            lb += tag(15, 0) + varint(2)
+            tile_out += ld(3, bytes(lb))
         out.append(bytes(tile_out) if tile_out else None)
-    _tick(_t, "assemble")
     return out
-
-
-def gzip_tile(buf: bytes) -> bytes:
-    return _gzip.compress(buf, mtime=0)

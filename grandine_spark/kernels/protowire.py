@@ -1,8 +1,10 @@
-"""Minimal protobuf wire-format encode/decode helpers (no protobuf dep).
+"""Protobuf wire-format encode/decode helpers (no protobuf dep) — the one
+wire module of the library.
 
-Used by the MVT encoder (kernels/mvt.py) and the Spaten codec
-(sources/spaten.py). Only the wire features those schemas need: varint,
-zigzag, length-delimited, packed varints, 64-bit fields.
+Used by the MVT codec (kernels/mvt.py, kernels/mvt_batch.py), the TWKB
+codec (kernels/twkb.py), the OSM PBF reader/writer (sources/pbf.py) and
+the Spaten codec (sources/spaten.py). Only the wire features those schemas
+need: varint, zigzag, length-delimited, packed varints, 64-bit fields.
 """
 
 from __future__ import annotations
@@ -10,7 +12,7 @@ from __future__ import annotations
 import struct
 
 
-def varint(v: int) -> bytes:
+def _varint_slow(v: int) -> bytes:
     out = bytearray()
     while True:
         b = v & 0x7F
@@ -22,6 +24,18 @@ def varint(v: int) -> bytes:
             return bytes(out)
 
 
+# MVT command ints and zigzag deltas are overwhelmingly small — a 16k-entry
+# table turns the hottest call of the tile encoder's assembly loop into a
+# list index; identical bytes by construction
+_VARINT_TABLE = [_varint_slow(v) for v in range(1 << 14)]
+
+
+def varint(v: int) -> bytes:
+    if 0 <= v < (1 << 14):
+        return _VARINT_TABLE[v]
+    return _varint_slow(v)
+
+
 def read_varint(buf: bytes, i: int) -> tuple[int, int]:
     v, s = 0, 0
     while True:
@@ -31,6 +45,15 @@ def read_varint(buf: bytes, i: int) -> tuple[int, int]:
         i += 1
         if not b & 0x80:
             return v, i
+
+
+def read_packed(buf: bytes) -> list[int]:
+    """A packed-varint field payload → its ints."""
+    out, i, n = [], 0, len(buf)
+    while i < n:
+        v, i = read_varint(buf, i)
+        out.append(v)
+    return out
 
 
 def tag(field: int, wire: int) -> bytes:

@@ -24,7 +24,6 @@ import math
 import numpy as np
 
 WGS84_LAT_MAX = 85.0511287  # lib/tile/tile.go:10-13
-WGS84_LON_MAX = 180.0
 
 
 def tile_name(lon: float, lat: float, zoom: int) -> tuple[int, int, int]:

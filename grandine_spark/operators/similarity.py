@@ -112,30 +112,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     return rng.standard_normal((n_planes, dim)).round(6)
 
 
-def hyperplane_signature(vec_col, dim: int, n_planes: int = 16, seed: int = 42) -> "F.Column":
-    """Sign-bit signature of one hyperplane table as a bigint — vectorized:
-    the whole batch of embeddings hits the plane matrix in ONE numpy matmul
-    inside a scalar pandas UDF (Arrow batches), then bit-packs. The earlier
-    F.aggregate/zip_with expression tree was CodegenFallback — interpreted
-    row-at-a-time on the JVM, measured ~4x slower than this kernel and
-    growing with dim x n_planes (PLANS.md: the documented anti-pattern)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType
-
-    planes = _hyperplanes(dim, n_planes, seed)
-    weights = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
-
-    @pandas_udf(LongType())
-    def sig_udf(vs):
-        if len(vs) == 0:
-            return pd.Series([], dtype=np.int64)
-        x = np.array(vs.tolist(), dtype=np.float64)
-        return pd.Series(((x @ planes.T) > 0) @ weights)
-
-    return sig_udf(vec_col)
-
-
 def _table_buckets(vec_col, dim: int, n_tables: int, bits: int, seed: int = 42):
     """array<bigint> of per-table bucket keys ``(t << bits) | sig`` — L
     independent hyperplane tables of b bits each (classic multi-table LSH:

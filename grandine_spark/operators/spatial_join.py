@@ -44,38 +44,46 @@ DEFAULT_JOIN_ZOOM = 7
 PIP_ARROW_BATCH = 524288
 
 
-@pandas_udf(BooleanType())
-def pip_udf(px: pd.Series, py: pd.Series, wkb: pd.Series) -> pd.Series:
-    """Vectorized point-in-polygon: one ray-casting batch per distinct polygon
-    in the Arrow batch (candidates arrive cell-clustered, so batches contain
-    few distinct polygons). General path: geometry travels per-row as WKB."""
-    import numpy as np
+def _refine_by_wkb(geom_type: int, hit):
+    """Refine UDF with the geometry per-row as WKB (the shuffle path): one
+    ``hit`` kernel batch per distinct blob in the Arrow batch (candidates
+    arrive cell-clustered, so batches contain few distinct geometries).
+    Blobs of another geometry type never match.
 
-    out = np.zeros(len(px), dtype=bool)
-    if len(px) == 0:
-        return pd.Series(out)
-    pxv = px.to_numpy(dtype=float)
-    pyv = py.to_numpy(dtype=float)
-    groups: dict[bytes, list[int]] = {}
-    for i, b in enumerate(wkb):
-        groups.setdefault(bytes(b), []).append(i)
-    for blob, idx in groups.items():
-        gt, coords = from_wkb(blob)
-        if gt != 3:
-            continue
-        ix = np.asarray(idx)
-        out[ix] = points_in_polygon_np(pxv[ix], pyv[ix], coords)
-    return pd.Series(out)
-
-
-def make_pip_udf_closure(poly_map: dict[int, list]):
-    """PIP UDF with the polygon dictionary captured in the closure — the
-    broadcast-dim fast path. Candidate rows then carry only
-    (lon, lat, feature_id): ~24 bytes of Arrow traffic per row instead of the
-    full WKB blob, and zero per-batch WKB parsing."""
+    ``hit(px, py, coords) -> bool ndarray`` is the per-geometry predicate."""
 
     @pandas_udf(BooleanType())
-    def pip_by_id(px: pd.Series, py: pd.Series, fid: pd.Series) -> pd.Series:
+    def refine_by_wkb(px: pd.Series, py: pd.Series, wkb: pd.Series) -> pd.Series:
+        import numpy as np
+
+        out = np.zeros(len(px), dtype=bool)
+        if len(px) == 0:
+            return pd.Series(out)
+        pxv = px.to_numpy(dtype=float)
+        pyv = py.to_numpy(dtype=float)
+        groups: dict[bytes, list[int]] = {}
+        for i, b in enumerate(wkb):
+            groups.setdefault(bytes(b), []).append(i)
+        for blob, idx in groups.items():
+            gt, coords = from_wkb(blob)
+            if gt != geom_type:
+                continue
+            ix = np.asarray(idx)
+            out[ix] = hit(pxv[ix], pyv[ix], coords)
+        return pd.Series(out)
+
+    return refine_by_wkb
+
+
+def _refine_by_id(geom_map: dict[int, object], hit):
+    """Refine UDF with the geometry dictionary captured in the closure — the
+    broadcast-dim fast path. Candidate rows then carry only
+    (lon, lat, feature_id): ~24 bytes of Arrow traffic per row instead of the
+    full WKB blob, and zero per-batch WKB parsing. Ids missing from
+    ``geom_map`` (e.g. the interior-cell sentinel) never match."""
+
+    @pandas_udf(BooleanType())
+    def refine_by_id(px: pd.Series, py: pd.Series, fid: pd.Series) -> pd.Series:
         import numpy as np
 
         n = len(px)
@@ -91,43 +99,18 @@ def make_pip_udf_closure(poly_map: dict[int, list]):
             np.r_[True, sorted_fid[1:] != sorted_fid[:-1], True]
         )
         for s, e in zip(bounds[:-1], bounds[1:]):
-            rings = poly_map.get(int(sorted_fid[s]))
-            if rings is None:
+            coords = geom_map.get(int(sorted_fid[s]))
+            if coords is None:
                 continue
             ix = order[s:e]
-            out[ix] = points_in_polygon_np(pxv[ix], pyv[ix], rings)
+            out[ix] = hit(pxv[ix], pyv[ix], coords)
         return pd.Series(out)
 
-    return pip_by_id
+    return refine_by_id
 
 
-def make_within_wkb_udf(radius_deg: float):
-    """Distance-to-polyline predicate with geometry per-row as WKB — the
-    shuffle-path twin of radius_join's closure UDF: one kernel batch per
-    distinct polyline in the Arrow batch (candidates arrive cell-clustered)."""
-    from ..kernels.geometry import dist_points_to_line_np
-
-    @pandas_udf(BooleanType())
-    def within_wkb(px: pd.Series, py: pd.Series, wkb: pd.Series) -> pd.Series:
-        import numpy as np
-
-        out = np.zeros(len(px), dtype=bool)
-        if len(px) == 0:
-            return pd.Series(out)
-        pxv = px.to_numpy(dtype=float)
-        pyv = py.to_numpy(dtype=float)
-        groups: dict[bytes, list[int]] = {}
-        for i, b in enumerate(wkb):
-            groups.setdefault(bytes(b), []).append(i)
-        for blob, idx in groups.items():
-            gt, coords = from_wkb(blob)
-            if gt != 2:
-                continue
-            ix = np.asarray(idx)
-            out[ix] = dist_points_to_line_np(pxv[ix], pyv[ix], coords) <= radius_deg
-        return pd.Series(out)
-
-    return within_wkb
+# exact point-in-polygon over per-row WKB (also the bucketed join's refine)
+pip_udf = _refine_by_wkb(3, points_in_polygon_np)
 
 
 def geocode_pages(pages: DataFrame) -> DataFrame:
@@ -165,7 +148,6 @@ def spatial_join(
     feature_cols: tuple = ("feature_id",),
     salt_threshold: int | None = None,
     max_dim_features: int = 1_000_000,
-    refine: str = "arrow",
 ) -> DataFrame:
     """points(lon,lat,…) ⨝ polygon features → refined containment rows.
 
@@ -179,17 +161,6 @@ def spatial_join(
     the driver; if the feature count exceeds this guard the join falls back
     to the shuffle path automatically (same output) instead of OOMing the
     driver — "small by definition" is now enforced, not assumed.
-
-    ``refine`` (broadcast path): ``"arrow"`` (default) refines with the
-    vectorized pandas-UDF ray-cast kernel; ``"native"`` evaluates the SAME
-    exact semantics as a pure Catalyst expression over a broadcast
-    per-feature edge array (functions/pip_native.py) — zero Python stages
-    in the whole plan, identical output (asserted in tests). Arrow stays
-    the default because Spark's higher-order functions (transform/filter/
-    exists) are CodegenFallback — interpreted per row — measuring ~4x
-    slower than the Arrow kernel at the benchmark shape; the native path
-    earns its keep as a python-worker-free deployment option and as an
-    independent differential check of the PIP kernel.
     """
     pts = index_points(points, zoom)
 
@@ -234,7 +205,7 @@ def spatial_join(
             "miny double, maxx double, maxy double, full_inside boolean",
         )
         sentinel = min(poly_map, default=0) - 1  # fid the UDF never resolves
-        pip = make_pip_udf_closure(poly_map)
+        pip = _refine_by_id(poly_map, points_in_polygon_np)
         joined = pts.join(F.broadcast(dim_df), ["cell_x", "cell_y"], "inner")
         coarse = joined.filter(
             TX.point_in_bbox(
@@ -242,31 +213,6 @@ def spatial_join(
                 F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
             )
         )
-        if refine == "native":
-            # geometry as a SECOND broadcast dim keyed by feature_id (edges
-            # stored once per feature, not per covering cell) + the pure-
-            # Catalyst ray-cast — no Python worker anywhere in the plan
-            from ..functions.pip_native import (
-                GEO_DIM_SCHEMA,
-                feature_edge_row,
-                pip_native,
-            )
-
-            geo_df = spark.createDataFrame(
-                [feature_edge_row(fid, rings) for fid, rings in poly_map.items()],
-                GEO_DIM_SCHEMA,
-            )
-            joined_geo = coarse.join(F.broadcast(geo_df), "feature_id", "inner")
-            refined = joined_geo.filter(
-                F.col("full_inside")
-                | pip_native(
-                    F.col("lon"), F.col("lat"),
-                    F.col("ox"), F.col("oy"), F.col("rox"), F.col("roy"),
-                    F.col("edges"),
-                )
-            )
-            return refined.select(*[F.col(c) for c in point_cols + feature_cols])
-
         pip_fid = F.when(F.col("full_inside"), F.lit(sentinel)).otherwise(
             F.col("feature_id")
         )
@@ -366,7 +312,7 @@ def multires_spatial_join(
         "miny double, maxx double, maxy double, full_inside boolean",
     )
     sentinel = min(poly_map, default=0) - 1
-    pip = make_pip_udf_closure(poly_map)
+    pip = _refine_by_id(poly_map, points_in_polygon_np)
 
     # Compute the cell ONCE at the finest active zoom, then derive every
     # coarser active zoom by shiftright — slippy tiles nest exactly
@@ -438,6 +384,9 @@ def radius_join(
     from ..kernels.tilemath import coverage as cell_coverage
     from ..kernels.wkb import geom_bbox
 
+    def within(px, py, coords):
+        return dist_points_to_line_np(px, py, coords) <= radius_deg
+
     lines = features.filter(F.col("geom_type") == 2)
     if lines.limit(max_dim_features + 1).count() > max_dim_features:
         expanded = (
@@ -459,7 +408,7 @@ def radius_join(
                 F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
             )
         )
-        within_wkb = make_within_wkb_udf(radius_deg)
+        within_wkb = _refine_by_wkb(2, within)
         refined = coarse.filter(
             within_wkb(F.col("lon"), F.col("lat"), F.col("wkb"))
         )
@@ -487,28 +436,6 @@ def radius_join(
         "miny double, maxx double, maxy double",
     )
 
-    @pandas_udf(BooleanType())
-    def within_udf(px: pd.Series, py: pd.Series, fid: pd.Series) -> pd.Series:
-        import numpy as np
-
-        n = len(px)
-        out = np.zeros(n, dtype=bool)
-        if n == 0:
-            return pd.Series(out)
-        pxv = px.to_numpy(dtype=float)
-        pyv = py.to_numpy(dtype=float)
-        fidv = fid.to_numpy()
-        order = np.argsort(fidv, kind="stable")
-        sorted_fid = fidv[order]
-        bounds = np.flatnonzero(np.r_[True, sorted_fid[1:] != sorted_fid[:-1], True])
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            coords = line_map.get(int(sorted_fid[s]))
-            if coords is None:
-                continue
-            ix = order[s:e]
-            out[ix] = dist_points_to_line_np(pxv[ix], pyv[ix], coords) <= radius_deg
-        return pd.Series(out)
-
     pts = index_points(points, zoom)
     joined = pts.join(F.broadcast(dim_df), ["cell_x", "cell_y"], "inner")
     coarse = joined.filter(
@@ -517,7 +444,8 @@ def radius_join(
             F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
         )
     )
-    refined = coarse.filter(within_udf(F.col("lon"), F.col("lat"), F.col("feature_id")))
+    within_id = _refine_by_id(line_map, within)
+    refined = coarse.filter(within_id(F.col("lon"), F.col("lat"), F.col("feature_id")))
     return refined.select(*[F.col(c) for c in point_cols + feature_cols])
 
 

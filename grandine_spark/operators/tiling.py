@@ -349,8 +349,14 @@ def _encode_record_batch(batch, gzip: bool, simplify: bool, codec: str):
         vd = pc.dictionary_encode(ent.field("value"))
         ktab = kd.dictionary.to_pylist()
         kidx = kd.indices.to_numpy(zero_copy_only=False)
+        # null map values have null indices (to_numpy would turn them into
+        # NaN floats): point them at a trailing None entry instead, which
+        # gives to_pylist's (key, None)
         vtab = vd.dictionary.to_pylist()
-        vidx = vd.indices.to_numpy(zero_copy_only=False)
+        vtab.append(None)
+        vidx = pc.fill_null(vd.indices, len(vtab) - 1).to_numpy(
+            zero_copy_only=False
+        )
         plens = pc.fill_null(pc.list_value_length(lst), 0).to_numpy(
             zero_copy_only=False
         )

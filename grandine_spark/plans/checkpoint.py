@@ -96,25 +96,16 @@ class Warehouse:
 
     def verify(self, df: DataFrame, stage: str, key_col: str) -> bool:
         """Recompute lineage of ``df`` and compare with the stored one —
-        detects divergence between a resumed and a fresh run.
-
-        Sidecars written before lineage rows carried key ranges (no
-        key_min/key_max columns) are still verifiable: comparison falls back
-        to (row_count, digest) per bucket instead of raising on the missing
-        columns."""
-        stored_df = self.lineage(stage)
-        has_range = "key_min" in stored_df.columns
+        detects divergence between a resumed and a fresh run."""
 
         def canon(r):
-            if has_range:
-                return (r.key_min, r.key_max, r.row_count, r.digest)
-            return (r.row_count, r.digest)
+            return (r.key_min, r.key_max, r.row_count, r.digest)
 
         fresh = {
             r.bucket: canon(r)
             for r in self._lineage(df, stage, key_col).collect()
         }
-        stored = {r.bucket: canon(r) for r in stored_df.collect()}
+        stored = {r.bucket: canon(r) for r in self.lineage(stage).collect()}
         return fresh == stored
 
 

@@ -28,21 +28,22 @@ from __future__ import annotations
 import struct
 import zlib
 
-from ..kernels.protowire import iter_fields, read_varint, unzigzag as _unzigzag
+from ..kernels.protowire import (
+    iter_fields,
+    ld,
+    packed_varints as _packed,
+    read_packed,
+    tag,
+    unzigzag as _unzigzag,
+    varint,
+    zigzag64 as _zigzag64,
+)
 
 _MEMBER_TYPES = {0: "node", 1: "way", 2: "relation"}
 
 
-def _packed_varints(buf: bytes) -> list[int]:
-    out, i, n = [], 0, len(buf)
-    while i < n:
-        v, i = read_varint(buf, i)
-        out.append(v)
-    return out
-
-
 def _packed_sints(buf: bytes) -> list[int]:
-    return [_unzigzag(v) for v in _packed_varints(buf)]
+    return [_unzigzag(v) for v in read_packed(buf)]
 
 
 def _delta_decode(vals: list[int]) -> list[int]:
@@ -130,9 +131,9 @@ def decode_primitive_block(data: bytes):
                     if f2 == 1:
                         nid = _unzigzag(u)
                     elif f2 == 2:
-                        keys = _packed_varints(u)
+                        keys = read_packed(u)
                     elif f2 == 3:
-                        vals = _packed_varints(u)
+                        vals = read_packed(u)
                     elif f2 == 8:
                         lat = _unzigzag(u)
                     elif f2 == 9:
@@ -149,7 +150,7 @@ def decode_primitive_block(data: bytes):
                     elif f2 == 9:
                         lons = _delta_decode(_packed_sints(u))
                     elif f2 == 10:
-                        kv = _packed_varints(u)
+                        kv = read_packed(u)
                 ki = 0
                 for j, nid in enumerate(ids):
                     t = {}
@@ -164,9 +165,9 @@ def decode_primitive_block(data: bytes):
                     if f2 == 1:
                         wid = u
                     elif f2 == 2:
-                        keys = _packed_varints(u)
+                        keys = read_packed(u)
                     elif f2 == 3:
-                        vals = _packed_varints(u)
+                        vals = read_packed(u)
                     elif f2 == 8:
                         refs = _delta_decode(_packed_sints(u))
                 ways.append((wid, refs, tags(keys, vals)))
@@ -176,15 +177,15 @@ def decode_primitive_block(data: bytes):
                     if f2 == 1:
                         rid = u
                     elif f2 == 2:
-                        keys = _packed_varints(u)
+                        keys = read_packed(u)
                     elif f2 == 3:
-                        vals = _packed_varints(u)
+                        vals = read_packed(u)
                     elif f2 == 8:
-                        roles = _packed_varints(u)
+                        roles = read_packed(u)
                     elif f2 == 9:
                         memids = _delta_decode(_packed_sints(u))
                     elif f2 == 10:
-                        types = _packed_varints(u)
+                        types = read_packed(u)
                 rels.append(
                     (
                         rid,
@@ -234,19 +235,10 @@ def read_pbf(spark, path: str):
 # can be round-trip-tested hermetically (and to emit small extracts). Field
 # numbers per the vendored osmformat.proto / fileformat.proto.
 
-from ..kernels.protowire import (  # noqa: E402
-    ld,
-    packed_varints as _packed,
-    tag,
-    zigzag64 as _zigzag64,
-)
-
 _DEFAULT_GRAN = 100
 
 
 def _packed_sint_delta(field: int, vals) -> bytes:
-    from ..kernels.protowire import varint
-
     out, prev = [], 0
     for v in vals:
         out.append(_zigzag64(int(v) - prev))
@@ -272,8 +264,6 @@ def write_pbf(
     nodes: iterable of (node_id, lon, lat, {tags}); ways: (way_id, [refs],
     {tags}); relations: (rel_id, [memids], [types], [roles], {tags}).
     Deterministic for identical input order."""
-    from ..kernels.protowire import varint
-
     strings = [""]
     str_ix: dict[str, int] = {"": 0}
 

@@ -64,23 +64,6 @@ def test_pipeline_resume_byte_identical(spark, tmp_path):
     assert wh.verify(resumed["join_rows"], "join_rows", "url")
 
 
-def test_verify_tolerates_legacy_sidecar(spark, tmp_path):
-    """Sidecars written before lineage rows carried key_min/key_max must
-    still verify (fallback to row_count+digest), not raise on the missing
-    columns."""
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    src = spark.range(200).withColumn("v", F.col("id") * 3)
-    wh.checkpoint(src, "s1", key_col="id")
-    # rewrite the sidecar in the legacy (no key-range) format
-    legacy = wh.lineage("s1").drop("key_min", "key_max")
-    legacy.write.mode("overwrite").parquet(str(tmp_path / "legacy"))
-    spark.read.parquet(str(tmp_path / "legacy")).write.mode("overwrite").parquet(
-        wh.lineage_path("s1")
-    )
-    assert wh.verify(src, "s1", key_col="id")
-    assert not wh.verify(src.limit(10), "s1", key_col="id")
-
-
 def test_anti_join_completed(spark):
     work = spark.createDataFrame(
         [(z, x) for z in (1, 2) for x in range(5)], "z int, x int"

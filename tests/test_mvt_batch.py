@@ -1,9 +1,10 @@
 """kernels/mvt_batch — the Arrow-batch-wide MVT encoder. Its contract is
 BYTE IDENTITY with the scalar kernels/mvt.encode_tile, tile for tile
 (reference semantics lib/mvt/codec.go:57-261). Verified three ways here:
-a varint fuzz against the scalar _varint across every byte-length boundary,
-a seeded corpus differ over mixed geometry/props/zoom shapes (including the
-memoized-mercator input the tiler feeds it), and targeted edge cases
+a varint fuzz against the scalar protowire.varint across every byte-length
+boundary (its 2^14 lookup-table edge included), a seeded corpus differ over
+mixed geometry/props/zoom shapes (including the memoized-mercator input the
+tiler feeds it), and targeted edge cases
 (empty tile, all-clipped features, empty rings, cc full-cover literals).
 build_tiles-level identity is covered by test_tiling_extras.py's sha
 cross-check and test_coverclass.py's on/off differ."""
@@ -12,12 +13,13 @@ import math
 
 import numpy as np
 
-from grandine_spark.kernels.mvt import EXTENT, _varint, encode_tile
+from grandine_spark.kernels.mvt import encode_tile
 from grandine_spark.kernels.mvt_batch import (
     encode_tiles_mvt,
     mercator_of,
     varints_np,
 )
+from grandine_spark.kernels.protowire import varint
 
 
 def test_varints_np_matches_scalar_across_boundaries():
@@ -31,9 +33,9 @@ def test_varints_np_matches_scalar_across_boundaries():
     vals += [int(v) for v in rng.integers(0, 1 << 35, 500)]
     arr = np.array(vals, np.int64)
     buf, n = varints_np(arr)
-    want = b"".join(_varint(v) for v in vals)
+    want = b"".join(varint(v) for v in vals)
     assert buf.tobytes() == want
-    assert [len(_varint(v)) for v in vals] == n.tolist()
+    assert [len(varint(v)) for v in vals] == n.tolist()
 
 
 def test_varints_np_rejects_out_of_range():

@@ -61,9 +61,9 @@ def test_native_tile_exprs_match_kernel(spark, pages_df):
 
 
 def test_spatial_join_matches_bruteforce(spark, pages_df, features_df):
+    """Both refine UDFs — by feature id (broadcast path) and by per-row WKB
+    (shuffle path) — against the scalar point_in_polygon oracle."""
     pts = geocode_pages(pages_df)
-    out = spatial_join(pts, features_df, zoom=7).collect()
-    got = {(r.url, r.feature_id) for r in out}
 
     # brute force oracle: python PIP over every (point, polygon) pair
     polys = [
@@ -75,8 +75,11 @@ def test_spatial_join_matches_bruteforce(spark, pages_df, features_df):
         for fid, rings in polys:
             if point_in_polygon(p.lon, p.lat, rings):
                 expected.add((p.url, fid))
-    assert got == expected
-    assert len(got) > 0  # clustered points do hit city polygons
+    assert len(expected) > 0  # clustered points do hit city polygons
+    for broadcast in (True, False):
+        out = spatial_join(pts, features_df, zoom=7, broadcast=broadcast)
+        got = {(r.url, r.feature_id) for r in out.collect()}
+        assert got == expected, broadcast
 
 
 def test_spatial_join_parallelism_invariant(spark, pages_df, features_df):
@@ -288,35 +291,6 @@ def test_radius_join_dim_guard_falls_back_same_result(spark):
         ).collect()
     }
     assert a == b and len(a) > 0
-
-
-def test_native_pip_refine_equals_arrow(spark, pages_df, features_df):
-    """The pure-Catalyst ray-cast (functions/pip_native.py) must produce the
-    identical join result to the Arrow kernel — a differential check of two
-    independent implementations of Point.InPolygon — and its plan must
-    contain no Python stage at all."""
-    import contextlib
-    import io
-    import re
-
-    from grandine_spark.operators.spatial_join import spatial_join
-
-    pts = geocode_pages(pages_df)
-    a = {
-        (r.url, r.feature_id)
-        for r in spatial_join(pts, features_df, zoom=6, refine="arrow").collect()
-    }
-    b = {
-        (r.url, r.feature_id)
-        for r in spatial_join(pts, features_df, zoom=6, refine="native").collect()
-    }
-    assert a == b and len(a) > 0
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        spatial_join(pts, features_df, zoom=6, refine="native").explain("formatted")
-    plan = buf.getvalue()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert not re.findall(r"\bExchange \(\d+\)", plan)  # still zero shuffles
 
 
 def test_radius_join_polar_dateline_differ(spark):

@@ -95,6 +95,45 @@ def test_build_tiles_sha_matches_pure_python(spark):
     assert len(got) > 0 and got == want
 
 
+def test_build_tiles_null_prop_value(spark):
+    """A null map value in props must not crash the encoder's dictionary-
+    encoded props path: every tile equals the scalar encode_tile of the same
+    features with that value as None."""
+    from grandine_spark.kernels.mvt import decode_tile, encode_tile
+    from grandine_spark.kernels.tilemath import coverage, tile_name
+    from grandine_spark.kernels.wkb import geom_bbox, to_wkb
+
+    ring = np.array([[1.0, 48.0], [3.5, 48.0], [3.5, 50.0], [1.0, 50.0]])
+    feats = [
+        (1, 3, [ring], {"@layer": "admin", "class": "a", "name": None}),
+        (2, 1, (2.35, 48.85), {"@layer": "poi", "kind": None, "name": "x"}),
+    ]
+    rows = [
+        (fid, p["@layer"], gt, to_wkb(gt, c), *geom_bbox(gt, c), 0, 99, p)
+        for fid, gt, c, p in feats
+    ]
+    df = spark.createDataFrame(rows, synth.FEATURE_SCHEMA)
+    z = 7
+    got = {
+        (r.tile_z, r.tile_x, r.tile_y): bytes(r.tile)
+        for r in build_tiles(df, [z]).collect()
+    }
+
+    by_tile: dict[tuple, dict] = {}
+    for fid, gt, c, p in feats:
+        for cx, cy, _ in coverage(*geom_bbox(gt, c), z):
+            by_tile.setdefault((z, cx, cy), {}).setdefault(p["@layer"], []).append(
+                {"geom_type": gt, "coords": c, "props": p}
+            )
+    want = {
+        k: encode_tile(by_layer, k[1], k[2], k[0]) for k, by_layer in by_tile.items()
+    }
+    assert len(got) > 1 and got == want
+    px, py, _ = tile_name(2.35, 48.85, z)
+    (poi,) = decode_tile(got[(z, px, py)])["poi"]["features"]
+    assert poi["props"].keys() == {"kind", "name"}
+
+
 def test_build_tiles_hot_tile_cap(spark):
     """max_features_per_tile bounds every tile group (a z2 world tile cannot
     OOM one task); truncation is deterministic (lowest feature_ids kept) and
