@@ -92,8 +92,8 @@ def q_tile_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _points(spark, sf_dir)
     return pts.select(
         "doc_id",
-        TX.tile_x(F.col("lon"), 14).alias("tile_x"),
-        TX.tile_y(F.col("lat"), 14).alias("tile_y"),
+        TX.tile_x("lon", 14).alias("tile_x"),
+        TX.tile_y("lat", 14).alias("tile_y"),
     )
 
 
@@ -1038,8 +1038,8 @@ def q_quadkey(spark: SparkSession, sf_dir: str) -> DataFrame:
     from grandine_spark.functions.tile_exprs import quadkey, tile_x, tile_y
 
     pts = _points(spark, sf_dir)
-    x = tile_x(F.col("lon"), 12)
-    y = tile_y(F.col("lat"), 12)
+    x = tile_x("lon", 12)
+    y = tile_y("lat", 12)
     return pts.select(
         "doc_id",
         quadkey(x, y, 12).alias("qk"),

@@ -1,10 +1,10 @@
 """Slippy-map tile math as NATIVE Spark Column expressions.
 
 Same formulas as ``grandine_spark.kernels.tilemath`` (reference:
-lib/tile/tile.go:37-49, lib/tile/bbox.go:5-21), expressed with builtin
-``pyspark.sql.functions`` so the cell indexer runs inside WholeStageCodegen —
-no Python boundary on the 100 TB hot path. The pandas-UDF variant exists only
-for golden cross-checks.
+lib/tile/tile.go:37-49, lib/tile/bbox.go:5-21), expressed as Catalyst
+expressions so the cell indexer runs inside WholeStageCodegen — no Python
+boundary on the 100 TB hot path. The scalar kernels are the golden
+cross-check.
 
 Operation order matches Go exactly (e.g. ``(lat * π) / 180``) so the JVM,
 numpy, and DuckDB oracle paths agree bitwise on the same input doubles.
@@ -14,94 +14,56 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 WGS84_LAT_MAX = 85.0511287  # lib/tile/tile.go:10-13
-_XY_BITS = 29
 
 
-def _clamp(v: Column, lo: Column, hi: Column) -> Column:
-    return F.greatest(F.least(v, hi), lo)
+def _scale(zoom: int | str) -> tuple[str, str]:
+    """(2^zoom as DOUBLE, 2^zoom - 1 as BIGINT) SQL for an int zoom or the
+    SQL name of an int zoom column. An int zoom constant-folds to the same
+    literals a hand-written ``128.0D``/``127L`` would give."""
+    n = f"pow(2.0D, CAST(({zoom}) AS DOUBLE))"
+    return n, f"CAST({n} - 1.0D AS BIGINT)"
 
 
-def tile_x(lon: Column | str, zoom: int) -> Column:
+def tile_x(lon: str, zoom: int | str) -> Column:
     """lon → tile x at ``zoom`` (lib/tile/tile.go:42-43), bigint.
 
-    A ``str`` argument (column name / SQL fragment) builds the identical
-    expression through ONE ``F.expr`` parse instead of ~40 py4j round-trips
-    of Column operators — plan construction for a multi-zoom coverage union
-    was >1s of driver wall purely in socket hops. Literals are embedded via
-    ``repr`` (round-trips doubles exactly), so both paths parse to the same
-    Catalyst tree and stay bitwise-identical (golden cross-checked)."""
-    n = float(2.0**zoom)
-    m = int(2**zoom) - 1
-    if isinstance(lon, str):
-        return F.expr(
-            f"CAST(greatest(least(floor((({lon}) + 180.0D) / 360.0D * "
-            f"{n!r}D), {m}L), 0L) AS BIGINT)"
-        )
-    x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n))
-    return _clamp(x, F.lit(0), F.lit(m)).cast("bigint")
+    ``lon`` is a column name (or SQL fragment); ``zoom`` is an int or the
+    SQL name of an int column (per-row zoom, e.g. ``"tile_z"``). Built
+    through ONE ``F.expr`` parse rather than ~40 py4j round-trips of
+    Column operators — plan construction for a multi-zoom plan was >1s of
+    driver wall purely in socket hops."""
+    n, m = _scale(zoom)
+    return F.expr(
+        f"CAST(greatest(least(floor((({lon}) + 180.0D) / 360.0D * {n}), "
+        f"{m}), 0L) AS BIGINT)"
+    )
 
 
-def tile_y(lat: Column | str, zoom: int) -> Column:
+def tile_y(lat: str, zoom: int | str) -> Column:
     """lat → tile y at ``zoom`` (lib/tile/tile.go:44-45), bigint.
-
-    ``str`` argument: see :func:`tile_x` — one ``F.expr`` parse, same tree."""
-    n = float(2.0**zoom)
-    m = int(2**zoom) - 1
-    if isinstance(lat, str):
-        pi = repr(math.pi)
-        r = (
-            f"greatest(least({lat}, {WGS84_LAT_MAX!r}D), -{WGS84_LAT_MAX!r}D)"
-            f" * {pi}D / 180.0D"
-        )
-        return F.expr(
-            f"CAST(greatest(least(floor((1.0D - ln(tan({r}) + 1.0D / "
-            f"cos({r})) / {pi}D) / 2.0D * {n!r}D), {m}L), 0L) AS BIGINT)"
-        )
-    lat_rad = (
-        _clamp(lat, F.lit(-WGS84_LAT_MAX), F.lit(WGS84_LAT_MAX)) * F.lit(math.pi)
-    ) / F.lit(180.0)
-    y = F.floor(
-        (
-            F.lit(1.0)
-            - F.log(F.tan(lat_rad) + F.lit(1.0) / F.cos(lat_rad)) / F.lit(math.pi)
-        )
-        / F.lit(2.0)
-        * F.lit(n)
+    Arguments as :func:`tile_x`."""
+    n, m = _scale(zoom)
+    pi = repr(math.pi)
+    r = (
+        f"greatest(least({lat}, {WGS84_LAT_MAX!r}D), -{WGS84_LAT_MAX!r}D)"
+        f" * {pi}D / 180.0D"
     )
-    return _clamp(y, F.lit(0), F.lit(m)).cast("bigint")
-
-
-def pack_cell(x: Column, y: Column, zoom: int) -> Column:
-    """(x, y, z) → packed bigint cell id with the prefix property."""
-    return (
-        F.shiftleft(F.lit(zoom).cast("bigint"), 2 * _XY_BITS)
-        .bitwiseOR(F.shiftleft(x, _XY_BITS))
-        .bitwiseOR(y)
+    return F.expr(
+        f"CAST(greatest(least(floor((1.0D - ln(tan({r}) + 1.0D / "
+        f"cos({r})) / {pi}D) / 2.0D * {n}), {m}), 0L) AS BIGINT)"
     )
-
-
-def cell_parent(cid: Column, z: int, parent_z: int) -> Column:
-    """Packed cell → packed parent cell at lower zoom (cell-prefix join key)."""
-    d = z - parent_z
-    x = F.shiftrightunsigned(cid, _XY_BITS).bitwiseAND(F.lit((1 << _XY_BITS) - 1))
-    y = cid.bitwiseAND(F.lit((1 << _XY_BITS) - 1))
-    return pack_cell(F.shiftright(x, d), F.shiftright(y, d), parent_z)
 
 
 def coverage_xy(
-    minx: Column | str,
-    miny: Column | str,
-    maxx: Column | str,
-    maxy: Column | str,
-    zoom: int,
+    minx: str, miny: str, maxx: str, maxy: str, zoom: int | str
 ) -> tuple[Column, Column, Column, Column]:
     """BBox → covering tile ranges (x1..x2, y1..y2), NW→SE
     (lib/tile/bbox.go:5-21). Use with ``explode(sequence(...))``.
-    ``str`` arguments take the one-parse ``F.expr`` path (see tile_x)."""
+    Arguments as :func:`tile_x`."""
     return (
         tile_x(minx, zoom),
         tile_y(maxy, zoom),  # top-left y comes from the NORTH edge
@@ -110,7 +72,9 @@ def coverage_xy(
     )
 
 
-def explode_coverage(df, zoom: int, minx="minx", miny="miny", maxx="maxx", maxy="maxy"):
+def explode_coverage(
+    df: DataFrame, zoom: int | str, minx="minx", miny="miny", maxx="maxx", maxy="maxy"
+) -> DataFrame:
     """Explode each row into its covering (tile_x, tile_y) cells at ``zoom`` —
     the multi-cell replication step of the cell join (SURVEY.md J2/J4),
     entirely JVM-side via sequence+explode."""
@@ -118,7 +82,35 @@ def explode_coverage(df, zoom: int, minx="minx", miny="miny", maxx="maxx", maxy=
     return (
         df.withColumn("tile_x", F.explode(F.sequence(x1, x2)))
         .withColumn("tile_y", F.explode(F.sequence(y1, y2)))
-        .withColumn("tile_z", F.lit(zoom))
+        .withColumn("tile_z", F.lit(zoom) if isinstance(zoom, int) else F.expr(zoom))
+    )
+
+
+def explode_point_cells(
+    df: DataFrame, zooms: list[int], lon: str = "lon", lat: str = "lat"
+) -> DataFrame:
+    """Append (tile_z, tile_x, tile_y): one row per point per zoom in
+    ``zooms``. The cell is computed ONCE at ``max(zooms)``; every coarser
+    zoom is a ``shiftright`` of it inside one explode — slippy cells nest
+    exactly (parent = child >> Δz; the max-clamp commutes with the shift
+    and values are non-negative), so a point costs one log/tan evaluation
+    and the plan has one leg for all zooms."""
+    zmax = max(zooms)
+    fine = df.withColumn("_cx", tile_x(lon, zmax)).withColumn("_cy", tile_y(lat, zmax))
+    cells = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(z).alias("tile_z"),
+                    F.shiftright("_cx", zmax - z).alias("tile_x"),
+                    F.shiftright("_cy", zmax - z).alias("tile_y"),
+                )
+                for z in zooms
+            ]
+        )
+    )
+    return fine.withColumn("_c", cells).select(
+        *df.columns, "_c.tile_z", "_c.tile_x", "_c.tile_y"
     )
 
 
@@ -190,37 +182,12 @@ def layer_route(props: Column) -> Column:
     return F.coalesce(props.getItem("@layer"), F.lit("default"))
 
 
-def tile_x_dyn(lon: Column, zoom: Column) -> Column:
-    """lon → tile x where ``zoom`` is a COLUMN (multi-resolution joins)."""
-    n = F.pow(F.lit(2.0), zoom.cast("double"))
-    m = (F.pow(F.lit(2.0), zoom.cast("double")) - F.lit(1.0)).cast("bigint")
-    x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n)
-    return _clamp(x, F.lit(0), m).cast("bigint")
-
-
-def tile_y_dyn(lat: Column, zoom: Column) -> Column:
-    """lat → tile y where ``zoom`` is a COLUMN (multi-resolution joins)."""
-    n = F.pow(F.lit(2.0), zoom.cast("double"))
-    m = (F.pow(F.lit(2.0), zoom.cast("double")) - F.lit(1.0)).cast("bigint")
-    lat_rad = (
-        _clamp(lat, F.lit(-WGS84_LAT_MAX), F.lit(WGS84_LAT_MAX)) * F.lit(math.pi)
-    ) / F.lit(180.0)
-    y = F.floor(
-        (
-            F.lit(1.0)
-            - F.log(F.tan(lat_rad) + F.lit(1.0) / F.cos(lat_rad)) / F.lit(math.pi)
-        )
-        / F.lit(2.0)
-        * n
-    )
-    return _clamp(y, F.lit(0), m).cast("bigint")
-
-
 def quadkey(x: Column, y: Column, zoom: int) -> Column:
     """Bing-maps quadkey of a z/x/y cell: ``zoom`` base-4 digits, digit k
     = 2·y_bit + x_bit at level k (MSB first). A quadkey PREFIX of length
     k is exactly the zoom-k ancestor cell — the string-keyed sibling of
-    ``cell_parent``, JVM-native per character like the geohash encode."""
+    ``kernels.tilemath.cell_parent``, JVM-native per character like the
+    geohash encode."""
     out = None
     for k in range(zoom, 0, -1):
         d = (F.shiftright(y, k - 1) % 2) * 2 + F.shiftright(x, k - 1) % 2

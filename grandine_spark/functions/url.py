@@ -234,7 +234,8 @@ def extract_links(html: Column, base_url: Column) -> Column:
     root-relative ``/p`` and relative ``p`` resolve against the base origin
     / directory with ``/./`` and up to four ``/seg/../`` levels collapsed
     (deeper or root-escaping dot-segments drop the link rather than emit a
-    malformed URL). ``javascript:``/``mailto:``/``data:``/``tel:`` and
+    malformed URL); a query-only ``?q`` keeps the full base path.
+    ``javascript:``/``mailto:``/``data:``/``tel:`` and
     empty targets are dropped. When the base URL itself has no parseable
     scheme+host, scheme-relative and relative candidates are dropped
     rather than emitting malformed ``://host/p`` links (absolute hrefs
@@ -260,6 +261,8 @@ def extract_links(html: Column, base_url: Column) -> Column:
     # directory of the base path: strip the last segment; '' -> '/'
     basedir = F.regexp_replace(path, "[^/]*$", "")
     basedir = F.when(basedir == "", F.lit("/")).otherwise(basedir)
+    # a query-only href (``?q``) keeps the FULL base path (RFC 3986 §5.3)
+    basepath = F.when(path == "", F.lit("/")).otherwise(path)
 
     cands = F.concat(
         F.regexp_extract_all(html, F.lit(_HREF_DQ_RE), F.lit(1)),
@@ -280,9 +283,9 @@ def extract_links(html: Column, base_url: Column) -> Column:
         upath = F.regexp_extract(u, "^([^?]*)", 1)
         uquery = F.regexp_extract(u, "(\\?.*)$", 1)  # '' when absent
         rel = _collapse(
-            F.when(upath.startswith("/"), upath).otherwise(
-                F.concat(basedir, upath)
-            )
+            F.when(upath.startswith("/"), upath)
+            .when(upath == "", basepath)
+            .otherwise(F.concat(basedir, upath))
         )
         return (
             F.when(u == "", F.lit(None).cast("string"))
@@ -329,8 +332,10 @@ def extract_links_sql(html: str, base_url: str) -> str:
     upath = f"regexp_extract({u}, '^([^?]*)', 1)"
     uquery = f"regexp_extract({u}, '(\\?.*)$', 1)"
     base_ok = f"({scheme} <> '' AND {host} <> '')"
+    basepath = f"(CASE WHEN {path} = '' THEN '/' ELSE {path} END)"
     rel = (
         f"(CASE WHEN {upath} LIKE '/%' THEN {upath} "
+        f"WHEN {upath} = '' THEN {basepath} "
         f"ELSE {basedir} || {upath} END)"
     )
     for pat in (_DOT1_RE, _DOT1_RE, _DOTDOT_RE, _DOTDOT_RE, _DOTDOT_RE,

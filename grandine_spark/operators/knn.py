@@ -105,7 +105,6 @@ def knn(
     queries: DataFrame,
     k: int = 5,
     zoom: int = 6,
-    max_radius: int | None = None,  # kept for API compat; unused
     point_id: str = "url",
     query_id: str = "q_id",
     refine_threshold: int | None = None,
@@ -153,8 +152,8 @@ def knn(
     # pass (callers keep their own cache of the expensive upstream plan);
     # the multi-pass fallback adds a cache before it starts iterating.
     pts = (
-        points.withColumn("p_cx", TX.tile_x(F.col("lon"), zf))
-        .withColumn("p_cy", TX.tile_y(F.col("lat"), zf))
+        points.withColumn("p_cx", TX.tile_x("lon", zf))
+        .withColumn("p_cy", TX.tile_y("lat", zf))
         .select(
             F.col(point_id).alias("_pid"),
             F.col("lon").alias("p_lon"),

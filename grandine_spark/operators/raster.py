@@ -22,8 +22,8 @@ def rasterize_points(
 ) -> DataFrame:
     """vector→raster: bin points into cells; count + optional sum/mean."""
     cells = points.select(
-        TX.tile_x(F.col("lon"), zoom).alias("tile_x"),
-        TX.tile_y(F.col("lat"), zoom).alias("tile_y"),
+        TX.tile_x("lon", zoom).alias("tile_x"),
+        TX.tile_y("lat", zoom).alias("tile_y"),
         *( [F.col(value_col)] if value_col else [] ),
     )
     aggs = [F.count(F.lit(1)).alias("n")]
@@ -179,28 +179,11 @@ def cell_pyramid(
     The explode factor is the zoom-level count, not the data size, and the
     shuffle carries partial aggregates (map-side combine), so at 100 TB
     this beats z-many downsample passes by z scans and z-1 shuffles."""
-    zs = list(range(min_zoom, max_zoom + 1))
     base = points.select(
-        TX.tile_x(F.col("lon"), max_zoom).alias("_bx"),
-        TX.tile_y(F.col("lat"), max_zoom).alias("_by"),
-        *([F.col(value_col).alias("_v")] if value_col else []),
+        "lon", "lat", *([F.col(value_col).alias("_v")] if value_col else [])
     )
-    levels = base.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(z).alias("tile_z"),
-                        F.shiftright("_bx", max_zoom - z).alias("tile_x"),
-                        F.shiftright("_by", max_zoom - z).alias("tile_y"),
-                    )
-                    for z in zs
-                ]
-            )
-        ).alias("c"),
-        *([F.col("_v")] if value_col else []),
-    )
+    levels = TX.explode_point_cells(base, list(range(min_zoom, max_zoom + 1)))
     aggs = [F.count(F.lit(1)).alias("n")]
     if value_col:
         aggs.append(F.sum("_v").alias("sum_value"))
-    return levels.groupBy("c.tile_z", "c.tile_x", "c.tile_y").agg(*aggs)
+    return levels.groupBy("tile_z", "tile_x", "tile_y").agg(*aggs)

@@ -126,8 +126,8 @@ def geocode_pages(pages: DataFrame) -> DataFrame:
 
 def index_points(points: DataFrame, zoom: int, lon="lon", lat="lat") -> DataFrame:
     """Attach the z-cell id (native, codegen'd)."""
-    return points.withColumn("cell_x", TX.tile_x(F.col(lon), zoom)).withColumn(
-        "cell_y", TX.tile_y(F.col(lat), zoom)
+    return points.withColumn("cell_x", TX.tile_x(lon, zoom)).withColumn(
+        "cell_y", TX.tile_y(lat, zoom)
     )
 
 
@@ -308,41 +308,18 @@ def multires_spatial_join(
             dim_rows.append((z, cx, cy, fid, *bb, full))
     dim_df = spark.createDataFrame(
         dim_rows,
-        "z int, cell_x long, cell_y long, feature_id long, minx double, "
+        "tile_z int, tile_x long, tile_y long, feature_id long, minx double, "
         "miny double, maxx double, maxy double, full_inside boolean",
     )
     sentinel = min(poly_map, default=0) - 1
     pip = _refine_by_id(poly_map, points_in_polygon_np)
 
-    # Compute the cell ONCE at the finest active zoom, then derive every
-    # coarser active zoom by shiftright — slippy tiles nest exactly
-    # (parent = child >> Δz; the max-clamp commutes with the shift and
-    # values are non-negative), so this replaces |zs| log/tan evaluations
-    # per point with one, same prefix trick as raster.py's downsample.
-    zs = sorted(zooms_used)
-    zmax = zs[-1]
-    pts = points.withColumn(
-        "_cxf", TX.tile_x(F.col("lon"), zmax)
-    ).withColumn("_cyf", TX.tile_y(F.col("lat"), zmax))
-    pts = (
-        pts.withColumn(
-            "_zc",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(z).cast("int").alias("z"),
-                            F.shiftright(F.col("_cxf"), zmax - z).alias("cell_x"),
-                            F.shiftright(F.col("_cyf"), zmax - z).alias("cell_y"),
-                        )
-                        for z in zs
-                    ]
-                )
-            ),
-        )
-        .select(*points.columns, "_zc.z", "_zc.cell_x", "_zc.cell_y")
+    # one log/tan per point at the finest active zoom; coarser active
+    # zooms are shiftright-derived (slippy cells nest exactly)
+    pts = TX.explode_point_cells(points, sorted(zooms_used))
+    joined = pts.join(
+        F.broadcast(dim_df), ["tile_z", "tile_x", "tile_y"], "inner"
     )
-    joined = pts.join(F.broadcast(dim_df), ["z", "cell_x", "cell_y"], "inner")
     coarse = joined.filter(
         TX.point_in_bbox(
             F.col("lon"), F.col("lat"),

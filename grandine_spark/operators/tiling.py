@@ -29,7 +29,7 @@ shuffle arrival order.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -48,11 +48,18 @@ TILES_SCHEMA = T.StructType(
 )
 
 
-def renderable_at(features: DataFrame, zoom: int) -> DataFrame:
-    """@zoom:min/@zoom:max gate (cmd/tiler/tiler.go:230-248)."""
+def _zoom_gate(zoom: Column) -> Column:
+    """@zoom:min <= zoom <= @zoom:max, defaults 0/99 (cmd/tiler/tiler.go:
+    230-248); ``zoom`` is a literal or a per-row zoom column."""
+    zd = zoom.cast("double")
     zmin = F.coalesce(F.col("zoom_min").cast("double"), F.lit(0.0))
     zmax = F.coalesce(F.col("zoom_max").cast("double"), F.lit(99.0))
-    return features.filter((F.lit(float(zoom)) >= zmin) & (F.lit(float(zoom)) <= zmax))
+    return (zd >= zmin) & (zd <= zmax)
+
+
+def renderable_at(features: DataFrame, zoom: int) -> DataFrame:
+    """@zoom:min/@zoom:max gate (cmd/tiler/tiler.go:230-248)."""
+    return features.filter(_zoom_gate(F.lit(float(zoom))))
 
 
 def coverage_at(features: DataFrame, zoom: int) -> DataFrame:
@@ -62,15 +69,10 @@ def coverage_at(features: DataFrame, zoom: int) -> DataFrame:
 
 def cell_stats(features: DataFrame, zooms: list[int]) -> DataFrame:
     """Per-cell feature counts per zoom — the skew pre-pass (drives hot-cell
-    diagnostics and lineage; SURVEY.md §4 'Skew handling')."""
-    parts = [
-        coverage_at(features, z).groupBy("tile_z", "tile_x", "tile_y").count()
-        for z in zooms
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    diagnostics and lineage; SURVEY.md §4 'Skew handling'). One leg for
+    all zooms: the same routed coverage the tiler groups."""
+    cov = _routed_coverage(features, zooms)
+    return cov.groupBy("tile_z", "tile_x", "tile_y").count()
 
 
 def global_bbox(features: DataFrame) -> tuple[float, float, float, float]:
@@ -445,12 +447,12 @@ def _routed_coverage(
     zooms: list[int],
     anchor_cells: dict[int, "tuple[int, DataFrame]"] | None = None,
 ) -> DataFrame | None:
-    """Unioned per-zoom coverage with the routed layer — the shared first
-    stage of :func:`build_tiles` and :func:`tile_digests` (digest-vs-tile
-    byte-identity depends on both seeing the exact same rows, so this
-    exists once). Columns: tile_z/x/y, feature_id, layer_name, wkb, props,
+    """All-zoom coverage with the routed layer — the shared first stage of
+    :func:`build_tiles`, :func:`tile_digests` and :func:`cell_stats`
+    (digest-vs-tile byte-identity depends on both seeing the exact same
+    rows, so this exists once). Columns: tile_z/x/y, feature_id, layer_name, wkb, props,
     plus ``_nc`` — the feature's bbox cell count at that row's zoom (the
-    exact pre-restriction explode fan-out, computed once per zoom branch
+    exact pre-restriction explode fan-out, computed per (feature, zoom)
     while the bbox columns are still in scope; the classifier gate in
     :func:`build_tiles` keys off it). ``None`` when no zoom has work
     (anchor mode with an empty work list).
@@ -485,33 +487,13 @@ def _routed_coverage(
 
     zlist = ",".join(str(z) for z in zs)
     f = features.withColumn("tile_z", F.explode(F.expr(f"array({zlist})")))
-    zd = F.col("tile_z").cast("double")
-    zmin = F.coalesce(F.col("zoom_min").cast("double"), F.lit(0.0))
-    zmax = F.coalesce(F.col("zoom_max").cast("double"), F.lit(99.0))
-    f = f.filter((zd >= zmin) & (zd <= zmax))
-    nd = "pow(2.0D, CAST(tile_z AS DOUBLE))"
-    md = f"CAST({nd} - 1.0D AS BIGINT)"
-    pi = repr(3.141592653589793)
-    lm = repr(TX.WGS84_LAT_MAX)
-
-    def dyn_x(col: str) -> str:
-        return (
-            f"CAST(greatest(least(floor((({col}) + 180.0D) / 360.0D * "
-            f"{nd}), {md}), 0L) AS BIGINT)"
-        )
-
-    def dyn_y(col: str) -> str:
-        r = f"greatest(least({col}, {lm}D), -{lm}D) * {pi}D / 180.0D"
-        return (
-            f"CAST(greatest(least(floor((1.0D - ln(tan({r}) + 1.0D / "
-            f"cos({r})) / {pi}D) / 2.0D * {nd}), {md}), 0L) AS BIGINT)"
-        )
-
+    f = f.filter(_zoom_gate(F.col("tile_z")))
+    x1, y1, x2, y2 = TX.coverage_xy("minx", "miny", "maxx", "maxy", "tile_z")
     f = (
-        f.withColumn("_fx1", F.expr(dyn_x("minx")))
-        .withColumn("_fy1", F.expr(dyn_y("maxy")))  # NW y from the NORTH
-        .withColumn("_fx2", F.expr(dyn_x("maxx")))
-        .withColumn("_fy2", F.expr(dyn_y("miny")))  # SE y from the SOUTH
+        f.withColumn("_fx1", x1)
+        .withColumn("_fy1", y1)
+        .withColumn("_fx2", x2)
+        .withColumn("_fy2", y2)
     )
     # _nc = the feature's PRE-restriction fan-out at this zoom (anchor and
     # only_cells restriction must not change it — the classifier gate keys
@@ -594,14 +576,14 @@ def build_tiles(
 ) -> DataFrame:
     """features → MVT tiles at the given zoom levels.
 
-    One DataFrame covering all zooms (unioned coverage) so Spark schedules a
-    single shuffle; each (z,x,y) group encodes independently. The group is
-    gathered with collect_list (partial-aggregated map-side) and whole tiles
-    are encoded in batches by a scalar pandas UDF — byte-identical to the
-    per-group applyInPandas path, minus its per-tile Python overhead. Tile
+    One DataFrame covering all zooms (single-leg coverage) so Spark
+    schedules a single shuffle; each (z,x,y) group encodes independently.
+    The group is gathered with collect_list (partial-aggregated map-side)
+    and whole tiles are encoded in Arrow batches by a ``mapInArrow``
+    encoder (one Python call per batch, no per-tile Python overhead). Tile
     encode must see the WHOLE group to be byte-stable (MVT dictionaries +
     merge are order-sensitive), so groups are never split; rows are sorted
-    by feature_id inside the UDF for shuffle-order independence.
+    by feature_id inside the encoder for shuffle-order independence.
     """
     n_shuffle = int(
         features.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
@@ -958,21 +940,11 @@ def incremental_tiles_delta(
 
 def tile_assignments(points: DataFrame, zooms: list[int], id_col: str = "url") -> DataFrame:
     """(id, z, x, y) tile assignment for point rows — the golden
-    'tile z/x/y assignments' output of BASELINE.json. Pure native exprs."""
-    outs = []
-    for z in zooms:
-        outs.append(
-            points.select(
-                F.col(id_col),
-                F.lit(z).alias("tile_z"),
-                TX.tile_x(F.col("lon"), z).alias("tile_x"),
-                TX.tile_y(F.col("lat"), z).alias("tile_y"),
-            )
-        )
-    df = outs[0]
-    for o in outs[1:]:
-        df = df.unionByName(o)
-    return df
+    'tile z/x/y assignments' output of BASELINE.json. Pure native exprs,
+    one leg for all zooms (TX.explode_point_cells)."""
+    return TX.explode_point_cells(points, zooms).select(
+        id_col, "tile_z", "tile_x", "tile_y"
+    )
 
 
 def write_tiles(

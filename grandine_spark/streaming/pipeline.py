@@ -30,8 +30,8 @@ def windowed_cell_counts(
         points.withWatermark(ts_col, watermark)
         .groupBy(
             F.window(ts_col, window).alias("w"),
-            TX.tile_x(F.col("lon"), zoom).alias("tile_x"),
-            TX.tile_y(F.col("lat"), zoom).alias("tile_y"),
+            TX.tile_x("lon", zoom).alias("tile_x"),
+            TX.tile_y("lat", zoom).alias("tile_y"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
@@ -53,18 +53,6 @@ def stream_cell_counts(
     """Geocode the pages stream, then windowed per-cell counts."""
     pts = stream_geocode(pages_stream)
     return windowed_cell_counts(pts, "warc_ts", zoom, window, watermark)
-
-
-def stream_tile_assignments(pages_stream: DataFrame, zoom: int = 14) -> DataFrame:
-    """Streaming per-page tile assignment (stateless map — no shuffle)."""
-    pts = stream_geocode(pages_stream)
-    return pts.select(
-        "url",
-        "warc_ts",
-        F.lit(zoom).alias("tile_z"),
-        TX.tile_x(F.col("lon"), zoom).alias("tile_x"),
-        TX.tile_y(F.col("lat"), zoom).alias("tile_y"),
-    )
 
 
 def stream_dedup_first_seen(

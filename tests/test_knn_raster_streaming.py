@@ -108,8 +108,8 @@ def test_streaming_matches_batch(spark, tmp_path):
     batch = (
         geocode_pages(spark.read.parquet(src))
         .groupBy(
-            TX.tile_x(F.col("lon"), 5).alias("tile_x"),
-            TX.tile_y(F.col("lat"), 5).alias("tile_y"),
+            TX.tile_x("lon", 5).alias("tile_x"),
+            TX.tile_y("lat", 5).alias("tile_y"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )

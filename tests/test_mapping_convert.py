@@ -206,3 +206,30 @@ def test_geojson_encode_closes_rings(spark):
         if obj["geometry"]["type"] == "Polygon":
             for ring in obj["geometry"]["coordinates"]:
                 assert ring[0] == ring[-1]  # re-closed on encode
+
+
+def test_inspect_features_previews(spark):
+    """inspect_features prints one line per feature: type name, coordinate
+    preview (point coords / line length + start / polygon ring and point
+    counts) and the props dict."""
+    from grandine_spark.kernels.wkb import to_wkb
+    from grandine_spark.sources.convert import inspect_features
+
+    rows = [
+        (to_wkb(1, (13.4, 52.5)), {"name": "cafe"}),
+        (to_wkb(2, [(0.0, 0.0), (1.5, 2.25), (3.0, 4.0)]), {"highway": "primary"}),
+        (
+            to_wkb(3, [[(0.0, 0.0), (4.0, 0.0), (4.0, 4.0), (0.0, 4.0)],
+                       [(1.0, 1.0), (1.0, 2.0), (2.0, 2.0)]]),
+            None,
+        ),
+    ]
+    df = spark.createDataFrame(rows, "wkb binary, props map<string,string>")
+    lines = inspect_features(df).splitlines()
+    assert lines == [
+        f"{'Point':12s} (13.400000, 52.500000)  {{'name': 'cafe'}}",
+        f"{'LineString':12s} 3 pts, start (0.000000, 0.000000)  "
+        "{'highway': 'primary'}",
+        f"{'Polygon':12s} 2 rings, 7 pts  {{}}",
+    ]
+    assert len(inspect_features(df, n=2).splitlines()) == 2

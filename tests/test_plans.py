@@ -82,6 +82,25 @@ def test_tiles_partial_collect_list_mapside(spark):
     assert "ArrowEvalPython" in plan
 
 
+def test_assignments_and_cell_stats_single_leg(spark, pages_path, tmp_path):
+    """tile_assignments and cell_stats cover every zoom in ONE leg: their
+    optimized plans read the input once and contain no Union."""
+    from grandine_spark.operators.spatial_join import geocode_pages
+    from grandine_spark.operators.tiling import cell_stats, tile_assignments
+    from grandine_spark.sources import synth
+
+    fpath = str(tmp_path / "features")
+    synth.features(spark, n_polygons=20, n_roads=10, n_pois=10).write.parquet(fpath)
+    pts = geocode_pages(spark.read.parquet(pages_path))
+    for df in (
+        tile_assignments(pts, [2, 7, 14]),
+        cell_stats(spark.read.parquet(fpath), [2, 7, 10]),
+    ):
+        opt = df._jdf.queryExecution().optimizedPlan().toString()
+        assert len(re.findall(r"\bRelation \[", opt)) == 1, opt
+        assert "Union" not in opt, opt
+
+
 def test_dedup_pairs_single_exchange_no_broadcast(spark, tmp_path):
     """dedup_exact_pairs must be window-over-digest: exactly one shuffle,
     no join, no broadcast of the (corpus-sized) keeper table."""

@@ -51,8 +51,8 @@ def test_native_tile_exprs_match_kernel(spark, pages_df):
             pts.select(
                 "lon",
                 "lat",
-                TX.tile_x(F.col("lon"), zoom).alias("tx"),
-                TX.tile_y(F.col("lat"), zoom).alias("ty"),
+                TX.tile_x("lon", zoom).alias("tx"),
+                TX.tile_y("lat", zoom).alias("ty"),
             )
         ).collect()
         for r in rows:
@@ -161,11 +161,11 @@ def test_multires_join_equals_single_zoom(spark):
 
 
 def test_cell_shift_nesting_equals_dyn_exprs(spark):
-    """The multires point stage derives coarse cells from the finest-zoom
-    cell by shiftright (slippy tiles nest; the max-clamp commutes with the
-    shift). Prove it against the per-zoom trig expressions tile_x_dyn /
-    tile_y_dyn over adversarial coords: antimeridian, poles, clamp
-    boundaries, and cell-edge-adjacent values."""
+    """explode_point_cells derives coarse cells from the finest-zoom cell by
+    shiftright (slippy tiles nest; the max-clamp commutes with the shift).
+    Prove it against the per-zoom expressions — int zoom and column zoom
+    (``"tile_z"``) — and the scalar tile_name over adversarial coords:
+    antimeridian, poles, clamp boundaries, and cell-edge-adjacent values."""
     from pyspark.sql import functions as F
 
     from grandine_spark.functions import tile_exprs as TX
@@ -184,20 +184,26 @@ def test_cell_shift_nesting_equals_dyn_exprs(spark):
         )
     ]
     df = spark.createDataFrame(pts, "lon double, lat double")
-    zmax = 12
-    base = df.withColumn("_cxf", TX.tile_x(F.col("lon"), zmax)).withColumn(
-        "_cyf", TX.tile_y(F.col("lat"), zmax)
-    )
-    for z in (2, 5, 7, 11, 12):
-        out = base.select(
-            F.shiftright("_cxf", zmax - z).alias("sx"),
-            F.shiftright("_cyf", zmax - z).alias("sy"),
-            TX.tile_x_dyn(F.col("lon"), F.lit(z)).alias("dx"),
-            TX.tile_y_dyn(F.col("lat"), F.lit(z)).alias("dy"),
-            "lon", "lat",
-        ).collect()
+    zooms = [0, 2, 5, 7, 11, 12]
+    cells = TX.explode_point_cells(df, zooms).withColumn(
+        "cx", TX.tile_x("lon", "tile_z")
+    ).withColumn("cy", TX.tile_y("lat", "tile_z"))
+    assert cells.count() == len(pts) * len(zooms)
+    for z in zooms:
+        out = (
+            cells.filter(F.col("tile_z") == z)
+            .select(
+                "lon", "lat", "tile_x", "tile_y", "cx", "cy",
+                TX.tile_x("lon", z).alias("ix"),
+                TX.tile_y("lat", z).alias("iy"),
+            )
+            .collect()
+        )
+        assert len(out) == len(pts)
         for r in out:
-            assert (r.sx, r.sy) == (r.dx, r.dy), (z, r.lon, r.lat)
+            kx, ky, _ = tile_name(r.lon, r.lat, z)
+            assert (r.tile_x, r.tile_y) == (r.ix, r.iy), (z, r.lon, r.lat)
+            assert (r.cx, r.cy) == (r.ix, r.iy) == (kx, ky), (z, r.lon, r.lat)
 
 
 def test_radius_join_matches_bruteforce(spark):

@@ -7,6 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from grandine_spark.functions import tile_exprs as TX
 from grandine_spark.kernels.tilemath import coverage as kernel_coverage
 from grandine_spark.operators.spatial_join import geocode_pages
 from grandine_spark.operators.tiling import (
@@ -59,8 +60,17 @@ def test_build_tiles_deterministic_across_parallelism(spark, features_df):
 
 
 def test_cell_stats_skew_surface(spark, features_df):
-    stats = cell_stats(features_df, [7]).collect()
-    assert sum(r["count"] for r in stats) == coverage_at(features_df, 7).count()
+    # one leg for all zooms: equals the per-zoom coverage counts
+    zooms = [2, 7, 10]
+    stats = cell_stats(features_df, zooms).collect()
+    assert {tuple(r) for r in stats} == {
+        tuple(r)
+        for z in zooms
+        for r in coverage_at(features_df, z)
+        .groupBy("tile_z", "tile_x", "tile_y")
+        .count()
+        .collect()
+    }
     assert max(r["count"] for r in stats) > 1  # clustered → hot cells exist
 
 
@@ -71,6 +81,14 @@ def test_tile_assignments_and_text_invariant(spark):
     rows = ta.collect()
     n = pts.count()
     assert len(rows) == 3 * n
+    # one leg for all zooms: equals the per-zoom tile expressions
+    assert sorted(tuple(r) for r in rows) == sorted(
+        (r.url, z, r.tx, r.ty)
+        for z in (2, 7, 14)
+        for r in pts.select(
+            "url", TX.tile_x("lon", z).alias("tx"), TX.tile_y("lat", z).alias("ty")
+        ).collect()
+    )
     # per-url text survives byte-identical (sha256 carried through)
     h1 = pts.select("url", F.sha2(F.col("text"), 256).alias("h")).collect()
     h2 = (

@@ -130,6 +130,7 @@ def test_extract_links_resolution_rules(spark):
          '<a href="/../esc.html">esc</a>'
          '<a data-href="https://fake.example/not-a-link">dh</a>'
          '<a href="p?next=/a/../b&amp;x=./y">q</a>'
+         '<a href="?page=2">qo</a>'
          '<a href="B.HTML">dup</a>'),
         (2, "not a url at all",
          '<a href="p.html">p</a><a href="//cdn.net/x">sr</a>'
@@ -152,6 +153,8 @@ def test_extract_links_resolution_rules(spark):
             # data-href is NOT an outlink (delimiter-guarded href regex);
             # the query string survives dot-collapse byte-for-byte
             "http://www.ex.com/d1/d2/p?next=/a/../b&amp;x=./y",
+            # query-only href keeps the full base path (RFC 3986 §5.3)
+            "http://www.ex.com/d1/d2/page.html?page=2",
         ]
     )
     # unparseable base: scheme-relative and relative candidates DROP (no
@@ -178,6 +181,7 @@ def test_extract_links_sql_twin_parity(spark):
         '<a href="/deep/../../esc{i}">8</a>',
         '<a data-href="/not-a-link{i}.html">9</a>',
         '<a href="p{i}?next=/a/../b{i}&x=./y">10</a>',
+        '<a href="?page={i}">11</a>',
     ]
     for i in range(40):
         html = "".join(s.format(i=i) for s in shapes[: (i % len(shapes)) + 1])
