@@ -73,7 +73,7 @@ def coverage_xy(
 
 
 def explode_coverage(
-    df: DataFrame, zoom: int | str, minx="minx", miny="miny", maxx="maxx", maxy="maxy"
+    df: DataFrame, zoom: int, minx="minx", miny="miny", maxx="maxx", maxy="maxy"
 ) -> DataFrame:
     """Explode each row into its covering (tile_x, tile_y) cells at ``zoom`` —
     the multi-cell replication step of the cell join (SURVEY.md J2/J4),
@@ -82,21 +82,20 @@ def explode_coverage(
     return (
         df.withColumn("tile_x", F.explode(F.sequence(x1, x2)))
         .withColumn("tile_y", F.explode(F.sequence(y1, y2)))
-        .withColumn("tile_z", F.lit(zoom) if isinstance(zoom, int) else F.expr(zoom))
+        .withColumn("tile_z", F.lit(zoom))
     )
 
 
-def explode_point_cells(
-    df: DataFrame, zooms: list[int], lon: str = "lon", lat: str = "lat"
-) -> DataFrame:
-    """Append (tile_z, tile_x, tile_y): one row per point per zoom in
+def explode_point_cells(df: DataFrame, zooms: list[int]) -> DataFrame:
+    """Append (tile_z, tile_x, tile_y) to a frame with ``lon``/``lat``
+    columns: one row per point per zoom in
     ``zooms``. The cell is computed ONCE at ``max(zooms)``; every coarser
     zoom is a ``shiftright`` of it inside one explode — slippy cells nest
     exactly (parent = child >> Δz; the max-clamp commutes with the shift
     and values are non-negative), so a point costs one log/tan evaluation
     and the plan has one leg for all zooms."""
     zmax = max(zooms)
-    fine = df.withColumn("_cx", tile_x(lon, zmax)).withColumn("_cy", tile_y(lat, zmax))
+    fine = df.withColumn("_cx", tile_x("lon", zmax)).withColumn("_cy", tile_y("lat", zmax))
     cells = F.explode(
         F.array(
             *[

@@ -70,7 +70,9 @@ def coverage_at(features: DataFrame, zoom: int) -> DataFrame:
 def cell_stats(features: DataFrame, zooms: list[int]) -> DataFrame:
     """Per-cell feature counts per zoom — the skew pre-pass (drives hot-cell
     diagnostics and lineage; SURVEY.md §4 'Skew handling'). One leg for
-    all zooms: the same routed coverage the tiler groups."""
+    all zooms: the same routed coverage the tiler groups, so ``features``
+    needs the :func:`build_tiles` schema (feature_id, wkb, props, the bbox
+    columns, zoom_min/zoom_max). A zoom listed twice is counted once."""
     cov = _routed_coverage(features, zooms)
     return cov.groupBy("tile_z", "tile_x", "tile_y").count()
 
@@ -478,12 +480,12 @@ def _routed_coverage(
     leg fusion matters MORE: the 5-leg anchor plan cost ~2.8s of pure
     driver py4j plan construction + JVM analysis of a 5-branch union per
     run — fixed cost that dwarfed the delta-sized execution."""
+    # a repeated zoom would emit each of its rows twice
+    zs = list(dict.fromkeys(zooms))
     if anchor_cells is not None:
-        zs = [z for z in zooms if z in anchor_cells]
+        zs = [z for z in zs if z in anchor_cells]
         if not zs:
             return None
-    else:
-        zs = list(zooms)
 
     zlist = ",".join(str(z) for z in zs)
     f = features.withColumn("tile_z", F.explode(F.expr(f"array({zlist})")))

@@ -72,6 +72,9 @@ def test_cell_stats_skew_surface(spark, features_df):
         .collect()
     }
     assert max(r["count"] for r in stats) > 1  # clustered → hot cells exist
+    # a repeated zoom is counted once, not doubled
+    again = cell_stats(features_df, zooms + [7]).collect()
+    assert sorted(map(tuple, again)) == sorted(map(tuple, stats))
 
 
 def test_tile_assignments_and_text_invariant(spark):
