@@ -3265,12 +3265,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # entries. Round 5 (final) rotates the window so the record closes with
     # the LONGEST-STALE entries freshly certified: positions 1-35 are the 35
     # queries whose last driver row is r1-r3 (led by `tiles`, rows-only by
-    # design since r2), 36-41 are the queries touched by the r5 code changes
-    # (link extraction fixes, substring window validation, pack_chunks shard
-    # default), 42-43 keep the streaming pair continuously certified, and
-    # 44-50 re-certify the scale headliners. The tail (51+) was driver-
-    # certified in r4 and stays regression-protected by
-    # tests/test_entry_oracles.py, which checks ALL entries every run.
+    # design since r2), 36-43 are the 8 queries the r5 code changes touched
+    # or added (link extraction fixes, substring window validation, the new
+    # substring_clean and bm25, pack_chunks shard default, url filter),
+    # 44-45 keep the streaming pair continuously certified, and 46-50
+    # re-certify five scale headliners. The tail (51+, led by `radius_join` and
+    # `embed_near_dup_lsh`) was driver-certified in r4 and stays
+    # regression-protected by tests/test_entry_oracles.py, which checks ALL
+    # entries every run (and counts the 50 entries above the marker).
     return {
         "tiles": q_tiles,
         "event_windows": q_event_windows,
@@ -3322,9 +3324,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact": q_dedup_exact,
         "dedup_pairs": q_dedup_pairs,
         "minhash_lsh": q_minhash_lsh,
+        # --- past the driver's 50-row window: all driver-green in r4 ---
         "radius_join": q_radius_join,
         "embed_near_dup_lsh": q_embed_near_dup_lsh,
-        # --- past the driver's 50-row window: all driver-green in r4 ---
         "thumbnail_stats": q_thumbnail_stats,
         "gif_stats": q_gif_stats,
         "video_frames": q_video_frames,

@@ -467,51 +467,6 @@ def bearing(lon1, lat1, lon2, lat2) -> float:
     return math.fmod(math.degrees(math.atan2(y, x)) + 360.0, 360.0)
 
 
-def _segments_touch_rect(polygon, minx, miny, maxx, maxy) -> bool:
-    """True if any ring segment of ``polygon`` intersects or lies inside the
-    closed rectangle. Vectorized: endpoint-in-rect OR crossing any of the 4
-    rect edges (conservative exactness — used to DISQUALIFY interior cells)."""
-    for ring in polygon:
-        r = np.asarray(ring, dtype=float)
-        a = r
-        b = np.roll(r, -1, axis=0)
-        # endpoint inside the closed rect
-        inside = (
-            (a[:, 0] >= minx) & (a[:, 0] <= maxx)
-            & (a[:, 1] >= miny) & (a[:, 1] <= maxy)
-        )
-        if inside.any():
-            return True
-        # segment-vs-rect-edge crossing via orientation tests
-        for ex1, ey1, ex2, ey2 in (
-            (minx, miny, maxx, miny),
-            (maxx, miny, maxx, maxy),
-            (maxx, maxy, minx, maxy),
-            (minx, maxy, minx, miny),
-        ):
-            d1 = (b[:, 0] - a[:, 0]) * (ey1 - a[:, 1]) - (b[:, 1] - a[:, 1]) * (ex1 - a[:, 0])
-            d2 = (b[:, 0] - a[:, 0]) * (ey2 - a[:, 1]) - (b[:, 1] - a[:, 1]) * (ex2 - a[:, 0])
-            d3 = (ex2 - ex1) * (a[:, 1] - ey1) - (ey2 - ey1) * (a[:, 0] - ex1)
-            d4 = (ex2 - ex1) * (b[:, 1] - ey1) - (ey2 - ey1) * (b[:, 0] - ex1)
-            if ((d1 * d2 <= 0) & (d3 * d4 <= 0)).any():
-                return True
-    return False
-
-
-def cell_fully_inside(cell_bbox, polygon) -> bool:
-    """True only if the whole closed cell rectangle provably lies inside the
-    polygon (holes included): all 4 corners pass ray-casting PIP AND no ring
-    segment touches the rectangle. Conservative — boundary-touching cells
-    return False and fall back to per-point PIP, so using this as a PIP
-    bypass never changes join output."""
-    minx, miny, maxx, maxy = cell_bbox
-    corners_x = np.array([minx, maxx, maxx, minx])
-    corners_y = np.array([miny, miny, maxy, maxy])
-    if not points_in_polygon_np(corners_x, corners_y, polygon).all():
-        return False
-    return not _segments_touch_rect(polygon, minx, miny, maxx, maxy)
-
-
 def dist_points_to_line_np(
     px: np.ndarray, py: np.ndarray, line: np.ndarray
 ) -> np.ndarray:

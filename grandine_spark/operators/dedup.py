@@ -523,8 +523,9 @@ def substring_dedup_clean(
     """The REMOVAL half of the Lee et al. 2022 exact-substring pass
     (:func:`substring_dup_stats` is the measurement half): drop every
     token position covered by at least one ``window``-token window whose
-    (lowercased) text occurs >= 2 times anywhere in the corpus, and
-    rebuild each document from the surviving tokens in order.
+    (lowercased) text occurs >= 2 times anywhere in the corpus — in ALL
+    its copies, where Lee et al. keep one — and rebuild each document
+    from the surviving tokens in order.
 
     Returns one row per input document:
     (id_col, n_tokens, kept_tokens, clean_text) — ``clean_text`` is the

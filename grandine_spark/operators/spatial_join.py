@@ -7,7 +7,8 @@ Semantics: the reference's feature×cell inverted index build/probe
 
 1. index pages' points with a z-cell id — NATIVE expressions (tile_exprs);
 2. explode each polygon's bbox into its covering cells at the same zoom —
-   native sequence+explode (the multi-cell replication of J2/J4);
+   native sequence+explode (the multi-cell replication of J2/J4); the
+   broadcast dim drops or flags cells by the tiler's ``coverclass`` codes;
 3. equi-join on the cell id — **broadcast** the polygon side when small
    (the common case: admin polygons ≪ pages), else shuffle hash join with
    AQE skew splitting;
@@ -124,19 +125,107 @@ def geocode_pages(pages: DataFrame) -> DataFrame:
     )
 
 
-def index_points(points: DataFrame, zoom: int, lon="lon", lat="lat") -> DataFrame:
+def index_points(points: DataFrame, zoom: int) -> DataFrame:
     """Attach the z-cell id (native, codegen'd)."""
-    return points.withColumn("cell_x", TX.tile_x(lon, zoom)).withColumn(
-        "cell_y", TX.tile_y(lat, zoom)
+    return points.withColumn("cell_x", TX.tile_x("lon", zoom)).withColumn(
+        "cell_y", TX.tile_y("lat", zoom)
     )
 
 
 def polygons_by_cell(features: DataFrame, zoom: int) -> DataFrame:
     """Polygon features → one row per covering cell (J2/J4 replication)."""
     polys = features.filter(F.col("geom_type") == 3)
-    return TX.explode_coverage(polys, zoom).withColumnRenamed(
-        "tile_x", "cell_x"
-    ).withColumnRenamed("tile_y", "cell_y")
+    return TX.explode_coverage(polys, zoom).withColumnsRenamed(
+        {"tile_x": "cell_x", "tile_y": "cell_y"}
+    )
+
+
+def _too_many(features: DataFrame, max_dim_features: int) -> bool:
+    """Driver-collect guard: above ``max_dim_features`` a driver-built dim
+    is unsafe, so the caller takes its shuffle path (same output)."""
+    return features.limit(max_dim_features + 1).count() > max_dim_features
+
+
+def bbox_then_refine(
+    joined: DataFrame, refine, point_cols: tuple, feature_cols: tuple
+) -> DataFrame:
+    """The two-stage tail of every cell join: the native point-in-bbox
+    filter BEFORE the Python boundary (Catalyst cannot know UDF costs,
+    SURVEY.md §4), then the exact ``refine`` column, then the projection."""
+    coarse = joined.filter(
+        TX.point_in_bbox(
+            F.col("lon"), F.col("lat"),
+            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
+        )
+    )
+    return coarse.filter(refine).select(
+        *[F.col(c) for c in point_cols + feature_cols]
+    )
+
+
+def _broadcast_join(
+    points, polys, z_lo, z_hi, max_cells, point_cols, feature_cols
+) -> DataFrame:
+    """The broadcast polygon cell join behind ``spatial_join`` and
+    ``multires_spatial_join``. Each polygon indexes at the finest zoom in
+    [z_lo, z_hi] where its bbox covers ≤ ``max_cells`` cells; points probe
+    every zoom the dim uses. Geometry rides in the UDF closure, not in the
+    rows. The driver-side dim classifies each polygon's cells in ONE
+    ``coverclass.classify_poly_cells`` call: code-2 cells (provably
+    outside) are dropped; code-1 cells (provably inside) are
+    ``full_inside``, whose points skip ray-casting (sentinel id in the UDF,
+    accepted by the native ``full_inside OR pip`` filter). Edge rows and
+    columns are forced to code 0: ``tile_x``/``tile_y`` clamp points
+    beyond ±85.0511° (or ±180°) into them, so their rect does not bound
+    the points they hold."""
+    import numpy as np
+
+    from ..kernels.coverclass import classify_poly_cells
+    from ..kernels.tilemath import coverage, coverage_count
+    from ..kernels.wkb import geom_bbox
+
+    poly_map: dict[int, list] = {}
+    dim_rows = []
+    for r in polys.select("feature_id", "wkb").collect():
+        fid = int(r.feature_id)
+        rings = from_wkb(bytes(r.wkb))[1]
+        poly_map[fid] = rings
+        bb = geom_bbox(3, rings)
+        # walk the zoom down ARITHMETICALLY (corner-tile count) and only
+        # materialize coverage at the chosen zoom — a world-bbox polygon at
+        # z12 would otherwise enumerate ~16.7M tuples per feature
+        z = z_hi
+        while z > z_lo and coverage_count(*bb, z) > max_cells:
+            z -= 1
+        xs, ys, zs = np.array(coverage(*bb, z), np.int64).reshape(-1, 3).T
+        code = classify_poly_cells(rings, zs, xs, ys)
+        edge = (1 << z) - 1
+        code[(xs == 0) | (ys == 0) | (xs == edge) | (ys == edge)] = 0
+        for x, y, c in zip(xs.tolist(), ys.tolist(), code.tolist()):
+            if c != 2:
+                dim_rows.append((z, x, y, fid, *bb, c == 1))
+    dim_df = points.sparkSession.createDataFrame(
+        dim_rows,
+        "tile_z int, tile_x long, tile_y long, feature_id long, minx double, "
+        "miny double, maxx double, maxy double, full_inside boolean",
+    )
+    sentinel = min(poly_map, default=0) - 1  # fid the UDF never resolves
+    pip = _refine_by_id(poly_map, points_in_polygon_np)
+    pip_fid = F.when(F.col("full_inside"), F.lit(sentinel)).otherwise(
+        F.col("feature_id")
+    )
+    # one log/tan per point at the finest zoom in use; coarser zooms are
+    # shiftright-derived (slippy cells nest exactly)
+    zooms = sorted({row[0] for row in dim_rows}) or [z_lo]
+    joined = TX.explode_point_cells(points, zooms).join(
+        F.broadcast(dim_df), ["tile_z", "tile_x", "tile_y"], "inner"
+    )
+    return bbox_then_refine(
+        joined,
+        F.col("full_inside") | pip(F.col("lon"), F.col("lat"), pip_fid),
+        point_cols,
+        feature_cols,
+    )
 
 
 def spatial_join(
@@ -157,70 +246,16 @@ def spatial_join(
     (skew.salted_cell_join) so a dense urban cell spreads over many
     reducers instead of one straggler; output is identical.
 
-    ``max_dim_features``: the broadcast path collect()s the polygon side on
-    the driver; if the feature count exceeds this guard the join falls back
-    to the shuffle path automatically (same output) instead of OOMing the
-    driver — "small by definition" is now enforced, not assumed.
+    ``max_dim_features``: above this many polygons the broadcast path's
+    driver-side dim is unsafe; the join takes the shuffle path (same output).
     """
+    polys = features.filter(F.col("geom_type") == 3)
+    if broadcast and not _too_many(polys, max_dim_features):
+        return _broadcast_join(
+            points, polys, zoom, zoom, 0, point_cols, feature_cols
+        )
+
     pts = index_points(points, zoom)
-
-    if broadcast and (
-        features.filter(F.col("geom_type") == 3).limit(max_dim_features + 1).count()
-        > max_dim_features
-    ):
-        broadcast = False
-
-    if broadcast:
-        # broadcast path: geometry rides in the UDF closure, not in the rows —
-        # the join carries only bbox columns + feature_id. The dim is built
-        # driver-side (it is small by definition), which also precomputes the
-        # INTERIOR-CELL shortcut: a cell whose closed rect provably lies
-        # inside the polygon (all corners pass PIP, no ring segment touches
-        # the rect) needs no ray-casting at all — with admin-scale polygons
-        # most covered cells are interior, so the Python stage only ray-casts
-        # the boundary fringe. Conservative test ⇒ output identical.
-        from ..kernels.geometry import cell_fully_inside
-        from ..kernels.tilemath import coverage as cell_coverage
-        from ..kernels.tilemath import tile_bbox
-        from ..kernels.wkb import geom_bbox
-
-        spark = points.sparkSession
-        poly_map: dict[int, list] = {}
-        dim_rows = []
-        for r in (
-            features.filter(F.col("geom_type") == 3)
-            .select("feature_id", "wkb")
-            .collect()
-        ):
-            fid = int(r.feature_id)
-            rings = from_wkb(bytes(r.wkb))[1]
-            poly_map[fid] = rings
-            bb = geom_bbox(3, rings)
-            for cx, cy, _ in cell_coverage(*bb, zoom):
-                full = cell_fully_inside(tile_bbox(cx, cy, zoom), rings)
-                dim_rows.append((cx, cy, fid, *bb, full))
-        dim_df = spark.createDataFrame(
-            dim_rows,
-            "cell_x long, cell_y long, feature_id long, minx double, "
-            "miny double, maxx double, maxy double, full_inside boolean",
-        )
-        sentinel = min(poly_map, default=0) - 1  # fid the UDF never resolves
-        pip = _refine_by_id(poly_map, points_in_polygon_np)
-        joined = pts.join(F.broadcast(dim_df), ["cell_x", "cell_y"], "inner")
-        coarse = joined.filter(
-            TX.point_in_bbox(
-                F.col("lon"), F.col("lat"),
-                F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
-            )
-        )
-        pip_fid = F.when(F.col("full_inside"), F.lit(sentinel)).otherwise(
-            F.col("feature_id")
-        )
-        refined = coarse.filter(
-            F.col("full_inside") | pip(F.col("lon"), F.col("lat"), pip_fid)
-        )
-        return refined.select(*[F.col(c) for c in point_cols + feature_cols])
-
     cells = polygons_by_cell(features, zoom)
     if salt_threshold is not None:
         from .skew import salted_cell_join
@@ -230,19 +265,12 @@ def spatial_join(
         )
     else:
         joined = pts.join(cells, ["cell_x", "cell_y"], "inner")
-
-    # stage 1: native bbox filter (cheap, codegen) before the Python boundary
-    coarse = joined.filter(
-        TX.point_in_bbox(
-            F.col("lon"), F.col("lat"),
-            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
-        )
+    return bbox_then_refine(
+        joined,
+        pip_udf(F.col("lon"), F.col("lat"), F.col("wkb")),
+        point_cols,
+        feature_cols,
     )
-
-    # stage 2: exact ray-casting PIP (Arrow-batched)
-    refined = coarse.filter(pip_udf(F.col("lon"), F.col("lat"), F.col("wkb")))
-
-    return refined.select(*[F.col(c) for c in point_cols + feature_cols])
 
 
 def multires_spatial_join(
@@ -264,75 +292,18 @@ def multires_spatial_join(
     fine cells or flood city cells with coarse candidates. Here feature
     replication is ≤ max_cells rows per feature, and point replication is
     |active zooms| (bounded, typically ≤ 6) native exprs — no Python until
-    the PIP refinement. Output equals ``spatial_join`` exactly.
+    the PIP refinement. Output equals ``spatial_join`` exactly; above
+    ``max_dim_features`` it IS the shuffle ``spatial_join``.
     """
-    from ..kernels.geometry import cell_fully_inside
-    from ..kernels.tilemath import coverage as cell_coverage
-    from ..kernels.tilemath import coverage_count, tile_bbox
-    from ..kernels.wkb import geom_bbox
-
-    # driver-collect guard, same rationale as spatial_join's: too many
-    # features → fall back to the (skew-salted, AQE-covered) shuffle join
-    if (
-        features.filter(F.col("geom_type") == 3).limit(max_dim_features + 1).count()
-        > max_dim_features
-    ):
+    polys = features.filter(F.col("geom_type") == 3)
+    if _too_many(polys, max_dim_features):
         return spatial_join(
             points, features, zoom=DEFAULT_JOIN_ZOOM, broadcast=False,
             point_cols=point_cols, feature_cols=feature_cols,
         )
-
-    spark = points.sparkSession
-    poly_map: dict[int, list] = {}
-    dim_rows = []
-    zooms_used: set[int] = set()
-    for r in (
-        features.filter(F.col("geom_type") == 3)
-        .select("feature_id", "wkb")
-        .collect()
-    ):
-        fid = int(r.feature_id)
-        rings = from_wkb(bytes(r.wkb))[1]
-        poly_map[fid] = rings
-        bb = geom_bbox(3, rings)
-        # walk the zoom down ARITHMETICALLY (corner-tile count) and only
-        # materialize coverage at the chosen zoom — a world-bbox polygon at
-        # z_fine=12 would otherwise enumerate ~16.7M tuples per feature
-        z = z_fine
-        while z > z_coarse and coverage_count(*bb, z) > max_cells:
-            z -= 1
-        cov = cell_coverage(*bb, z)
-        zooms_used.add(z)
-        for cx, cy, _ in cov:
-            full = cell_fully_inside(tile_bbox(cx, cy, z), rings)
-            dim_rows.append((z, cx, cy, fid, *bb, full))
-    dim_df = spark.createDataFrame(
-        dim_rows,
-        "tile_z int, tile_x long, tile_y long, feature_id long, minx double, "
-        "miny double, maxx double, maxy double, full_inside boolean",
+    return _broadcast_join(
+        points, polys, z_coarse, z_fine, max_cells, point_cols, feature_cols
     )
-    sentinel = min(poly_map, default=0) - 1
-    pip = _refine_by_id(poly_map, points_in_polygon_np)
-
-    # one log/tan per point at the finest active zoom; coarser active
-    # zooms are shiftright-derived (slippy cells nest exactly)
-    pts = TX.explode_point_cells(points, sorted(zooms_used))
-    joined = pts.join(
-        F.broadcast(dim_df), ["tile_z", "tile_x", "tile_y"], "inner"
-    )
-    coarse = joined.filter(
-        TX.point_in_bbox(
-            F.col("lon"), F.col("lat"),
-            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
-        )
-    )
-    pip_fid = F.when(F.col("full_inside"), F.lit(sentinel)).otherwise(
-        F.col("feature_id")
-    )
-    refined = coarse.filter(
-        F.col("full_inside") | pip(F.col("lon"), F.col("lat"), pip_fid)
-    )
-    return refined.select(*[F.col(c) for c in point_cols + feature_cols])
 
 
 def radius_join(
@@ -351,79 +322,54 @@ def radius_join(
     Same shape as the broadcast cell join: line bboxes EXPANDED by the
     radius explode into cells (driver-side dim, broadcast), candidates pass
     a native expanded-bbox filter, then a vectorized min-distance-to-
-    polyline pandas UDF refines. No shuffle on the points side.
+    polyline pandas UDF refines. No shuffle on the points side. There is
+    no cell classifier here: tile margins do not bound a distance.
 
     ``max_dim_features``: above this count the driver-side dim build is
     unsafe; fall back to a fully distributed shuffle cell join where the
     geometry rides per-row as WKB (same output).
     """
     from ..kernels.geometry import dist_points_to_line_np
-    from ..kernels.tilemath import coverage as cell_coverage
+    from ..kernels.tilemath import coverage
     from ..kernels.wkb import geom_bbox
 
     def within(px, py, coords):
         return dist_points_to_line_np(px, py, coords) <= radius_deg
 
     lines = features.filter(F.col("geom_type") == 2)
-    if lines.limit(max_dim_features + 1).count() > max_dim_features:
-        expanded = (
-            lines.withColumn("minx", F.col("minx") - radius_deg)
-            .withColumn("miny", F.col("miny") - radius_deg)
-            .withColumn("maxx", F.col("maxx") + radius_deg)
-            .withColumn("maxy", F.col("maxy") + radius_deg)
-        )
-        cells = (
-            TX.explode_coverage(expanded, zoom)
-            .withColumnRenamed("tile_x", "cell_x")
-            .withColumnRenamed("tile_y", "cell_y")
-        )
-        pts = index_points(points, zoom)
-        joined = pts.join(cells, ["cell_x", "cell_y"], "inner")
-        coarse = joined.filter(
-            TX.point_in_bbox(
-                F.col("lon"), F.col("lat"),
-                F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
-            )
-        )
+    pts = TX.explode_point_cells(points, [zoom])
+    keys = ["tile_z", "tile_x", "tile_y"]
+    if _too_many(lines, max_dim_features):
+        expanded = lines.withColumns({
+            c: F.col(c) + sign * radius_deg
+            for c, sign in (("minx", -1), ("miny", -1), ("maxx", 1), ("maxy", 1))
+        })
+        joined = pts.join(TX.explode_coverage(expanded, zoom), keys, "inner")
         within_wkb = _refine_by_wkb(2, within)
-        refined = coarse.filter(
-            within_wkb(F.col("lon"), F.col("lat"), F.col("wkb"))
-        )
-        return refined.select(*[F.col(c) for c in point_cols + feature_cols])
+        refine = within_wkb(F.col("lon"), F.col("lat"), F.col("wkb"))
+        return bbox_then_refine(joined, refine, point_cols, feature_cols)
 
-    spark = points.sparkSession
     line_map: dict[int, object] = {}
     dim_rows = []
-    for r in (
-        features.filter(F.col("geom_type") == 2)
-        .select("feature_id", "wkb")
-        .collect()
-    ):
+    for r in lines.select("feature_id", "wkb").collect():
         fid = int(r.feature_id)
         coords = from_wkb(bytes(r.wkb))[1]
         line_map[fid] = coords
         minx, miny, maxx, maxy = geom_bbox(2, coords)
-        minx, miny = minx - radius_deg, miny - radius_deg
-        maxx, maxy = maxx + radius_deg, maxy + radius_deg
-        for cx, cy, _ in cell_coverage(minx, miny, maxx, maxy, zoom):
-            dim_rows.append((cx, cy, fid, minx, miny, maxx, maxy))
-    dim_df = spark.createDataFrame(
+        bb = (minx - radius_deg, miny - radius_deg,
+              maxx + radius_deg, maxy + radius_deg)
+        dim_rows.extend(
+            (zoom, cx, cy, fid, *bb) for cx, cy, _ in coverage(*bb, zoom)
+        )
+    dim_df = points.sparkSession.createDataFrame(
         dim_rows,
-        "cell_x long, cell_y long, feature_id long, minx double, "
+        "tile_z int, tile_x long, tile_y long, feature_id long, minx double, "
         "miny double, maxx double, maxy double",
     )
-
-    pts = index_points(points, zoom)
-    joined = pts.join(F.broadcast(dim_df), ["cell_x", "cell_y"], "inner")
-    coarse = joined.filter(
-        TX.point_in_bbox(
-            F.col("lon"), F.col("lat"),
-            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
-        )
-    )
+    joined = pts.join(F.broadcast(dim_df), keys, "inner")
     within_id = _refine_by_id(line_map, within)
-    refined = coarse.filter(within_id(F.col("lon"), F.col("lat"), F.col("feature_id")))
-    return refined.select(*[F.col(c) for c in point_cols + feature_cols])
+    refine = within_id(F.col("lon"), F.col("lat"), F.col("feature_id"))
+    return bbox_then_refine(joined, refine, point_cols, feature_cols)
 
 
 def zonal_stats(

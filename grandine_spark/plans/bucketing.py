@@ -94,17 +94,14 @@ def bucketed_spatial_join(
     equi-join (no exchange — co-located buckets) → native bbox filter →
     exact Arrow PIP refine. Output identical to
     ``spatial_join(..., broadcast=False)``; asserted in tests."""
-    from ..functions import tile_exprs as TX
-    from ..operators.spatial_join import pip_udf
+    from ..operators.spatial_join import bbox_then_refine, pip_udf
 
     pts = spark.table(points_table)
     cells = spark.table(features_table)
     joined = pts.join(cells, ["cell_x", "cell_y"], "inner")
-    coarse = joined.filter(
-        TX.point_in_bbox(
-            F.col("lon"), F.col("lat"),
-            F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
-        )
+    return bbox_then_refine(
+        joined,
+        pip_udf(F.col("lon"), F.col("lat"), F.col("wkb")),
+        point_cols,
+        feature_cols,
     )
-    refined = coarse.filter(pip_udf(F.col("lon"), F.col("lat"), F.col("wkb")))
-    return refined.select(*[F.col(c) for c in point_cols + feature_cols])

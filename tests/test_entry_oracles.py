@@ -56,6 +56,20 @@ ORACLES = entrymod.oracle_sql()
 QUERIES = entrymod.queries()
 
 
+def test_driver_window_holds_fifty_entries():
+    """The FIRST 50 queries() entries form the certification window; the
+    window marker comment in queries() must sit exactly after the 50th, so
+    the position map in its ordering comment holds."""
+    import inspect
+    import re
+
+    src = inspect.getsource(entrymod.queries)
+    above = src[: src.index("# --- past the driver's 50-row window")]
+    names = re.findall(r'^\s+"(\w+)": q_\w+,$', above, re.M)
+    assert len(names) == 50
+    assert names == list(QUERIES)[:50]
+
+
 @pytest.mark.parametrize("name", sorted(ORACLES.keys()))
 def test_query_matches_oracle(spark, ddb, name):
     sdf = QUERIES[name](spark, SF_DIR)

@@ -61,8 +61,11 @@ def test_native_tile_exprs_match_kernel(spark, pages_df):
 
 
 def test_spatial_join_matches_bruteforce(spark, pages_df, features_df):
-    """Both refine UDFs — by feature id (broadcast path) and by per-row WKB
-    (shuffle path) — against the scalar point_in_polygon oracle."""
+    """Both refine UDFs — by feature id (broadcast and multi-resolution
+    paths) and by per-row WKB (shuffle path) — against the scalar
+    point_in_polygon oracle."""
+    from grandine_spark.operators.spatial_join import multires_spatial_join
+
     pts = geocode_pages(pages_df)
 
     # brute force oracle: python PIP over every (point, polygon) pair
@@ -76,10 +79,14 @@ def test_spatial_join_matches_bruteforce(spark, pages_df, features_df):
             if point_in_polygon(p.lon, p.lat, rings):
                 expected.add((p.url, fid))
     assert len(expected) > 0  # clustered points do hit city polygons
-    for broadcast in (True, False):
-        out = spatial_join(pts, features_df, zoom=7, broadcast=broadcast)
+    joins = {
+        "broadcast": spatial_join(pts, features_df, zoom=7),
+        "shuffle": spatial_join(pts, features_df, zoom=7, broadcast=False),
+        "multires": multires_spatial_join(pts, features_df),
+    }
+    for name, out in joins.items():
         got = {(r.url, r.feature_id) for r in out.collect()}
-        assert got == expected, broadcast
+        assert got == expected, name
 
 
 def test_spatial_join_parallelism_invariant(spark, pages_df, features_df):
@@ -102,29 +109,24 @@ def test_spatial_join_plan_is_broadcast(spark, pages_df, features_df):
 
 
 def test_interior_cell_shortcut_identity(spark):
-    """Large polygons (many interior cells at the join zoom): the interior
-    shortcut must trigger AND the output must equal the shuffle path."""
-    from pyspark.sql import functions as F
-
-    from grandine_spark.kernels.geometry import cell_fully_inside
-    from grandine_spark.kernels.tilemath import coverage, tile_bbox
-    from grandine_spark.kernels.wkb import from_wkb, geom_bbox
-    from grandine_spark.operators.spatial_join import geocode_pages, spatial_join
-    from grandine_spark.sources import synth
+    """Large polygons (many classified cells at the join zoom): the
+    broadcast dim's coverclass codes must include both provably-inside
+    (1, ray-casting skipped) and provably-outside (2, cell dropped) cells,
+    AND the output must equal the shuffle path."""
+    from grandine_spark.kernels.coverclass import classify_poly_cells
+    from grandine_spark.kernels.tilemath import coverage
+    from grandine_spark.kernels.wkb import geom_bbox
 
     pages = synth.pages(spark, 4000)
     feats = synth.features(spark, n_polygons=30, n_roads=0, n_pois=0)
     pts = geocode_pages(pages)
 
-    # the shortcut actually fires at a fine zoom for at least one polygon
-    n_interior = 0
+    codes = []
     for r in feats.filter(F.col("geom_type") == 3).select("wkb").collect():
         rings = from_wkb(bytes(r.wkb))[1]
-        bb = geom_bbox(3, rings)
-        for cx, cy, _ in coverage(*bb, 9):
-            if cell_fully_inside(tile_bbox(cx, cy, 9), rings):
-                n_interior += 1
-    assert n_interior > 0
+        xs, ys, zs = np.array(coverage(*geom_bbox(3, rings), 9)).reshape(-1, 3).T
+        codes.extend(classify_poly_cells(rings, zs, xs, ys).tolist())
+    assert 1 in codes and 2 in codes
 
     a = {
         (r.url, r.feature_id)
@@ -135,6 +137,52 @@ def test_interior_cell_shortcut_identity(spark):
         for r in spatial_join(pts, feats, zoom=9, broadcast=False).collect()
     }
     assert a == b and len(a) > 0
+
+
+def test_polar_clamped_points_match_shuffle_and_oracle(spark):
+    """Points beyond ±85.0511° clamp into the edge tile row, whose mercator
+    rect does not contain them, so the dim's cell codes must not decide
+    them. A U-shaped ring whose notch (5, 88) is outside: a row-0 cell that
+    is inside below 85.05° must not wave the notch point through; a cap
+    ring entirely above 85.05° must not have its clamped interior point
+    dropped as 'provably outside' the row-0 rect."""
+    from grandine_spark.kernels.wkb import geom_bbox, to_wkb
+    from grandine_spark.operators.spatial_join import multires_spatial_join
+    from grandine_spark.sources.synth import FEATURE_SCHEMA
+
+    rings = {
+        1: [[(0.0, 80.0), (10.0, 80.0), (10.0, 89.0), (6.0, 89.0),
+             (6.0, 87.0), (4.0, 87.0), (4.0, 89.0), (0.0, 89.0)]],
+        2: [[(20.0, 86.0), (30.0, 86.0), (30.0, 89.0), (20.0, 89.0)]],
+    }
+    feats = spark.createDataFrame(
+        [
+            (fid, "areas", 3, bytearray(to_wkb(3, r)), *geom_bbox(3, r),
+             None, None, {})
+            for fid, r in rings.items()
+        ],
+        FEATURE_SCHEMA,
+    )
+    probes = [
+        ("notch", 5.0, 88.0), ("arm", 2.0, 88.0), ("base", 5.0, 82.0),
+        ("cap", 25.0, 87.5), ("off", 15.0, 88.0),
+    ]
+    pts = spark.createDataFrame(probes, "url string, lon double, lat double")
+    want = {
+        (url, fid)
+        for url, lon, lat in probes
+        for fid, r in rings.items()
+        if point_in_polygon(lon, lat, r)
+    }
+    assert want == {("arm", 1), ("base", 1), ("cap", 2)}
+    joins = {
+        "shuffle": spatial_join(pts, feats, zoom=7, broadcast=False),
+        "broadcast z7": spatial_join(pts, feats, zoom=7),
+        "broadcast z9": spatial_join(pts, feats, zoom=9),
+        "multires": multires_spatial_join(pts, feats),
+    }
+    for name, out in joins.items():
+        assert {(r.url, r.feature_id) for r in out.collect()} == want, name
 
 
 def test_multires_join_equals_single_zoom(spark):
