@@ -113,30 +113,9 @@ def explode_point_cells(df: DataFrame, zooms: list[int]) -> DataFrame:
     )
 
 
-def bbox_overlaps(
-    aminx, aminy, amaxx, amaxy, bminx, bminy, bmaxx, bmaxy
-) -> Column:
-    """Standard interval-overlap bbox predicate. NOTE: the reference's
-    BBox.Overlaps (lib/spatial/bbox.go:15-17) is corner-containment-based and
-    misses cross overlaps; we use the correct superset (SURVEY.md F2) — the
-    coarse phase may only ADD candidates, the PIP refinement removes them."""
-    return (
-        (aminx <= bmaxx) & (amaxx >= bminx) & (aminy <= bmaxy) & (amaxy >= bminy)
-    )
-
-
 def point_in_bbox(px, py, minx, miny, maxx, maxy) -> Column:
     """Point.InBBox (lib/spatial/point.go:18-21) — pushdown-friendly."""
     return (px >= minx) & (px <= maxx) & (py >= miny) & (py <= maxy)
-
-
-def bbox_fully_in(
-    aminx, aminy, amaxx, amaxy, bminx, bminy, bmaxx, bmaxy
-) -> Column:
-    """BBox.FullyIn — a ⊆ b (lib/spatial/bbox.go:19-21), native predicate."""
-    return (
-        (aminx >= bminx) & (amaxx <= bmaxx) & (aminy >= bminy) & (amaxy <= bmaxy)
-    )
 
 
 def haversine_m(lon1, lat1, lon2, lat2) -> Column:

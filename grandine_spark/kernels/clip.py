@@ -684,76 +684,6 @@ def _assemble_polygons_f(soup: list) -> list[list[np.ndarray]]:
     return polys
 
 
-def _ring_border_intersects(ring, bbox, eps: float = 1e-7) -> bool:
-    """Exact equivalent of ``line_intersections(ring, borders) != ∅`` (the
-    reference's short-circuit test) with a vectorized prefilter: a segment
-    can only intersect a border if its bbox comes within ``eps`` of that
-    border's span, so the exact 8-dp kernel runs on the few candidate
-    segments instead of every (segment × border) pair — this check was 65%
-    of total tile-encode CPU before (1.5M python segment tests per 36k
-    tiles). eps of 1e-7 safely covers the kernel's 8-dp rounding."""
-    p = np.asarray(ring, np.float64)
-    if len(p) < 2:
-        return False
-    # rings are canonically OPEN here (the general path strips the duplicate
-    # closing point) — the closing segment intersects the border like any
-    # other, so append it; a ring whose ONLY border crossing is the closing
-    # edge otherwise short-circuits to "fully covers" and emits a full-tile
-    # rectangle
-    if p[0, 0] != p[-1, 0] or p[0, 1] != p[-1, 1]:
-        p = np.vstack([p, p[:1]])
-    minx, miny, maxx, maxy = bbox
-    if len(p) <= 25:
-        # small rings (the admin/building norm): scalar loop beats the numpy
-        # array setup by ~3x at this size
-        borders = None
-        pts = p.tolist()
-        for i in range(len(pts) - 1):
-            (x1, y1), (x2, y2) = pts[i], pts[i + 1]
-            sxlo, sxhi = (x1, x2) if x1 <= x2 else (x2, x1)
-            sylo, syhi = (y1, y2) if y1 <= y2 else (y2, y1)
-            if syhi < miny - eps or sylo > maxy + eps:
-                continue
-            if sxhi < minx - eps or sxlo > maxx + eps:
-                continue
-            near_vx = (sxlo <= minx + eps and sxhi >= minx - eps) or (
-                sxlo <= maxx + eps and sxhi >= maxx - eps
-            )
-            near_hy = (sylo <= miny + eps and syhi >= miny - eps) or (
-                sylo <= maxy + eps and syhi >= maxy - eps
-            )
-            if not (near_vx or near_hy):
-                continue
-            if borders is None:
-                borders = _bbox_borders(bbox)
-            seg = ((x1, y1), (x2, y2))
-            for border in borders:
-                if segment_intersection(seg, border)[1]:
-                    return True
-        return False
-    # p is closed at this point (closing vertex appended above), so the
-    # consecutive-pair segment list INCLUDES the closing edge
-    a, b = p[:-1], p[1:]
-    sxlo, sxhi = np.minimum(a[:, 0], b[:, 0]), np.maximum(a[:, 0], b[:, 0])
-    sylo, syhi = np.minimum(a[:, 1], b[:, 1]), np.maximum(a[:, 1], b[:, 1])
-    yov = (syhi >= miny - eps) & (sylo <= maxy + eps)
-    xov = (sxhi >= minx - eps) & (sxlo <= maxx + eps)
-    near_vx = ((sxlo <= minx + eps) & (sxhi >= minx - eps)) | (
-        (sxlo <= maxx + eps) & (sxhi >= maxx - eps)
-    )
-    near_hy = ((sylo <= miny + eps) & (syhi >= miny - eps)) | (
-        (sylo <= maxy + eps) & (syhi >= maxy - eps)
-    )
-    cand = np.flatnonzero((yov & near_vx) | (xov & near_hy))
-    if cand.size == 0:
-        return False
-    return _any_border_intersection_np(a[cand], b[cand], bbox)
-
-
-def _any_border_intersection_np(a: np.ndarray, b: np.ndarray, bbox) -> bool:
-    return bool(_border_intersection_mask_np(a, b, bbox).any())
-
-
 def _border_intersection_mask_np(a: np.ndarray, b: np.ndarray, bbox) -> np.ndarray:
     """Exact vectorized twin of ``any(segment_intersection(seg, border)[1])``
     PER SEGMENT over candidate segments × the 4 bbox borders: same cartesian
@@ -795,17 +725,21 @@ def _border_intersection_mask_np(a: np.ndarray, b: np.ndarray, bbox) -> np.ndarr
 
 
 def ring_border_hits_batch(rings: list, bbox, eps: float = 1e-7) -> np.ndarray:
-    """Vectorized `_ring_border_intersects` over MANY rings at once —
-    identical verdict per ring (differ-tested), one numpy pass for the
-    whole batch instead of one Python call per (ring, tile) pair. Used by
-    kernels/mvt_batch for all single-ring polygon pairs of an Arrow batch,
-    where the clip mask is the constant (0, 0, extent, extent).
+    """Per ring: does it cross a border of ``bbox``? Exactly
+    ``line_intersections(closed ring, _bbox_borders(bbox)) != ∅``, the
+    reference's short-circuit test (lib/spatial/polygon.go:26-40) —
+    differ-tested against it. Rings may be open or closed; the closing
+    segment counts like any other (a ring whose ONLY crossing is the
+    closing edge must not short-circuit to "fully covers"). One numpy pass
+    for MANY rings: kernels/mvt_batch runs it over all single-ring polygon
+    pairs of an Arrow batch, where the clip mask is the constant
+    (0, 0, extent, extent).
 
     Exactness: the candidate prefilter is a conservative superset of true
     border crossings under the kernel's 8-dp rounding (a crossing segment's
-    bbox must come within eps of a border span), and every candidate runs
-    the same exact vectorized kernel as the scalar path
-    (_border_intersection_mask_np), so verdicts match bit-for-bit.
+    bbox must come within eps of a border span; eps of 1e-7 covers the
+    rounding), and every candidate runs the exact vectorized segment
+    kernel (_border_intersection_mask_np).
     """
     nr = len(rings)
     hits = np.zeros(nr, bool)
@@ -866,15 +800,15 @@ def clip_polygon(
     intersection (lib/spatial/clip_geos.go:11-41 semantics): 0..N result
     polygons, concave straddlers split, holes preserved/merged.
 
-    ``border_hit``: precomputed ``_ring_border_intersects(polygon[0], bbox)``
-    verdict for single-ring polygons (kernels/mvt_batch computes it for a
-    whole Arrow batch of (ring, tile) pairs in one vectorized pass); None
-    computes it here. Must equal the scalar verdict exactly — differ-tested.
+    ``border_hit``: precomputed ``ring_border_hits_batch`` verdict of
+    ``polygon[0]`` for single-ring polygons (kernels/mvt_batch computes it
+    for a whole Arrow batch of (ring, tile) pairs in one pass); None
+    computes it here.
     """
     minx, miny, maxx, maxy = bbox
     if len(polygon) == 1:
         if border_hit is None:
-            border_hit = _ring_border_intersects(polygon[0], bbox)
+            border_hit = bool(ring_border_hits_batch([polygon[0]], bbox)[0])
         if not border_hit:
             rminx, rminy, rmaxx, rmaxy = ring_bbox(polygon[0])
             # bbox fully inside ring's bbox AND an interior point inside the

@@ -1,22 +1,32 @@
-"""Batched MVT tile encoding — the encoder the tiler runs
-(operators/tiling.py), one call per Arrow batch of tiles.
+"""Batched tile encoding — the encoders the tiler runs (operators/tiling.py),
+one call per Arrow batch of tiles, for both tile codecs.
 
-Byte-identical to the scalar mvt.encode_tile, which tests use as its
-reference: every floating-point expression is the SAME IEEE-double operation
-sequence as kernels/mvt.py (the pixel affine repeats mvt.tile_affine_np's
-expression, the zigzag/varint integer identities are exact, and protobuf
-framing uses the shared kernels/protowire.py helpers), and
-tests/test_mvt_batch.py asserts tile-for-tile byte equality on seeded
+Pass 1, :func:`clip_tiles`, is shared: it projects every (feature, tile)
+pair of the batch into tile pixel space and clips it to the tile. Then
+:func:`encode_tiles_mvt` merges, weaves command ints, emits varints and
+assembles protobuf layers, while :func:`encode_tiles_geojson` writes a
+FeatureCollection of the same clipped pieces.
+
+The MVT output is byte-identical to the scalar mvt.encode_tile, which tests
+use as its reference: every floating-point expression is the SAME
+IEEE-double operation sequence as kernels/mvt.py (the pixel affine repeats
+mvt.tile_affine_np's expression, the zigzag/varint integer identities are
+exact, and protobuf framing uses the shared kernels/protowire.py helpers),
+and tests/test_mvt_batch.py asserts tile-for-tile byte equality on seeded
 corpora plus the reference goldens.
 
 Reference semantics: lib/mvt/codec.go:57-261 (EncodeTile/assembleLayer/
-encodeGeometry), lib/mvt/project.go:13-54 (tilePoint/flipFloat). The
-restructuring relative to kernels/mvt.py is purely about WHERE Python-level
-loops run:
+encodeGeometry), lib/mvt/project.go:13-54 (tilePoint/flipFloat),
+lib/tile/codec.go:17-31 (GeoJSON). The restructuring relative to
+kernels/mvt.py is purely about WHERE Python-level loops run:
 
 - mercator projection happens once per distinct geometry object (it does
   not depend on the tile; the caller memoizes per wkb), leaving a 4-op
-  numpy affine per (feature, tile) pair;
+  numpy affine per (feature, tile) pair, run once over the whole batch;
+- clipping stays per (feature, tile) in kernels/clip.py, but the polygon
+  fast-path decider (does a single-ring polygon cross the tile border?) is
+  one clip.ring_border_hits_batch pass over every such pair, handed to
+  clip_geom as a hint;
 - MoveTo/LineTo/ClosePath command ints for the WHOLE batch are woven by a
   single vectorized scatter (one np.cumsum for slot layout, one fancy-index
   write for the zigzag deltas);
@@ -26,12 +36,11 @@ loops run:
 - per-layer key/value dictionary encoding stays scalar (first-seen order is
   inherently sequential) but value serialization is memoized — props repeat
   across every tile a feature covers.
-
-Clipping is untouched: the scalar kernels/clip.py path runs per
-(feature, tile) exactly as before.
 """
 
 from __future__ import annotations
+
+import json
 
 import numpy as np
 
@@ -190,16 +199,19 @@ def mercator_of(gt: int, coords):
     return out
 
 
-def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
-    """Encode a batch of tiles: [(z, x, y, {layer: [feat, ...]})] → bytes|None
-    per tile, byte-identical to mvt.encode_tile per tile.
+def clip_tiles(work: list[tuple[int, int, int, dict]]) -> list:
+    """Pass 1 of both tile codecs — project and clip a batch of tiles:
+    [(z, x, y, {layer: [feat, ...]})] → per tile, [(layer_name, pieces)]
+    with layers sorted by name and pieces the clipped feature dicts
+    {"geom_type", "coords", "props"} in the layer's feature order (what
+    mvt.assemble_layer hands to merge_features).
 
     feat dicts: {"geom_type", "coords", "props"} plus optional "cc" == 1
-    (pre-classified full cover) and optional "merc" — the mercator-projected
-    twin of coords (per-geometry memo computed by the caller, mercator_of;
-    computed here when absent).
+    (pre-classified full cover: the piece is the clip-mask rectangle) and
+    optional "merc" — the mercator-projected twin of coords (per-geometry
+    memo computed by the caller, mercator_of; computed here when absent).
     """
-    # ---- pass 1a (scalar walk): collect every to-be-projected part of the
+    # ---- 1a (scalar walk): collect every to-be-projected part of the
     # batch; the pixel-space affine then runs ONCE over the concatenation.
     # Slots keep the per-layer feature order (cc-literals interleave with
     # projected features) so merge_features sees the scalar path's order.
@@ -251,7 +263,7 @@ def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
             layers_here.append((layer_name, slots))
         tile_slots.append(layers_here)
 
-    # ---- pass 1b (numpy): batch affine into pixel space
+    # ---- 1b (numpy): batch affine into pixel space
     pix_parts: list[np.ndarray] = []
     if part_mx:
         plen = np.array([len(a) for a in part_mx], np.int64)
@@ -274,10 +286,10 @@ def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
         starts = ends - plen
         pix_parts = [P[s:e] for s, e in zip(starts, ends)]
 
-    # ---- pass 1c: clip per pending feature. The polygon fast-path decider
+    # ---- 1c: clip per pending feature. The polygon fast-path decider
     # (does the ring cross the tile border?) runs batched first — one numpy
-    # pass over every single-ring (polygon, tile) pair instead of a Python
-    # segment scan per pair; verdicts are exact (ring_border_hits_batch).
+    # pass over every single-ring (polygon, tile) pair instead of one call
+    # per pair; verdicts are exact (ring_border_hits_batch).
     hints = np.full(len(pend_gt), -1, np.int8)
     sr_rings: list = []
     sr_idx: list[int] = []
@@ -306,7 +318,63 @@ def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
             _clip.clip_geom(gt, projected, clip_mask, None if h < 0 else bool(h))
         )
 
-    # ---- pass 1d (scalar): merge + per-layer dict-encode, batch collection
+    # ---- 1d: per tile and layer, the pieces in feature order
+    out: list = []
+    for layers_here in tile_slots:
+        tile_layers: list = []
+        for layer_name, slots in layers_here:
+            pieces: list[dict] = []
+            for pidx, lit in slots:
+                if lit is not None:
+                    pieces.append(lit)
+                    continue
+                props = pend_props[pidx]
+                for g, cc in pend_clipped[pidx]:
+                    pieces.append({"geom_type": g, "coords": cc, "props": props})
+            tile_layers.append((layer_name, pieces))
+        out.append(tile_layers)
+    return out
+
+
+def encode_tiles_geojson(work: list[tuple[int, int, int, dict]]) -> list:
+    """GeoJSON tile codec (lib/tile/codec.go:17-31) over the same pass 1 as
+    MVT: per tile, a FeatureCollection of the clipped pieces in tile pixel
+    coordinates (truncated to int, rings closed), each tagged with its
+    ``@layer``; no merge, keys sorted. bytes|None per tile."""
+    out: list = []
+    for tile_layers in clip_tiles(work):
+        feats = []
+        for layer_name, pieces in tile_layers:
+            for ft in pieces:
+                gt, cc = ft["geom_type"], ft["coords"]
+                if gt == 1:
+                    geom = {"type": "Point", "coordinates": [int(cc[0]), int(cc[1])]}
+                elif gt == 2:
+                    geom = {
+                        "type": "LineString",
+                        "coordinates": np.asarray(cc).astype(int).tolist(),
+                    }
+                else:
+                    rings = [np.asarray(r).astype(int).tolist() for r in cc]
+                    geom = {"type": "Polygon", "coordinates": [r + r[:1] for r in rings]}
+                props = {k: v for k, v in ft["props"].items() if not k.startswith("@")}
+                props["@layer"] = layer_name
+                feats.append({"type": "Feature", "geometry": geom, "properties": props})
+        out.append(
+            json.dumps(
+                {"type": "FeatureCollection", "features": feats}, sort_keys=True
+            ).encode()
+            if feats
+            else None
+        )
+    return out
+
+
+def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
+    """Encode a batch of tiles: [(z, x, y, {layer: [feat, ...]})] → bytes|None
+    per tile, byte-identical to mvt.encode_tile per tile (feat dicts as in
+    clip_tiles)."""
+    # ---- pass 2 (scalar): merge + per-layer dict-encode, batch collection
     feats_gt: list[int] = []  # per emitted feature
     feats_tags: list[list[int]] = []
     parts_pts: list[np.ndarray] = []
@@ -315,20 +383,9 @@ def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
     # per tile: list of (layer_name, keys, val_order, feat_idx_range)
     tile_layers: list[list] = []
 
-    for layers_here in tile_slots:
+    for clipped_layers in clip_tiles(work):
         out_layers: list = []
-        for layer_name, slots in layers_here:
-            clipped: list[dict] = []
-            for pidx, lit in slots:
-                if lit is not None:
-                    clipped.append(lit)
-                    continue
-                props = pend_props[pidx]
-                for g, cc in pend_clipped[pidx]:
-                    clipped.append(
-                        {"geom_type": g, "coords": cc, "props": props}
-                    )
-
+        for layer_name, clipped in clipped_layers:
             keys: dict[str, int] = {}
             vals: dict[tuple, int] = {}
             val_order: list = []
@@ -370,7 +427,7 @@ def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
 
     n_feats = len(feats_gt)
 
-    # ---- pass 2 (numpy): weave command ints + varint both int streams
+    # ---- pass 3 (numpy): weave command ints + varint both int streams
     cmds, feat_cmd_len = _weave_commands(
         parts_pts,
         np.asarray(part_kind, np.int64),
@@ -395,7 +452,7 @@ def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
     cview = cbuf.tobytes()
     tview = tbuf.tobytes()
 
-    # ---- pass 3 (scalar): protobuf assembly from the varint slices
+    # ---- pass 4 (scalar): protobuf assembly from the varint slices
     out: list = []
     for layers_here in tile_layers:
         tile_out = bytearray()

@@ -232,7 +232,6 @@ def spatial_join(
     points: DataFrame,
     features: DataFrame,
     zoom: int = DEFAULT_JOIN_ZOOM,
-    broadcast: bool = True,
     point_cols: tuple = ("url",),
     feature_cols: tuple = ("feature_id",),
     salt_threshold: int | None = None,
@@ -247,10 +246,11 @@ def spatial_join(
     reducers instead of one straggler; output is identical.
 
     ``max_dim_features``: above this many polygons the broadcast path's
-    driver-side dim is unsafe; the join takes the shuffle path (same output).
+    driver-side dim is unsafe; the join takes the shuffle path (same output;
+    ``max_dim_features=0`` forces it).
     """
     polys = features.filter(F.col("geom_type") == 3)
-    if broadcast and not _too_many(polys, max_dim_features):
+    if not _too_many(polys, max_dim_features):
         return _broadcast_join(
             points, polys, zoom, zoom, 0, point_cols, feature_cols
         )
@@ -298,7 +298,7 @@ def multires_spatial_join(
     polys = features.filter(F.col("geom_type") == 3)
     if _too_many(polys, max_dim_features):
         return spatial_join(
-            points, features, zoom=DEFAULT_JOIN_ZOOM, broadcast=False,
+            points, features, zoom=DEFAULT_JOIN_ZOOM, max_dim_features=0,
             point_cols=point_cols, feature_cols=feature_cols,
         )
     return _broadcast_join(

@@ -8,9 +8,10 @@ Spark-first:
       → layer routing                    (native coalesce, tiler.go:300-312)
       → groupBy(z, x, y)                 (the shuffle replaces the shared-
                                           memory FeatureCache index)
-      → mapInArrow(encode tiles)         (project→clip→merge→MVT protobuf,
-                                          lib/mvt/codec.go:57-198; columnar
-                                          batch access, whole tiles only)
+      → mapInArrow(encode tiles)         (project→clip, then merge→MVT
+                                          protobuf, lib/mvt/codec.go:57-198,
+                                          or a GeoJSON FeatureCollection;
+                                          whole tiles per Arrow batch)
       → tiles table (z, x, y, tile binary [, gzip])
 
 Skew: the reference randomizes its tile worklist (cmd/tiler/shuffle.go:11-15)
@@ -90,113 +91,105 @@ def global_bbox(features: DataFrame) -> tuple[float, float, float, float]:
     return (r.minx, r.miny, r.maxx, r.maxy)
 
 
-def _encode_tile_geojson(by_layer: dict, x: int, y: int, z: int) -> bytes | None:
-    """Debug GeoJSON tile codec (lib/tile/codec.go:17-31): flatten layers to
-    a FeatureCollection of tile-coordinate features (same project+clip
-    pipeline as MVT, canonical layer/key order)."""
-    import json as _json
-
-    import numpy as np
-
-    from ..kernels import clip as _clip
-    from ..kernels.mvt import EXTENT, TileParams, project_coords
-
-    from ..kernels.mvt import _full_rect
-
-    tp = TileParams(x, y, z)
-    mask = (0.0, 0.0, float(EXTENT), float(EXTENT))
-    feats = []
-    for layer in sorted(by_layer):
-        for ft in by_layer[layer]:
-            if ft.get("cc") == 1:
-                # pre-classified full cover — same rect the exact path yields
-                pieces = [(3, [_full_rect()])]
-            else:
-                projected = project_coords(ft["geom_type"], ft["coords"], tp)
-                pieces = _clip.clip_geom(ft["geom_type"], projected, mask)
-            for gt, cc in pieces:
-                if gt == 1:
-                    geom = {"type": "Point", "coordinates": [int(cc[0]), int(cc[1])]}
-                elif gt == 2:
-                    geom = {
-                        "type": "LineString",
-                        "coordinates": np.asarray(cc).astype(int).tolist(),
-                    }
-                else:
-                    geom = {
-                        "type": "Polygon",
-                        "coordinates": [
-                            np.asarray(r).astype(int).tolist() + [np.asarray(r)[0].astype(int).tolist()]
-                            for r in cc
-                        ],
-                    }
-                props = {k: v for k, v in sorted(ft["props"].items()) if not k.startswith("@")}
-                props["@layer"] = layer
-                feats.append({"type": "Feature", "geometry": geom, "properties": props})
-    if not feats:
-        return None
-    return _json.dumps(
-        {"type": "FeatureCollection", "features": feats}, sort_keys=True
-    ).encode()
-
-
-# worker-process scoped memo for all-full-cover tiles (see encode_batch);
-# keyed by ((layer, sorted props), ...) + codec/gzip via the enclosing UDF
+# worker-process scoped memo for all-full-cover tiles (see
+# _encode_record_batch); keyed by (codec, gzip, (layer, sorted props), ...)
 _RECT_TILE_CACHE: dict = {}
 
 
-def _encode_tiles_flat(
-    z_arr,
-    x_arr,
-    y_arr,
-    lengths,
-    n_total,
-    fid,
-    layer_idx,
-    layer_dict,
-    wkb_list,
-    props_list,
-    cc,
-    gzip: bool,
-    simplify: bool,
-    codec: str,
-):
-    """Core tile encode over COLUMNAR per-tile slices — the executor body
-    behind the mapInArrow encoder (and scripts/profile_encode.py, which
-    feeds it parquet record batches serially).
+def _encode_record_batch(batch, gzip: bool, simplify: bool, codec: str):
+    """The tile encoder build_tiles runs in ``mapInArrow`` (and
+    scripts/profile_encode.py feeds parquet record batches serially): one
+    grouped RecordBatch (tile_z, tile_x, tile_y, feats list<struct>,
+    n_total) → one TILES_SCHEMA RecordBatch, null tiles dropped.
 
-    Inputs are the flattened children of the grouped ``feats`` list column
-    plus per-tile ``lengths``: feature ids and _cc as numpy arrays, layer
-    names dictionary-encoded (indices + a small id→str table), wkb/props as
-    per-row python lists (None where the pre-shuffle payload nulling
-    dropped them). Versus the former Series-of-struct-dicts input this
-    skips materializing a dict per (feature, tile) row — measured ~2.4M
-    dict+key objects per z13 rebuild batch wave — and sorts each tile's
-    rows with a numpy argsort instead of a Python sorted().
-
-    Returns (n_out, buf_out) aligned to the input tiles; buf None where the
-    tile encodes to nothing.
-    """
+    Columnar extraction: the struct children come out as flat arrays —
+    feature ids and _cc as numpy arrays, layer names dictionary-encoded (a
+    handful of distinct values per batch), wkb/props converted once per
+    CHILD column (None where the pre-shuffle payload nulling dropped them)
+    — instead of one python dict per (feature, tile) row, and each tile's
+    rows sort with a numpy argsort instead of a Python sorted(). The
+    project→clip→encode work runs batch-wide in kernels/mvt_batch."""
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     from ..kernels import mvt_batch
     from ..kernels.geometry import simplify_rdp
     from ..kernels.tilemath import resolution
 
+    z_arr = batch.column("tile_z").to_numpy(zero_copy_only=False)
+    x_arr = batch.column("tile_x").to_numpy(zero_copy_only=False)
+    y_arr = batch.column("tile_y").to_numpy(zero_copy_only=False)
+    n_total = batch.column("n_total").to_numpy(zero_copy_only=False)
+    feats = batch.column("feats")
+    lengths = feats.value_lengths().to_numpy(zero_copy_only=False)
+    vals = feats.flatten()
+    fid = vals.field("feature_id").to_numpy(zero_copy_only=False)
+    ld = pc.dictionary_encode(vals.field("layer_name"))
+    layer_idx = ld.indices.to_numpy(zero_copy_only=False)
+    layer_dict = ld.dictionary.to_pylist()
+    wkb_list = vals.field("wkb").to_pylist()
+    # props via flat dictionary-encoded children, not to_pylist: the
+    # MapArray to_pylist materializes a fresh (key, value) tuple pair of
+    # fresh strings per entry, and was the single largest cost of the
+    # whole encode stage (measured 15.4s of a 117s serial z13 profile;
+    # this path 3.0s, list-identical output). The same feature's props
+    # repeat in every tile it covers within the batch, so the per-batch
+    # entry universe dictionary-encodes to a handful of strings — rows
+    # then share the interned string objects. Null maps come back as []
+    # instead of to_pylist's None; both falsy, and treated identically.
+    pr = vals.field("props")
+    lst = pr.cast(
+        pa.list_(
+            pa.struct(
+                [
+                    pa.field("key", pr.type.key_type, nullable=False),
+                    pa.field("value", pr.type.item_type),
+                ]
+            )
+        )
+    )
+    ent = pc.list_flatten(lst)
+    kd = pc.dictionary_encode(ent.field("key"))
+    vd = pc.dictionary_encode(ent.field("value"))
+    ktab = kd.dictionary.to_pylist()
+    kidx = kd.indices.to_numpy(zero_copy_only=False)
+    # null map values have null indices (to_numpy would turn them into NaN
+    # floats): point them at a trailing None entry instead, which gives
+    # to_pylist's (key, None)
+    vtab = vd.dictionary.to_pylist()
+    vtab.append(None)
+    vidx = pc.fill_null(vd.indices, len(vtab) - 1).to_numpy(zero_copy_only=False)
+    plens = pc.fill_null(pc.list_value_length(lst), 0).to_numpy(
+        zero_copy_only=False
+    )
+    poffs = np.empty(len(plens) + 1, np.int64)
+    poffs[0] = 0
+    np.cumsum(plens, out=poffs[1:])
+    props_list = [
+        [(ktab[kidx[j]], vtab[vidx[j]]) for j in range(poffs[i], poffs[i + 1])]
+        for i in range(len(plens))
+    ]
+    cc = (
+        pc.fill_null(vals.field("_cc"), 0)
+        .to_numpy(zero_copy_only=False)
+        .astype(np.int8, copy=False)
+    )
+
     # INTERIOR-TILE MEMO: a tile whose surviving features are ALL
     # pre-classified full-cover rectangles encodes to bytes that do not
     # depend on (x, y, z) at all — geometry is the tile-local clip-mask
-    # rect, layers/tags depend only on (layer, props) in sorted-id
-    # order. Deep-zoom interiors of the same polygon are thousands of
-    # such tiles; one encode serves them all. Worker-process scoped,
-    # size-capped (encode stays correct on any hit rate).
-    rect_cache: dict = _RECT_TILE_CACHE
+    # rect, layers/tags depend only on (layer, props) in sorted-id order.
+    # Deep-zoom interiors of the same polygon are thousands of such tiles;
+    # one encode serves them all. Worker-process scoped, size-capped
+    # (encode stays correct on any hit rate).
+    rect_cache = _RECT_TILE_CACHE
 
     # per-batch parse + projection memos: the same feature's wkb appears
-    # in EVERY tile it covers within the batch (the shuffle hashes on
-    # tile keys, but groups of neighboring tiles share their features),
-    # and the mercator projection does not depend on the tile at all —
-    # only the cheap affine into pixel space does (mvt.tile_affine_np).
+    # in EVERY tile it covers within the batch (the shuffle hashes on tile
+    # keys, but groups of neighboring tiles share their features), and the
+    # mercator projection does not depend on the tile at all — only the
+    # cheap affine into pixel space does (mvt.tile_affine_np).
     parse_memo: dict = {}  # wkb -> (gt, coords)
     merc_memo: dict = {}  # (wkb, eps|None) -> (gt, coords', merc)
 
@@ -215,15 +208,14 @@ def _encode_tiles_flat(
         gt, coords, merc = ent
         return {"geom_type": gt, "coords": coords, "merc": merc, "props": props}
 
-    # slot per input tile: either finished bytes (rect-memo hit /
-    # geojson codec) or an index into the batched-MVT work list
-    n_out: list[int] = []
+    # slot per input tile: finished bytes (rect-memo hit) or an index into
+    # the batch-wide work list
     buf_out: list = []
-    mvt_work: list = []  # (z, x, y, by_layer)
-    mvt_slots: list[int] = []  # buf_out index per work item
-    mvt_keys: list = []  # rect-memo key per work item (or None)
+    work: list = []  # (z, x, y, by_layer)
+    work_slots: list[int] = []  # buf_out index per work item
+    work_keys: list = []  # rect-memo key per work item (or None)
     pos = 0
-    for ti in range(len(z_arr)):
+    for ti in range(batch.num_rows):
         ln = int(lengths[ti])
         s = pos
         pos += ln
@@ -234,8 +226,8 @@ def _encode_tiles_flat(
         idx = s + np.argsort(fid[s : s + ln], kind="stable")
         key = None
         if bool((cc[idx] != 0).all()):
-            # codec/gzip in the key: the memo is module-scoped and
-            # shared across encoder configurations
+            # codec/gzip in the key: the memo is module-scoped and shared
+            # across encoder configurations
             key = (codec, gzip) + tuple(
                 (
                     layer_dict[layer_idx[i]],
@@ -245,16 +237,15 @@ def _encode_tiles_flat(
                 if cc[i] == 1
             )
             if key in rect_cache:
-                n_out.append(int(n_total[ti]))
                 buf_out.append(rect_cache[key])
                 continue
         by_layer: dict[str, list[dict]] = {}
         for i in idx:
             # _cc: the vectorized pre-classification (kernels/coverclass):
-            # 2 = provably contributes nothing to this tile (the exact
-            # clip would return []); 1 = provably the full-tile rectangle
-            # (skip parse+project+clip, the codec emits it directly);
-            # 0 = the exact path decides. Byte-identical by construction.
+            # 2 = provably contributes nothing to this tile (the exact clip
+            # would return []); 1 = provably the full-tile rectangle (skip
+            # parse+project+clip, the codec emits it directly); 0 = the
+            # exact path decides. Byte-identical by construction.
             c = cc[i]
             if c == 2:
                 continue
@@ -266,32 +257,19 @@ def _encode_tiles_flat(
                     {"geom_type": 3, "coords": None, "cc": 1, "props": props}
                 )
                 continue
-            by_layer.setdefault(lname, []).append(
-                feat_for(wkb_list[i], eps, props)
-            )
-        if codec == "geojson":
-            buf = _encode_tile_geojson(by_layer, x, y, z)
-            if buf is not None and gzip:
-                buf = gzip_tile(buf)
-            if key is not None:
-                if len(rect_cache) > 100_000:
-                    rect_cache.clear()
-                rect_cache[key] = buf
-            n_out.append(int(n_total[ti]))
-            buf_out.append(buf)
-            continue
-        mvt_slots.append(len(buf_out))
-        mvt_keys.append(key)
-        n_out.append(int(n_total[ti]))
+            by_layer.setdefault(lname, []).append(feat_for(wkb_list[i], eps, props))
+        work_slots.append(len(buf_out))
+        work_keys.append(key)
         buf_out.append(None)
-        mvt_work.append((z, x, y, by_layer))
+        work.append((z, x, y, by_layer))
 
-    if mvt_work:
-        # batch-wide MVT encode (kernels/mvt_batch): command weave and
-        # varint emission vectorized across every tile of the Arrow
-        # batch; byte-identical to mvt.encode_tile per tile
-        bufs = mvt_batch.encode_tiles_mvt(mvt_work)
-        for slot, key, buf in zip(mvt_slots, mvt_keys, bufs):
+    if work:
+        encode = (
+            mvt_batch.encode_tiles_geojson
+            if codec == "geojson"
+            else mvt_batch.encode_tiles_mvt
+        )
+        for slot, key, buf in zip(work_slots, work_keys, encode(work)):
             if buf is not None and gzip:
                 buf = gzip_tile(buf)
             if key is not None:
@@ -299,118 +277,17 @@ def _encode_tiles_flat(
                     rect_cache.clear()
                 rect_cache[key] = buf
             buf_out[slot] = buf
-    return n_out, buf_out
-
-
-def _encode_record_batch(batch, gzip: bool, simplify: bool, codec: str):
-    """One grouped-RecordBatch (tile_z, tile_x, tile_y, feats list<struct>)
-    → one TILES_SCHEMA RecordBatch (null tiles dropped). Columnar
-    extraction: the struct children come out as flat arrays — layer names
-    dictionary-encoded (a handful of distinct values per batch), wkb/props
-    converted once per CHILD column (cheap for the payload-nulled majority)
-    — instead of one python dict per (feature, tile) row."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    n = batch.num_rows
-    if n:
-        z_arr = batch.column("tile_z").to_numpy(zero_copy_only=False)
-        x_arr = batch.column("tile_x").to_numpy(zero_copy_only=False)
-        y_arr = batch.column("tile_y").to_numpy(zero_copy_only=False)
-        feats = batch.column("feats")
-        n_total = batch.column("n_total").to_numpy(zero_copy_only=False)
-        lengths = feats.value_lengths().to_numpy(zero_copy_only=False)
-        vals = feats.flatten()
-        fid = vals.field("feature_id").to_numpy(zero_copy_only=False)
-        ld = pc.dictionary_encode(vals.field("layer_name"))
-        layer_idx = ld.indices.to_numpy(zero_copy_only=False)
-        layer_dict = ld.dictionary.to_pylist()
-        wkb_list = vals.field("wkb").to_pylist()
-        # props via flat dictionary-encoded children, not to_pylist: the
-        # MapArray to_pylist materializes a fresh (key, value) tuple pair
-        # of fresh strings per entry, and was the single largest cost of
-        # the whole encode stage (measured 15.4s of a 117s serial z13
-        # profile; this path 3.0s, list-identical output). The same
-        # feature's props repeat in every tile it covers within the batch,
-        # so the per-batch entry universe dictionary-encodes to a handful
-        # of strings — rows then share the interned string objects. Null
-        # maps come back as [] instead of to_pylist's None; both falsy,
-        # and _encode_tiles_flat treats them identically.
-        pr = vals.field("props")
-        lst = pr.cast(
-            pa.list_(
-                pa.struct(
-                    [
-                        pa.field("key", pr.type.key_type, nullable=False),
-                        pa.field("value", pr.type.item_type),
-                    ]
-                )
-            )
-        )
-        ent = pc.list_flatten(lst)
-        kd = pc.dictionary_encode(ent.field("key"))
-        vd = pc.dictionary_encode(ent.field("value"))
-        ktab = kd.dictionary.to_pylist()
-        kidx = kd.indices.to_numpy(zero_copy_only=False)
-        # null map values have null indices (to_numpy would turn them into
-        # NaN floats): point them at a trailing None entry instead, which
-        # gives to_pylist's (key, None)
-        vtab = vd.dictionary.to_pylist()
-        vtab.append(None)
-        vidx = pc.fill_null(vd.indices, len(vtab) - 1).to_numpy(
-            zero_copy_only=False
-        )
-        plens = pc.fill_null(pc.list_value_length(lst), 0).to_numpy(
-            zero_copy_only=False
-        )
-        poffs = np.empty(len(plens) + 1, np.int64)
-        poffs[0] = 0
-        np.cumsum(plens, out=poffs[1:])
-        props_list = [
-            [(ktab[kidx[j]], vtab[vidx[j]]) for j in range(poffs[i], poffs[i + 1])]
-            for i in range(len(plens))
-        ]
-        cc = (
-            pc.fill_null(vals.field("_cc"), 0)
-            .to_numpy(zero_copy_only=False)
-            .astype(np.int8, copy=False)
-        )
-        n_out, buf_out = _encode_tiles_flat(
-            z_arr, x_arr, y_arr, lengths, n_total, fid, layer_idx,
-            layer_dict, wkb_list, props_list, cc, gzip, simplify, codec,
-        )
-        keep = [i for i, b in enumerate(buf_out) if b is not None]
-    else:
-        z_arr = x_arr = y_arr = np.zeros(0, np.int64)
-        n_out, buf_out, keep = [], [], []
+    keep = [i for i, b in enumerate(buf_out) if b is not None]
     return pa.RecordBatch.from_arrays(
         [
             pa.array([int(z_arr[i]) for i in keep], pa.int32()),
             pa.array([int(x_arr[i]) for i in keep], pa.int64()),
             pa.array([int(y_arr[i]) for i in keep], pa.int64()),
-            pa.array([n_out[i] for i in keep], pa.int32()),
+            pa.array([int(n_total[i]) for i in keep], pa.int32()),
             pa.array([buf_out[i] for i in keep], pa.binary()),
         ],
         names=["tile_z", "tile_x", "tile_y", "n_features", "tile"],
     )
-
-
-def _make_arrow_encoder(gzip: bool, simplify: bool, codec: str):
-    """mapInArrow encoder over the grouped tiles — one Python call per
-    Arrow batch of WHOLE tiles (the groupBy/collect_list upstream keeps a
-    tile's rows together; MVT dictionaries + merge are order-sensitive, so
-    groups must never split). Succeeds the scalar-pandas-UDF encoder: same
-    batching, same bytes (asserted by the tile-sha and coverclass differ
-    tests), minus the Arrow→pandas struct-dict materialization per row —
-    and mapInArrow evaluates once per row by construction, so the old
-    asNondeterministic() double-evaluation guard is moot."""
-
-    def encode_batches(it):
-        for batch in it:
-            yield _encode_record_batch(batch, gzip, simplify, codec)
-
-    return encode_batches
 
 
 def _make_classifier(simplify: bool = False):
@@ -573,10 +450,10 @@ def build_tiles(
     max_features_per_tile: int | None = None,
     only_cells: DataFrame | None = None,
     anchor_cells: dict[int, "tuple[int, DataFrame]"] | None = None,
-    classify: bool = True,
     classify_min_cells: int = 8,
 ) -> DataFrame:
-    """features → MVT tiles at the given zoom levels.
+    """features → tiles at the given zoom levels; ``codec`` is ``"mvt"``
+    (Mapbox Vector Tile) or ``"geojson"`` (debug FeatureCollection, S10).
 
     One DataFrame covering all zooms (single-leg coverage) so Spark
     schedules a single shuffle; each (z,x,y) group encodes independently.
@@ -587,10 +464,39 @@ def build_tiles(
     merge are order-sensitive), so groups are never split; rows are sorted
     by feature_id inside the encoder for shuffle-order independence.
     """
+    if codec not in ("mvt", "geojson"):
+        raise ValueError(f"unknown tile codec {codec!r}: use 'mvt' or 'geojson'")
+    grouped = _grouped_tiles(
+        features, zooms, simplify, max_features_per_tile, only_cells,
+        anchor_cells, classify_min_cells,
+    )
+    if grouped is None:
+        return features.sparkSession.createDataFrame([], TILES_SCHEMA)
+
+    def encode_batches(it):
+        for batch in it:
+            yield _encode_record_batch(batch, gzip, simplify, codec)
+
+    return grouped.mapInArrow(encode_batches, TILES_SCHEMA)
+
+
+def _grouped_tiles(
+    features: DataFrame,
+    zooms: list[int],
+    simplify: bool = False,
+    max_features_per_tile: int | None = None,
+    only_cells: DataFrame | None = None,
+    anchor_cells: dict[int, "tuple[int, DataFrame]"] | None = None,
+    classify_min_cells: int = 8,
+) -> DataFrame | None:
+    """The frame :func:`build_tiles` feeds to its encoder: one row per
+    (tile_z, tile_x, tile_y) with ``feats`` (list of feature_id,
+    layer_name, wkb, props, _cc structs) and ``n_total``. ``None`` when no
+    zoom has work."""
     n_shuffle = int(
         features.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
-    if classify and features.rdd.getNumPartitions() < n_shuffle:
+    if features.rdd.getNumPartitions() < n_shuffle:
         # The classifier adds real Python work to the PRE-exchange stage,
         # whose width is otherwise the feature scan's input-partition count
         # (a small feature table coalesces to a handful of tasks under
@@ -603,7 +509,7 @@ def build_tiles(
         features = features.repartition(n_shuffle)
     all_cov = _routed_coverage(features, zooms, anchor_cells)
     if all_cov is None:
-        return features.sparkSession.createDataFrame([], TILES_SCHEMA)
+        return None
 
     if only_cells is not None:
         # exact restriction to the work cells. The list is delta-sized —
@@ -625,51 +531,46 @@ def build_tiles(
     # full-cover / outside / general for ALL of a feature's tiles in one
     # vectorized pass while the feature's cells are still contiguous —
     # the per-tile scalar fast-path scan this replaces was ~45% of encode
-    # CPU at z13. ``classify=False`` forces every row down the exact path
-    # (the byte-identity differ in tests flips this flag).
-    if classify:
-        cls = _make_classifier(simplify)
-        # Span gate: a feature spanning few cells at its zoom has (almost)
-        # no trivially-classifiable rows — every cell is boundary-adjacent —
-        # so shipping its WKB to the Python classifier is pure Arrow
-        # transfer with no encode work to skip (measured: the city-delta
-        # incremental path was 97% code-0 and the classifier a net ~2s
-        # LOSS there, while the full z13 rebuild's savings come from
-        # giant multi-hundred-cell polygons). The when() below evaluates
-        # JVM-side in the ArrowEval input projection, so gated-out rows
-        # cross Arrow as NULL, not as duplicated WKB bytes; classify_rows
-        # leaves null runs at code 0 (the always-safe exact path).
-        gated_wkb = F.when(
-            F.col("_nc") >= classify_min_cells, F.col("wkb")
-        )
-        # Fuse the per-zoom union legs before the UDF: each pandas-UDF TASK
-        # pays ~190ms of fixed Python-runner protocol latency regardless of
-        # rows (measured: a trivial pandas UDF over 320 tasks = 1.9s wall vs
-        # 0.3s over 32, workers verified reused) — and the coverage union
-        # has zooms × feature-legs partitions. coalesce() concatenates whole
-        # parent partitions with NO shuffle, so a feature's cells stay
-        # contiguous (the property classify_rows' run-batching needs) while
-        # the UDF stage runs in n_shuffle tasks instead of legs × n_shuffle.
-        all_cov = all_cov.coalesce(n_shuffle)
-        all_cov = all_cov.withColumn(
-            "_cc",
-            cls(F.col("tile_z"), F.col("tile_x"), F.col("tile_y"), gated_wkb),
-        )
-        # Classified rows don't need their payload past this point: the
-        # encoder reads wkb ONLY on the exact path (_cc == 0) and never
-        # reads a provably-empty row's props (_cc == 2 skips before the
-        # props access; the rect-memo key uses _cc == 1 rows only). Nulling
-        # them here — before the tile shuffle — drops the duplicated WKB
-        # bytes of every interior (full-cover) coverage row from the
-        # exchange AND from the Arrow transfer into the encode UDF, which
-        # at deep zooms is most rows of every large polygon.
-        cc0 = F.coalesce(F.col("_cc"), F.lit(0))
-        all_cov = all_cov.withColumn(
-            "wkb", F.when(cc0 == 0, F.col("wkb"))
-        ).withColumn("props", F.when(cc0 != 2, F.col("props")))
-    else:
-        all_cov = all_cov.withColumn("_cc", F.lit(0).cast("tinyint"))
-    all_cov = all_cov.drop("_nc")
+    # CPU at z13. A ``classify_min_cells`` above every span sends every row
+    # down the exact path (the byte-identity differs in tests use that).
+    cls = _make_classifier(simplify)
+    # Span gate: a feature spanning few cells at its zoom has (almost) no
+    # trivially-classifiable rows — every cell is boundary-adjacent — so
+    # shipping its WKB to the Python classifier is pure Arrow transfer with
+    # no encode work to skip (measured: the city-delta incremental path was
+    # 97% code-0 and the classifier a net ~2s LOSS there, while the full
+    # z13 rebuild's savings come from giant multi-hundred-cell polygons).
+    # The when() below evaluates JVM-side in the ArrowEval input
+    # projection, so gated-out rows cross Arrow as NULL, not as duplicated
+    # WKB bytes; classify_rows leaves null runs at code 0 (the always-safe
+    # exact path).
+    gated_wkb = F.when(F.col("_nc") >= classify_min_cells, F.col("wkb"))
+    # Fuse the per-zoom union legs before the UDF: each pandas-UDF TASK
+    # pays ~190ms of fixed Python-runner protocol latency regardless of
+    # rows (measured: a trivial pandas UDF over 320 tasks = 1.9s wall vs
+    # 0.3s over 32, workers verified reused) — and the coverage union has
+    # zooms × feature-legs partitions. coalesce() concatenates whole parent
+    # partitions with NO shuffle, so a feature's cells stay contiguous (the
+    # property classify_rows' run-batching needs) while the UDF stage runs
+    # in n_shuffle tasks instead of legs × n_shuffle.
+    all_cov = all_cov.coalesce(n_shuffle)
+    all_cov = all_cov.withColumn(
+        "_cc", cls(F.col("tile_z"), F.col("tile_x"), F.col("tile_y"), gated_wkb)
+    )
+    # Classified rows don't need their payload past this point: the
+    # encoder reads wkb ONLY on the exact path (_cc == 0) and never reads a
+    # provably-empty row's props (_cc == 2 skips before the props access;
+    # the rect-memo key uses _cc == 1 rows only). Nulling them here —
+    # before the tile shuffle — drops the duplicated WKB bytes of every
+    # interior (full-cover) coverage row from the exchange AND from the
+    # Arrow transfer into the encode UDF, which at deep zooms is most rows
+    # of every large polygon.
+    cc0 = F.coalesce(F.col("_cc"), F.lit(0))
+    all_cov = (
+        all_cov.withColumn("wkb", F.when(cc0 == 0, F.col("wkb")))
+        .withColumn("props", F.when(cc0 != 2, F.col("props")))
+        .drop("_nc")
+    )
 
     # Pin the tile shuffle's partition count (REPARTITION_BY_NUM): AQE
     # coalesces post-shuffle partitions by BYTE size, and tile groups are
@@ -711,8 +612,7 @@ def build_tiles(
     # tile's FULL pre-filter coverage count (the tiles_meta oracle's
     # definition). The rect-memo condition and per-tile sort order are
     # unaffected: cc==2 rows were skipped before building layers anyway.
-    cc0 = F.coalesce(F.col("_cc"), F.lit(0))
-    grouped = all_cov.groupBy("tile_z", "tile_x", "tile_y").agg(
+    return all_cov.groupBy("tile_z", "tile_x", "tile_y").agg(
         F.collect_list(
             F.when(
                 cc0 != 2,
@@ -720,9 +620,6 @@ def build_tiles(
             )
         ).alias("feats"),
         F.count(F.lit(1)).cast("int").alias("n_total"),
-    )
-    return grouped.mapInArrow(
-        _make_arrow_encoder(gzip, simplify, codec), TILES_SCHEMA
     )
 
 

@@ -92,8 +92,8 @@ def bucketed_spatial_join(
 ) -> DataFrame:
     """The shuffle-path spatial join reading pre-bucketed sides: cell
     equi-join (no exchange — co-located buckets) → native bbox filter →
-    exact Arrow PIP refine. Output identical to
-    ``spatial_join(..., broadcast=False)``; asserted in tests."""
+    exact Arrow PIP refine. Output identical to the shuffle path of
+    ``spatial_join(..., max_dim_features=0)``; asserted in tests."""
     from ..operators.spatial_join import bbox_then_refine, pip_udf
 
     pts = spark.table(points_table)

@@ -33,12 +33,15 @@ def clean_pages(pages: DataFrame) -> DataFrame:
     the minimum url per text digest — ONE digest exchange, window-min, no
     keeper join; same plan as operators.dedup.dedup_exact_pairs) and drop
     repetitive boilerplate pages (operators.quality.repetition_stats
-    flag). Column set passes through unchanged."""
+    flag). Column set passes through unchanged. NULL-text pages are never
+    duplicates of each other: md5(NULL) is NULL, so each one gets its own
+    window partition (keyed by url) instead of one shared NULL class."""
     from pyspark.sql import Window
 
     from ..operators.quality import repetition_stats
 
-    w = Window.partitionBy(F.md5(F.col("text")))
+    text = F.col("text")
+    w = Window.partitionBy(F.md5(text), F.when(text.isNull(), F.col("url")))
     kept = (
         pages.withColumn("_keeper", F.min("url").over(w))
         .filter(F.col("url") == F.col("_keeper"))

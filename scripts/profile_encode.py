@@ -1,12 +1,14 @@
 """Serial cProfile of the tile-encode stage at the bench shape.
 
-Replicates `build_tiles`' pre-encode plan (coverage explode + classifier +
-group) with Spark, materializes the grouped rows to parquet, then runs the
-EXACT executor encode function (`operators.tiling._encode_record_batch`,
-the mapInArrow body) serially on one core under cProfile, feeding it the
-same Arrow record batches the executor sees. This isolates per-row Python encode
-CPU from Spark scheduling/shuffle, so kernel-level optimizations can be
-measured without host-noise error bars.
+Builds `build_tiles`' pre-encode frame with Spark (`tiling._grouped_tiles`,
+the exact frame `build_tiles` feeds to `mapInArrow`: coverage explode,
+span-gated classifier, payload nulling, pinned tile shuffle, group),
+materializes it to parquet, then runs the EXACT executor encode function
+(`operators.tiling._encode_record_batch`, the mapInArrow body) serially on
+one core under cProfile, feeding it the same Arrow record batches the
+executor sees. This isolates per-row Python encode CPU from Spark
+scheduling/shuffle, so kernel-level optimizations can be measured without
+host-noise error bars.
 
 Usage: python scripts/profile_encode.py [--zooms 2,5,8,11,13] [--top 40]
 """
@@ -24,34 +26,13 @@ sys.path.insert(0, ".")
 
 
 def build_grouped(out_path: str, zooms: list[int]) -> None:
-    from pyspark.sql import functions as F
-
-    from grandine_spark.operators.tiling import (
-        _make_classifier,
-        _routed_coverage,
-    )
+    from grandine_spark.operators.tiling import _grouped_tiles
     from grandine_spark.session import get_spark
     from grandine_spark.sources import synth
 
     spark = get_spark()
     feats = synth.features(spark, n_polygons=2000, n_roads=1000, n_pois=2000)
-    feats = feats.repartition(32)
-    all_cov = _routed_coverage(feats, zooms, None)
-    cls = _make_classifier(False)
-    all_cov = all_cov.withColumn(
-        "_cc", cls(F.col("tile_z"), F.col("tile_x"), F.col("tile_y"), F.col("wkb"))
-    )
-    cc0 = F.coalesce(F.col("_cc"), F.lit(0))
-    grouped = all_cov.groupBy("tile_z", "tile_x", "tile_y").agg(
-        F.collect_list(
-            F.when(
-                cc0 != 2,
-                F.struct("feature_id", "layer_name", "wkb", "props", "_cc"),
-            )
-        ).alias("feats"),
-        F.count(F.lit(1)).cast("int").alias("n_total"),
-    )
-    grouped.write.mode("overwrite").parquet(out_path)
+    _grouped_tiles(feats, zooms).write.mode("overwrite").parquet(out_path)
     spark.stop()
 
 

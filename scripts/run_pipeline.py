@@ -81,8 +81,9 @@ def main():
     # wrote — summing 64 bucket rows instead of re-scanning every table
     wh = out["warehouse"]
     stats = {"elapsed_sec": elapsed}
-    for stage in ("geocoded", "join_rows", "assignments", "tiles"):
-        stats[stage] = wh.lineage(stage).agg(F.sum("row_count")).first()[0] or 0
+    for stage in out:
+        if stage != "warehouse":
+            stats[stage] = wh.lineage(stage).agg(F.sum("row_count")).first()[0] or 0
     stats["warehouse"] = args.warehouse
     print(json.dumps(stats))
     spark.stop()

@@ -106,3 +106,17 @@ def test_clean_text_stage_filters_and_checkpoints(spark, tmp_path):
     again = run_pipeline(spark, dirty, synth.features(spark), root,
                          zooms=[2], clean_text=True)
     assert _tiles_map(again["tiles"]) == _tiles_map(out["tiles"])
+
+
+def test_clean_pages_keeps_every_null_text_page(spark):
+    """md5(NULL) is NULL, so NULL-text pages must not collapse into one
+    duplicate class that keeps only the minimum url."""
+    from grandine_spark.plans.pipeline import clean_pages
+
+    text = "a quick brown fox jumps over the lazy dog near the river bank"
+    pages = spark.createDataFrame(
+        [("u1", None), ("u2", None), ("u3", None), ("d1", text), ("d2", text)],
+        "url string, text string",
+    )
+    got = sorted(r.url for r in clean_pages(pages).collect())
+    assert got == ["d1", "u1", "u2", "u3"]

@@ -225,8 +225,8 @@ def test_classify_rows_groups_runs():
 @pytest.mark.usefixtures("spark")
 def test_build_tiles_classifier_byte_identity(spark):
     """End-to-end differ: build_tiles with the classifier ON is
-    byte-identical (same tiles, same bytes, same n_features) to the
-    classifier forced OFF, on a corpus with concave + holed polygons,
+    byte-identical (same tiles, same bytes, same n_features) to a span
+    gate above every feature's span (every row code 0), on a corpus with concave + holed polygons,
     roads and POIs at zooms deep enough for full-cover/outside cells to
     dominate."""
     from grandine_spark.operators.tiling import build_tiles
@@ -241,7 +241,7 @@ def test_build_tiles_classifier_byte_identity(spark):
         }
         off = {
             (r.tile_z, r.tile_x, r.tile_y): (r.n_features, bytes(r.tile))
-            for r in build_tiles(feats, zooms, classify=False, **kw).collect()
+            for r in build_tiles(feats, zooms, classify_min_cells=10**9, **kw).collect()
         }
         assert on == off and len(on) > 1000, kw
 

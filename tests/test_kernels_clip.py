@@ -247,7 +247,7 @@ def test_clip_polygon_pointwise_equivalence_convex(pts):
 def test_ring_border_intersects_equals_exact(pts):
     """The vectorized prefilter + exact fallback must decide exactly like the
     full line_intersections test the reference's short-circuit uses."""
-    from grandine_spark.kernels.clip import _bbox_borders, _ring_border_intersects
+    from grandine_spark.kernels.clip import _bbox_borders, ring_border_hits_batch
     from grandine_spark.kernels.geometry import line_intersections
 
     ring = np.array(pts, float)
@@ -258,7 +258,7 @@ def test_ring_border_intersects_equals_exact(pts):
     )
     for bbox in [(-3, -3, 3, 3), (0, 0, 1, 1), (-5, -5, 5, 5)]:
         exact = bool(line_intersections(closed, _bbox_borders(bbox)))
-        fast = _ring_border_intersects(ring, bbox)
+        fast = bool(ring_border_hits_batch([ring], bbox)[0])
         assert fast == exact, (pts, bbox)
 
 
@@ -340,11 +340,11 @@ def test_clip_polygon_pointwise_equivalence_with_hole(x0, y0, s, fx, fy):
 
 
 def test_large_ring_border_intersects_vectorized_branch():
-    """Regression: rings with >24 points must take the vectorized branch of
-    _ring_border_intersects (previously fell off the end and returned None,
-    so clip_polygon emitted the full bbox rectangle for any large polygon
-    only partially covering the tile)."""
-    from grandine_spark.kernels.clip import _bbox_borders, _ring_border_intersects
+    """Regression: a ring with >24 points must get the exact border verdict
+    (the old scalar test's vectorized branch once fell off the end and
+    returned None, so clip_polygon emitted the full bbox rectangle for any
+    large polygon only partially covering the tile)."""
+    from grandine_spark.kernels.clip import _bbox_borders, ring_border_hits_batch
     from grandine_spark.kernels.geometry import line_intersections
 
     # 30-vertex star centered at origin, radius alternating 0.5 / 2.0 —
@@ -355,8 +355,8 @@ def test_large_ring_border_intersects_vectorized_branch():
     star = np.vstack([star, star[:1]])
     bbox = (-1.0, -1.0, 1.0, 1.0)
     assert len(star) > 24
-    got = _ring_border_intersects(star, bbox)
-    assert got is True  # not None — the branch must exist and agree with exact
+    got = bool(ring_border_hits_batch([star], bbox)[0])
+    assert got  # the star crosses the border, and the exact test agrees
     assert got == bool(line_intersections(star, _bbox_borders(bbox)))
 
     # And clip must NOT be the full rectangle: area of clipped pieces must be

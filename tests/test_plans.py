@@ -263,7 +263,7 @@ def test_bucketed_spatial_join_zero_exchange_and_parity(spark, pages_path, tmp_p
     got = sorted((r.url, r.feature_id) for r in out.collect())
     want = sorted(
         (r.url, r.feature_id)
-        for r in spatial_join(pts, feats, zoom=6, broadcast=False).collect()
+        for r in spatial_join(pts, feats, zoom=6, max_dim_features=0).collect()
     )
     assert got == want and got
 

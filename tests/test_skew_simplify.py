@@ -106,7 +106,8 @@ def test_salted_cell_join_equals_plain(spark):
 
 
 def test_spatial_join_salted_shuffle_path(spark):
-    """spatial_join(broadcast=False, salt_threshold=...) matches broadcast."""
+    """The salted shuffle path, spatial_join(max_dim_features=0,
+    salt_threshold=...), matches broadcast."""
     from pyspark.sql import functions as F
 
     from grandine_spark.operators.spatial_join import geocode_pages, spatial_join
@@ -119,7 +120,7 @@ def test_spatial_join_salted_shuffle_path(spark):
     b = {
         (r.url, r.feature_id)
         for r in spatial_join(
-            pts, feats, zoom=6, broadcast=False, salt_threshold=50
+            pts, feats, zoom=6, max_dim_features=0, salt_threshold=50
         ).collect()
     }
     assert a == b and len(a) > 0

@@ -81,7 +81,7 @@ def test_spatial_join_matches_bruteforce(spark, pages_df, features_df):
     assert len(expected) > 0  # clustered points do hit city polygons
     joins = {
         "broadcast": spatial_join(pts, features_df, zoom=7),
-        "shuffle": spatial_join(pts, features_df, zoom=7, broadcast=False),
+        "shuffle": spatial_join(pts, features_df, zoom=7, max_dim_features=0),
         "multires": multires_spatial_join(pts, features_df),
     }
     for name, out in joins.items():
@@ -134,7 +134,7 @@ def test_interior_cell_shortcut_identity(spark):
     }
     b = {
         (r.url, r.feature_id)
-        for r in spatial_join(pts, feats, zoom=9, broadcast=False).collect()
+        for r in spatial_join(pts, feats, zoom=9, max_dim_features=0).collect()
     }
     assert a == b and len(a) > 0
 
@@ -176,7 +176,7 @@ def test_polar_clamped_points_match_shuffle_and_oracle(spark):
     }
     assert want == {("arm", 1), ("base", 1), ("cap", 2)}
     joins = {
-        "shuffle": spatial_join(pts, feats, zoom=7, broadcast=False),
+        "shuffle": spatial_join(pts, feats, zoom=7, max_dim_features=0),
         "broadcast z7": spatial_join(pts, feats, zoom=7),
         "broadcast z9": spatial_join(pts, feats, zoom=9),
         "multires": multires_spatial_join(pts, feats),

@@ -46,6 +46,39 @@ def test_geojson_tile_codec(spark):
     assert a == b
 
 
+@pytest.mark.parametrize(
+    "gzip,want",
+    [
+        (False, "a3c2eaa487fde308c278cabd26652e294f3f2e033085453a14e46a78ec62e782"),
+        (True, "47978e9c6696c391652cc7b9bc3e13ca3e580ed05f3e2efa089299e73dd4f499"),
+    ],
+)
+def test_geojson_tiles_golden(spark, gzip, want):
+    """Pins the GeoJSON codec's bytes: sha256 over the sorted
+    (z, x, y, n_features, tile) rows of a seeded build at zooms 2/7/12
+    (8,013 tiles: interiors, borders, lines and points)."""
+    import hashlib
+
+    feats = synth.features(spark, n_polygons=60, n_roads=30, n_pois=40)
+    rows = sorted(
+        (r.tile_z, r.tile_x, r.tile_y, r.n_features, bytes(r.tile))
+        for r in build_tiles(feats, [2, 7, 12], gzip=gzip, codec="geojson").collect()
+    )
+    h = hashlib.sha256()
+    for z, x, y, n, tile in rows:
+        h.update(f"{z}/{x}/{y}/{n}/".encode())
+        h.update(tile)
+        h.update(b"\n")
+    assert len(rows) == 8013
+    assert h.hexdigest() == want
+
+
+def test_build_tiles_rejects_unknown_codec(spark):
+    feats = synth.features(spark, n_polygons=2, n_roads=0, n_pois=0)
+    with pytest.raises(ValueError, match="codec"):
+        build_tiles(feats, [2], codec="pbf")
+
+
 def test_build_tiles_sha_matches_pure_python(spark):
     """Deterministic cross-check for the distributed tiler (the `tiles`
     driver query has no SQL oracle): per-tile bytes from build_tiles must
