@@ -6,9 +6,12 @@ Semantics: the reference's feature×cell inverted index build/probe
 (lib/spatial/point.go:72-101), re-expressed as:
 
 1. index pages' points with a z-cell id — NATIVE expressions (tile_exprs);
-2. explode each polygon's bbox into its covering cells at the same zoom —
-   native sequence+explode (the multi-cell replication of J2/J4); the
-   broadcast dim drops or flags cells by the tiler's ``coverclass`` codes;
+2. explode each polygon's bbox into its covering cells at the same zoom
+   (the multi-cell replication of J2/J4): on the broadcast path the driver
+   builds this dim as numpy columns, drops or flags cells by the tiler's
+   ``coverclass`` codes, and hands Spark one Arrow table (a
+   ``LocalRelation``: no Python worker unpickles it); the shuffle path
+   explodes natively (sequence+explode);
 3. equi-join on the cell id — **broadcast** the polygon side when small
    (the common case: admin polygons ≪ pages), else shuffle hash join with
    AQE skew splitting;
@@ -25,11 +28,13 @@ broadcast dim side there is NO shuffle at all: scan → project → broadcast-jo
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType
+from pyspark.sql.types import BooleanType, StructType
 
 from ..functions import tile_exprs as TX
 from ..kernels.geometry import points_in_polygon_np
@@ -163,29 +168,57 @@ def bbox_then_refine(
     )
 
 
+_DIM_DDL = (
+    "tile_z int, tile_x long, tile_y long, feature_id long, minx double, "
+    "miny double, maxx double, maxy double"
+)
+
+
+def local_table(parts, schema) -> pa.Table:
+    """A driver-built frame as ONE Arrow table, for
+    ``spark.createDataFrame(table, schema)``, which Spark plans as a
+    ``LocalRelation``. (``createDataFrame`` over Python tuples plans a
+    ``LogicalRDD`` over a PythonRDD instead: its first action forks a second
+    Python worker pool, separate from the UDFs' pool, that lives as long as
+    the session.) ``parts`` are row blocks, each a tuple in ``schema`` column
+    order of equal-length arrays and scalars (a scalar fills its block);
+    ``schema`` is a ``StructType`` or a DDL string whose types hold no
+    comma (the column names are read off it)."""
+    if isinstance(schema, StructType):
+        names = schema.fieldNames()
+    else:
+        names = [c.split()[0] for c in schema.split(",")]
+    blocks = [np.broadcast_arrays(*p) for p in parts]
+    if not blocks:
+        return pa.table([pa.array([])] * len(names), names=names)
+    return pa.table([np.concatenate(c) for c in zip(*blocks)], names=names)
+
+
 def _broadcast_join(
     points, polys, z_lo, z_hi, max_cells, point_cols, feature_cols
 ) -> DataFrame:
     """The broadcast polygon cell join behind ``spatial_join`` and
     ``multires_spatial_join``. Each polygon indexes at the finest zoom in
     [z_lo, z_hi] where its bbox covers ≤ ``max_cells`` cells; points probe
-    every zoom the dim uses. Geometry rides in the UDF closure, not in the
-    rows. The driver-side dim classifies each polygon's cells in ONE
-    ``coverclass.classify_poly_cells`` call: code-2 cells (provably
-    outside) are dropped; code-1 cells (provably inside) are
+    every zoom in the dim's ``tile_z`` column (``[z_lo]`` when the dim is
+    empty). Geometry rides in the UDF closure, not in the rows. The
+    driver-side dim is numpy columns per polygon, sent as one Arrow
+    ``LocalRelation`` (:func:`local_table`). It classifies each polygon's
+    cells in ONE ``coverclass.classify_poly_cells`` call: code-2 cells
+    (provably outside) are masked out; code-1 cells (provably inside) are
     ``full_inside``, whose points skip ray-casting (sentinel id in the UDF,
     accepted by the native ``full_inside OR pip`` filter). Edge rows and
     columns are forced to code 0: ``tile_x``/``tile_y`` clamp points
     beyond ±85.0511° (or ±180°) into them, so their rect does not bound
     the points they hold."""
-    import numpy as np
+    import pyarrow.compute as pc
 
     from ..kernels.coverclass import classify_poly_cells
     from ..kernels.tilemath import coverage, coverage_count
     from ..kernels.wkb import geom_bbox
 
     poly_map: dict[int, list] = {}
-    dim_rows = []
+    parts = []
     for r in polys.select("feature_id", "wkb").collect():
         fid = int(r.feature_id)
         rings = from_wkb(bytes(r.wkb))[1]
@@ -201,14 +234,11 @@ def _broadcast_join(
         code = classify_poly_cells(rings, zs, xs, ys)
         edge = (1 << z) - 1
         code[(xs == 0) | (ys == 0) | (xs == edge) | (ys == edge)] = 0
-        for x, y, c in zip(xs.tolist(), ys.tolist(), code.tolist()):
-            if c != 2:
-                dim_rows.append((z, x, y, fid, *bb, c == 1))
-    dim_df = points.sparkSession.createDataFrame(
-        dim_rows,
-        "tile_z int, tile_x long, tile_y long, feature_id long, minx double, "
-        "miny double, maxx double, maxy double, full_inside boolean",
-    )
+        keep = code != 2
+        parts.append((z, xs[keep], ys[keep], fid, *bb, code[keep] == 1))
+    ddl = _DIM_DDL + ", full_inside boolean"
+    dim = local_table(parts, ddl)
+    dim_df = points.sparkSession.createDataFrame(dim, ddl)
     sentinel = min(poly_map, default=0) - 1  # fid the UDF never resolves
     pip = _refine_by_id(poly_map, points_in_polygon_np)
     pip_fid = F.when(F.col("full_inside"), F.lit(sentinel)).otherwise(
@@ -216,7 +246,7 @@ def _broadcast_join(
     )
     # one log/tan per point at the finest zoom in use; coarser zooms are
     # shiftright-derived (slippy cells nest exactly)
-    zooms = sorted({row[0] for row in dim_rows}) or [z_lo]
+    zooms = sorted(pc.unique(dim["tile_z"]).to_pylist()) or [z_lo]
     joined = TX.explode_point_cells(points, zooms).join(
         F.broadcast(dim_df), ["tile_z", "tile_x", "tile_y"], "inner"
     )
@@ -350,7 +380,7 @@ def radius_join(
         return bbox_then_refine(joined, refine, point_cols, feature_cols)
 
     line_map: dict[int, object] = {}
-    dim_rows = []
+    parts = []
     for r in lines.select("feature_id", "wkb").collect():
         fid = int(r.feature_id)
         coords = from_wkb(bytes(r.wkb))[1]
@@ -358,13 +388,10 @@ def radius_join(
         minx, miny, maxx, maxy = geom_bbox(2, coords)
         bb = (minx - radius_deg, miny - radius_deg,
               maxx + radius_deg, maxy + radius_deg)
-        dim_rows.extend(
-            (zoom, cx, cy, fid, *bb) for cx, cy, _ in coverage(*bb, zoom)
-        )
+        xs, ys, _ = np.array(coverage(*bb, zoom), np.int64).reshape(-1, 3).T
+        parts.append((zoom, xs, ys, fid, *bb))
     dim_df = points.sparkSession.createDataFrame(
-        dim_rows,
-        "tile_z int, tile_x long, tile_y long, feature_id long, minx double, "
-        "miny double, maxx double, maxy double",
+        local_table(parts, _DIM_DDL), _DIM_DDL
     )
     joined = pts.join(F.broadcast(dim_df), keys, "inner")
     within_id = _refine_by_id(line_map, within)

@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 from ..functions import tile_exprs as TX
 from ..kernels.mvt import gzip_tile
 from ..kernels.wkb import from_wkb
+from .spatial_join import local_table
 
 TILES_SCHEMA = T.StructType(
     [
@@ -471,7 +472,9 @@ def build_tiles(
         anchor_cells, classify_min_cells,
     )
     if grouped is None:
-        return features.sparkSession.createDataFrame([], TILES_SCHEMA)
+        return features.sparkSession.createDataFrame(
+            local_table([], TILES_SCHEMA), TILES_SCHEMA
+        )
 
     def encode_batches(it):
         for batch in it:
@@ -721,6 +724,15 @@ def incremental_tiles(
     return keep.select(*fresh.columns).unionByName(fresh)
 
 
+def _cell_frame(spark, cells: set, ddl: str) -> DataFrame:
+    """A set of int tuples (one per cell, in ``ddl`` column order) as a
+    ``LocalRelation`` (:func:`~.spatial_join.local_table`)."""
+    import numpy as np
+
+    cols = np.array(sorted(cells), np.int64).reshape(-1, ddl.count(",") + 1).T
+    return spark.createDataFrame(local_table([tuple(cols)], ddl), ddl)
+
+
 def incremental_tiles_delta(
     old_tiles: DataFrame,
     new_features: DataFrame,
@@ -743,10 +755,12 @@ def incremental_tiles_delta(
     are fetched in ONE narrow collect and the whole work list is computed
     DRIVER-side with the scalar tilemath kernel (zero extra Spark jobs —
     an earlier explode+distinct+collect of the same list cost as much as
-    the restricted build itself). The list is inlined as LocalRelations
-    (bounded by ``max_collect_cells`` — the guard pattern of spatial_join's
+    the restricted build itself). The work cells and the per-zoom anchor
+    cells go to Spark as Arrow tables, so they plan as ``LocalRelation``s
+    and start no Python worker (:func:`_cell_frame`); the list is
+    bounded by ``max_collect_cells`` — the guard pattern of spatial_join's
     ``max_dim_features``; beyond it, the digest-based
-    :func:`incremental_tiles` shuffle path is the right tool)."""
+    :func:`incremental_tiles` shuffle path is the right tool."""
     from ..kernels.tilemath import coverage as cell_coverage
     from ..kernels.tilemath import coverage_count
 
@@ -782,8 +796,8 @@ def incremental_tiles_delta(
             if len(work) > max_collect_cells:
                 raise too_wide
     spark = old_tiles.sparkSession
-    cells_local = spark.createDataFrame(
-        sorted(work), "tile_z int, tile_x bigint, tile_y bigint"
+    cells_local = _cell_frame(
+        spark, work, "tile_z int, tile_x bigint, tile_y bigint"
     )
 
     # per-zoom ANCHOR cells (the work cells' ancestors at a coarse zoom)
@@ -796,7 +810,7 @@ def incremental_tiles_delta(
         az = min(z, 7)
         anchor_of.setdefault(z, set()).add((x >> (z - az), y >> (z - az)))
     anchors = {
-        z: (min(z, 7), spark.createDataFrame(sorted(cells), "ax bigint, ay bigint"))
+        z: (min(z, 7), _cell_frame(spark, cells, "ax bigint, ay bigint"))
         for z, cells in anchor_of.items()
     }
 

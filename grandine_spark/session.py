@@ -9,7 +9,11 @@ cluster); partitioning/shuffle settings are chosen as they would be on a
 - shuffle partitions sized to cores (overridable; on a real cluster this
   would be ~2-3x total executor cores or left to AQE);
 - broadcast threshold left at default — the polygon side of the spatial join
-  is broadcast explicitly with ``F.broadcast`` when small.
+  is broadcast explicitly with ``F.broadcast`` when small;
+- the directory (or zip) this package was imported from is appended to the
+  Python workers' ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``), so the
+  engine's UDFs import on the workers even when the driver found the
+  package only through ``sys.path`` from another working directory.
 """
 
 from __future__ import annotations
@@ -56,4 +60,23 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _add_worker_path(spark.sparkContext)
+    return spark
+
+
+def _add_worker_path(sc) -> None:
+    """Append this package's import root to the workers' ``PYTHONPATH``,
+    after any value the user set (``extra_conf``, ``--conf``,
+    spark-defaults). The context's ``environment`` is what each Python
+    function ships to the workers; it mirrors ``spark.executorEnv.*``, so
+    both are updated. A repeat call finds the root already there and
+    changes nothing (a changed worker environment would start a second
+    worker pool)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in sc.environment.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root in paths:
+        return
+    merged = os.pathsep.join(paths + [root])
+    sc.environment["PYTHONPATH"] = merged
+    sc._conf.set("spark.executorEnv.PYTHONPATH", merged)

@@ -99,3 +99,66 @@ def test_spark_submit_pyfiles_and_resume(tmp_path):
     stats2 = _submit(str(staged), zpath, wh, cores=16)
     for k in ("geocoded", "join_rows", "assignments", "tiles"):
         assert stats2[k] == stats[k], k
+
+
+# Run from a temp cwd with the engine on sys.path only. Inputs are parquet
+# and the JVM page generator, so no Python-list frame starts a worker pool
+# of its own: after the engine's UDFs (PIP refine, tile classifier, tile
+# encoder) exactly one pyspark.daemon may run under the driver's JVM.
+_FOREIGN_CWD_SCRIPT = r"""
+import json, os, sys
+sys.path.insert(0, sys.argv[1])
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql.pandas.types import to_arrow_schema
+from grandine_spark.operators.spatial_join import geocode_pages, spatial_join
+from grandine_spark.operators.tiling import build_tiles
+from grandine_spark.session import get_spark
+from grandine_spark.sources import synth
+
+spark = get_spark("foreign-cwd", cores=2, shuffle_partitions=4)
+schema = to_arrow_schema(synth.FEATURE_SCHEMA)
+rows = synth._feature_rows(n_polygons=40, n_roads=10, n_pois=10)
+pq.write_table(pa.Table.from_pylist(
+    [dict(zip(schema.names, r)) for r in rows], schema=schema), "features.parquet")
+features = spark.read.parquet("features.parquet")
+points = geocode_pages(synth.pages(spark, 2000, partitions=2))
+bcast = sorted(map(tuple, spatial_join(points, features).collect()))
+shuffle = sorted(
+    map(tuple, spatial_join(points, features, max_dim_features=0).collect()))
+tiles = build_tiles(features, [2, 6]).count()
+
+jvm = spark.sparkContext._gateway.proc.pid
+daemons = 0
+for pid in filter(str.isdigit, os.listdir("/proc")):
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+        with open(f"/proc/{pid}/cmdline", "rb") as f:
+            cmd = f.read()
+    except OSError:
+        continue
+    daemons += ppid == jvm and b"pyspark.daemon" in cmd
+print(json.dumps({"join": len(bcast), "same": bcast == shuffle,
+                  "tiles": tiles, "daemons": daemons}))
+"""
+
+
+@pytest.mark.skipif(
+    not os.path.isdir("/proc"), reason="counts processes through /proc"
+)
+def test_foreign_cwd_udfs_import_engine_one_worker_pool(tmp_path):
+    script = tmp_path / "job.py"
+    script.write_text(_FOREIGN_CWD_SCRIPT)
+    env = dict(os.environ, SPARK_DRIVER_MEM="2g")
+    env.pop("PYTHONPATH", None)
+    proc = subprocess.run(
+        [sys.executable, str(script), REPO],
+        capture_output=True, text=True, timeout=420, env=env,
+        cwd=tmp_path,  # the repo root is not the workers' cwd
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["join"] > 0 and out["same"], out
+    assert out["tiles"] > 0, out
+    assert out["daemons"] == 1, out

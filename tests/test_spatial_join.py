@@ -108,6 +108,48 @@ def test_spatial_join_plan_is_broadcast(spark, pages_df, features_df):
     assert "BroadcastHashJoin" in plan
 
 
+def _optimized(df):
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_driver_dims_plan_as_local_relations(spark, pages_df, features_df):
+    """The driver-built dims are Arrow ``LocalRelation``s: a ``LogicalRDD``
+    (``createDataFrame`` over Python rows) would fork a second Python
+    worker pool just to unpickle them."""
+    from grandine_spark.operators.spatial_join import (
+        multires_spatial_join,
+        radius_join,
+    )
+
+    pts = geocode_pages(pages_df)
+    for joined in (
+        spatial_join(pts, features_df, zoom=7),
+        multires_spatial_join(pts, features_df),
+        radius_join(pts, features_df, radius_deg=0.5, zoom=5),
+    ):
+        plan = _optimized(joined)
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
+def test_empty_dims_give_empty_typed_results(spark, pages_df):
+    """No polygons: the broadcast dim is empty, ``zooms`` falls back to
+    the join zoom, and the result is empty with the point_cols +
+    feature_cols schema. The same for ``radius_join`` with no lines."""
+    from grandine_spark.operators.spatial_join import radius_join
+
+    pts = geocode_pages(pages_df)
+    no_polys = synth.features(spark, n_polygons=0, n_roads=5, n_pois=5)
+    no_lines = synth.features(spark, n_polygons=5, n_roads=0, n_pois=5)
+    for out in (
+        spatial_join(pts, no_polys, point_cols=("url", "lon")),
+        radius_join(pts, no_lines, radius_deg=0.5, point_cols=("url", "lon")),
+    ):
+        assert out.dtypes == [
+            ("url", "string"), ("lon", "double"), ("feature_id", "bigint")
+        ]
+        assert out.count() == 0
+
+
 def test_interior_cell_shortcut_identity(spark):
     """Large polygons (many classified cells at the join zoom): the
     broadcast dim's coverclass codes must include both provably-inside

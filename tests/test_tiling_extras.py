@@ -310,6 +310,29 @@ def test_incremental_tiles_delta_byte_identical(spark):
     assert _tmap(same) == _tmap(old_tiles)
 
 
+def test_tile_side_frames_plan_as_local_relations(spark, tmp_path):
+    """``incremental_tiles_delta``'s work cells and anchor cells, and
+    ``build_tiles``' no-work result, are Arrow ``LocalRelation``s, not
+    ``LogicalRDD``s over Python rows (a second Python worker pool)."""
+    from pyspark.sql import functions as F
+
+    from grandine_spark.operators.tiling import incremental_tiles_delta
+
+    synth.features(spark, n_polygons=20, n_roads=5, n_pois=5).write.parquet(
+        str(tmp_path / "f")
+    )
+    feats = spark.read.parquet(str(tmp_path / "f"))
+    changed = feats.filter(F.col("feature_id").isin([3, 21]))
+    delta = incremental_tiles_delta(
+        build_tiles(feats, [2, 5]), feats, changed, changed, [2, 5]
+    )
+    no_work = build_tiles(feats, [2, 5], anchor_cells={})
+    for df in (delta, no_work):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert no_work.count() == 0
+
+
 def test_tile_pixels_lie_inside_source_polygon(spark):
     """End-to-end tile SEMANTICS, independent of the clip kernel: every
     eroded-interior pixel of every polygon a tile emits must map back
