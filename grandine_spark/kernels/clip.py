@@ -19,7 +19,12 @@ from __future__ import annotations
 
 import numpy as np
 
-from .geometry import chain_segments, ring_bbox, segment_intersection
+from .geometry import (
+    chain_segments,
+    ring_bbox,
+    segment_cross_np,
+    segment_intersection,
+)
 from .rounding import round8, round8_np
 
 # bbox is (minx, miny, maxx, maxy) everywhere in this module.
@@ -147,55 +152,20 @@ def clip_line(line: np.ndarray, bbox) -> list[np.ndarray]:
     return chain_segments(cutsegs)
 
 
-def _ring_area2_pts(pts) -> float:
-    """Twice the signed shoelace area; >0 = clockwise (reference sign
-    convention, lib/spatial/line.go:160-169)."""
-    s = 0.0
-    n = len(pts)
-    for i in range(n):
-        x1, y1 = pts[i]
-        x2, y2 = pts[(i + 1) % n]
-        s += (x2 - x1) * (y2 + y1)
-    return s
-
-
-def _pt_in_ring(px: float, py: float, ring) -> bool:
-    """Even-odd ray cast (half-open edges) — nesting tests only; the exact
-    reference-semantics PIP lives in kernels.geometry."""
-    inside = False
-    n = len(ring)
-    for i in range(n):
-        x1, y1 = ring[i]
-        x2, y2 = ring[(i + 1) % n]
-        if (y1 > py) != (y2 > py):
-            xi = x1 + (py - y1) / (y2 - y1) * (x2 - x1)
-            if px < xi:
-                inside = not inside
-    return inside
-
-
 def _pt_in_ring_np(px: float, py: float, ring: np.ndarray) -> bool:
-    """Single-point twin of :func:`_pt_in_ring` for a ring already held as
-    an ndarray — same even-odd half-open-edge rule, same toggle parity.
-    Hybrid: a scalar loop under 128 vertices (measured 10-16x faster than
-    the numpy path there — per-call array overhead dominates small rings),
-    vectorized above (where the old tolist()+scalar path paid O(n) Python
-    per tile). (A closed ring's duplicate-endpoint edge is degenerate and
-    excluded by the crossing test in both variants.)"""
+    """:func:`_pt_in_ring_f` for a ring already held as an ndarray — same
+    even-odd half-open-edge rule, same toggle parity (the scalar twin the
+    tests compare against is ``tests/ref_kernels._pt_in_ring``). Hybrid:
+    the scalar loop under 128 vertices (measured 10-16x faster than the
+    numpy path there — per-call array overhead dominates small rings),
+    vectorized above. (A closed ring's duplicate-endpoint edge is
+    degenerate and excluded by the crossing test in both variants.)"""
     p = np.asarray(ring, np.float64)
     n = len(p)
     if n < 3:
         return False
     if n < 128:
-        pts = p.tolist()
-        inside = False
-        x1, y1 = pts[-1]
-        for x2, y2 in pts:
-            if (y1 > py) != (y2 > py):
-                if px < x1 + (py - y1) / (y2 - y1) * (x2 - x1):
-                    inside = not inside
-            x1, y1 = x2, y2
-        return inside
+        return _pt_in_ring_f(px, py, p[:, 0].tolist(), p[:, 1].tolist())
     x1, y1 = p[:, 0], p[:, 1]
     x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
     cross = (y1 > py) != (y2 > py)
@@ -207,245 +177,27 @@ def _pt_in_ring_np(px: float, py: float, ring: np.ndarray) -> bool:
     return bool(np.count_nonzero(px < xi) % 2)
 
 
-def _pt_on_ring(px: float, py: float, ring, eps: float = 1e-12) -> bool:
-    n = len(ring)
-    for i in range(n):
-        x1, y1 = ring[i]
-        x2, y2 = ring[(i + 1) % n]
-        if (
-            min(x1, x2) - eps <= px <= max(x1, x2) + eps
-            and min(y1, y2) - eps <= py <= max(y1, y2) + eps
-            and abs((x2 - x1) * (py - y1) - (y2 - y1) * (px - x1)) <= eps
-        ):
-            return True
-    return False
-
-
-def _ring_depth(i: int, soup) -> int:
-    """Even-odd nesting depth of soup[i] among the other rings: pick a
-    vertex of i not on j's boundary for each containment test."""
-    depth = 0
-    for j, other in enumerate(soup):
-        if j == i:
-            continue
-        for px, py in soup[i]:
-            if not _pt_on_ring(px, py, other):
-                if _pt_in_ring(px, py, other):
-                    depth += 1
-                break
-    return depth
-
-
-def _cut_soup(soup, axis: int, v: float, sign: float):
-    """Cut an even-odd ring soup by the half-plane sign·(p[axis] − v) ≥ 0.
-
-    Invariant in AND out: interior lies locally LEFT of every directed edge
-    (counter-clockwise shells, clockwise holes in y-up coords). Boundary
-    chains surviving on the keep side are re-connected along the cut line by
-    exit→next-entry parity pairing — the step that lets one concave ring
-    split into several, and an edge-cut hole merge into its shell.
-
-    Scalar by design: the workload is ~1.7M calls per z13 rebuild with a
-    MEDIAN soup of one ring / ~5 vertices (tiny simplified fragments ×
-    many tiles), where per-call numpy setup costs more than the whole cut.
-    Hot-path shape: interpolation inlined (no per-call closures), trivial
-    keep/drop via min/max, event bookkeeping deferred until a second chain
-    proves the pairing step is needed — one chain (the overwhelmingly
-    common case) IS the output ring (its exit always pairs back to its own
-    entry, so the stitch walk is an identity)."""
-    kept: list[list] = []
-    chains: list[list] = []  # each: [entry_pt, ..., exit_pt]
-
-    for ring in soup:
-        if axis == 0:
-            s = [sign * (p[0] - v) for p in ring]
-        else:
-            s = [sign * (p[1] - v) for p in ring]
-        if min(s) >= 0:
-            if max(s) > 0:
-                kept.append(ring)
-            continue  # ring collapsed onto the line: degenerate, drop
-        if max(s) <= 0:
-            continue  # entirely on the discard side
-        n = len(ring)
-        start = 0
-        while s[start] >= 0:
-            start += 1
-        cur: list | None = None
-        any_strict = False
-        p, sp = ring[start], s[start]
-        for k in range(1, n + 1):
-            ic = start + k
-            if ic >= n:
-                ic -= n
-            q, sc = ring[ic], s[ic]
-            if cur is None:
-                if sc >= 0:  # entering the keep side
-                    if sc == 0:
-                        cur = [q]
-                        any_strict = False
-                    else:
-                        t = sp / (sp - sc)
-                        if axis == 0:
-                            cp = (v, p[1] + t * (q[1] - p[1]))
-                        else:
-                            cp = (p[0] + t * (q[0] - p[0]), v)
-                        cur = [cp, q] if q != cp else [cp]
-                        any_strict = True
-            else:
-                if sc >= 0:
-                    if q != cur[-1]:
-                        cur.append(q)
-                    if sc > 0:
-                        any_strict = True
-                else:  # exiting
-                    if sp == 0:
-                        cp = p
-                    else:
-                        t = sp / (sp - sc)
-                        if axis == 0:
-                            cp = (v, p[1] + t * (q[1] - p[1]))
-                        else:
-                            cp = (p[0] + t * (q[0] - p[0]), v)
-                    if cp != cur[-1]:
-                        cur.append(cp)
-                    if any_strict:
-                        chains.append(cur)
-                    cur = None
-                    any_strict = False
-            p, sp = q, sc
-
-    if not chains:
-        return kept
-    if len(chains) == 1:
-        # sole chain's exit pairs with its own entry regardless of event
-        # order (FIFO with one exit + the cyclic wrap both yield {0: 0}),
-        # so the stitch emits exactly this chain
-        ring_pts = chains[0]
-        if ring_pts[0] == ring_pts[-1]:
-            ring_pts.pop()
-        if len(ring_pts) >= 3:
-            kept.append(ring_pts)
-        return kept
-
-    # (u, kind, chain_id) kind 0=exit, 1=entry — u directed along the cut
-    # line with the keep side on the left; built in chain-creation order
-    # (exit before entry per chain) so the stable sort ties match the
-    # incremental construction
-    events: list[tuple] = []
-    for cid, ch in enumerate(chains):
-        if axis == 0:
-            events.append((-sign * ch[-1][1], 0, cid))
-            events.append((-sign * ch[0][1], 1, cid))
-        else:
-            events.append((sign * ch[-1][0], 0, cid))
-            events.append((sign * ch[0][0], 1, cid))
-
-    # exit at u connects to the next entry at u' ≥ u (ties: exit first so a
-    # grazing-vertex chain cancels against itself)
-    events.sort(key=lambda e: (e[0], e[1]))
-    next_chain: dict[int, int] = {}
-    pending_exits: list[int] = []
-    for _, kind, cid in events:
-        if kind == 0:
-            pending_exits.append(cid)
-        elif pending_exits:
-            next_chain[pending_exits.pop(0)] = cid
-    # cyclic wrap: remaining exits pair with the earliest unclaimed entries
-    if pending_exits:
-        claimed = set(next_chain.values())
-        for _, kind, cid in events:
-            if kind == 1 and cid not in claimed and pending_exits:
-                next_chain[pending_exits.pop(0)] = cid
-                claimed.add(cid)
-
-    seen: set[int] = set()
-    for cid in range(len(chains)):
-        if cid in seen:
-            continue
-        ring_pts: list = []
-        c = cid
-        while c not in seen:
-            seen.add(c)
-            pts = chains[c]
-            if ring_pts and ring_pts[-1] == pts[0]:
-                ring_pts.extend(pts[1:])
-            else:
-                ring_pts.extend(pts)
-            c = next_chain.get(c)
-            if c is None:
-                break  # unmatched (degenerate input); emit what we have
-        if ring_pts and ring_pts[0] == ring_pts[-1]:
-            ring_pts.pop()
-        if len(ring_pts) >= 3:
-            kept.append(ring_pts)
-    return kept
-
-
 _AREA_EPS = 1e-12
 
 
-def _assemble_polygons(soup) -> list[list[np.ndarray]]:
-    """Ring soup → polygons in the reference convention: shells clockwise,
-    holes counter-clockwise (Polygon.FixWinding, lib/spatial/polygon.go:48-72),
-    holes attached to their immediate shell; zero-area products dropped."""
-    rings: list = []
-    areas: list[float] = []
-    for r in soup:
-        a2 = _ring_area2_pts(r)
-        if abs(a2) > _AREA_EPS:
-            rings.append(r)
-            areas.append(a2)
-    if not rings:
-        return []
-    if len(rings) == 1:
-        # depth of a lone ring is 0 → a single shell, CW orientation
-        r, a2 = rings[0], areas[0]
-        pts = r if a2 > 0 else r[::-1]
-        return [[np.asarray(pts, np.float64)]]
-    depths = [_ring_depth(i, rings) for i in range(len(rings))]
-    polys: list[list[np.ndarray]] = []
-    owner: dict[int, int] = {}
-    for i, r in enumerate(rings):
-        if depths[i] % 2 == 0:
-            pts = r if areas[i] > 0 else r[::-1]  # shell: CW
-            owner[i] = len(polys)
-            polys.append([np.asarray(pts, np.float64)])
-    for i, r in enumerate(rings):
-        if depths[i] % 2 == 1:
-            # immediate parent: the even-depth ring containing i with the
-            # greatest depth below i's
-            best, best_d = None, -1
-            for j in range(len(rings)):
-                if depths[j] % 2 == 0 and depths[j] < depths[i] and depths[j] > best_d:
-                    for px, py in r:
-                        if not _pt_on_ring(px, py, rings[j]):
-                            if _pt_in_ring(px, py, rings[j]):
-                                best, best_d = j, depths[j]
-                            break
-            if best is not None:
-                pts = r if areas[i] < 0 else r[::-1]  # hole: CCW
-                polys[owner[best]].append(np.asarray(pts, np.float64))
-    return polys
-
-
 # ---------------------------------------------------------------------------
-# Flat-coordinate twin of the general polygon-clip path.
+# Ring-soup kernels of the general polygon-clip path, on flat coordinates.
 #
 # clip_polygon's hot shape (measured on the z13 bench coverage rows) is a
-# single ring of 4-8 vertices clipped against ~1.7M tiles; the tuple-based
-# kernels above pay one tuple allocation per vertex per call plus tuple
-# compares in every dedup/stitch test. The _f twins below hold a ring as a
-# (xs, ys) pair of plain float lists — same control flow statement for
-# statement, same IEEE expressions in the same evaluation order, so outputs
-# are bit-identical (differ-enforced by tests/test_clip_fastpaths.py, the
-# clip goldens, and the tile-sha cross-check, all of which compare against
-# the tuple twins kept above).
+# single ring of 4-8 vertices clipped against ~1.7M tiles; a tuple per
+# vertex costs one allocation per vertex per call plus tuple compares in
+# every dedup/stitch test. The _f kernels below hold a ring as a (xs, ys)
+# pair of plain float lists. Their tuple-point twins live in
+# tests/ref_kernels.py — same control flow statement for statement, same
+# IEEE expressions in the same evaluation order, so outputs are
+# bit-identical (differ-enforced by tests/test_clip_fastpaths.py, the clip
+# goldens, and the tile-sha cross-check).
 # ---------------------------------------------------------------------------
 
 
 def _pt_in_ring_f(px: float, py: float, xs: list, ys: list) -> bool:
-    """Flat twin of :func:`_pt_in_ring` (parity is edge-order independent)."""
+    """Even-odd ray cast (half-open edges) — nesting tests only; the exact
+    reference-semantics PIP lives in kernels.geometry."""
     inside = False
     x1, y1 = xs[-1], ys[-1]
     for x2, y2 in zip(xs, ys):
@@ -459,7 +211,7 @@ def _pt_in_ring_f(px: float, py: float, xs: list, ys: list) -> bool:
 def _pt_on_ring_f(
     px: float, py: float, xs: list, ys: list, eps: float = 1e-12
 ) -> bool:
-    """Flat twin of :func:`_pt_on_ring` (a boolean any(), order independent)."""
+    """Does (px, py) lie on an edge of the ring, within ``eps``?"""
     x1, y1 = xs[-1], ys[-1]
     for x2, y2 in zip(xs, ys):
         if (
@@ -473,7 +225,8 @@ def _pt_on_ring_f(
 
 
 def _ring_depth_f(i: int, soup: list) -> int:
-    """Flat twin of :func:`_ring_depth` — same first-usable-vertex rule."""
+    """Even-odd nesting depth of soup[i] among the other rings: pick a
+    vertex of i not on j's boundary for each containment test."""
     depth = 0
     xi, yi = soup[i]
     for j, (xj, yj) in enumerate(soup):
@@ -488,8 +241,9 @@ def _ring_depth_f(i: int, soup: list) -> int:
 
 
 def _area2_f(xs: list, ys: list) -> float:
-    """Flat twin of :func:`_ring_area2_pts` — identical summation order
-    (edges (0,1)..(n-1,0)), so the float result is bit-identical."""
+    """Twice the signed shoelace area; >0 = clockwise (reference sign
+    convention, lib/spatial/line.go:160-169). Edges summed in the order
+    (0,1)..(n-1,0)."""
     s = 0.0
     x1, y1 = xs[0], ys[0]
     n = len(xs)
@@ -502,9 +256,21 @@ def _area2_f(xs: list, ys: list) -> float:
 
 
 def _cut_soup_f(soup: list, axis: int, v: float, sign: float) -> list:
-    """Flat twin of :func:`_cut_soup`: identical branch structure, sign
-    expressions, interpolation formulas, dedup tests, event ordering, and
-    parity stitching — point tuples replaced by componentwise compares."""
+    """Cut an even-odd ring soup by the half-plane sign·(p[axis] − v) ≥ 0.
+
+    Invariant in AND out: interior lies locally LEFT of every directed edge
+    (counter-clockwise shells, clockwise holes in y-up coords). Boundary
+    chains surviving on the keep side are re-connected along the cut line by
+    exit→next-entry parity pairing — the step that lets one concave ring
+    split into several, and an edge-cut hole merge into its shell.
+
+    Scalar by design: the workload is ~1.7M calls per z13 rebuild with a
+    MEDIAN soup of one ring / ~5 vertices (tiny simplified fragments ×
+    many tiles), where per-call numpy setup costs more than the whole cut.
+    Event bookkeeping is deferred until a second chain proves the pairing
+    step is needed — one chain (the overwhelmingly common case) IS the
+    output ring (its exit always pairs back to its own entry, so the
+    stitch walk is an identity)."""
     kept: list = []
     chains: list = []  # (xs, ys), entry..exit
 
@@ -514,9 +280,9 @@ def _cut_soup_f(soup: list, axis: int, v: float, sign: float) -> list:
         if min(s) >= 0:
             if max(s) > 0:
                 kept.append((xs, ys))
-            continue
+            continue  # ring collapsed onto the line: degenerate, drop
         if max(s) <= 0:
-            continue
+            continue  # entirely on the discard side
         n = len(s)
         start = 0
         while s[start] >= 0:
@@ -574,6 +340,9 @@ def _cut_soup_f(soup: list, axis: int, v: float, sign: float) -> list:
     if not chains:
         return kept
     if len(chains) == 1:
+        # sole chain's exit pairs with its own entry regardless of event
+        # order (FIFO with one exit + the cyclic wrap both yield {0: 0}),
+        # so the stitch emits exactly this chain
         cx, cy = chains[0]
         if cx[0] == cx[-1] and cy[0] == cy[-1]:
             cx.pop()
@@ -582,6 +351,10 @@ def _cut_soup_f(soup: list, axis: int, v: float, sign: float) -> list:
             kept.append((cx, cy))
         return kept
 
+    # (u, kind, chain_id) kind 0=exit, 1=entry — u directed along the cut
+    # line with the keep side on the left; built in chain-creation order
+    # (exit before entry per chain) so the stable sort ties match the
+    # incremental construction
     events: list[tuple] = []
     for cid, (cx, cy) in enumerate(chains):
         if axis == 0:
@@ -590,6 +363,8 @@ def _cut_soup_f(soup: list, axis: int, v: float, sign: float) -> list:
         else:
             events.append((sign * cx[-1], 0, cid))
             events.append((sign * cx[0], 1, cid))
+    # exit at u connects to the next entry at u' ≥ u (ties: exit first so a
+    # grazing-vertex chain cancels against itself)
     events.sort(key=lambda e: (e[0], e[1]))
     next_chain: dict[int, int] = {}
     pending_exits: list[int] = []
@@ -598,6 +373,7 @@ def _cut_soup_f(soup: list, axis: int, v: float, sign: float) -> list:
             pending_exits.append(cid)
         elif pending_exits:
             next_chain[pending_exits.pop(0)] = cid
+    # cyclic wrap: remaining exits pair with the earliest unclaimed entries
     if pending_exits:
         claimed = set(next_chain.values())
         for _, kind, cid in events:
@@ -640,7 +416,9 @@ def _to_np_f(xs: list, ys: list) -> np.ndarray:
 
 
 def _assemble_polygons_f(soup: list) -> list[list[np.ndarray]]:
-    """Flat twin of :func:`_assemble_polygons` — same nesting/orientation."""
+    """Ring soup → polygons in the reference convention: shells clockwise,
+    holes counter-clockwise (Polygon.FixWinding, lib/spatial/polygon.go:48-72),
+    holes attached to their immediate shell; zero-area products dropped."""
     rings: list = []
     areas: list[float] = []
     for xs, ys in soup:
@@ -684,46 +462,6 @@ def _assemble_polygons_f(soup: list) -> list[list[np.ndarray]]:
     return polys
 
 
-def _border_intersection_mask_np(a: np.ndarray, b: np.ndarray, bbox) -> np.ndarray:
-    """Exact vectorized twin of ``any(segment_intersection(seg, border)[1])``
-    PER SEGMENT over candidate segments × the 4 bbox borders: same cartesian
-    coefficients, same 8-dp rounding (round8_np == scalar round8), same
-    rounded-endpoint HasPoint bounds (lib/spatial/line.go:240-348)."""
-    from .rounding import round8_np
-
-    a1 = a[:, 1] - b[:, 1]
-    b1 = b[:, 0] - a[:, 0]
-    c1 = b[:, 0] * a[:, 1] - a[:, 0] * b[:, 1]
-    ra, rb = round8_np(a), round8_np(b)
-    slo_x = np.minimum(ra[:, 0], rb[:, 0])[:, None]
-    shi_x = np.maximum(ra[:, 0], rb[:, 0])[:, None]
-    slo_y = np.minimum(ra[:, 1], rb[:, 1])[:, None]
-    shi_y = np.maximum(ra[:, 1], rb[:, 1])[:, None]
-
-    borders = _bbox_borders(bbox)
-    q0 = np.array([s[0] for s in borders])  # (4,2)
-    q1 = np.array([s[1] for s in borders])
-    a2 = q0[:, 1] - q1[:, 1]
-    b2 = q1[:, 0] - q0[:, 0]
-    c2 = q1[:, 0] * q0[:, 1] - q0[:, 0] * q1[:, 1]
-    rq0, rq1 = round8_np(q0), round8_np(q1)
-    blo_x = np.minimum(rq0[:, 0], rq1[:, 0])[None, :]
-    bhi_x = np.maximum(rq0[:, 0], rq1[:, 0])[None, :]
-    blo_y = np.minimum(rq0[:, 1], rq1[:, 1])[None, :]
-    bhi_y = np.maximum(rq0[:, 1], rq1[:, 1])[None, :]
-
-    det = a1[:, None] * b2[None, :] - a2[None, :] * b1[:, None]  # (N,4)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        ix = round8_np((b2[None, :] * c1[:, None] - b1[:, None] * c2[None, :]) / det)
-        iy = round8_np((a1[:, None] * c2[None, :] - a2[None, :] * c1[:, None]) / det)
-    ok = (
-        (det != 0)
-        & (ix >= slo_x) & (ix <= shi_x) & (iy >= slo_y) & (iy <= shi_y)
-        & (ix >= blo_x) & (ix <= bhi_x) & (iy >= blo_y) & (iy <= bhi_y)
-    )
-    return ok.any(axis=1)
-
-
 def ring_border_hits_batch(rings: list, bbox, eps: float = 1e-7) -> np.ndarray:
     """Per ring: does it cross a border of ``bbox``? Exactly
     ``line_intersections(closed ring, _bbox_borders(bbox)) != ∅``, the
@@ -739,7 +477,7 @@ def ring_border_hits_batch(rings: list, bbox, eps: float = 1e-7) -> np.ndarray:
     border crossings under the kernel's 8-dp rounding (a crossing segment's
     bbox must come within eps of a border span; eps of 1e-7 covers the
     rounding), and every candidate runs the exact vectorized segment
-    kernel (_border_intersection_mask_np).
+    kernel (geometry.segment_cross_np) against the four borders.
     """
     nr = len(rings)
     hits = np.zeros(nr, bool)
@@ -765,17 +503,17 @@ def ring_border_hits_batch(rings: list, bbox, eps: float = 1e-7) -> np.ndarray:
     keep = lens > 0
     if not blocks:
         return hits
-    P = np.concatenate(blocks, axis=0)
+    px, py = np.ascontiguousarray(np.concatenate(blocks, axis=0).T)
     ends = np.cumsum(lens[keep])
-    a_all, b_all = P[:-1], P[1:]
-    valid = np.ones(len(P) - 1, bool)
+    valid = np.ones(len(px) - 1, bool)
     valid[ends[:-1] - 1] = False  # pairs straddling ring boundaries
     rid_all = np.repeat(np.flatnonzero(keep), lens[keep] - 1)
-    a, b = a_all[valid], b_all[valid]
+    ax, ay = px[:-1][valid], py[:-1][valid]
+    bx, by = px[1:][valid], py[1:][valid]
 
     minx, miny, maxx, maxy = bbox
-    sxlo, sxhi = np.minimum(a[:, 0], b[:, 0]), np.maximum(a[:, 0], b[:, 0])
-    sylo, syhi = np.minimum(a[:, 1], b[:, 1]), np.maximum(a[:, 1], b[:, 1])
+    sxlo, sxhi = np.minimum(ax, bx), np.maximum(ax, bx)
+    sylo, syhi = np.minimum(ay, by), np.maximum(ay, by)
     yov = (syhi >= miny - eps) & (sylo <= maxy + eps)
     xov = (sxhi >= minx - eps) & (sxlo <= maxx + eps)
     near_vx = ((sxlo <= minx + eps) & (sxhi >= minx - eps)) | (
@@ -787,8 +525,11 @@ def ring_border_hits_batch(rings: list, bbox, eps: float = 1e-7) -> np.ndarray:
     cand = np.flatnonzero((yov & near_vx) | (xov & near_hy))
     if cand.size == 0:
         return hits
-    seghit = _border_intersection_mask_np(a[cand], b[cand], bbox)
-    hits[np.unique(rid_all[cand[seghit]])] = True
+    q0, q1 = (np.array(pts, np.float64).T for pts in zip(*_bbox_borders(bbox)))
+    _, _, ok = segment_cross_np(
+        (ax[cand], ay[cand]), (bx[cand], by[cand]), q0, q1
+    )
+    hits[np.unique(rid_all[cand[ok.any(axis=1)]])] = True
     return hits
 
 
@@ -803,9 +544,11 @@ def clip_polygon(
     ``border_hit``: precomputed ``ring_border_hits_batch`` verdict of
     ``polygon[0]`` for single-ring polygons (kernels/mvt_batch computes it
     for a whole Arrow batch of (ring, tile) pairs in one pass); None
-    computes it here.
+    computes it here. An empty shell clips to nothing.
     """
     minx, miny, maxx, maxy = bbox
+    if len(polygon[0]) == 0:
+        return []
     if len(polygon) == 1:
         if border_hit is None:
             border_hit = bool(ring_border_hits_batch([polygon[0]], bbox)[0])
@@ -887,12 +630,12 @@ def clip_polygon(
         (1, miny, 1.0),
         (1, maxy, -1.0),
     ):
-        # bbox prefilter — an EXACT 2-compare substitute for _cut_soup's
+        # bbox prefilter — an EXACT 2-compare substitute for _cut_soup_f's
         # O(n) per-vertex sign scan: with s_i = sign·(p_i[axis] − v),
         # all(s≥0) ⟺ ring's lo ≥ v (sign>0) / hi ≤ v (sign<0), and
         # any(s>0) ⟺ hi > v / lo < v — the coordinate extrema decide the
         # trivial keep/drop branches exactly. Only genuinely straddling
-        # rings enter _cut_soup; they never take its trivial branches, and
+        # rings enter _cut_soup_f; they never take its trivial branches, and
         # its chain-assembled output always follows trivial keeps in the
         # original's order, so soup order (which downstream nesting and
         # first-seen dict encoding observe) is unchanged.

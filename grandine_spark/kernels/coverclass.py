@@ -64,21 +64,87 @@ def _tile_lat(yy: np.ndarray, n: float) -> np.ndarray:
     return np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * yy / n))))
 
 
-def classify_ring_cells(
-    ring, zs: np.ndarray, xs: np.ndarray, ys: np.ndarray
-) -> np.ndarray:
-    """Classify one single-ring polygon against T cover cells.
+def _clear_cells(a, b, zs, xs, ys, rdp: bool = False):
+    """The margin test both classifiers share. ``a``/``b``: (S,2) segment
+    starts/ends in raw lon/lat; ``zs/xs/ys``: (T,) cell coords. Walks the
+    cells per zoom in blocks of at most _BLOCK (segment, cell) pairs and
+    yields, per block with any, ``(cells, cx, cy)``: the indices of the
+    cells NO segment comes near, and their centers. A segment stays clear
+    of a cell when its bbox misses the 2-pixel margin-expanded tile, or
+    when its supporting line separates the tile by more than that margin
+    plus the segment's mercator sag (module docstring). ``rdp`` widens the
+    margin by the RDP tolerance (1 lon-pixel in degrees, the per-zoom
+    resolution() the encoder passes to simplify_rdp) and takes the sag
+    over the WHOLE line's latitude span — RDP merges segments, so a
+    simplified chord can sag more than any original segment."""
+    sxlo = np.minimum(a[:, 0], b[:, 0])
+    sxhi = np.maximum(a[:, 0], b[:, 0])
+    sylo = np.minimum(a[:, 1], b[:, 1])
+    syhi = np.maximum(a[:, 1], b[:, 1])
+    ax, ay, bx, by = a[:, 0], a[:, 1], b[:, 0], b[:, 1]
+    # supporting-line coefficients nx*X + ny*Y + c per segment
+    nx = ay - by
+    ny = bx - ax
+    cl = -(nx * ax + ny * ay)
+    # mercator sag bound (degrees): max deviation of the projected edge
+    # curve from the lon/lat chord, in y only
+    dphi = np.radians(syhi.max() - sylo.min() if rdp else syhi - sylo)
+    phim = np.radians(np.minimum(np.maximum(np.abs(sylo), np.abs(syhi)), 89.9))
+    sag = np.degrees(dphi * dphi / 8.0 / np.cos(phim) * np.tan(phim))
 
-    ``ring``: (S,2) raw lon/lat vertices (open or closed); ``zs/xs/ys``:
-    (T,) integer cell coords. Returns (T,) int8 of ``_cc`` codes.
-    """
-    return classify_poly_cells([ring], zs, xs, ys)
+    zs = np.asarray(zs, np.int64)
+    step = max(1, _BLOCK // max(1, len(a)))
+    for z in np.unique(zs):
+        zm = np.flatnonzero(zs == z)
+        n = float(2.0**z)
+        res = 360.0 / (n * 4096.0)  # 1 lon-pixel == the RDP eps
+        extra = res if rdp else 0.0
+        for s in range(0, len(zm), step):
+            idx = zm[s : s + step]
+            xz = xs[idx].astype(np.float64)
+            yz = ys[idx].astype(np.float64)
+            w = xz / n * 360.0 - 180.0
+            e = (xz + 1.0) / n * 360.0 - 180.0
+            nn = _tile_lat(yz, n)
+            ss = _tile_lat(yz + 1.0, n)
+            eps_x = 2.0 * res + extra
+            eps_y = 2.0 * (nn - ss) / 4096.0 + extra
+            bbox_ov = (
+                (sxlo[:, None] <= e[None, :] + eps_x)
+                & (sxhi[:, None] >= w[None, :] - eps_x)
+                & (sylo[:, None] <= nn[None, :] + eps_y)
+                & (syhi[:, None] >= ss[None, :] - eps_y)
+            )
+            # line-separation with sag-inflated margin: the segment's
+            # supporting line keeps the whole expanded tile on one side by
+            # more than the projected curve can deviate → the edge provably
+            # misses the tile even in pixel space
+            nxw = nx[:, None] * w[None, :]
+            nxe = nx[:, None] * e[None, :]
+            nys = ny[:, None] * ss[None, :]
+            nyn = ny[:, None] * nn[None, :]
+            smax = np.maximum(nxw, nxe) + np.maximum(nys, nyn) + cl[:, None]
+            smin = np.minimum(nxw, nxe) + np.minimum(nys, nyn) + cl[:, None]
+            marg = np.abs(nx)[:, None] * eps_x + np.abs(ny[:, None]) * (
+                eps_y[None, :] + sag[:, None]
+            )
+            line_sep = (smin > marg) | (smax < -marg)
+            clear = ~(bbox_ov & ~line_sep).any(axis=0)
+            if clear.any():
+                yield (
+                    idx[clear],
+                    (w[clear] + e[clear]) / 2.0,
+                    (ss[clear] + nn[clear]) / 2.0,
+                )
 
 
 def classify_poly_cells(
     rings, zs: np.ndarray, xs: np.ndarray, ys: np.ndarray
 ) -> np.ndarray:
     """Classify one polygon (1..R rings) against T cover cells.
+
+    ``rings``: (S,2) raw lon/lat vertex arrays (open or closed); ``zs/xs/ys``:
+    (T,) integer cell coords. Returns (T,) int8 of ``_cc`` codes.
 
     Single-ring polygons get the full 0/1/2 treatment. Multi-ring
     (holed) polygons get 0/2 only, and code 2 additionally requires that
@@ -111,7 +177,6 @@ def classify_poly_cells(
     inclusive coordinate comparisons exactly.
     """
     out = np.zeros(len(zs), np.int8)
-    single = len(rings) == 1
     segs = []  # per-ring closed vertex arrays
     for ring in rings:
         p = np.asarray(ring, np.float64)
@@ -128,85 +193,28 @@ def classify_poly_cells(
         [np.full(len(p) - 1, i, np.int64) for i, p in enumerate(segs)]
     )
     n_rings = len(segs)
-    sxlo = np.minimum(a[:, 0], b[:, 0])
-    sxhi = np.maximum(a[:, 0], b[:, 0])
-    sylo = np.minimum(a[:, 1], b[:, 1])
-    syhi = np.maximum(a[:, 1], b[:, 1])
     ax, ay, bx, by = a[:, 0], a[:, 1], b[:, 0], b[:, 1]
-    # supporting-line coefficients nx*X + ny*Y + c per segment
-    nx = ay - by
-    ny = bx - ax
-    cl = -(nx * ax + ny * ay)
-    # mercator sag bound (degrees): max deviation of the projected edge
-    # curve from the lon/lat chord, in y only
-    dphi = np.radians(syhi - sylo)
-    phim = np.radians(np.minimum(np.maximum(np.abs(sylo), np.abs(syhi)), 89.9))
-    sag = np.degrees(dphi * dphi / 8.0 / np.cos(phim) * np.tan(phim))
-
-    n_seg = len(a)
-    zs = np.asarray(zs, np.int64)
-    for z in np.unique(zs):
-        zm = np.flatnonzero(zs == z)
-        n = float(2.0**z)
-        step = max(1, _BLOCK // max(1, n_seg))
-        for s in range(0, len(zm), step):
-            idx = zm[s : s + step]
-            xz = xs[idx].astype(np.float64)
-            yz = ys[idx].astype(np.float64)
-            w = xz / n * 360.0 - 180.0
-            e = (xz + 1.0) / n * 360.0 - 180.0
-            nn = _tile_lat(yz, n)
-            ss = _tile_lat(yz + 1.0, n)
-            eps_x = 2.0 * 360.0 / (n * 4096.0)
-            eps_y = 2.0 * (nn - ss) / 4096.0
-            bbox_ov = (
-                (sxlo[:, None] <= e[None, :] + eps_x)
-                & (sxhi[:, None] >= w[None, :] - eps_x)
-                & (sylo[:, None] <= nn[None, :] + eps_y)
-                & (syhi[:, None] >= ss[None, :] - eps_y)
-            )
-            # line-separation with sag-inflated margin: the segment's
-            # supporting line keeps the whole expanded tile on one side by
-            # more than the projected curve can deviate → the edge provably
-            # misses the tile even in pixel space
-            nxw = nx[:, None] * w[None, :]
-            nxe = nx[:, None] * e[None, :]
-            nys = ny[:, None] * ss[None, :]
-            nyn = ny[:, None] * nn[None, :]
-            smax = np.maximum(nxw, nxe) + np.maximum(nys, nyn) + cl[:, None]
-            smin = np.minimum(nxw, nxe) + np.minimum(nys, nyn) + cl[:, None]
-            marg = np.abs(nx)[:, None] * eps_x + np.abs(ny[:, None]) * (
-                eps_y[None, :] + sag[:, None]
-            )
-            line_sep = (smin > marg) | (smax < -marg)
-            touch = bbox_ov & ~line_sep
-            clear = ~touch.any(axis=0)
-            if not clear.any():
-                continue
-            cxs = (w[clear] + e[clear]) / 2.0
-            cys = (ss[clear] + nn[clear]) / 2.0
-            # even-odd parity, half-open edge rule (same formula as
-            # clip._pt_in_ring), batched over tile centers
-            cross = (ay[:, None] > cys[None, :]) != (by[:, None] > cys[None, :])
-            with np.errstate(divide="ignore", invalid="ignore"):
-                xi = ax[:, None] + (cys[None, :] - ay[:, None]) / (
-                    by[:, None] - ay[:, None]
-                ) * (bx[:, None] - ax[:, None])
-            hits = cross & (cxs[None, :] < xi)
-            blk = np.zeros(len(idx), np.int8)
-            if single:
-                par = (hits.sum(axis=0) % 2).astype(bool)
-                blk[clear] = np.where(par, np.int8(1), np.int8(2))
-            else:
-                # per-ring crossing counts: (n_rings, n_clear) via bincount
-                # over flat (ring, tile) indices of the hit matrix
-                flat = rid[:, None] * len(cxs) + np.arange(len(cxs))[None, :]
-                cnt = np.bincount(
-                    flat[hits], minlength=n_rings * len(cxs)
-                ).reshape(n_rings, len(cxs))
-                all_outside = ((cnt % 2) == 0).all(axis=0)
-                blk[clear] = np.where(all_outside, np.int8(2), np.int8(0))
-            out[idx] = blk
+    for cells, cxs, cys in _clear_cells(a, b, zs, xs, ys):
+        # even-odd parity, half-open edge rule (same formula as
+        # clip._pt_in_ring_f), batched over tile centers
+        cross = (ay[:, None] > cys[None, :]) != (by[:, None] > cys[None, :])
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xi = ax[:, None] + (cys[None, :] - ay[:, None]) / (
+                by[:, None] - ay[:, None]
+            ) * (bx[:, None] - ax[:, None])
+        hits = cross & (cxs[None, :] < xi)
+        if n_rings == 1:
+            par = (hits.sum(axis=0) % 2).astype(bool)
+            out[cells] = np.where(par, np.int8(1), np.int8(2))
+        else:
+            # per-ring crossing counts: (n_rings, n_clear) via bincount
+            # over flat (ring, tile) indices of the hit matrix
+            flat = rid[:, None] * len(cxs) + np.arange(len(cxs))[None, :]
+            cnt = np.bincount(
+                flat[hits], minlength=n_rings * len(cxs)
+            ).reshape(n_rings, len(cxs))
+            all_outside = ((cnt % 2) == 0).all(axis=0)
+            out[cells] = np.where(all_outside, np.int8(2), np.int8(0))
     return out
 
 
@@ -222,68 +230,14 @@ def classify_line_cells(
     nothing there — a line's bbox coverage is quadratic in its diagonal
     span while the line itself only touches a linear number of cells, so
     at deep zooms most of its coverage rows are provably empty), else
-    ``0``. Same bbox + sag-inflated line-separation machinery as the ring
-    classifier. With ``simplify`` the margin additionally covers the RDP
-    tolerance (1 lon-pixel in degrees, the per-zoom resolution() the
-    encoder passes to simplify_rdp) AND uses the WHOLE line's latitude
-    span for the sag bound — RDP merges segments, so a simplified chord
-    can sag more than any original segment."""
+    ``0``. With ``simplify`` the margin also covers the RDP tolerance
+    (``_clear_cells``' ``rdp``)."""
     out = np.zeros(len(zs), np.int8)
     p = np.asarray(line, np.float64)
     if len(p) < 2:
         return out
-    a, b = p[:-1], p[1:]
-    sxlo = np.minimum(a[:, 0], b[:, 0])
-    sxhi = np.maximum(a[:, 0], b[:, 0])
-    sylo = np.minimum(a[:, 1], b[:, 1])
-    syhi = np.maximum(a[:, 1], b[:, 1])
-    ax, ay, bx, by = a[:, 0], a[:, 1], b[:, 0], b[:, 1]
-    nx = ay - by
-    ny = bx - ax
-    cl = -(nx * ax + ny * ay)
-    if simplify:
-        dphi = np.full(len(a), np.radians(p[:, 1].max() - p[:, 1].min()))
-    else:
-        dphi = np.radians(syhi - sylo)
-    phim = np.radians(np.minimum(np.maximum(np.abs(sylo), np.abs(syhi)), 89.9))
-    sag = np.degrees(dphi * dphi / 8.0 / np.cos(phim) * np.tan(phim))
-
-    zs = np.asarray(zs, np.int64)
-    for z in np.unique(zs):
-        zm = np.flatnonzero(zs == z)
-        n = float(2.0**z)
-        step = max(1, _BLOCK // max(1, len(p)))
-        for s in range(0, len(zm), step):
-            idx = zm[s : s + step]
-            xz = xs[idx].astype(np.float64)
-            yz = ys[idx].astype(np.float64)
-            w = xz / n * 360.0 - 180.0
-            e = (xz + 1.0) / n * 360.0 - 180.0
-            nn = _tile_lat(yz, n)
-            ss = _tile_lat(yz + 1.0, n)
-            res = 360.0 / (n * 4096.0)  # 1 lon-pixel == the RDP eps
-            extra = res if simplify else 0.0
-            eps_x = 2.0 * res + extra
-            eps_y = 2.0 * (nn - ss) / 4096.0 + extra
-            bbox_ov = (
-                (sxlo[:, None] <= e[None, :] + eps_x)
-                & (sxhi[:, None] >= w[None, :] - eps_x)
-                & (sylo[:, None] <= nn[None, :] + eps_y)
-                & (syhi[:, None] >= ss[None, :] - eps_y)
-            )
-            nxw = nx[:, None] * w[None, :]
-            nxe = nx[:, None] * e[None, :]
-            nys = ny[:, None] * ss[None, :]
-            nyn = ny[:, None] * nn[None, :]
-            smax = np.maximum(nxw, nxe) + np.maximum(nys, nyn) + cl[:, None]
-            smin = np.minimum(nxw, nxe) + np.minimum(nys, nyn) + cl[:, None]
-            marg = np.abs(nx)[:, None] * eps_x + np.abs(ny[:, None]) * (
-                eps_y[None, :] + sag[:, None]
-            )
-            line_sep = (smin > marg) | (smax < -marg)
-            touch = bbox_ov & ~line_sep
-            blk = np.where(touch.any(axis=0), np.int8(0), np.int8(2))
-            out[idx] = blk
+    for cells, _, _ in _clear_cells(p[:-1], p[1:], zs, xs, ys, rdp=simplify):
+        out[cells] = 2
     return out
 
 

@@ -1,16 +1,17 @@
-"""Mapbox Vector Tile encoding: projection, geometry commands, protobuf.
+"""Mapbox Vector Tile pieces shared by the tile encoder and the decoder.
 
-Exact-semantics port of lib/mvt/project.go + lib/mvt/codec.go — the scalar
-encoder and the decoder. The vector_tile.proto messages are written with the
-shared wire helpers of kernels/protowire.py (no `protobuf` dependency; wire
-bytes are identical for the same field order, which golang/protobuf emits in
-field-number order). kernels/mvt_batch.py is the batched encoder the tiler
-runs; it is byte-identical to encode_tile here, which tests use as its
-reference.
+Exact-semantics port of lib/mvt/project.go (projection, TileParams) and of
+the value encoding and decoding of lib/mvt/codec.go. The encoder the tiler
+runs is kernels/mvt_batch.py; the scalar encoder it is byte-identical to
+(encode_tile, assemble_layer, encode_geometry, project_coords) is the test
+reference in tests/ref_kernels.py. The vector_tile.proto messages are read
+and written with the shared wire helpers of kernels/protowire.py (no
+`protobuf` dependency; wire bytes are identical for the same field order,
+which golang/protobuf emits in field-number order).
 
 DETERMINISM NOTE (SURVEY.md §7): the reference iterates Go maps for layers
 (lib/mvt/codec.go:70) and feature tags (lib/mvt/codec.go:164), so its own
-byte output is NONDETERMINISTIC run-to-run. This encoder canonicalizes:
+byte output is NONDETERMINISTIC run-to-run. The encoders canonicalize:
 layers sorted by name, tags sorted by key. Goldens are defined against the
 canonical encoding.
 """
@@ -22,20 +23,7 @@ import math
 
 import numpy as np
 
-from .protowire import (
-    iter_fields,
-    ld,
-    packed_varints,
-    read_packed,
-    tag,
-    unzigzag,
-    varint,
-    zigzag32,
-    zigzag64,
-)
-
-from . import clip as _clip
-from . import geometry as _geometry
+from .protowire import iter_fields, ld, read_packed, tag, unzigzag, varint, zigzag64
 from .tilemath import tile_bbox
 
 EXTENT = 4096  # lib/mvt/codec.go:21
@@ -84,102 +72,6 @@ class TileParams:
         self.x_offset, self.y_offset = sw
         self.extent = extent
 
-    @classmethod
-    def from_bbox(cls, minx, miny, maxx, maxy, extent: int = EXTENT):
-        tp = cls.__new__(cls)
-        tp._init_from_bbox(minx, miny, maxx, maxy, extent)
-        return tp
-
-
-def tile_affine_np(mx: np.ndarray, my: np.ndarray, tp: TileParams):
-    """The tile-local remainder of tilePoint after the mercator projection:
-    scale/offset into pixel space plus the y-flip (flipFloat,
-    lib/mvt/project.go:13-19, truncates to int before flipping). Split out
-    so the batched encoder (kernels/mvt_batch.py) can reuse a per-geometry
-    mercator result across every tile the geometry covers — this function
-    IS the byte-identity contract between the two paths."""
-    ext = float(tp.extent)
-    x = (mx - tp.x_offset) / (tp.x_scale / ext) * ext
-    y_raw = (my - tp.y_offset) / (tp.y_scale / ext) * ext
-    y = ext - np.trunc(y_raw)  # flipFloat: extent - int(v)
-    return x, y
-
-
-def tile_point_np(lon: np.ndarray, lat: np.ndarray, tp: TileParams):
-    """tilePoint (lib/mvt/project.go:48-54), vectorized."""
-    mx, my = proj_4326_to_3857_np(lon, lat)
-    return tile_affine_np(mx, my, tp)
-
-
-def project_coords(geom_type: int, coords, tp: TileParams):
-    """Project a geometry's coords from 4326 into tile pixel space."""
-    if geom_type == 1:
-        x, y = tile_point_np(np.array([coords[0]]), np.array([coords[1]]), tp)
-        return (float(x[0]), float(y[0]))
-    if geom_type == 2:
-        a = np.asarray(coords, np.float64)
-        x, y = tile_point_np(a[:, 0], a[:, 1], tp)
-        return np.column_stack([x, y])
-    if geom_type == 3:
-        out = []
-        for ring in coords:
-            a = np.asarray(ring, np.float64)
-            x, y = tile_point_np(a[:, 0], a[:, 1], tp)
-            out.append(np.column_stack([x, y]))
-        return out
-    raise ValueError(f"unknown geom_type {geom_type}")
-
-
-# --------------------------------------------------------------------------
-# geometry command encoding (lib/mvt/codec.go:45-54,202-261)
-# --------------------------------------------------------------------------
-
-
-def _cmd(c: int, count: int) -> int:
-    return (c & 0x7) | (count << 3)
-
-
-def _encode_line(ln: np.ndarray, cur: list[int]) -> list[int]:
-    """encodeLine (lib/mvt/codec.go:239-261): MoveTo(1) first point,
-    LineTo(n-1) rest; deltas zigzag-encoded; cursor carried."""
-    n = len(ln)
-    if n == 0:
-        # degenerate part (everything clipped away): emit nothing rather
-        # than corrupt the command stream with a 0-count LineTo
-        return []
-    commands = [0] * (n * 2 + 2)
-    commands[0] = _cmd(CMD_MOVETO, 1)
-    commands[3] = _cmd(CMD_LINETO, (len(commands) - 4) // 2)
-    for i in range(n):
-        tx, ty = int(ln[i][0]), int(ln[i][1])  # int() truncation, like Go
-        dx, dy = tx - cur[0], ty - cur[1]
-        cur[0], cur[1] = tx, ty
-        if i == 0:
-            commands[1] = zigzag32(dx)
-            commands[2] = zigzag32(dy)
-        else:
-            commands[i + i + 2] = zigzag32(dx)
-            commands[i + i + 3] = zigzag32(dy)
-    return commands
-
-
-def encode_geometry(geoms: list[tuple[int, object]]) -> list[int]:
-    """encodeGeometry (lib/mvt/codec.go:203-237): uniform-type geom list →
-    command ints. Cursor resets per geometry; carries across polygon rings."""
-    commands: list[int] = []
-    for geom_type, coords in geoms:
-        cur = [0, 0]
-        if geom_type == 1:
-            dx, dy = int(coords[0]) - cur[0], int(coords[1]) - cur[1]
-            commands += [_cmd(CMD_MOVETO, 1), zigzag32(dx), zigzag32(dy)]
-        elif geom_type == 2:
-            commands += _encode_line(coords, cur)
-        elif geom_type == 3:
-            for ring in coords:
-                commands += _encode_line(ring, cur)
-                commands.append(_cmd(CMD_CLOSEPATH, 1))
-    return commands
-
 
 # --------------------------------------------------------------------------
 # protobuf wire encoding (vector_tile.proto, golang field-number order)
@@ -203,40 +95,6 @@ def _encode_value(v) -> bytes:
     return ld(1, str(v).encode("utf-8"))
 
 
-def _encode_feature(tags: list[int], geom_type: int, commands: list[int]) -> bytes:
-    out = bytearray()
-    if tags:
-        out += packed_varints(2, tags)
-    out += tag(3, 0) + varint(geom_type)  # vt geom enum == our geom enum
-    out += packed_varints(4, commands)
-    return bytes(out)
-
-
-def _encode_layer(
-    name: str,
-    feature_blobs: list[bytes],
-    keys: list[str],
-    values: list[bytes],
-    extent: int,
-) -> bytes:
-    out = bytearray()
-    out += ld(1, name.encode("utf-8"))
-    for fb in feature_blobs:
-        out += ld(2, fb)
-    for k in keys:
-        out += ld(3, k.encode("utf-8"))
-    for vb in values:
-        out += ld(4, vb)
-    out += tag(5, 0) + varint(extent)
-    out += tag(15, 0) + varint(2)  # layer version 2 (lib/mvt/codec.go:29)
-    return bytes(out)
-
-
-# --------------------------------------------------------------------------
-# tile assembly (lib/mvt/codec.go:57-198) — canonicalized
-# --------------------------------------------------------------------------
-
-
 _FULL_RECT: np.ndarray | None = None
 
 
@@ -256,71 +114,6 @@ def _full_rect() -> np.ndarray:
     return _FULL_RECT
 
 
-def encode_tile(features_by_layer: dict[str, list[dict]], x: int, y: int, z: int) -> bytes | None:
-    """EncodeTile (lib/mvt/codec.go:57-84), layers sorted by name."""
-    out = bytearray()
-    for layer_name in sorted(features_by_layer.keys()):
-        blob = assemble_layer(layer_name, features_by_layer[layer_name], x, y, z)
-        if blob is not None:
-            out += ld(3, blob)
-    if not out:
-        return None
-    return bytes(out)
-
-
-def assemble_layer(name, features, x, y, z) -> bytes | None:
-    """assembleLayer (lib/mvt/codec.go:139-198): project → clip to the
-    [0,extent]² mask → MergeFeatures → dict-encode tags (first-seen order
-    over key-sorted props) → encode commands.
-
-    ``features``: dicts {"geom_type": int, "coords": ..., "props": dict}.
-    """
-    tp = TileParams(x, y, z)
-    clip_mask = (0.0, 0.0, float(EXTENT), float(EXTENT))
-
-    clipped: list[dict] = []
-    for ft in features:
-        if ft.get("cc") == 1:
-            # pre-classified full cover (kernels/coverclass): exactly what
-            # project+clip returns for a ring that provably covers the tile —
-            # the clip-mask rectangle in fast-path vertex order
-            clipped.append(
-                {"geom_type": 3, "coords": [_full_rect()], "props": ft["props"]}
-            )
-            continue
-        projected = project_coords(ft["geom_type"], ft["coords"], tp)
-        for gt, cc in _clip.clip_geom(ft["geom_type"], projected, clip_mask):
-            clipped.append({"geom_type": gt, "coords": cc, "props": ft["props"]})
-
-    keys: dict[str, int] = {}
-    vals: dict[tuple, int] = {}
-    val_order: list = []
-    feature_blobs: list[bytes] = []
-
-    for ft in _geometry.merge_features(clipped):
-        tags: list[int] = []
-        for k in sorted(ft["props"].keys()):
-            if k.startswith("@"):
-                continue
-            v = ft["props"][k]
-            kpos = keys.setdefault(k, len(keys))
-            vkey = (type(v).__name__, v)
-            if vkey not in vals:
-                vals[vkey] = len(vals)
-                val_order.append(v)
-            tags += [kpos, vals[vkey]]
-        commands = encode_geometry([(ft["geom_type"], ft["coords"])])
-        if not commands:
-            continue
-        feature_blobs.append(_encode_feature(tags, ft["geom_type"], commands))
-
-    if not feature_blobs:
-        return None
-    return _encode_layer(
-        name, feature_blobs, list(keys.keys()), [_encode_value(v) for v in val_order], EXTENT
-    )
-
-
 def gzip_tile(buf: bytes) -> bytes:
     """Optional gzip of the tile buffer (cmd/tiler/tiler.go:285-289),
     deterministic (mtime=0)."""
@@ -328,13 +121,13 @@ def gzip_tile(buf: bytes) -> bytes:
 
 
 # --------------------------------------------------------------------------
-# tile decoding — the inverse of encode_tile, for reading tiles back
+# tile decoding — the inverse of the encoder, for reading tiles back
 # --------------------------------------------------------------------------
 
 
 def decode_geometry(geom_type: int, commands: list[int]):
-    """Command ints → coords in tile pixel space, mirroring
-    encode_geometry's input shapes: point → (x, y) (or list if count>1),
+    """Command ints → coords in tile pixel space, in the shapes the
+    encoder takes: point → (x, y) (or list if count>1),
     line → Nx2 array (list of arrays if multi), polygon → list of rings
     (each ring WITHOUT the implicit close-point the wire omits)."""
     i, cx, cy = 0, 0, 0
@@ -388,7 +181,7 @@ def _decode_value(buf: bytes):
 def decode_tile(buf: bytes) -> dict:
     """Tile bytes → {layer_name: {"extent", "version", "features": [
     {"geom_type", "coords", "props"}]}} — the exact inverse of
-    encode_tile over the subset of the vector-tile model it emits
+    the tile encoder over the subset of the vector-tile model it emits
     (gzip-sniffed, so sink output feeds straight back in)."""
     import gzip as _gz
 

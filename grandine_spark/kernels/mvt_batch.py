@@ -7,18 +7,19 @@ pair of the batch into tile pixel space and clips it to the tile. Then
 assembles protobuf layers, while :func:`encode_tiles_geojson` writes a
 FeatureCollection of the same clipped pieces.
 
-The MVT output is byte-identical to the scalar mvt.encode_tile, which tests
-use as its reference: every floating-point expression is the SAME
-IEEE-double operation sequence as kernels/mvt.py (the pixel affine repeats
-mvt.tile_affine_np's expression, the zigzag/varint integer identities are
+The MVT output is byte-identical to the scalar encoder the tests keep as
+its reference (tests/ref_kernels.py: encode_tile → assemble_layer →
+encode_geometry, a direct port of the reference): every floating-point
+expression is the SAME IEEE-double operation sequence (the pixel affine
+repeats tilePoint's expression, the zigzag/varint integer identities are
 exact, and protobuf framing uses the shared kernels/protowire.py helpers),
 and tests/test_mvt_batch.py asserts tile-for-tile byte equality on seeded
 corpora plus the reference goldens.
 
 Reference semantics: lib/mvt/codec.go:57-261 (EncodeTile/assembleLayer/
 encodeGeometry), lib/mvt/project.go:13-54 (tilePoint/flipFloat),
-lib/tile/codec.go:17-31 (GeoJSON). The restructuring relative to
-kernels/mvt.py is purely about WHERE Python-level loops run:
+lib/tile/codec.go:17-31 (GeoJSON). The restructuring relative to the
+scalar reference encoder is purely about WHERE Python-level loops run:
 
 - mercator projection happens once per distinct geometry object (it does
   not depend on the tile; the caller memoizes per wkb), leaving a 4-op
@@ -97,7 +98,8 @@ def _weave_commands(
     part_kind: 0 = point (3 ints, no LineTo), 1 = line (no ClosePath),
     2 = polygon ring (ClosePath appended even when m == 0, matching the
     scalar loop). The delta cursor carries across parts of one feature and
-    resets at feature boundaries — exactly encode_geometry's `cur`.
+    resets at feature boundaries — exactly the scalar encodeGeometry's
+    cursor (lib/mvt/codec.go:203-237).
 
     Returns (command int64 array for the whole batch, per-feature lengths).
     """
@@ -105,7 +107,7 @@ def _weave_commands(
         return np.zeros(0, np.int64), np.zeros(n_features, np.int64)
     m = np.array([len(p) for p in parts_pts], np.int64)
     kind = part_kind
-    # output slots per part (scalar twin: _encode_line emits 2m+2 for m>=1
+    # output slots per part (scalar encodeLine emits 2m+2 for m>=1
     # and nothing for m==0; geom 3 appends ClosePath unconditionally;
     # geom 1 emits exactly 3 ints)
     out_len = np.where(kind == 0, 3, np.where(m >= 1, 2 * m + 2, 0))
@@ -204,7 +206,7 @@ def clip_tiles(work: list[tuple[int, int, int, dict]]) -> list:
     [(z, x, y, {layer: [feat, ...]})] → per tile, [(layer_name, pieces)]
     with layers sorted by name and pieces the clipped feature dicts
     {"geom_type", "coords", "props"} in the layer's feature order (what
-    mvt.assemble_layer hands to merge_features).
+    the scalar assembleLayer hands to merge_features).
 
     feat dicts: {"geom_type", "coords", "props"} plus optional "cc" == 1
     (pre-classified full cover: the piece is the clip-mask rectangle) and
@@ -275,8 +277,9 @@ def clip_tiles(work: list[tuple[int, int, int, dict]]) -> list:
         yo = np.repeat(pp[:, 2], plen)
         ys_ = np.repeat(pp[:, 3], plen)
         ext = float(EXTENT)
-        # the same IEEE-double expression as mvt.tile_affine_np, with the
-        # per-tile scalars broadcast per point
+        # tilePoint's affine (lib/mvt/project.go:48-54; flipFloat truncates
+        # to int before flipping) with the per-tile scalars broadcast per
+        # point
         px = (mx_all - xo) / (xs_ / ext) * ext
         py = ext - np.trunc((my_all - yo) / (ys_ / ext) * ext)
         P = np.empty((len(px), 2), np.float64)
@@ -372,8 +375,8 @@ def encode_tiles_geojson(work: list[tuple[int, int, int, dict]]) -> list:
 
 def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
     """Encode a batch of tiles: [(z, x, y, {layer: [feat, ...]})] → bytes|None
-    per tile, byte-identical to mvt.encode_tile per tile (feat dicts as in
-    clip_tiles)."""
+    per tile, byte-identical to the scalar reference encode_tile per tile
+    (feat dicts as in clip_tiles)."""
     # ---- pass 2 (scalar): merge + per-layer dict-encode, batch collection
     feats_gt: list[int] = []  # per emitted feature
     feats_tags: list[list[int]] = []

@@ -8,9 +8,9 @@ Exact-semantics port of the reference's tile cell formulas:
 - Coverage (bbox → covering cell list): lib/tile/bbox.go:5-21;
 - Resolution: lib/tile/tile.go:52-54.
 
-Both scalar (golden parity) and vectorized numpy forms. The same formula is
-also expressed as native Spark Column expressions in
-``grandine_spark.functions.tile_exprs`` so the hot path never leaves the JVM.
+Scalar forms (golden parity). The same formula is also expressed as native
+Spark Column expressions in ``grandine_spark.functions.tile_exprs`` so the
+hot path never leaves the JVM.
 
 Packed cell id: ``(z << 58) | (x << 29) | y`` — 29 bits each for x/y supports
 z ≤ 28; parent cell at z' < z is a prefix (x >> (z-z'), y >> (z-z')), giving
@@ -20,8 +20,6 @@ the "cell-prefix" join from BASELINE.json.
 from __future__ import annotations
 
 import math
-
-import numpy as np
 
 WGS84_LAT_MAX = 85.0511287  # lib/tile/tile.go:10-13
 
@@ -40,27 +38,6 @@ def tile_name(lon: float, lat: float, zoom: int) -> tuple[int, int, int]:
     )
     m = int(n - 1)
     return (min(max(x, 0), m), min(max(y, 0), m), zoom)
-
-
-def tile_name_np(
-    lon: np.ndarray, lat: np.ndarray, zoom: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized TileName; returns (x, y) int64 arrays."""
-    n = 2.0**zoom
-    # Go evaluates lat*π/180 left-associatively (lib/tile/tile.go:40); keep
-    # the same operation order so scalar/vectorized/SQL paths agree to the bit
-    lat_rad = (
-        np.clip(np.asarray(lat, np.float64), -WGS84_LAT_MAX, WGS84_LAT_MAX) * math.pi
-    ) / 180.0
-    x = np.floor((np.asarray(lon, np.float64) + 180.0) / 360.0 * n)
-    y = np.floor(
-        (1.0 - np.log(np.tan(lat_rad) + 1.0 / np.cos(lat_rad)) / math.pi) / 2.0 * n
-    )
-    m = int(n) - 1
-    return (
-        np.clip(x, 0, m).astype(np.int64),
-        np.clip(y, 0, m).astype(np.int64),
-    )
 
 
 def tile_nw(x: int, y: int, z: int) -> tuple[float, float]:

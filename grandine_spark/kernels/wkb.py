@@ -84,16 +84,9 @@ def geom_bbox(geom_type: int, coords) -> tuple[float, float, float, float]:
     if geom_type == GEOM_POINT:
         x, y = float(coords[0]), float(coords[1])
         return (x, y, x, y)
-    if geom_type == GEOM_LINESTRING:
-        a = np.asarray(coords, np.float64)
-        return (
-            float(a[:, 0].min()),
-            float(a[:, 1].min()),
-            float(a[:, 0].max()),
-            float(a[:, 1].max()),
-        )
-    if geom_type == GEOM_POLYGON:
-        a = np.concatenate([np.asarray(r, np.float64) for r in coords])
+    if geom_type in (GEOM_LINESTRING, GEOM_POLYGON):
+        parts = [coords] if geom_type == GEOM_LINESTRING else coords
+        a = np.concatenate([np.asarray(r, np.float64) for r in parts])
         return (
             float(a[:, 0].min()),
             float(a[:, 1].min()),

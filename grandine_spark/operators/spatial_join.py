@@ -222,6 +222,8 @@ def _broadcast_join(
     for r in polys.select("feature_id", "wkb").collect():
         fid = int(r.feature_id)
         rings = from_wkb(bytes(r.wkb))[1]
+        if len(rings[0]) == 0:
+            continue  # an empty shell contains no point: no dim rows
         poly_map[fid] = rings
         bb = geom_bbox(3, rings)
         # walk the zoom down ARITHMETICALLY (corner-tile count) and only

@@ -190,7 +190,7 @@ def _encode_record_batch(batch, gzip: bool, simplify: bool, codec: str):
     # in EVERY tile it covers within the batch (the shuffle hashes on tile
     # keys, but groups of neighboring tiles share their features), and the
     # mercator projection does not depend on the tile at all — only the
-    # cheap affine into pixel space does (mvt.tile_affine_np).
+    # cheap affine into pixel space does (mvt_batch.clip_tiles).
     parse_memo: dict = {}  # wkb -> (gt, coords)
     merc_memo: dict = {}  # (wkb, eps|None) -> (gt, coords', merc)
 

@@ -8,6 +8,8 @@ import math
 
 import numpy as np
 
+from ref_kernels import _assemble_polygons, _cut_soup, _ring_area2_pts, _ring_depth
+
 from grandine_spark.kernels import clip as C
 from grandine_spark.kernels.geometry import line_intersections
 from grandine_spark.kernels.rounding import POINT_PRECISION, round8, round_half_away
@@ -79,17 +81,17 @@ def _naive_general_clip(polygon, bbox):
         return []
     norm = []
     for i, pts in enumerate(soup):
-        want_ccw = C._ring_depth(i, soup) % 2 == 0
-        is_ccw = C._ring_area2_pts(pts) < 0
+        want_ccw = _ring_depth(i, soup) % 2 == 0
+        is_ccw = _ring_area2_pts(pts) < 0
         norm.append(pts if is_ccw == want_ccw else pts[::-1])
     soup = norm
     for axis, v, sign in (
         (0, minx, 1.0), (0, maxx, -1.0), (1, miny, 1.0), (1, maxy, -1.0),
     ):
-        soup = C._cut_soup(soup, axis, v, sign)
+        soup = _cut_soup(soup, axis, v, sign)
         if not soup:
             return []
-    return C._assemble_polygons(soup)
+    return _assemble_polygons(soup)
 
 
 def _eq_polys(a, b):

@@ -24,9 +24,11 @@ def test_classify_ring_cells_contract_differ():
     rectangle and code 2 must mean it returns nothing. (Code 0 rows are the
     exact path's business.) Also checks enough 1s/2s occur for the test to
     mean anything."""
+    from ref_kernels import project_coords
+
     from grandine_spark.kernels import clip as _clip
-    from grandine_spark.kernels.coverclass import classify_ring_cells
-    from grandine_spark.kernels.mvt import EXTENT, TileParams, project_coords
+    from grandine_spark.kernels.coverclass import classify_poly_cells
+    from grandine_spark.kernels.mvt import EXTENT, TileParams
     from grandine_spark.kernels.tilemath import coverage
 
     rng = np.random.default_rng(20260819)
@@ -47,7 +49,7 @@ def test_classify_ring_cells_contract_differ():
         xs = np.array([c[0] for c in cells], np.int64)
         ys = np.array([c[1] for c in cells], np.int64)
         zs = np.full(len(cells), z, np.int64)
-        cc = classify_ring_cells(ring, zs, xs, ys)
+        cc = classify_poly_cells([ring], zs, xs, ys)
         for (x, y, _), code in zip(cells, cc):
             if code == 0:
                 n0 += 1
@@ -76,9 +78,11 @@ def test_classify_poly_cells_holed_contract_differ():
     Coverage comes from the OUTER ring's bbox, so the classified-2
     population includes bbox-overshoot tiles that straddle the ring bbox
     (the case the r4 inside-bbox removal opened up)."""
+    from ref_kernels import project_coords
+
     from grandine_spark.kernels import clip as _clip
     from grandine_spark.kernels.coverclass import classify_poly_cells
-    from grandine_spark.kernels.mvt import EXTENT, TileParams, project_coords
+    from grandine_spark.kernels.mvt import EXTENT, TileParams
     from grandine_spark.kernels.tilemath import coverage
 
     rng = np.random.default_rng(20260820)
@@ -118,9 +122,11 @@ def test_classify_ring_cells_bbox_overshoot():
     never reaches; those must classify 2 even though they straddle or hug
     the ring's bbox edge (the pre-r4 inside-bbox restriction left them 0),
     and each claim must match the exact clip."""
+    from ref_kernels import project_coords
+
     from grandine_spark.kernels import clip as _clip
-    from grandine_spark.kernels.coverclass import classify_ring_cells
-    from grandine_spark.kernels.mvt import EXTENT, TileParams, project_coords
+    from grandine_spark.kernels.coverclass import classify_poly_cells
+    from grandine_spark.kernels.mvt import EXTENT, TileParams
     from grandine_spark.kernels.tilemath import coverage
 
     mask = (0.0, 0.0, float(EXTENT), float(EXTENT))
@@ -133,7 +139,7 @@ def test_classify_ring_cells_bbox_overshoot():
     xs = np.array([c[0] for c in cells], np.int64)
     ys = np.array([c[1] for c in cells], np.int64)
     zs = np.full(len(cells), z, np.int64)
-    cc = classify_ring_cells(ring, zs, xs, ys)
+    cc = classify_poly_cells([ring], zs, xs, ys)
     n2 = int((cc == 2).sum())
     # the sliver's own tiles are ~linear in its span; the bbox is ~quadratic
     assert n2 > len(cells) * 0.8, (n2, len(cells))
@@ -148,10 +154,12 @@ def test_classify_line_cells_contract_differ():
     2, clip_line of the projected (optionally RDP-simplified) line must
     return nothing. Diagonal lines make bbox coverage quadratic while the
     line touches a linear number of cells — most rows must classify 2."""
+    from ref_kernels import project_coords
+
     from grandine_spark.kernels import clip as _clip
     from grandine_spark.kernels.coverclass import classify_line_cells
     from grandine_spark.kernels.geometry import simplify_rdp
-    from grandine_spark.kernels.mvt import EXTENT, TileParams, project_coords
+    from grandine_spark.kernels.mvt import EXTENT, TileParams
     from grandine_spark.kernels.tilemath import coverage, resolution
 
     rng = np.random.default_rng(20260819)

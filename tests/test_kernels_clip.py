@@ -172,7 +172,7 @@ def test_clip_polygon_hole_inside_survives():
     out = clip_polygon(donut, (0, 0, 3.5, 4))
     assert len(out) == 1 and len(out[0]) == 2
     # reference winding: shell clockwise, hole counter-clockwise
-    from grandine_spark.kernels.clip import _ring_area2_pts
+    from ref_kernels import _ring_area2_pts
 
     assert _ring_area2_pts([tuple(p) for p in out[0][0].tolist()]) > 0
     assert _ring_area2_pts([tuple(p) for p in out[0][1].tolist()]) < 0
@@ -211,7 +211,7 @@ def test_clip_polygon_pointwise_equivalence_convex(pts):
     the clipped result equals (in polygon) AND (in bbox) on a sample grid."""
     import math
 
-    from grandine_spark.kernels.clip import _pt_in_ring
+    from ref_kernels import _pt_in_ring
 
     cx = sum(p[0] for p in pts) / len(pts)
     cy = sum(p[1] for p in pts) / len(pts)
@@ -314,7 +314,7 @@ def test_clip_polygon_pointwise_equivalence_with_hole(x0, y0, s, fx, fy):
     """Property incl. HOLES: membership in the clipped result equals
     (inside shell) XOR-style even-odd with the hole, intersected with the
     bbox — sampled on an off-edge grid."""
-    from grandine_spark.kernels.clip import _pt_in_ring
+    from ref_kernels import _pt_in_ring
 
     shell = [(x0, y0), (x0 + s, y0), (x0 + s, y0 + s), (x0, y0 + s)]
     hx0, hy0 = x0 + fx * s, y0 + fy * s
@@ -437,7 +437,8 @@ def test_clip_polygon_pointwise_concave_with_holes():
     import math
     import random
 
-    from grandine_spark.kernels.clip import _pt_in_ring
+    from ref_kernels import _pt_in_ring
+
     from grandine_spark.kernels.geometry import dist_points_to_line_np
 
     rng = random.Random(20260819)
@@ -509,7 +510,9 @@ def test_pt_in_ring_np_matches_scalar():
 
     import numpy as np
 
-    from grandine_spark.kernels.clip import _pt_in_ring, _pt_in_ring_np
+    from ref_kernels import _pt_in_ring
+
+    from grandine_spark.kernels.clip import _pt_in_ring_np
 
     rng = random.Random(20260819)
     checked = 0

@@ -19,6 +19,7 @@ from grandine_spark.kernels.geometry import (
     point_in_polygon,
     points_in_polygon_np,
     ring_area2,
+    segment_cross_np,
     segment_intersection,
     simplify_rdp,
     validate_topology,
@@ -113,6 +114,54 @@ def test_segment_intersection_goldens():
     s2 = ((-6.13037109375, 41.07935114946896), (-6.0205078125, 40.66397287638688))
     _, ok = segment_intersection(s1, s2)
     assert ok
+
+
+def test_segment_cross_np_matches_scalar():
+    """segment_cross_np against the scalar segment_intersection over every
+    pair of seeded segments: general position, parallel pairs (det == 0),
+    collinear overlaps, shared endpoints, and coordinates rounded to 0-8
+    decimals or left at full precision, so that the 8-dp rounding of the
+    point and of the endpoint bounds decides. ``ok`` must
+    equal the scalar verdict, and the point must equal it where ``ok``."""
+    rng = np.random.default_rng(20261018)
+    p_segs, q_segs = [], []
+    for dec in [*range(9), None]:  # None: full precision, beyond 8 dp
+
+        def rand(*shape):
+            a = rng.uniform(-5.0, 5.0, shape)
+            return a if dec is None else np.round(a, dec)
+
+        p = rand(12, 2, 2)
+        d = p[:, 1] - p[:, 0]
+        t = rng.integers(-1, 3, (12, 2, 1)).astype(float)
+        q = [
+            rand(24, 2, 2),  # crossings and misses
+            p[:, ::-1],  # reversed: parallel, det == 0
+            p + rand(12, 1, 2) / 5.0,  # translated: parallel
+            p[:, :1] + t * d[:, None, :],  # collinear overlap
+            np.stack([p[:, 1], rand(12, 2)], 1),  # shared endpoints
+            np.stack([rand(12, 2), p[:, 0]], 1),
+        ]
+        p_segs.append(p)
+        q_segs.extend(q)
+    p = np.concatenate(p_segs)
+    q = np.concatenate(q_segs)
+
+    def axes(a, k):
+        return a[:, k, 0].copy(), a[:, k, 1].copy()
+
+    ix, iy, ok = segment_cross_np(axes(p, 0), axes(p, 1), axes(q, 0), axes(q, 1))
+    verdicts = set()
+    for i, s1 in enumerate(p.tolist()):
+        for j, s2 in enumerate(q.tolist()):
+            (px, py), want = segment_intersection(s1, s2)
+            assert bool(ok[i, j]) == want, (s1, s2)
+            if want:
+                assert (ix[i, j], iy[i, j]) == (px, py), (s1, s2)
+                verdicts.add("shared" if (px, py) in map(tuple, s1 + s2) else "hit")
+            else:
+                verdicts.add("miss")
+    assert verdicts == {"hit", "shared", "miss"}
 
 
 def test_line_intersections_dedup():

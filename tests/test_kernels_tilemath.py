@@ -1,6 +1,5 @@
 """Tile math goldens ported verbatim from /root/reference/lib/tile/tile_test.go."""
 
-import numpy as np
 import pytest
 
 from grandine_spark.kernels.rounding import round8
@@ -12,7 +11,6 @@ from grandine_spark.kernels.tilemath import (
     resolution,
     tile_bbox,
     tile_name,
-    tile_name_np,
     unpack_cell,
 )
 
@@ -34,14 +32,6 @@ def test_tile_name_goldens(pt, z, expected):
     x, y, zz = tile_name(pt[0], pt[1], z)
     assert (x, y) == expected
     assert zz == z
-
-
-def test_tile_name_np_matches_scalar():
-    lons = np.array([p[0][0] for p in TILE_NAME_CASES if p[1] == 14])
-    lats = np.array([p[0][1] for p in TILE_NAME_CASES if p[1] == 14])
-    xs, ys = tile_name_np(lons, lats, 14)
-    exp = [p[2] for p in TILE_NAME_CASES if p[1] == 14]
-    assert list(zip(xs.tolist(), ys.tolist())) == exp
 
 
 # lib/tile/tile_test.go:78-107 — expected values rounded at 8 decimals

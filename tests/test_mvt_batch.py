@@ -1,5 +1,6 @@
 """kernels/mvt_batch — the Arrow-batch-wide MVT encoder. Its contract is
-BYTE IDENTITY with the scalar kernels/mvt.encode_tile, tile for tile
+BYTE IDENTITY with the scalar reference encoder ref_kernels.encode_tile,
+tile for tile
 (reference semantics lib/mvt/codec.go:57-261). Verified three ways here:
 a varint fuzz against the scalar protowire.varint across every byte-length
 boundary (its 2^14 lookup-table edge included), a seeded corpus differ over
@@ -13,7 +14,8 @@ import math
 
 import numpy as np
 
-from grandine_spark.kernels.mvt import encode_tile
+from ref_kernels import encode_tile
+
 from grandine_spark.kernels.mvt_batch import (
     encode_tiles_mvt,
     mercator_of,

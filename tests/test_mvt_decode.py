@@ -10,13 +10,9 @@ the encoder's).
 import numpy as np
 from pyspark.sql import functions as F
 
-from grandine_spark.kernels.mvt import (
-    decode_geometry,
-    decode_tile,
-    encode_geometry,
-    encode_tile,
-    gzip_tile,
-)
+from ref_kernels import encode_geometry, encode_tile
+
+from grandine_spark.kernels.mvt import decode_geometry, decode_tile, gzip_tile
 from grandine_spark.sources import synth
 
 

@@ -307,7 +307,7 @@ def test_asof_join_rejects_colliding_right_cols(spark):
 def test_encode_geometry_empty_part_skipped():
     import numpy as np
 
-    from grandine_spark.kernels.mvt import encode_geometry
+    from ref_kernels import encode_geometry
 
     # empty line part: no commands, no crash
     assert encode_geometry([(2, np.empty((0, 2)))]) == []

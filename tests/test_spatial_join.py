@@ -150,6 +150,62 @@ def test_empty_dims_give_empty_typed_results(spark, pages_df):
         assert out.count() == 0
 
 
+def test_empty_shell_and_one_point_line_match_oracle(spark):
+    """Empty geometries the WKB codec round-trips: a polygon whose only
+    ring is empty contains no point (and adds no broadcast dim rows); a
+    one-point line is one zero-length segment. Both paths of spatial_join
+    and of radius_join must equal the scalar oracles on them."""
+    from grandine_spark.kernels.geometry import _dist_seg_pt
+    from grandine_spark.kernels.wkb import to_wkb
+    from grandine_spark.operators.spatial_join import radius_join
+    from grandine_spark.sources.synth import FEATURE_SCHEMA
+
+    square = [np.array([[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0]])]
+    geoms = {
+        1: (3, square, (0.0, 0.0, 10.0, 10.0)),
+        # the empty shell claims the square's bbox, so its candidate rows
+        # reach the refine kernel on the shuffle path
+        2: (3, [np.zeros((0, 2))], (0.0, 0.0, 10.0, 10.0)),
+        3: (2, np.array([[1.0, 1.0], [9.0, 2.0]]), (1.0, 1.0, 9.0, 2.0)),
+        4: (2, np.array([[5.0, 5.0]]), (5.0, 5.0, 5.0, 5.0)),
+    }
+    feats = spark.createDataFrame(
+        [
+            (fid, "l", gt, bytearray(to_wkb(gt, c)), *bb, None, None, {})
+            for fid, (gt, c, bb) in geoms.items()
+        ],
+        FEATURE_SCHEMA,
+    )
+    rng = np.random.default_rng(20261018)
+    probes = [
+        (f"p{i}", float(x), float(y))
+        for i, (x, y) in enumerate(rng.uniform(-1.0, 11.0, (80, 2)))
+    ]
+    pts = spark.createDataFrame(probes, "url string, lon double, lat double")
+
+    R = 1.5
+
+    def near(fid, x, y):
+        (x1, y1), (x2, y2) = geoms[fid][1][[0, -1]]
+        return _dist_seg_pt(x1, y1, x2, y2, x, y) <= R
+
+    want_pip = {(u, 1) for u, x, y in probes if point_in_polygon(x, y, square)}
+    want_near = {(u, f) for u, x, y in probes for f in (3, 4) if near(f, x, y)}
+    assert want_pip and {f for _, f in want_near} == {3, 4}
+    joins = {
+        "spatial broadcast": (spatial_join(pts, feats, zoom=5), want_pip),
+        "spatial shuffle": (
+            spatial_join(pts, feats, zoom=5, max_dim_features=0), want_pip
+        ),
+        "radius broadcast": (radius_join(pts, feats, R, zoom=5), want_near),
+        "radius shuffle": (
+            radius_join(pts, feats, R, zoom=5, max_dim_features=0), want_near
+        ),
+    }
+    for name, (out, want) in joins.items():
+        assert {(r.url, r.feature_id) for r in out.collect()} == want, name
+
+
 def test_interior_cell_shortcut_identity(spark):
     """Large polygons (many classified cells at the join zoom): the
     broadcast dim's coverclass codes must include both provably-inside

@@ -87,7 +87,8 @@ def test_build_tiles_sha_matches_pure_python(spark):
     Arrow encode path all cancel out to the same sha."""
     import hashlib
 
-    from grandine_spark.kernels.mvt import encode_tile
+    from ref_kernels import encode_tile
+
     from grandine_spark.kernels.tilemath import coverage
     from grandine_spark.kernels.wkb import from_wkb
     from grandine_spark.operators.tiling import build_tiles
@@ -132,7 +133,9 @@ def test_build_tiles_null_prop_value(spark):
     """A null map value in props must not crash the encoder's dictionary-
     encoded props path: every tile equals the scalar encode_tile of the same
     features with that value as None."""
-    from grandine_spark.kernels.mvt import decode_tile, encode_tile
+    from ref_kernels import encode_tile
+
+    from grandine_spark.kernels.mvt import decode_tile
     from grandine_spark.kernels.tilemath import coverage, tile_name
     from grandine_spark.kernels.wkb import geom_bbox, to_wkb
 
@@ -165,6 +168,34 @@ def test_build_tiles_null_prop_value(spark):
     px, py, _ = tile_name(2.35, 48.85, z)
     (poi,) = decode_tile(got[(z, px, py)])["poi"]["features"]
     assert poi["props"].keys() == {"kind", "name"}
+
+
+def test_build_tiles_skips_empty_shell(spark):
+    """A polygon whose only ring is empty clips to nothing: its coverage
+    rows reach the classifier and the encoder, and the tiles equal the
+    build without it."""
+    from grandine_spark.kernels.wkb import geom_bbox, to_wkb
+
+    ring = np.array([[1.0, 44.0], [9.0, 44.0], [9.0, 50.0], [1.0, 50.0]])
+    feats = [
+        (1, 3, [ring], geom_bbox(3, [ring])),
+        (2, 1, (2.35, 48.85), geom_bbox(1, (2.35, 48.85))),
+        (3, 3, [np.zeros((0, 2))], geom_bbox(3, [ring])),
+    ]
+    rows = [
+        (fid, "admin", gt, to_wkb(gt, c), *bb, 0, 99, {"name": str(fid)})
+        for fid, gt, c, bb in feats
+    ]
+
+    def tiles(rs):
+        df = spark.createDataFrame(rs, synth.FEATURE_SCHEMA)
+        return {
+            (r.tile_z, r.tile_x, r.tile_y, bytes(r.tile))
+            for r in build_tiles(df, [4, 8]).collect()
+        }
+
+    want = tiles(rows[:2])
+    assert len(want) > 8 and tiles(rows) == want
 
 
 def test_build_tiles_hot_tile_cap(spark):
@@ -343,7 +374,8 @@ def test_tile_pixels_lie_inside_source_polygon(spark):
     invariant only shares the projection."""
     import math
 
-    from grandine_spark.kernels.clip import _pt_in_ring
+    from ref_kernels import _pt_in_ring
+
     from grandine_spark.kernels.geometry import (
         dist_points_to_line_np,
         point_in_polygon,
