@@ -95,11 +95,11 @@ def _weave_commands(
     """Vectorized encodeGeometry across all features of the batch.
 
     parts_pts: per part (ring / line / point) an (m, 2) float64 pixel array.
-    part_kind: 0 = point (3 ints, no LineTo), 1 = line (no ClosePath),
-    2 = polygon ring (ClosePath appended even when m == 0, matching the
-    scalar loop). The delta cursor carries across parts of one feature and
-    resets at feature boundaries — exactly the scalar encodeGeometry's
-    cursor (lib/mvt/codec.go:203-237).
+    part_kind: 0 = point (3 ints, no LineTo), 1 = line of >= 2 points
+    (no ClosePath), 2 = polygon ring (ClosePath appended even when m == 0,
+    matching the scalar loop). The delta cursor carries across parts of
+    one feature and resets at feature boundaries — exactly the scalar
+    encodeGeometry's cursor (lib/mvt/codec.go:203-237).
 
     Returns (command int64 array for the whole batch, per-feature lengths).
     """
@@ -413,9 +413,12 @@ def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
                     part_kind.append(0)
                     part_feat.append(fi)
                 elif gt == 2:
-                    parts_pts.append(np.asarray(ft["coords"], np.float64))
-                    part_kind.append(1)
-                    part_feat.append(fi)
+                    # a line of < 2 points has no LineTo (MVT 2.1 §4.3.4.3):
+                    # it gets no part, so the feature is not emitted
+                    if len(ft["coords"]) >= 2:
+                        parts_pts.append(np.asarray(ft["coords"], np.float64))
+                        part_kind.append(1)
+                        part_feat.append(fi)
                 else:
                     for ring in ft["coords"]:
                         parts_pts.append(np.asarray(ring, np.float64))

@@ -80,13 +80,19 @@ def from_wkb(buf: bytes):
 
 
 def geom_bbox(geom_type: int, coords) -> tuple[float, float, float, float]:
-    """Geometry → bbox (lib/spatial/geom.go:339-355)."""
+    """Geometry → bbox (lib/spatial/geom.go:339-355). A line or polygon
+    with no point has NaN bounds: every bbox predicate is false on NaN, so
+    it matches and tiles nothing."""
     if geom_type == GEOM_POINT:
         x, y = float(coords[0]), float(coords[1])
         return (x, y, x, y)
     if geom_type in (GEOM_LINESTRING, GEOM_POLYGON):
         parts = [coords] if geom_type == GEOM_LINESTRING else coords
-        a = np.concatenate([np.asarray(r, np.float64) for r in parts])
+        a = np.concatenate(
+            [np.zeros((0, 2))] + [np.asarray(r, np.float64).reshape(-1, 2) for r in parts]
+        )
+        if len(a) == 0:
+            return (np.nan,) * 4
         return (
             float(a[:, 0].min()),
             float(a[:, 1].min()),

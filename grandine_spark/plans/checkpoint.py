@@ -2,15 +2,28 @@
 
 North-rule machinery (BASELINE.json): every stage checkpoints to a warehouse
 table with lineage rows ``(stage, bucket, key_min, key_max, row_count,
-digest)`` — the bucket's KEY RANGE (cell range when the key is a cell id),
-row count, and order/partitioning-independent content digest — so a killed
-run resumes mid-pipeline and completed work is verifiable.
+digest)`` — the bucket's KEY RANGE (cell range when the key is a cell id,
+ordered by the key's own type), row count, and order/partitioning-independent
+content digest — so a killed run resumes mid-pipeline and completed work is
+verifiable.
 
-The warehouse is a directory of parquet tables + ``_LINEAGE`` sidecars +
-``_STAGE_DONE`` markers. On a production cluster the same API maps 1:1 onto
-Iceberg tables (``writeTo(...).createOrReplace()``, snapshot metadata as the
-marker, a lineage table instead of the sidecar); the Iceberg runtime jar is
-not available in this sandbox, so the parquet backend is the tested one.
+The warehouse is a directory per stage. Format:
+
+- ``<stage>/``: the stage table, zstd-compressed parquet;
+- ``<stage>__lineage/``: its lineage sidecar, zstd-compressed parquet;
+- ``<stage>/_STAGE_DONE``: the marker, the table's Spark schema as JSON.
+  It is written last, after the table and the sidecar, through a temp file
+  and ``os.replace``, so it exists only once both are complete. Its schema
+  lets the read-back and every resumed read skip Spark's schema-inference
+  job. A marker that does not parse as a schema (a truncated write, or the
+  old ``ok`` marker of a snappy warehouse) means "not done": the stage
+  recomputes.
+
+zstd is the codec because it is Iceberg's own Parquet default (since 1.4):
+on a production cluster the same API maps 1:1 onto Iceberg tables
+(``writeTo(...).createOrReplace()``, snapshot metadata as the marker, a
+lineage table instead of the sidecar). The project ships no Iceberg
+runtime jar, so the parquet backend is the tested one.
 
 Lineage digests are ORDER- and PARTITIONING-INDEPENDENT: each row hashes via
 xxhash64 of its JSON form, rows are bucketed by a deterministic key hash
@@ -21,12 +34,15 @@ same lineage bytes, which the tests assert.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _DONE = "_STAGE_DONE"
+_CODEC = "zstd"
 # row hashes bounded to 2^32 so an ANSI-mode SUM stays in int64 up to 2^31
 # rows per bucket; the digest folds the sum back mod 2^61
 _ROW_MOD = 1 << 32
@@ -47,8 +63,17 @@ class Warehouse:
     def lineage_path(self, stage: str) -> str:
         return os.path.join(self.root, f"{stage}__lineage")
 
+    def _done_schema(self, stage: str) -> StructType | None:
+        """The stage table's schema from its marker; None when the stage is
+        not complete (no marker, or one that does not parse as a schema)."""
+        try:
+            with open(os.path.join(self.table_path(stage), _DONE)) as f:
+                return StructType.fromJson(json.load(f))
+        except (OSError, ValueError, TypeError, KeyError, AttributeError):
+            return None
+
     def is_done(self, stage: str) -> bool:
-        return os.path.exists(os.path.join(self.table_path(stage), _DONE))
+        return self._done_schema(stage) is not None
 
     # -- lineage ---------------------------------------------------------------
     def _lineage(self, df: DataFrame, stage: str, key_col: str) -> DataFrame:
@@ -61,12 +86,13 @@ class Warehouse:
             df.select(
                 bucket.alias("bucket"),
                 rowhash.alias("h"),
-                F.col(key_col).cast("string").alias("_k"),
+                F.col(key_col).alias("_k"),
             )
             .groupBy("bucket")
             .agg(
-                F.min("_k").alias("key_min"),
-                F.max("_k").alias("key_max"),
+                # typed min/max, cast after: a numeric key's range is numeric
+                F.min("_k").cast("string").alias("key_min"),
+                F.max("_k").cast("string").alias("key_max"),
                 F.count(F.lit(1)).alias("row_count"),
                 F.pmod(F.sum("h"), F.lit(_MOD)).alias("digest"),
             )
@@ -77,18 +103,22 @@ class Warehouse:
     def checkpoint(self, df: DataFrame, stage: str, key_col: str) -> DataFrame:
         """Write ``df`` as the stage table + lineage, unless the stage is
         already complete — then just read it back (RESUME path, no
-        recompute). Returns the checkpointed DataFrame."""
+        recompute). Both reads take the schema the writer knew, so neither
+        runs a schema-inference job. Returns the checkpointed DataFrame."""
         path = self.table_path(stage)
-        if self.is_done(stage):
-            return self.spark.read.parquet(path)
+        schema = self._done_schema(stage)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(path)
 
-        df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
-        self._lineage(out, stage, key_col).write.mode("overwrite").parquet(
-            self.lineage_path(stage)
+        df.write.parquet(path, mode="overwrite", compression=_CODEC)
+        out = self.spark.read.schema(df.schema).parquet(path)
+        self._lineage(out, stage, key_col).write.parquet(
+            self.lineage_path(stage), mode="overwrite", compression=_CODEC
         )
-        with open(os.path.join(path, _DONE), "w") as f:
-            f.write("ok")
+        marker = os.path.join(path, _DONE)
+        with open(marker + ".tmp", "w") as f:
+            f.write(out.schema.json())
+        os.replace(marker + ".tmp", marker)
         return out
 
     def lineage(self, stage: str) -> DataFrame:

@@ -52,8 +52,10 @@ def _xy(cc) -> np.ndarray:
 
     GeoJSON legally carries [lon, lat, alt] triples; passing them through
     would make to_wkb write 3 doubles per point under a 2-D point count
-    and every later from_wkb read silently mis-parse the geometry."""
-    return np.asarray(cc, float)[:, :2]
+    and every later from_wkb read silently mis-parse the geometry. An
+    empty list is a (0, 2) array: an empty ring or line."""
+    a = np.asarray(cc, float)
+    return a[:, :2] if len(a) else np.zeros((0, 2))
 
 
 def feature_rows_from_geojson(obj: dict) -> list[dict]:
@@ -87,6 +89,8 @@ def feature_rows_from_geojson(obj: dict) -> list[dict]:
         else:
             continue
         for gtype, coords in singles:
+            if len(coords) == 0:
+                continue  # a pointless line or ringless polygon has no WKB form
             bb = geom_bbox(gtype, coords)
             rows.append(
                 {

@@ -344,7 +344,8 @@ def encode_geometry(geoms: list[tuple[int, object]]) -> list[int]:
         if geom_type == 1:
             dx, dy = int(coords[0]) - cur[0], int(coords[1]) - cur[1]
             commands += [_cmd(CMD_MOVETO, 1), zigzag32(dx), zigzag32(dy)]
-        elif geom_type == 2:
+        elif geom_type == 2 and len(coords) >= 2:
+            # a line of < 2 points has no LineTo (MVT 2.1 §4.3.4.3): skipped
             commands += _encode_line(coords, cur)
         elif geom_type == 3:
             for ring in coords:

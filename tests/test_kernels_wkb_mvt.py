@@ -78,6 +78,17 @@ def test_geom_bbox():
     )
 
 
+def test_geom_bbox_of_empty_geometry_is_nan():
+    """An empty ring or line has NaN bounds (every bbox predicate is false
+    on them), not numpy's zero-size reduction error."""
+    empties = [(3, [np.zeros((0, 2))]), (3, [[]]), (3, []), (2, np.zeros((0, 2)))]
+    for gt, coords in empties:
+        assert np.isnan(geom_bbox(gt, coords)).all(), (gt, coords)
+    # an empty hole does not widen a real shell's bounds
+    shell = np.array([[0.0, 0.0], [2.0, 0.0], [2.0, 1.0]])
+    assert geom_bbox(3, [shell, np.zeros((0, 2))]) == (0.0, 0.0, 2.0, 1.0)
+
+
 # --- MVT ---------------------------------------------------------------
 
 

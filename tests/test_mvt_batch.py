@@ -21,7 +21,7 @@ from grandine_spark.kernels.mvt_batch import (
     mercator_of,
     varints_np,
 )
-from grandine_spark.kernels.protowire import varint
+from grandine_spark.kernels.protowire import iter_fields, read_packed, varint
 
 
 def test_varints_np_matches_scalar_across_boundaries():
@@ -199,3 +199,42 @@ def test_batched_encode_polygon_straddling_tiles():
         ft["merc"] = mercator_of(3, [ring])
         work = [(z, x, y, {"default": [ft]}) for x, y, _ in cells[:64]]
         assert encode_tiles_mvt(work) == _scalar_tiles(work), trial
+
+
+def _command_counts(tile: bytes) -> list[tuple[int, int]]:
+    """(command id, count) of every command in every feature of a tile."""
+    layers = [v for f, _, v in iter_fields(tile) if f == 3]
+    feats = [v for layer in layers for f, _, v in iter_fields(layer) if f == 2]
+    out = []
+    for feat in feats:
+        (geom,) = [v for f, _, v in iter_fields(feat) if f == 4]
+        cmds, i = read_packed(geom), 0
+        while i < len(cmds):
+            cmd, count = cmds[i] & 0x7, cmds[i] >> 3
+            out.append((cmd, count))
+            i += 1 + (2 * count if cmd in (1, 2) else 0)
+    return out
+
+
+def test_one_point_line_is_not_encoded():
+    """A line of < 2 points is no MVT LINESTRING (MVT 2.1 §4.3.4.3): it is
+    dropped, never MoveTo(1) + LineTo(0). Every LineTo left counts >= 1, a
+    tile whose only feature is such a line is None, and the scalar twin
+    agrees."""
+    dot = np.array([[5.0, 5.0]])
+    line = np.array([[1.0, 1.0], [3.0, 2.0]])
+    work = [
+        (2, 2, 1, {"roads": [
+            {"geom_type": 2, "coords": dot, "props": {"a": 1}},
+            {"geom_type": 2, "coords": line, "props": {"a": 2}},
+            {"geom_type": 1, "coords": (6.0, 6.0), "props": {}},
+        ]}),
+        (2, 2, 1, {"roads": [{"geom_type": 2, "coords": dot, "props": {"a": 1}}]}),
+    ]
+    got = encode_tiles_mvt(work)
+    assert got == _scalar_tiles(work)
+    assert got[1] is None
+    counts = _command_counts(got[0])
+    assert (2, 1) in counts  # the two-point line's LineTo
+    assert all(n >= 1 for cmd, n in counts if cmd == 2), counts
+    assert [cmd for cmd, _ in counts].count(1) == 2  # the line and the point

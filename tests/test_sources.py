@@ -27,6 +27,26 @@ def test_geojson_featurecollection(spark):
         assert gt == r.geom_type
 
 
+def test_geojson_empty_geometries():
+    """An empty polygon shell is a row with NaN bounds whose WKB round-trips
+    to one empty ring; a pointless line or a ringless polygon has no WKB
+    form and yields no row."""
+    from grandine_spark.sources.geojson import feature_rows_from_geojson
+
+    def rows(geometry):
+        return feature_rows_from_geojson(
+            {"type": "Feature", "geometry": geometry, "properties": {"@layer": "x"}}
+        )
+
+    (row,) = rows({"type": "Polygon", "coordinates": [[]]})
+    assert row["geom_type"] == 3 and row["layer"] == "x"
+    assert all(np.isnan(row[k]) for k in ("minx", "miny", "maxx", "maxy"))
+    gt, rings = from_wkb(row["wkb"])
+    assert gt == 3 and len(rings) == 1 and rings[0].shape == (0, 2)
+    assert rows({"type": "Polygon", "coordinates": []}) == []
+    assert rows({"type": "LineString", "coordinates": []}) == []
+
+
 def test_geojson_multipolygon_split(spark):
     """Multi* split into singles (lib/geojson/codec.go:98-127)."""
     import json

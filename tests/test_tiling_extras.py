@@ -173,14 +173,17 @@ def test_build_tiles_null_prop_value(spark):
 def test_build_tiles_skips_empty_shell(spark):
     """A polygon whose only ring is empty clips to nothing: its coverage
     rows reach the classifier and the encoder, and the tiles equal the
-    build without it."""
+    build without it. With its own bounds (NaN, as a GeoJSON source row
+    carries them) it adds nothing either."""
     from grandine_spark.kernels.wkb import geom_bbox, to_wkb
 
     ring = np.array([[1.0, 44.0], [9.0, 44.0], [9.0, 50.0], [1.0, 50.0]])
+    empty = [np.zeros((0, 2))]
     feats = [
         (1, 3, [ring], geom_bbox(3, [ring])),
         (2, 1, (2.35, 48.85), geom_bbox(1, (2.35, 48.85))),
-        (3, 3, [np.zeros((0, 2))], geom_bbox(3, [ring])),
+        (3, 3, empty, geom_bbox(3, [ring])),
+        (4, 3, empty, geom_bbox(3, empty)),
     ]
     rows = [
         (fid, "admin", gt, to_wkb(gt, c), *bb, 0, 99, {"name": str(fid)})
