@@ -96,8 +96,8 @@ def _weave_commands(
 
     parts_pts: per part (ring / line / point) an (m, 2) float64 pixel array.
     part_kind: 0 = point (3 ints, no LineTo), 1 = line of >= 2 points
-    (no ClosePath), 2 = polygon ring (ClosePath appended even when m == 0,
-    matching the scalar loop). The delta cursor carries across parts of
+    (no ClosePath), 2 = polygon ring of >= 3 points (ClosePath appended);
+    the caller drops shorter parts. The delta cursor carries across parts of
     one feature and resets at feature boundaries — exactly the scalar
     encodeGeometry's cursor (lib/mvt/codec.go:203-237).
 
@@ -107,11 +107,9 @@ def _weave_commands(
         return np.zeros(0, np.int64), np.zeros(n_features, np.int64)
     m = np.array([len(p) for p in parts_pts], np.int64)
     kind = part_kind
-    # output slots per part (scalar encodeLine emits 2m+2 for m>=1
-    # and nothing for m==0; geom 3 appends ClosePath unconditionally;
-    # geom 1 emits exactly 3 ints)
-    out_len = np.where(kind == 0, 3, np.where(m >= 1, 2 * m + 2, 0))
-    out_len = out_len + (kind == 2).astype(np.int64)
+    # output slots per part (scalar encodeLine emits 2m+2; a ring appends
+    # ClosePath; a point emits exactly 3 ints)
+    out_len = np.where(kind == 0, 3, 2 * m + 2) + (kind == 2).astype(np.int64)
     base = np.concatenate([[0], np.cumsum(out_len)[:-1]])
     total = int(out_len.sum())
     cmds = np.zeros(total, np.int64)
@@ -129,34 +127,16 @@ def _weave_commands(
     d[1:] -= t[:-1]
     pstart = np.concatenate([[0], np.cumsum(m)[:-1]])  # first point per part
     first_of_feat = np.concatenate([[True], part_feat[1:] != part_feat[:-1]])
-    feat_first_pts = pstart[first_of_feat & (m > 0)]
-    # a feature whose leading part(s) are empty: its first real point is the
-    # first point of its first NON-empty part — walk flags through empties
-    if (m == 0).any():
-        nonempty = m > 0
-        # recompute: the reset happens at the first point of the first
-        # nonempty part per feature
-        seen: set = set()
-        resets = []
-        for i in range(len(m)):
-            f = int(part_feat[i])
-            if f in seen or m[i] == 0:
-                continue
-            seen.add(f)
-            resets.append(pstart[i])
-        feat_first_pts = np.array(resets, np.int64)
-    if len(feat_first_pts):
-        d[feat_first_pts] = t[feat_first_pts]
+    feat_first_pts = pstart[first_of_feat]
+    d[feat_first_pts] = t[feat_first_pts]
     zz = ((d << 1) ^ (d >> 31)) & 0xFFFFFFFF
 
     # command slots
-    kp = kind == 0
-    kl = (kind != 0) & (m >= 1)
-    cmds[base[kp | kl]] = _CMD_MOVETO1
+    kl = kind != 0
+    cmds[base] = _CMD_MOVETO1
     cmds[base[kl] + 3] = 2 | ((m[kl] - 1) << 3)  # LineTo, count m-1
     kc = kind == 2
-    # ClosePath: after the line ints for m>=1, at base for the empty ring
-    cmds[base[kc] + np.where(m[kc] >= 1, 2 * m[kc] + 2, 0)] = _CMD_CLOSE1
+    cmds[base[kc] + 2 * m[kc] + 2] = _CMD_CLOSE1  # after the line ints
 
     # zigzag slots: point j of its part → base + (1 if j==0 else 2j+2)
     j = np.arange(len(t), dtype=np.int64) - np.repeat(pstart, m)
@@ -419,11 +399,15 @@ def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
                         parts_pts.append(np.asarray(ft["coords"], np.float64))
                         part_kind.append(1)
                         part_feat.append(fi)
-                else:
+                elif len(ft["coords"]) and len(ft["coords"][0]) >= 3:
+                    # a ring of < 3 points has no area (MVT 2.1 §4.3.4.4):
+                    # it gets no part; without its exterior ring the
+                    # polygon gets none, so the feature is not emitted
                     for ring in ft["coords"]:
-                        parts_pts.append(np.asarray(ring, np.float64))
-                        part_kind.append(2)
-                        part_feat.append(fi)
+                        if len(ring) >= 3:
+                            parts_pts.append(np.asarray(ring, np.float64))
+                            part_kind.append(2)
+                            part_feat.append(fi)
                 feats_gt.append(gt)
                 feats_tags.append(tags)
             out_layers.append(

@@ -6,15 +6,17 @@ Semantics: the reference's feature×cell inverted index build/probe
 (lib/spatial/point.go:72-101), re-expressed as:
 
 1. index pages' points with a z-cell id — NATIVE expressions (tile_exprs);
-2. explode each polygon's bbox into its covering cells at the same zoom
-   (the multi-cell replication of J2/J4): on the broadcast path the driver
-   builds this dim as numpy columns, drops or flags cells by the tiler's
-   ``coverclass`` codes, and hands Spark one Arrow table (a
+2. explode each feature's bbox into its covering (tile_z, tile_x, tile_y)
+   cells (the multi-cell replication of J2/J4): on the broadcast path the
+   driver builds this dim as numpy columns, drops or flags cells by the
+   tiler's ``coverclass`` codes, and hands Spark one Arrow table (a
    ``LocalRelation``: no Python worker unpickles it); the shuffle path
-   explodes natively (sequence+explode);
-3. equi-join on the cell id — **broadcast** the polygon side when small
-   (the common case: admin polygons ≪ pages), else shuffle hash join with
-   AQE skew splitting;
+   explodes natively (sequence+explode) into the same three columns;
+3. equi-join on (tile_z, tile_x, tile_y) — **broadcast** the feature side
+   when small (the common case: admin polygons ≪ pages), else a shuffle
+   join of the same shape (``explode_point_cells`` ⨝ ``explode_coverage``,
+   also what ``plans.bucketing`` writes), with AQE skew splitting and
+   optional hot-cell salting;
 4. cheap native bbox predicate (point-in-bbox) BEFORE the Python boundary —
    Catalyst cannot know UDF costs (SURVEY.md §4), so the two-stage filter is
    explicit;
@@ -115,10 +117,6 @@ def _refine_by_id(geom_map: dict[int, object], hit):
     return refine_by_id
 
 
-# exact point-in-polygon over per-row WKB (also the bucketed join's refine)
-pip_udf = _refine_by_wkb(3, points_in_polygon_np)
-
-
 def geocode_pages(pages: DataFrame) -> DataFrame:
     """pages → (url, text, lang, lon, lat); rows without a geotag are dropped
     by the geocoder (FIXTURES.md §1). Pure JVM expressions."""
@@ -127,21 +125,6 @@ def geocode_pages(pages: DataFrame) -> DataFrame:
         pages.withColumn("lon", lon)
         .withColumn("lat", lat)
         .filter(F.col("lon").isNotNull() & F.col("lat").isNotNull())
-    )
-
-
-def index_points(points: DataFrame, zoom: int) -> DataFrame:
-    """Attach the z-cell id (native, codegen'd)."""
-    return points.withColumn("cell_x", TX.tile_x("lon", zoom)).withColumn(
-        "cell_y", TX.tile_y("lat", zoom)
-    )
-
-
-def polygons_by_cell(features: DataFrame, zoom: int) -> DataFrame:
-    """Polygon features → one row per covering cell (J2/J4 replication)."""
-    polys = features.filter(F.col("geom_type") == 3)
-    return TX.explode_coverage(polys, zoom).withColumnsRenamed(
-        {"tile_x": "cell_x", "tile_y": "cell_y"}
     )
 
 
@@ -170,7 +153,7 @@ def bbox_then_refine(
 
 _DIM_DDL = (
     "tile_z int, tile_x long, tile_y long, feature_id long, minx double, "
-    "miny double, maxx double, maxy double"
+    "miny double, maxx double, maxy double, full_inside boolean"
 )
 
 
@@ -194,38 +177,74 @@ def local_table(parts, schema) -> pa.Table:
     return pa.table([np.concatenate(c) for c in zip(*blocks)], names=names)
 
 
-def _broadcast_join(
-    points, polys, z_lo, z_hi, max_cells, point_cols, feature_cols
+def _cell_join(
+    points, features, geom_type, hit, pad, z_lo, z_hi, max_cells,
+    point_cols, feature_cols, max_dim_features, salt_threshold=None,
 ) -> DataFrame:
-    """The broadcast polygon cell join behind ``spatial_join`` and
-    ``multires_spatial_join``. Each polygon indexes at the finest zoom in
-    [z_lo, z_hi] where its bbox covers ≤ ``max_cells`` cells; points probe
-    every zoom in the dim's ``tile_z`` column (``[z_lo]`` when the dim is
-    empty). Geometry rides in the UDF closure, not in the rows. The
-    driver-side dim is numpy columns per polygon, sent as one Arrow
-    ``LocalRelation`` (:func:`local_table`). It classifies each polygon's
-    cells in ONE ``coverclass.classify_poly_cells`` call: code-2 cells
-    (provably outside) are masked out; code-1 cells (provably inside) are
-    ``full_inside``, whose points skip ray-casting (sentinel id in the UDF,
-    accepted by the native ``full_inside OR pip`` filter). Edge rows and
-    columns are forced to code 0: ``tile_x``/``tile_y`` clamp points
-    beyond ±85.0511° (or ±180°) into them, so their rect does not bound
-    the points they hold."""
-    import pyarrow.compute as pc
+    """The one cell join behind ``spatial_join``, ``multires_spatial_join``
+    and ``radius_join``: the features of ``geom_type`` that carry a
+    geometry, each bbox padded by ``pad``, equi-joined with the points on
+    (tile_z, tile_x, tile_y), bbox-filtered, then refined by
+    ``hit(px, py, coords) -> bool ndarray``.
 
+    Broadcast path (at most ``max_dim_features`` features): each feature
+    indexes at the finest zoom in [z_lo, z_hi] where its padded bbox covers
+    ≤ ``max_cells`` cells; points probe every zoom in the dim's ``tile_z``
+    column (``[z_lo]`` when the dim is empty). Geometry rides in the UDF
+    closure, not in the rows. The driver-side dim is numpy columns per
+    feature, sent as one Arrow ``LocalRelation`` (:func:`local_table`). A
+    polygon's cells are classified in ONE ``coverclass.classify_poly_cells``
+    call: code-2 cells (provably outside) are masked out; code-1 cells
+    (provably inside) are ``full_inside``, whose points skip ray-casting
+    (sentinel id in the UDF, accepted by the native ``full_inside OR hit``
+    filter). Edge rows and columns are forced to code 0: ``tile_x``/
+    ``tile_y`` clamp points beyond ±85.0511° (or ±180°) into them, so their
+    rect does not bound the points they hold. Line cells are all code 0:
+    tile margins do not bound a distance.
+
+    Shuffle path (above ``max_dim_features``, where a driver-built dim is
+    unsafe; same output): both sides explode natively at
+    ``clamp(DEFAULT_JOIN_ZOOM, z_lo, z_hi)``, cells holding more than
+    ``salt_threshold`` points are salted (skew.salted_cell_join), and the
+    geometry rides per row as WKB."""
     from ..kernels.coverclass import classify_poly_cells
     from ..kernels.tilemath import coverage, coverage_count
     from ..kernels.wkb import geom_bbox
 
-    poly_map: dict[int, list] = {}
+    # a NULL wkb holds no geometry: it matches no point on either path
+    feats = features.filter(
+        (F.col("geom_type") == geom_type) & F.col("wkb").isNotNull()
+    )
+    keys = ["tile_z", "tile_x", "tile_y"]
+    if _too_many(feats, max_dim_features):
+        z = max(z_lo, min(DEFAULT_JOIN_ZOOM, z_hi))
+        padded = feats.withColumns({
+            c: F.col(c) + sign * pad
+            for c, sign in (("minx", -1), ("miny", -1), ("maxx", 1), ("maxy", 1))
+        })
+        pts = TX.explode_point_cells(points, [z])
+        cells = TX.explode_coverage(padded, z)
+        if salt_threshold is None:
+            joined = pts.join(cells, keys, "inner")
+        else:
+            from .skew import salted_cell_join
+
+            joined = salted_cell_join(pts, cells, keys, threshold=salt_threshold)
+        refine = _refine_by_wkb(geom_type, hit)
+        return bbox_then_refine(
+            joined, refine(F.col("lon"), F.col("lat"), F.col("wkb")),
+            point_cols, feature_cols,
+        )
+
+    geom_map: dict[int, object] = {}
     parts = []
-    for r in polys.select("feature_id", "wkb").collect():
-        fid = int(r.feature_id)
-        rings = from_wkb(bytes(r.wkb))[1]
-        if len(rings[0]) == 0:
+    for r in feats.select("feature_id", "wkb").collect():
+        fid, coords = int(r.feature_id), from_wkb(bytes(r.wkb))[1]
+        if geom_type == 3 and len(coords[0]) == 0:
             continue  # an empty shell contains no point: no dim rows
-        poly_map[fid] = rings
-        bb = geom_bbox(3, rings)
+        geom_map[fid] = coords
+        x0, y0, x1, y1 = geom_bbox(geom_type, coords)
+        bb = (x0 - pad, y0 - pad, x1 + pad, y1 + pad)
         # walk the zoom down ARITHMETICALLY (corner-tile count) and only
         # materialize coverage at the chosen zoom — a world-bbox polygon at
         # z12 would otherwise enumerate ~16.7M tuples per feature
@@ -233,28 +252,30 @@ def _broadcast_join(
         while z > z_lo and coverage_count(*bb, z) > max_cells:
             z -= 1
         xs, ys, zs = np.array(coverage(*bb, z), np.int64).reshape(-1, 3).T
-        code = classify_poly_cells(rings, zs, xs, ys)
-        edge = (1 << z) - 1
-        code[(xs == 0) | (ys == 0) | (xs == edge) | (ys == edge)] = 0
+        code = np.zeros(len(xs), np.int8)
+        if geom_type == 3:
+            code = classify_poly_cells(coords, zs, xs, ys)
+            edge = (1 << z) - 1
+            code[(xs == 0) | (ys == 0) | (xs == edge) | (ys == edge)] = 0
         keep = code != 2
         parts.append((z, xs[keep], ys[keep], fid, *bb, code[keep] == 1))
-    ddl = _DIM_DDL + ", full_inside boolean"
-    dim = local_table(parts, ddl)
-    dim_df = points.sparkSession.createDataFrame(dim, ddl)
-    sentinel = min(poly_map, default=0) - 1  # fid the UDF never resolves
-    pip = _refine_by_id(poly_map, points_in_polygon_np)
-    pip_fid = F.when(F.col("full_inside"), F.lit(sentinel)).otherwise(
+    dim = local_table(parts, _DIM_DDL)
+    sentinel = min(geom_map, default=0) - 1  # fid the UDF never resolves
+    refine = _refine_by_id(geom_map, hit)
+    fid_col = F.when(F.col("full_inside"), F.lit(sentinel)).otherwise(
         F.col("feature_id")
     )
     # one log/tan per point at the finest zoom in use; coarser zooms are
     # shiftright-derived (slippy cells nest exactly)
-    zooms = sorted(pc.unique(dim["tile_z"]).to_pylist()) or [z_lo]
+    zooms = sorted(set(dim["tile_z"].to_pylist())) or [z_lo]
     joined = TX.explode_point_cells(points, zooms).join(
-        F.broadcast(dim_df), ["tile_z", "tile_x", "tile_y"], "inner"
+        F.broadcast(points.sparkSession.createDataFrame(dim, _DIM_DDL)),
+        keys,
+        "inner",
     )
     return bbox_then_refine(
         joined,
-        F.col("full_inside") | pip(F.col("lon"), F.col("lat"), pip_fid),
+        F.col("full_inside") | refine(F.col("lon"), F.col("lat"), fid_col),
         point_cols,
         feature_cols,
     )
@@ -281,27 +302,9 @@ def spatial_join(
     driver-side dim is unsafe; the join takes the shuffle path (same output;
     ``max_dim_features=0`` forces it).
     """
-    polys = features.filter(F.col("geom_type") == 3)
-    if not _too_many(polys, max_dim_features):
-        return _broadcast_join(
-            points, polys, zoom, zoom, 0, point_cols, feature_cols
-        )
-
-    pts = index_points(points, zoom)
-    cells = polygons_by_cell(features, zoom)
-    if salt_threshold is not None:
-        from .skew import salted_cell_join
-
-        joined = salted_cell_join(
-            pts, cells, ["cell_x", "cell_y"], threshold=salt_threshold
-        )
-    else:
-        joined = pts.join(cells, ["cell_x", "cell_y"], "inner")
-    return bbox_then_refine(
-        joined,
-        pip_udf(F.col("lon"), F.col("lat"), F.col("wkb")),
-        point_cols,
-        feature_cols,
+    return _cell_join(
+        points, features, 3, points_in_polygon_np, 0.0, zoom, zoom, 0,
+        point_cols, feature_cols, max_dim_features, salt_threshold,
     )
 
 
@@ -325,16 +328,12 @@ def multires_spatial_join(
     replication is ≤ max_cells rows per feature, and point replication is
     |active zooms| (bounded, typically ≤ 6) native exprs — no Python until
     the PIP refinement. Output equals ``spatial_join`` exactly; above
-    ``max_dim_features`` it IS the shuffle ``spatial_join``.
+    ``max_dim_features`` it IS the shuffle ``spatial_join`` (at
+    ``DEFAULT_JOIN_ZOOM`` clamped into [z_coarse, z_fine]).
     """
-    polys = features.filter(F.col("geom_type") == 3)
-    if _too_many(polys, max_dim_features):
-        return spatial_join(
-            points, features, zoom=DEFAULT_JOIN_ZOOM, max_dim_features=0,
-            point_cols=point_cols, feature_cols=feature_cols,
-        )
-    return _broadcast_join(
-        points, polys, z_coarse, z_fine, max_cells, point_cols, feature_cols
+    return _cell_join(
+        points, features, 3, points_in_polygon_np, 0.0, z_coarse, z_fine,
+        max_cells, point_cols, feature_cols, max_dim_features,
     )
 
 
@@ -362,43 +361,14 @@ def radius_join(
     geometry rides per-row as WKB (same output).
     """
     from ..kernels.geometry import dist_points_to_line_np
-    from ..kernels.tilemath import coverage
-    from ..kernels.wkb import geom_bbox
 
     def within(px, py, coords):
         return dist_points_to_line_np(px, py, coords) <= radius_deg
 
-    lines = features.filter(F.col("geom_type") == 2)
-    pts = TX.explode_point_cells(points, [zoom])
-    keys = ["tile_z", "tile_x", "tile_y"]
-    if _too_many(lines, max_dim_features):
-        expanded = lines.withColumns({
-            c: F.col(c) + sign * radius_deg
-            for c, sign in (("minx", -1), ("miny", -1), ("maxx", 1), ("maxy", 1))
-        })
-        joined = pts.join(TX.explode_coverage(expanded, zoom), keys, "inner")
-        within_wkb = _refine_by_wkb(2, within)
-        refine = within_wkb(F.col("lon"), F.col("lat"), F.col("wkb"))
-        return bbox_then_refine(joined, refine, point_cols, feature_cols)
-
-    line_map: dict[int, object] = {}
-    parts = []
-    for r in lines.select("feature_id", "wkb").collect():
-        fid = int(r.feature_id)
-        coords = from_wkb(bytes(r.wkb))[1]
-        line_map[fid] = coords
-        minx, miny, maxx, maxy = geom_bbox(2, coords)
-        bb = (minx - radius_deg, miny - radius_deg,
-              maxx + radius_deg, maxy + radius_deg)
-        xs, ys, _ = np.array(coverage(*bb, zoom), np.int64).reshape(-1, 3).T
-        parts.append((zoom, xs, ys, fid, *bb))
-    dim_df = points.sparkSession.createDataFrame(
-        local_table(parts, _DIM_DDL), _DIM_DDL
+    return _cell_join(
+        points, features, 2, within, radius_deg, zoom, zoom, 0,
+        point_cols, feature_cols, max_dim_features,
     )
-    joined = pts.join(F.broadcast(dim_df), keys, "inner")
-    within_id = _refine_by_id(line_map, within)
-    refine = within_id(F.col("lon"), F.col("lat"), F.col("feature_id"))
-    return bbox_then_refine(joined, refine, point_cols, feature_cols)
 
 
 def zonal_stats(

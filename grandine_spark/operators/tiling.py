@@ -505,7 +505,8 @@ def _grouped_tiles(
         # (a small feature table coalesces to a handful of tasks under
         # file-based splitting). Repartitioning the FEATURE rows — cheap,
         # proportional to features, not coverage — runs explode+classify at
-        # full width, and the per-zoom union branches reuse one exchange.
+        # full width: the one coverage leg explodes every zoom downstream of
+        # this one exchange, so its partitions are the coverage's.
         # Conditional on the input actually being narrow: a big scan is
         # already wide, and forcing it through n_shuffle partitions would
         # ADD a shuffle at scale for nothing.
@@ -548,14 +549,15 @@ def _grouped_tiles(
     # WKB bytes; classify_rows leaves null runs at code 0 (the always-safe
     # exact path).
     gated_wkb = F.when(F.col("_nc") >= classify_min_cells, F.col("wkb"))
-    # Fuse the per-zoom union legs before the UDF: each pandas-UDF TASK
-    # pays ~190ms of fixed Python-runner protocol latency regardless of
-    # rows (measured: a trivial pandas UDF over 320 tasks = 1.9s wall vs
-    # 0.3s over 32, workers verified reused) — and the coverage union has
-    # zooms × feature-legs partitions. coalesce() concatenates whole parent
-    # partitions with NO shuffle, so a feature's cells stay contiguous (the
-    # property classify_rows' run-batching needs) while the UDF stage runs
-    # in n_shuffle tasks instead of legs × n_shuffle.
+    # Cap the UDF stage at n_shuffle tasks: each pandas-UDF TASK pays
+    # ~190ms of fixed Python-runner protocol latency regardless of rows
+    # (measured: a trivial pandas UDF over 320 tasks = 1.9s wall vs 0.3s
+    # over 32, workers verified reused), and the one coverage leg has the
+    # feature scan's partition count, which the repartition above leaves
+    # as is when the scan is already wider than n_shuffle (a no-op
+    # otherwise). coalesce() concatenates whole parent partitions with NO
+    # shuffle, so a feature's cells stay contiguous (the property
+    # classify_rows' run-batching needs).
     all_cov = all_cov.coalesce(n_shuffle)
     all_cov = all_cov.withColumn(
         "_cc", cls(F.col("tile_z"), F.col("tile_x"), F.col("tile_y"), gated_wkb)

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+_KEYS = ["tile_z", "tile_x", "tile_y"]
+
 
 def write_bucketed(
     df: DataFrame,
@@ -60,27 +62,21 @@ def prepare_spatial_buckets(
     n_buckets: int = 64,
 ) -> None:
     """One-time (or per-ingest) side: index points to z-cells and explode
-    polygon coverage, writing BOTH bucketed by (cell_x, cell_y). The
-    feature index — the expensive, rarely-changing side — is built exactly
-    once, like the reference's R-tree but durable."""
-    from ..operators.spatial_join import index_points, polygons_by_cell
+    polygon coverage — the (tile_z, tile_x, tile_y) shapes of the shuffle
+    cell join — writing BOTH bucketed by that key. The feature index — the
+    expensive, rarely-changing side — is built exactly once, like the
+    reference's R-tree but durable."""
+    from ..functions import tile_exprs as TX
 
-    write_bucketed(
-        index_points(points, zoom),
-        points_table,
-        ["cell_x", "cell_y"],
-        n_buckets=n_buckets,
-        sort_cols=["cell_x", "cell_y"],
-        path=f"{base_path}/{points_table}" if base_path else None,
-    )
-    write_bucketed(
-        polygons_by_cell(features, zoom),
-        features_table,
-        ["cell_x", "cell_y"],
-        n_buckets=n_buckets,
-        sort_cols=["cell_x", "cell_y"],
-        path=f"{base_path}/{features_table}" if base_path else None,
-    )
+    polys = features.filter((F.col("geom_type") == 3) & F.col("wkb").isNotNull())
+    for df, table in (
+        (TX.explode_point_cells(points, [zoom]), points_table),
+        (TX.explode_coverage(polys, zoom), features_table),
+    ):
+        write_bucketed(
+            df, table, _KEYS, n_buckets=n_buckets, sort_cols=_KEYS,
+            path=f"{base_path}/{table}" if base_path else None,
+        )
 
 
 def bucketed_spatial_join(
@@ -94,14 +90,12 @@ def bucketed_spatial_join(
     equi-join (no exchange — co-located buckets) → native bbox filter →
     exact Arrow PIP refine. Output identical to the shuffle path of
     ``spatial_join(..., max_dim_features=0)``; asserted in tests."""
-    from ..operators.spatial_join import bbox_then_refine, pip_udf
+    from ..kernels.geometry import points_in_polygon_np
+    from ..operators.spatial_join import _refine_by_wkb, bbox_then_refine
 
-    pts = spark.table(points_table)
-    cells = spark.table(features_table)
-    joined = pts.join(cells, ["cell_x", "cell_y"], "inner")
+    joined = spark.table(points_table).join(spark.table(features_table), _KEYS)
+    pip = _refine_by_wkb(3, points_in_polygon_np)
     return bbox_then_refine(
-        joined,
-        pip_udf(F.col("lon"), F.col("lat"), F.col("wkb")),
-        point_cols,
-        feature_cols,
+        joined, pip(F.col("lon"), F.col("lat"), F.col("wkb")),
+        point_cols, feature_cols,
     )

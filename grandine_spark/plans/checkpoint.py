@@ -47,6 +47,12 @@ _CODEC = "zstd"
 # rows per bucket; the digest folds the sum back mod 2^61
 _ROW_MOD = 1 << 32
 _MOD = 1 << 61
+# the sidecar's columns as ``_lineage`` writes them, so a read needs no
+# schema-inference job
+_LINEAGE_DDL = (
+    "bucket bigint, key_min string, key_max string, row_count bigint, "
+    "digest bigint, stage string"
+)
 
 
 class Warehouse:
@@ -122,7 +128,9 @@ class Warehouse:
         return out
 
     def lineage(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self.lineage_path(stage))
+        return self.spark.read.schema(_LINEAGE_DDL).parquet(
+            self.lineage_path(stage)
+        )
 
     def verify(self, df: DataFrame, stage: str, key_col: str) -> bool:
         """Recompute lineage of ``df`` and compare with the stored one —

@@ -347,10 +347,13 @@ def encode_geometry(geoms: list[tuple[int, object]]) -> list[int]:
         elif geom_type == 2 and len(coords) >= 2:
             # a line of < 2 points has no LineTo (MVT 2.1 §4.3.4.3): skipped
             commands += _encode_line(coords, cur)
-        elif geom_type == 3:
+        elif geom_type == 3 and len(coords) and len(coords[0]) >= 3:
+            # a ring of < 3 points has no area (MVT 2.1 §4.3.4.4): skipped;
+            # a polygon without its exterior ring encodes nothing
             for ring in coords:
-                commands += _encode_line(ring, cur)
-                commands.append(_cmd(CMD_CLOSEPATH, 1))
+                if len(ring) >= 3:
+                    commands += _encode_line(ring, cur)
+                    commands.append(_cmd(CMD_CLOSEPATH, 1))
     return commands
 
 

@@ -120,6 +120,22 @@ def test_resumed_checkpoint_launches_no_job(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
 
 
+def test_lineage_read_launches_no_job(spark, tmp_path):
+    """``lineage`` reads the sidecar with the schema ``_lineage`` writes:
+    no schema-inference job, and the same schema inference would give."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.checkpoint(spark.range(10), "s", key_col="id")
+    sc = spark.sparkContext
+    sc.setJobGroup("lineage-no-job", "lineage read")
+    try:
+        lin = wh.lineage("s")
+        assert sc.statusTracker().getJobIdsForGroup("lineage-no-job") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert lin.schema == spark.read.parquet(wh.lineage_path("s")).schema
+    assert lin.agg(F.sum("row_count")).first()[0] == 10
+
+
 @pytest.mark.parametrize("marker", ["ok", "truncated"])
 def test_unreadable_marker_recomputes(spark, tmp_path, marker):
     """A marker that does not parse as a schema (the old ``ok`` marker, or

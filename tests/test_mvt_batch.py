@@ -217,12 +217,16 @@ def _command_counts(tile: bytes) -> list[tuple[int, int]]:
 
 
 def test_one_point_line_is_not_encoded():
-    """A line of < 2 points is no MVT LINESTRING (MVT 2.1 §4.3.4.3): it is
-    dropped, never MoveTo(1) + LineTo(0). Every LineTo left counts >= 1, a
-    tile whose only feature is such a line is None, and the scalar twin
+    """A line of < 2 points is no MVT LINESTRING (MVT 2.1 §4.3.4.3) and a
+    ring of < 3 points no POLYGON ring (§4.3.4.4): they are dropped, never
+    MoveTo(1) + LineTo(0) or a LineTo(1) ring. A polygon whose exterior
+    ring is dropped is not encoded; its short holes are dropped alone.
+    Every LineTo left counts >= 1 (>= 2 in a ring), a tile whose only
+    feature is such a line or polygon is None, and the scalar twin
     agrees."""
     dot = np.array([[5.0, 5.0]])
     line = np.array([[1.0, 1.0], [3.0, 2.0]])
+    tri = np.array([[1.0, 1.0], [8.0, 1.0], [1.0, 8.0]])
     work = [
         (2, 2, 1, {"roads": [
             {"geom_type": 2, "coords": dot, "props": {"a": 1}},
@@ -230,11 +234,20 @@ def test_one_point_line_is_not_encoded():
             {"geom_type": 1, "coords": (6.0, 6.0), "props": {}},
         ]}),
         (2, 2, 1, {"roads": [{"geom_type": 2, "coords": dot, "props": {"a": 1}}]}),
+        (2, 2, 1, {"areas": [
+            {"geom_type": 3, "coords": [dot], "props": {"a": 3}},
+            {"geom_type": 3, "coords": [line, tri], "props": {"a": 4}},
+            {"geom_type": 3, "coords": [tri, dot, line], "props": {"a": 5}},
+        ]}),
+        (2, 2, 1, {"areas": [{"geom_type": 3, "coords": [line], "props": {}}]}),
     ]
     got = encode_tiles_mvt(work)
     assert got == _scalar_tiles(work)
-    assert got[1] is None
+    assert got[1] is None and got[3] is None
     counts = _command_counts(got[0])
     assert (2, 1) in counts  # the two-point line's LineTo
     assert all(n >= 1 for cmd, n in counts if cmd == 2), counts
     assert [cmd for cmd, _ in counts].count(1) == 2  # the line and the point
+    rings = _command_counts(got[2])
+    assert all(n >= 2 for cmd, n in rings if cmd == 2), rings
+    assert [cmd for cmd, _ in rings].count(7) == len(rings) // 3 > 0, rings

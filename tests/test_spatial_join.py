@@ -206,6 +206,52 @@ def test_empty_shell_and_one_point_line_match_oracle(spark):
         assert {(r.url, r.feature_id) for r in out.collect()} == want, name
 
 
+def test_null_wkb_rows_match_nothing(spark, pages_df, features_df):
+    """A polygon row and a line row with NULL ``wkb`` and a valid bbox hold
+    no geometry: every path of spatial_join, multires_spatial_join and
+    radius_join equals the same join run without them (neither the
+    driver's dim build nor the Python refine may see the NULL)."""
+    from pyspark.sql.types import StructField, StructType
+
+    from grandine_spark.operators.spatial_join import (
+        multires_spatial_join,
+        radius_join,
+    )
+    from grandine_spark.sources.synth import FEATURE_SCHEMA
+
+    schema = StructType([
+        StructField(f.name, f.dataType, f.name == "wkb" or f.nullable)
+        for f in FEATURE_SCHEMA.fields
+    ])
+    nulls = spark.createDataFrame(
+        [
+            (900001, "areas", 3, None, -180.0, -80.0, 180.0, 80.0, None, None, {}),
+            (900002, "roads", 2, None, -180.0, -80.0, 180.0, 80.0, None, None, {}),
+        ],
+        schema,
+    )
+    clean, dirty = features_df, features_df.unionByName(nulls)
+    pts = geocode_pages(pages_df)
+    joins = {
+        "spatial broadcast": lambda f: spatial_join(pts, f, zoom=5),
+        "spatial shuffle": lambda f: spatial_join(
+            pts, f, zoom=5, max_dim_features=0
+        ),
+        "spatial salted": lambda f: spatial_join(
+            pts, f, zoom=5, max_dim_features=0, salt_threshold=20
+        ),
+        "multires": lambda f: multires_spatial_join(pts, f),
+        "radius broadcast": lambda f: radius_join(pts, f, 1.0, zoom=5),
+        "radius shuffle": lambda f: radius_join(
+            pts, f, 1.0, zoom=5, max_dim_features=0
+        ),
+    }
+    for name, join in joins.items():
+        want = {(r.url, r.feature_id) for r in join(clean).collect()}
+        got = {(r.url, r.feature_id) for r in join(dirty).collect()}
+        assert got == want and want, name
+
+
 def test_interior_cell_shortcut_identity(spark):
     """Large polygons (many classified cells at the join zoom): the
     broadcast dim's coverclass codes must include both provably-inside
