@@ -119,12 +119,13 @@ def _refine_by_id(geom_map: dict[int, object], hit):
 
 def geocode_pages(pages: DataFrame) -> DataFrame:
     """pages → (url, text, lang, lon, lat); rows without a geotag are dropped
-    by the geocoder (FIXTURES.md §1). Pure JVM expressions."""
+    by the geocoder (FIXTURES.md §1). Pure JVM expressions. The filter is
+    one ``text RLIKE GEOTAG_RE`` match: both of its groups are mandatory, so
+    a page matches exactly when both coordinates extract (filtering on the
+    extracted columns instead plans four ``regexp_extract`` calls per row)."""
     lon, lat = TX.geocode_text(F.col("text"))
-    return (
-        pages.withColumn("lon", lon)
-        .withColumn("lat", lat)
-        .filter(F.col("lon").isNotNull() & F.col("lat").isNotNull())
+    return pages.filter(F.col("text").rlike(TX.GEOTAG_RE)).withColumns(
+        {"lon": lon, "lat": lat}
     )
 
 

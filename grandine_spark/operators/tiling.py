@@ -550,9 +550,13 @@ def _grouped_tiles(
     # exact path).
     gated_wkb = F.when(F.col("_nc") >= classify_min_cells, F.col("wkb"))
     # Cap the UDF stage at n_shuffle tasks: each pandas-UDF TASK pays
-    # ~190ms of fixed Python-runner protocol latency regardless of rows
+    # ~0.2 s of fixed CPU regardless of rows, even on a reused worker
     # (measured: a trivial pandas UDF over 320 tasks = 1.9s wall vs 0.3s
-    # over 32, workers verified reused), and the one coverage leg has the
+    # over 32). The cause is PySpark 4.1's worker_util.setup_spark_files,
+    # which calls importlib.invalidate_caches() on every task; on CPython
+    # 3.11 that makes each of the worker's 16 zipimporters re-read its
+    # archive's directory (13 over pyspark.zip, 1,328 entries; 2 over the
+    # spark-core jar, 5,359 entries). The one coverage leg has the
     # feature scan's partition count, which the repartition above leaves
     # as is when the scan is already wider than n_shuffle (a no-op
     # otherwise). coalesce() concatenates whole parent partitions with NO

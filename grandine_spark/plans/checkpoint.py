@@ -106,11 +106,15 @@ class Warehouse:
         )
 
     # -- checkpoint / resume -----------------------------------------------------
-    def checkpoint(self, df: DataFrame, stage: str, key_col: str) -> DataFrame:
+    def checkpoint(
+        self, df: DataFrame | None, stage: str, key_col: str
+    ) -> DataFrame:
         """Write ``df`` as the stage table + lineage, unless the stage is
         already complete — then just read it back (RESUME path, no
-        recompute). Both reads take the schema the writer knew, so neither
-        runs a schema-inference job. Returns the checkpointed DataFrame."""
+        recompute; ``df`` is unused there, so a caller that checked
+        :meth:`is_done` passes None instead of planning it). Both reads
+        take the schema the writer knew, so neither runs a
+        schema-inference job. Returns the checkpointed DataFrame."""
         path = self.table_path(stage)
         schema = self._done_schema(stage)
         if schema is not None:

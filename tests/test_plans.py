@@ -56,6 +56,16 @@ def test_spatial_join_scan_prunes_html(spark, pages_path):
     assert scan_lines and all("html" not in l for l in scan_lines)
 
 
+def test_geocoder_filters_with_one_rlike(spark, pages_path):
+    """The geocoder's Filter matches the geotag once (RLIKE on the text);
+    the coordinate extracts run only in the projection above it."""
+    from grandine_spark.operators.spatial_join import geocode_pages
+
+    plan = plan_of(geocode_pages(spark.read.parquet(pages_path)))
+    (cond,) = [l for l in plan.splitlines() if l.startswith("Condition")]
+    assert "RLIKE(text" in cond and "regexp_extract" not in cond
+
+
 def test_minhash_single_shuffle(spark, tmp_path):
     from grandine_spark.operators.dedup import minhash_lsh_pairs
 
