@@ -40,6 +40,13 @@ N_PAGES = max(int(64_000_000 * SF), 500_000)
 SF1_PAGES = N_PAGES * 10
 SCALING_PAGES = N_PAGES * 5
 SCALING_N, SCALING_4N = 4, 16
+# Arrow batch size of the bench sessions
+# (spark.sql.execution.arrow.maxRecordsPerBatch): PIP candidate rows are
+# ~24 bytes (lon, lat, feature_id), so 512k-row batches are ~12 MB and cut
+# per-batch handoff overhead ~1.5x at 16 cores. Deliberately NOT the
+# session default (get_spark): jobs carrying KB-scale text/binary rows
+# would make such batches 100s of MB.
+PIP_ARROW_BATCH = 524288
 
 
 PAGES_CACHE = "/tmp/gs_bench_pages"
@@ -171,11 +178,10 @@ def run_flagship_subprocess(
         "import sys, time, json; sys.path.insert(0, %r);"
         "from grandine_spark.session import get_spark;"
         "import bench;"
-        "from grandine_spark.operators.spatial_join import PIP_ARROW_BATCH;"
         "spark = get_spark('bench-scaling', cores=%d, shuffle_partitions=%d,"
         " extra_conf={'spark.sql.files.maxPartitionBytes': '4m',"
         " 'spark.sql.files.openCostInBytes': '512k',"
-        " 'spark.sql.execution.arrow.maxRecordsPerBatch': str(PIP_ARROW_BATCH)});"
+        " 'spark.sql.execution.arrow.maxRecordsPerBatch': str(bench.PIP_ARROW_BATCH)});"
         "bench._warmup(spark, %d);"  # spin up EVERY python worker + codegen
         # adaptive min-of-reps, same logic as timed(): extend up to reps+2
         # while the two best samples disagree >25%% (a noise episode ate one)
@@ -228,8 +234,6 @@ def main():
     from pyspark.sql import functions as F
 
     from grandine_spark.session import get_spark
-
-    from grandine_spark.operators.spatial_join import PIP_ARROW_BATCH
 
     # bench rows are narrow (PIP candidates ~24 B; tile groups are bounded by
     # partition size, far under the cap) so the large PIP batch is safe here

@@ -44,8 +44,10 @@ import math
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..functions import tile_exprs as TX
+from .spatial_join import local_table
 
 EARTH_R_M = 6371000.0
 MAX_HISTOGRAM_ZOOM = 10
@@ -79,8 +81,10 @@ def _cell_geo(cx_arr: np.ndarray, cy_arr: np.ndarray, n: int):
 
 
 def _plan_probe(qrows, k, total, cx_arr, cy_arr, cnt_arr, n):
-    """Candidate cells per query over one histogram → (probe rows, estimated
-    joined-row volume = Σ per-query candidate point counts)."""
+    """Candidate cells per query over one histogram → (probe blocks, one
+    ``(q_id, lon, lat, cx array, cy array, bound)`` per query in
+    ``local_table`` form, and the estimated joined-row volume = Σ per-query
+    candidate point counts)."""
     geo = _cell_geo(cx_arr, cy_arr, n)
     probe_rows: list[tuple] = []
     est = 0
@@ -93,10 +97,9 @@ def _plan_probe(qrows, k, total, cx_arr, cy_arr, cnt_arr, n):
             lon, lat, kk, cx_arr, cy_arr, cnt_arr, *geo
         )
         est += int(cnt_arr[cand_ix].sum())
-        probe_rows += [
-            (r._qid, lon, lat, int(cx_arr[i]), int(cy_arr[i]), dist_ub)
-            for i in cand_ix
-        ]
+        probe_rows.append(
+            (r._qid, lon, lat, cx_arr[cand_ix], cy_arr[cand_ix], dist_ub)
+        )
     return probe_rows, est
 
 
@@ -228,7 +231,9 @@ def knn(
         # candidate cells, then re-plan — candidate sets shrink with D, so
         # each pass's collect stays delta-sized
         nz = min(probe_z + REFINE_DZ, zf)
-        parents = sorted({(r[3] << 32) | r[4] for r in probe_rows})
+        parents = np.unique(
+            np.concatenate([(r[3] << 32) | r[4] for r in probe_rows])
+        ).tolist()
         if len(parents) << (2 * (nz - probe_z)) > REFINE_COLLECT_CAP:
             break  # worst-case restricted histogram too wide to pay for
         sh_parent = zf - probe_z
@@ -258,13 +263,18 @@ def knn(
         probe_z = nz
 
     # the probe carries the query id in its NATIVE type — hardcoding 'long'
-    # here crashed any string/decimal query-id column at createDataFrame
-    qid_sql_type = dict(queries.dtypes)[query_id]
-    probe = spark.createDataFrame(
-        probe_rows,
-        f"_qid {qid_sql_type}, q_lon double, q_lat double,"
-        " p_cx long, p_cy long, q_d double",
-    )
+    # here crashed any string/decimal query-id column at createDataFrame.
+    # A StructType, not DDL: local_table splits a DDL string at its commas,
+    # and a decimal(p,s) type holds one. The probe is one Arrow table (a
+    # LocalRelation), so no second Python worker pool unpickles it.
+    qid_type = queries.schema[query_id].dataType
+    schema = StructType([
+        StructField("_qid", qid_type),
+        *(StructField(c, DoubleType()) for c in ("q_lon", "q_lat")),
+        *(StructField(c, LongType()) for c in ("p_cx", "p_cy")),
+        StructField("q_d", DoubleType()),
+    ])
+    probe = spark.createDataFrame(local_table(probe_rows, schema), schema)
 
     # join key at the probe's zoom: the cached index is at zf, a coarse
     # probe (no refinement) keys on the shiftright-derived parent cells
@@ -308,7 +318,7 @@ def knn(
 
     pid_type = dict(points.dtypes)[point_id]
     out = topk.select(
-        F.col("_qid").cast(qid_sql_type).alias(query_id),
+        F.col("_qid").cast(qid_type).alias(query_id),
         F.col("_pid").cast(pid_type).alias(point_id),
         "rank",
     )

@@ -6,10 +6,12 @@ Semantics: the reference's feature×cell inverted index build/probe
 (lib/spatial/point.go:72-101), re-expressed as:
 
 1. index pages' points with a z-cell id — NATIVE expressions (tile_exprs);
-2. explode each feature's bbox into its covering (tile_z, tile_x, tile_y)
-   cells (the multi-cell replication of J2/J4): on the broadcast path the
-   driver builds this dim as numpy columns, drops or flags cells by the
-   tiler's ``coverclass`` codes, and hands Spark one Arrow table (a
+2. read the features ONCE, bounded at ``max_dim_features + 1`` rows: at
+   most ``max_dim_features`` means the broadcast path, more the shuffle
+   path. Each feature's bbox explodes into its covering (tile_z, tile_x,
+   tile_y) cells (the multi-cell replication of J2/J4): on the broadcast
+   path the driver builds this dim as numpy columns, drops or flags cells
+   by the tiler's ``coverclass`` codes, and hands Spark one Arrow table (a
    ``LocalRelation``: no Python worker unpickles it); the shuffle path
    explodes natively (sequence+explode) into the same three columns;
 3. equi-join on (tile_z, tile_x, tile_y) — **broadcast** the feature side
@@ -20,8 +22,12 @@ Semantics: the reference's feature×cell inverted index build/probe
 4. cheap native bbox predicate (point-in-bbox) BEFORE the Python boundary —
    Catalyst cannot know UDF costs (SURVEY.md §4), so the two-stage filter is
    explicit;
-5. exact PIP refinement as an Arrow-batched pandas UDF that groups each batch
-   by polygon so the ray-casting kernel runs once per (polygon, point-batch).
+5. exact refinement in ONE Arrow-batched pandas UDF (``_refine``) that
+   groups each batch by key — feature id on the broadcast path, WKB blob
+   on the shuffle and bucketed paths — so the kernel runs once per
+   (geometry, point-batch). Every path looks geometry up through the one
+   type-checked parse (``_geometry``): a blob of another type, or an empty
+   polygon shell, matches nothing.
 
 At 100 TB the only shuffle is the pages-side cell repartition — and with a
 broadcast dim side there is NO shuffle at all: scan → project → broadcast-join
@@ -29,6 +35,8 @@ broadcast dim side there is NO shuffle at all: scan → project → broadcast-jo
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -44,77 +52,42 @@ from ..kernels.wkb import from_wkb
 
 DEFAULT_JOIN_ZOOM = 7
 
-# Arrow batch size a PIP-heavy job should set (spark.sql.execution.arrow.
-# maxRecordsPerBatch, via get_spark extra_conf): candidate rows are ~24 bytes
-# (lon, lat, feature_id), so 512k-row batches are ~12 MB and cut per-batch
-# handoff overhead ~1.5x at 16 cores. Deliberately NOT the session default —
-# jobs carrying KB-scale text/binary rows would make such batches 100s of MB.
-PIP_ARROW_BATCH = 524288
+
+def _geometry(geom_type: int, wkb):
+    """The one geometry lookup: ``wkb``'s coords when it holds a
+    ``geom_type`` geometry, else None (another type, or an empty polygon
+    shell, which contains no point). A None geometry gets no dim rows and
+    matches no point on any path."""
+    gt, coords = from_wkb(bytes(wkb))
+    if gt != geom_type or (gt == 3 and len(coords[0]) == 0):
+        return None
+    return coords
 
 
-def _refine_by_wkb(geom_type: int, hit):
-    """Refine UDF with the geometry per-row as WKB (the shuffle path): one
-    ``hit`` kernel batch per distinct blob in the Arrow batch (candidates
-    arrive cell-clustered, so batches contain few distinct geometries).
-    Blobs of another geometry type never match.
-
-    ``hit(px, py, coords) -> bool ndarray`` is the per-geometry predicate."""
+def _refine(hit, geom_of):
+    """The one refine UDF, ``(px, py, key) -> bool``: each Arrow batch is
+    grouped by key (``pd.factorize`` and one stable argsort) and
+    ``hit(px, py, coords) -> bool ndarray`` runs once per key whose
+    ``geom_of(key)`` is not None; other rows never match. The broadcast
+    path keys by feature id (``geom_map.get``: candidate rows carry ~24
+    bytes and no WKB), the shuffle and bucketed paths by the WKB blob
+    (candidates arrive cell-clustered, so a batch holds few blobs)."""
 
     @pandas_udf(BooleanType())
-    def refine_by_wkb(px: pd.Series, py: pd.Series, wkb: pd.Series) -> pd.Series:
-        import numpy as np
-
+    def refine(px: pd.Series, py: pd.Series, key: pd.Series) -> pd.Series:
         out = np.zeros(len(px), dtype=bool)
-        if len(px) == 0:
-            return pd.Series(out)
-        pxv = px.to_numpy(dtype=float)
-        pyv = py.to_numpy(dtype=float)
-        groups: dict[bytes, list[int]] = {}
-        for i, b in enumerate(wkb):
-            groups.setdefault(bytes(b), []).append(i)
-        for blob, idx in groups.items():
-            gt, coords = from_wkb(blob)
-            if gt != geom_type:
-                continue
-            ix = np.asarray(idx)
-            out[ix] = hit(pxv[ix], pyv[ix], coords)
+        codes, keys = pd.factorize(key)  # a NULL key gets -1: never matches
+        order = np.argsort(codes, kind="stable")
+        bounds = np.searchsorted(codes[order], np.arange(len(keys) + 1))
+        pxv, pyv = px.to_numpy(dtype=float), py.to_numpy(dtype=float)
+        for k, s, e in zip(keys, bounds[:-1], bounds[1:]):
+            coords = geom_of(k)
+            if coords is not None:
+                ix = order[s:e]
+                out[ix] = hit(pxv[ix], pyv[ix], coords)
         return pd.Series(out)
 
-    return refine_by_wkb
-
-
-def _refine_by_id(geom_map: dict[int, object], hit):
-    """Refine UDF with the geometry dictionary captured in the closure — the
-    broadcast-dim fast path. Candidate rows then carry only
-    (lon, lat, feature_id): ~24 bytes of Arrow traffic per row instead of the
-    full WKB blob, and zero per-batch WKB parsing. Ids missing from
-    ``geom_map`` (e.g. the interior-cell sentinel) never match."""
-
-    @pandas_udf(BooleanType())
-    def refine_by_id(px: pd.Series, py: pd.Series, fid: pd.Series) -> pd.Series:
-        import numpy as np
-
-        n = len(px)
-        out = np.zeros(n, dtype=bool)
-        if n == 0:
-            return pd.Series(out)
-        pxv = px.to_numpy(dtype=float)
-        pyv = py.to_numpy(dtype=float)
-        fidv = fid.to_numpy()
-        order = np.argsort(fidv, kind="stable")
-        sorted_fid = fidv[order]
-        bounds = np.flatnonzero(
-            np.r_[True, sorted_fid[1:] != sorted_fid[:-1], True]
-        )
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            coords = geom_map.get(int(sorted_fid[s]))
-            if coords is None:
-                continue
-            ix = order[s:e]
-            out[ix] = hit(pxv[ix], pyv[ix], coords)
-        return pd.Series(out)
-
-    return refine_by_id
+    return refine
 
 
 def geocode_pages(pages: DataFrame) -> DataFrame:
@@ -127,12 +100,6 @@ def geocode_pages(pages: DataFrame) -> DataFrame:
     return pages.filter(F.col("text").rlike(TX.GEOTAG_RE)).withColumns(
         {"lon": lon, "lat": lat}
     )
-
-
-def _too_many(features: DataFrame, max_dim_features: int) -> bool:
-    """Driver-collect guard: above ``max_dim_features`` a driver-built dim
-    is unsafe, so the caller takes its shuffle path (same output)."""
-    return features.limit(max_dim_features + 1).count() > max_dim_features
 
 
 def bbox_then_refine(
@@ -203,6 +170,8 @@ def _cell_join(
     rect does not bound the points they hold. Line cells are all code 0:
     tile margins do not bound a distance.
 
+    The features are read once, at most ``max_dim_features + 1`` rows.
+
     Shuffle path (above ``max_dim_features``, where a driver-built dim is
     unsafe; same output): both sides explode natively at
     ``clamp(DEFAULT_JOIN_ZOOM, z_lo, z_hi)``, cells holding more than
@@ -217,7 +186,9 @@ def _cell_join(
         (F.col("geom_type") == geom_type) & F.col("wkb").isNotNull()
     )
     keys = ["tile_z", "tile_x", "tile_y"]
-    if _too_many(feats, max_dim_features):
+    # the one feature pass: more rows than the bound means the shuffle path
+    rows = feats.select("feature_id", "wkb").limit(max_dim_features + 1).collect()
+    if len(rows) > max_dim_features:
         z = max(z_lo, min(DEFAULT_JOIN_ZOOM, z_hi))
         padded = feats.withColumns({
             c: F.col(c) + sign * pad
@@ -231,7 +202,7 @@ def _cell_join(
             from .skew import salted_cell_join
 
             joined = salted_cell_join(pts, cells, keys, threshold=salt_threshold)
-        refine = _refine_by_wkb(geom_type, hit)
+        refine = _refine(hit, partial(_geometry, geom_type))
         return bbox_then_refine(
             joined, refine(F.col("lon"), F.col("lat"), F.col("wkb")),
             point_cols, feature_cols,
@@ -239,10 +210,11 @@ def _cell_join(
 
     geom_map: dict[int, object] = {}
     parts = []
-    for r in feats.select("feature_id", "wkb").collect():
-        fid, coords = int(r.feature_id), from_wkb(bytes(r.wkb))[1]
-        if geom_type == 3 and len(coords[0]) == 0:
-            continue  # an empty shell contains no point: no dim rows
+    for r in rows:
+        coords = _geometry(geom_type, r.wkb)
+        if coords is None:
+            continue
+        fid = int(r.feature_id)
         geom_map[fid] = coords
         x0, y0, x1, y1 = geom_bbox(geom_type, coords)
         bb = (x0 - pad, y0 - pad, x1 + pad, y1 + pad)
@@ -262,7 +234,7 @@ def _cell_join(
         parts.append((z, xs[keep], ys[keep], fid, *bb, code[keep] == 1))
     dim = local_table(parts, _DIM_DDL)
     sentinel = min(geom_map, default=0) - 1  # fid the UDF never resolves
-    refine = _refine_by_id(geom_map, hit)
+    refine = _refine(hit, geom_map.get)
     fid_col = F.when(F.col("full_inside"), F.lit(sentinel)).otherwise(
         F.col("feature_id")
     )

@@ -90,11 +90,13 @@ def bucketed_spatial_join(
     equi-join (no exchange — co-located buckets) → native bbox filter →
     exact Arrow PIP refine. Output identical to the shuffle path of
     ``spatial_join(..., max_dim_features=0)``; asserted in tests."""
+    from functools import partial
+
     from ..kernels.geometry import points_in_polygon_np
-    from ..operators.spatial_join import _refine_by_wkb, bbox_then_refine
+    from ..operators.spatial_join import _geometry, _refine, bbox_then_refine
 
     joined = spark.table(points_table).join(spark.table(features_table), _KEYS)
-    pip = _refine_by_wkb(3, points_in_polygon_np)
+    pip = _refine(points_in_polygon_np, partial(_geometry, 3))
     return bbox_then_refine(
         joined, pip(F.col("lon"), F.col("lat"), F.col("wkb")),
         point_cols, feature_cols,

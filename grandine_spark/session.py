@@ -44,8 +44,9 @@ def get_spark(
         # moderate Arrow batch default: the session serves BOTH ~24-byte PIP
         # rows and KB-scale text/binary rows (media features, tile feature
         # arrays) — a 512k-row batch of the latter is hundreds of MB per
-        # Python worker. Narrow-row hot paths (the PIP stage) override this
-        # per-job via PIP_ARROW_BATCH / extra_conf; see operators/spatial_join.
+        # Python worker. run_pipeline keeps it for every stage; a session
+        # that runs only narrow rows may raise it through extra_conf, as
+        # bench.py does (PIP_ARROW_BATCH).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))

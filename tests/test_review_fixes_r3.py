@@ -5,6 +5,7 @@ PIP/dist chunked memory bound, WARC mid-archive resync + error surfacing)."""
 
 import gzip
 import sys
+from decimal import Decimal
 
 import numpy as np
 import pytest
@@ -196,6 +197,43 @@ def test_knn_string_query_id(spark):
     assert dict(got.dtypes)["q_id"] == "string"
     top = {r.q_id: r.pid for r in rows if r.rank == 1}
     assert top == {"query-a": 3, "query-b": 20}
+
+
+@pytest.mark.parametrize("qid_type, qids", [
+    ("string", ["query-a", "query-b"]),
+    ("decimal(10,2)", [Decimal("1.25"), Decimal("7.50")]),
+])
+def test_knn_probe_plans_as_local_relation(spark, monkeypatch, qid_type, qids):
+    """knn's driver-built probe is an Arrow ``LocalRelation``: a
+    ``LogicalRDD`` (``createDataFrame`` over Python rows) would fork a
+    second Python worker pool just to unpickle it. The probe keeps the
+    query id's own type, a decimal (a comma inside its DDL) included."""
+    from grandine_spark.operators.knn import knn
+
+    pts = spark.range(40).select(
+        F.col("id").alias("pid"),
+        F.col("id").cast("double").alias("lon"),
+        (F.col("id") / 2).alias("lat"),
+    )
+    # knn returns a local checkpoint (a LogicalRDD of its own): read the
+    # plan it checkpoints
+    plans, checkpoint = [], type(pts).localCheckpoint
+
+    def spy(self, *a, **kw):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return checkpoint(self, *a, **kw)
+
+    monkeypatch.setattr(type(pts), "localCheckpoint", spy)
+    qs = spark.createDataFrame(
+        [(qids[0], 3.0, 1.5), (qids[1], 20.0, 10.0)],
+        f"q_id {qid_type}, lon double, lat double",
+    )
+    got = knn(pts, qs, k=3, zoom=4, point_id="pid")
+    assert dict(got.dtypes)["q_id"] == qid_type
+    top = {r.q_id: r.pid for r in got.collect() if r.rank == 1}
+    assert top == {qids[0]: 3, qids[1]: 20}
+    (plan,) = plans
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
 
 
 # ------------------------------------------------------------- WARC

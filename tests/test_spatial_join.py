@@ -252,6 +252,83 @@ def test_null_wkb_rows_match_nothing(spark, pages_df, features_df):
         assert got == want and want, name
 
 
+def test_mismatched_type_rows_match_nothing(spark):
+    """A polygon-typed row holding LineString WKB, and a line-typed row
+    holding polygon WKB, hold no geometry of their join's type: every path
+    matches nothing for them and no Python worker crashes (the broadcast
+    refine once handed the line to the PIP kernel, an ``IndexError``)."""
+    from grandine_spark.kernels.wkb import to_wkb
+    from grandine_spark.operators.spatial_join import radius_join
+    from grandine_spark.sources.synth import FEATURE_SCHEMA
+
+    square = [np.array([[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 4.0]])]
+    line = np.array([[6.0, 6.0], [9.0, 9.0]])
+    # (feature_id, geom_type column, WKB geometry type, coords, bbox)
+    geoms = [
+        (1, 3, 2, line, (0.0, 0.0, 10.0, 10.0)),
+        (2, 3, 3, square, (0.0, 0.0, 4.0, 4.0)),
+        (3, 2, 3, square, (0.0, 0.0, 4.0, 4.0)),
+        (4, 2, 2, line, (6.0, 6.0, 9.0, 9.0)),
+    ]
+    feats = spark.createDataFrame(
+        [
+            (fid, "l", gt, bytearray(to_wkb(wgt, c)), *bb, None, None, {})
+            for fid, gt, wgt, c, bb in geoms
+        ],
+        FEATURE_SCHEMA,
+    )
+    pts = spark.createDataFrame(
+        [("a", 7.0, 7.0), ("b", 2.0, 2.0)], "url string, lon double, lat double"
+    )
+    joins = {
+        "spatial": (lambda m: spatial_join(pts, feats, zoom=5, max_dim_features=m),
+                    {("b", 2)}),
+        "radius": (lambda m: radius_join(pts, feats, 0.5, zoom=5, max_dim_features=m),
+                   {("a", 4)}),
+    }
+    for name, (join, want) in joins.items():
+        for m in (1_000_000, 0):
+            got = {(r.url, r.feature_id) for r in join(m).collect()}
+            assert got == want, (name, m)
+
+
+def _jobs_to_build(spark, build):
+    """(frame, number of Spark jobs launched while ``build()`` plans it)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build a join frame")
+    try:
+        df = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_join_build_reads_features_once(spark, pages_df, features_df, tmp_path):
+    """Building a join frame over a single-file feature table runs ONE
+    Spark job, the bounded feature collect, on either path (a separate
+    ``limit().count()`` guard made it 3 on the broadcast path)."""
+    path = str(tmp_path / "features")
+    features_df.coalesce(1).write.parquet(path)
+    feats = spark.read.parquet(path)
+    pts = geocode_pages(pages_df)
+    bcast, n = _jobs_to_build(spark, lambda: spatial_join(pts, feats, zoom=7))
+    assert n == 1
+    assert "BroadcastHashJoin" in bcast._jdf.queryExecution().executedPlan().toString()
+    shuffle, n = _jobs_to_build(
+        spark, lambda: spatial_join(pts, feats, zoom=7, max_dim_features=0)
+    )
+    assert n == 1
+    # the shuffle path: coverage exploded natively from the file scan, no
+    # driver-built dim (Spark may still broadcast the small exploded side)
+    plan = shuffle._jdf.queryExecution().executedPlan().toString()
+    assert "Generate explode" in plan and "LocalTableScan" not in plan, plan
+
+
 def test_interior_cell_shortcut_identity(spark):
     """Large polygons (many classified cells at the join zoom): the
     broadcast dim's coverclass codes must include both provably-inside
