@@ -39,7 +39,7 @@ def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _diamond_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """25 diamond polygons derived from the nation table (rational coords)."""
-    from grandine_spark.kernels.wkb import geom_bbox, to_wkb
+    from grandine_spark.kernels.wkb import geom_columns
     from grandine_spark.sources.synth import FEATURE_SCHEMA
 
     rows = []
@@ -49,9 +49,7 @@ def _diamond_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         cy = (k * 37) % 160 - 80 + 0.5
         rad = 5.0 + (k % 4) * 2.0
         ring = [[cx + rad, cy], [cx, cy + rad], [cx - rad, cy], [cx, cy - rad]]
-        wkb = to_wkb(3, [ring])
-        bb = geom_bbox(3, [ring])
-        rows.append((k, "admin", 3, wkb, *bb, 0, 99, {"@layer": "admin"}))
+        rows.append((k, "admin", *geom_columns(3, [ring]), 0, 99, {"@layer": "admin"}))
     return spark.createDataFrame(rows, FEATURE_SCHEMA)
 
 
@@ -157,7 +155,7 @@ def q_spatial_join_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _zigzag_line_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """25 two-segment polylines derived from the nation table (integer
     coords — exact doubles in both engines)."""
-    from grandine_spark.kernels.wkb import geom_bbox, to_wkb
+    from grandine_spark.kernels.wkb import geom_columns
     from grandine_spark.sources.synth import FEATURE_SCHEMA
 
     rows = []
@@ -166,9 +164,7 @@ def _zigzag_line_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         x0 = float((k * 53) % 340 - 170)
         y0 = float((k * 29) % 150 - 75)
         line = [[x0, y0], [x0 + 3.0, y0 + 2.0], [x0 + 6.0, y0]]
-        wkb = to_wkb(2, line)
-        bb = geom_bbox(2, line)
-        rows.append((k, "roads", 2, wkb, *bb, 0, 99, {"@layer": "roads"}))
+        rows.append((k, "roads", *geom_columns(2, line), 0, 99, {"@layer": "roads"}))
     return spark.createDataFrame(rows, FEATURE_SCHEMA)
 
 
@@ -1490,7 +1486,7 @@ def _point_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor-side (mapInPandas), so the derivation itself scales."""
     import pandas as pd
 
-    from grandine_spark.kernels.wkb import to_wkb
+    from grandine_spark.kernels.wkb import geom_columns
     from grandine_spark.sources.synth import FEATURE_SCHEMA
 
     pts = _points(spark, sf_dir)
@@ -1498,22 +1494,11 @@ def _point_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     def enc(batches):
         for pdf in batches:
             yield pd.DataFrame(
-                {
-                    "feature_id": pdf["doc_id"],
-                    "layer": "poi",
-                    "geom_type": 1,
-                    "wkb": [
-                        to_wkb(1, (float(lon), float(lat)))
-                        for lon, lat in zip(pdf["lon"], pdf["lat"])
-                    ],
-                    "minx": pdf["lon"],
-                    "miny": pdf["lat"],
-                    "maxx": pdf["lon"],
-                    "maxy": pdf["lat"],
-                    "zoom_min": 0,
-                    "zoom_max": 99,
-                    "props": [{} for _ in range(len(pdf))],
-                }
+                [
+                    (fid, "poi", *geom_columns(1, (float(lon), float(lat))), 0, 99, {})
+                    for fid, lon, lat in zip(pdf["doc_id"], pdf["lon"], pdf["lat"])
+                ],
+                columns=FEATURE_SCHEMA.names,
             )
 
     return pts.mapInPandas(enc, FEATURE_SCHEMA)
@@ -1697,7 +1682,7 @@ def q_tag_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     features, output exploded to (feature_id, k, v) rows."""
     from grandine_spark.functions.mapping import MappingRule, apply_mapping
     from grandine_spark.sources.synth import FEATURE_SCHEMA
-    from grandine_spark.kernels.wkb import geom_bbox, to_wkb
+    from grandine_spark.kernels.wkb import geom_columns
 
     rows = []
     for r in spark.read.parquet(f"{sf_dir}/nation.parquet").collect():
@@ -1709,7 +1694,7 @@ def q_tag_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
             "name": f"n{k}",
             "lanes": str(k % 5),
         }
-        rows.append((k, "raw", 3, to_wkb(3, [ring]), *geom_bbox(3, [ring]), 0, 99, props))
+        rows.append((k, "raw", *geom_columns(3, [ring]), 0, 99, props))
     feats = spark.createDataFrame(rows, FEATURE_SCHEMA)
     rules = [
         MappingRule(

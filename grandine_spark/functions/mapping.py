@@ -143,20 +143,11 @@ def _poly_to_lines(df: DataFrame) -> DataFrame:
     import pandas as pd
     from pyspark.sql import types as T
 
-    from ..kernels.wkb import from_wkb, geom_bbox, to_wkb
+    from ..kernels.wkb import GEOM_COLUMNS, from_wkb, geom_record
+    from ..sources import GEOM_FIELDS
 
-    schema = T.StructType(
-        [f for f in df.schema.fields if f.name not in ("geom_type", "wkb", "minx", "miny", "maxx", "maxy")]
-        + [
-            T.StructField("geom_type", T.IntegerType(), False),
-            T.StructField("wkb", T.BinaryType(), False),
-            T.StructField("minx", T.DoubleType(), False),
-            T.StructField("miny", T.DoubleType(), False),
-            T.StructField("maxx", T.DoubleType(), False),
-            T.StructField("maxy", T.DoubleType(), False),
-        ]
-    )
-    other_cols = [f.name for f in schema.fields if f.name not in ("geom_type", "wkb", "minx", "miny", "maxx", "maxy")]
+    other_cols = [f.name for f in df.schema.fields if f.name not in GEOM_COLUMNS]
+    schema = T.StructType([df.schema[c] for c in other_cols] + list(GEOM_FIELDS))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -168,18 +159,7 @@ def _poly_to_lines(df: DataFrame) -> DataFrame:
                 else:
                     geoms = [(2, ring) for ring in coords]
                 for g, c in geoms:
-                    bb = geom_bbox(g, c)
-                    rows.append(
-                        {
-                            **{k: r[k] for k in other_cols},
-                            "geom_type": g,
-                            "wkb": to_wkb(g, c),
-                            "minx": bb[0],
-                            "miny": bb[1],
-                            "maxx": bb[2],
-                            "maxy": bb[3],
-                        }
-                    )
+                    rows.append({**{k: r[k] for k in other_cols}, **geom_record(g, c)})
             yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
     return df.mapInPandas(run, schema)

@@ -109,7 +109,10 @@ def clip_line(line: np.ndarray, bbox) -> list[np.ndarray]:
     so a segment whose round8'd bbox is disjoint from the round8'd tile
     bbox can never yield one, and clip_segment returns []. A line that
     crosses a deep-zoom tile has a handful of straddling segments and
-    hundreds of disjoint ones; those no longer enter Python at all."""
+    hundreds of disjoint ones; those no longer enter Python at all. A
+    line with no point clips to nothing."""
+    if len(line) == 0:
+        return []
     minx, miny, maxx, maxy = bbox
     lminx, lminy, lmaxx, lmaxy = ring_bbox(line)
 

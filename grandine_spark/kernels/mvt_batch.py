@@ -206,12 +206,8 @@ def clip_tiles(work: list[tuple[int, int, int, dict]]) -> list:
     part_params: list = []  # (x_off, x_scale, y_off, y_scale) per part
     tile_slots: list = []  # per tile: list of (layer_name, [slot...])
 
-    tp_cache: dict = {}
     for z, x, y, by_layer in work:
-        tpk = (z, x, y)
-        tp = tp_cache.get(tpk)
-        if tp is None:
-            tp = tp_cache[tpk] = TileParams(x, y, z)
+        tp = TileParams(x, y, z)
         params = (tp.x_offset, tp.x_scale, tp.y_offset, tp.y_scale)
         layers_here: list = []
         for layer_name in sorted(by_layer.keys()):

@@ -10,6 +10,9 @@ Exact-semantics port of lib/spatial/wkb.go:24-170 + lib/spatial/geom.go:197-283:
 In-memory coords: point → (x, y); line → np.ndarray (k,2); polygon →
 list[np.ndarray]. Multi* geometries do not exist in the engine — they are
 split at ingest (lib/geojson/codec.go:108-121).
+
+``geom_columns`` is the one builder of a feature row's geometry columns
+(``GEOM_COLUMNS``): every source and assembly step makes them through it.
 """
 
 from __future__ import annotations
@@ -49,7 +52,8 @@ def to_wkb(geom_type: int, coords) -> bytes:
 
 
 def from_wkb(buf: bytes):
-    """Returns (geom_type, coords)."""
+    """Returns (geom_type, coords). A LineString with no point reads back
+    as a (0, 2) array, as ``to_wkb`` writes it."""
     endian, typ = _HDR.unpack_from(buf, 0)
     if endian != 1:
         raise ValueError("only little endian is supported")
@@ -59,8 +63,6 @@ def from_wkb(buf: bytes):
         return typ, (x, y)
     if typ == GEOM_LINESTRING:
         (n,) = _U32.unpack_from(buf, off)
-        if n < 1:
-            raise ValueError("a linestring needs to have at least one point")
         arr = np.frombuffer(buf, dtype="<f8", count=2 * n, offset=off + 4)
         return typ, arr.reshape(n, 2).astype(np.float64)
     if typ == GEOM_POLYGON:
@@ -100,3 +102,26 @@ def geom_bbox(geom_type: int, coords) -> tuple[float, float, float, float]:
             float(a[:, 1].max()),
         )
     raise ValueError(f"unsupported GeomType: {geom_type}")
+
+
+def open_ring(ring: np.ndarray) -> np.ndarray:
+    """A ring without its closing point (the in-memory form), if it has
+    one."""
+    if len(ring) > 1 and (ring[0] == ring[-1]).all():
+        return ring[:-1]
+    return ring
+
+
+GEOM_COLUMNS = ("geom_type", "wkb", "minx", "miny", "maxx", "maxy")
+
+
+def geom_columns(geom_type: int, coords) -> tuple:
+    """(geom_type, coords) → the feature table's geometry columns, in
+    ``GEOM_COLUMNS`` order: the type, its WKB and its bbox. Coords go in
+    as they are: callers trim and rewind rings first."""
+    return (geom_type, to_wkb(geom_type, coords), *geom_bbox(geom_type, coords))
+
+
+def geom_record(geom_type: int, coords) -> dict:
+    """``geom_columns`` keyed by ``GEOM_COLUMNS``."""
+    return dict(zip(GEOM_COLUMNS, geom_columns(geom_type, coords)))

@@ -27,19 +27,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..kernels.geometry import fix_winding
-from ..kernels.wkb import geom_bbox, to_wkb
+from ..kernels.wkb import geom_columns, open_ring
+from ..sources import FEATURE_SCHEMA, GEOM_FIELDS
 
 ASSEMBLED_SCHEMA = T.StructType(
-    [
-        T.StructField("feature_id", T.LongType(), False),
-        T.StructField("geom_type", T.IntegerType(), False),
-        T.StructField("wkb", T.BinaryType(), False),
-        T.StructField("minx", T.DoubleType(), False),
-        T.StructField("miny", T.DoubleType(), False),
-        T.StructField("maxx", T.DoubleType(), False),
-        T.StructField("maxy", T.DoubleType(), False),
-        T.StructField("props", T.MapType(T.StringType(), T.StringType()), False),
-    ]
+    [FEATURE_SCHEMA["feature_id"], *GEOM_FIELDS, FEATURE_SCHEMA["props"]]
 )
 
 
@@ -111,19 +103,7 @@ def assemble_ways(ways: DataFrame, nodes: DataFrame) -> DataFrame:
                     gt, cc = 3, rings
                 else:
                     gt, cc = 2, coords
-                bb = geom_bbox(gt, cc)
-                rows.append(
-                    {
-                        "feature_id": int(r["way_id"]),
-                        "geom_type": gt,
-                        "wkb": to_wkb(gt, cc),
-                        "minx": bb[0],
-                        "miny": bb[1],
-                        "maxx": bb[2],
-                        "maxy": bb[3],
-                        "props": props,
-                    }
-                )
+                rows.append((int(r["way_id"]), *geom_columns(gt, cc), props))
             yield pd.DataFrame(rows, columns=[f.name for f in ASSEMBLED_SCHEMA.fields])
 
     return resolved.mapInPandas(finalize, ASSEMBLED_SCHEMA)
@@ -160,9 +140,7 @@ def assemble_multipolygons(
             for _, r in pdf.iterrows():
                 outers, inners = [], []
                 for m in r["members"]:
-                    ring = np.array([[c["x"], c["y"]] for c in m["coords"]], float)
-                    if len(ring) > 1 and (ring[0] == ring[-1]).all():
-                        ring = ring[:-1]
+                    ring = open_ring(np.array([[c["x"], c["y"]] for c in m["coords"]], float))
                     # reference parity (spatialize.go:310): only explicit
                     # 'outer'/'inner' roles participate — any other role
                     # (incl. the empty role some OSM tools emit for outers)
@@ -176,19 +154,8 @@ def assemble_multipolygons(
                 rings = [x[1] for x in outers] + [x[1] for x in inners]
                 if not rings:
                     continue
-                rings = fix_winding(rings)
-                bb = geom_bbox(3, rings)
                 rows.append(
-                    {
-                        "feature_id": int(r["rel_id"]),
-                        "geom_type": 3,
-                        "wkb": to_wkb(3, rings),
-                        "minx": bb[0],
-                        "miny": bb[1],
-                        "maxx": bb[2],
-                        "maxy": bb[3],
-                        "props": dict(r["props"] or {}),
-                    }
+                    (int(r["rel_id"]), *geom_columns(3, fix_winding(rings)), dict(r["props"] or {}))
                 )
             yield pd.DataFrame(rows, columns=[f.name for f in ASSEMBLED_SCHEMA.fields])
 

@@ -26,8 +26,8 @@ Semantics: the reference's feature×cell inverted index build/probe
    groups each batch by key — feature id on the broadcast path, WKB blob
    on the shuffle and bucketed paths — so the kernel runs once per
    (geometry, point-batch). Every path looks geometry up through the one
-   type-checked parse (``_geometry``): a blob of another type, or an empty
-   polygon shell, matches nothing.
+   type-checked parse (``_geometry``): a blob of another type, an empty
+   polygon shell or a line with no point matches nothing.
 
 At 100 TB the only shuffle is the pages-side cell repartition — and with a
 broadcast dim side there is NO shuffle at all: scan → project → broadcast-join
@@ -55,11 +55,12 @@ DEFAULT_JOIN_ZOOM = 7
 
 def _geometry(geom_type: int, wkb):
     """The one geometry lookup: ``wkb``'s coords when it holds a
-    ``geom_type`` geometry, else None (another type, or an empty polygon
-    shell, which contains no point). A None geometry gets no dim rows and
-    matches no point on any path."""
+    ``geom_type`` geometry, else None (another type, an empty polygon
+    shell, which contains no point, or a line with no point, which is
+    near none). A None geometry gets no dim rows and matches no point on
+    any path."""
     gt, coords = from_wkb(bytes(wkb))
-    if gt != geom_type or (gt == 3 and len(coords[0]) == 0):
+    if gt != geom_type or len(coords[0] if gt == 3 else coords) == 0:
         return None
     return coords
 

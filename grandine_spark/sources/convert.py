@@ -45,7 +45,7 @@ def read_spaten(spark: SparkSession, path: str) -> DataFrame:
     import pandas as pd
 
     from ..kernels.wkb import geom_bbox
-    from .geojson import _ROW_SCHEMA
+    from . import SOURCE_SCHEMA
 
     files = spark.read.format("binaryFile").load(path)
 
@@ -66,9 +66,9 @@ def read_spaten(spark: SparkSession, path: str) -> DataFrame:
                             {str(k): str(v) for k, v in ft["props"].items()},
                         )
                     )
-            yield pd.DataFrame(rows, columns=[f.name for f in _ROW_SCHEMA.fields])
+            yield pd.DataFrame(rows, columns=[f.name for f in SOURCE_SCHEMA.fields])
 
-    return files.select("content").mapInPandas(run, _ROW_SCHEMA)
+    return files.select("content").mapInPandas(run, SOURCE_SCHEMA)
 
 
 def convert(
@@ -215,8 +215,10 @@ def inspect_features(df: DataFrame, n: int = 20) -> str:
         gt, coords = from_wkb(bytes(r.wkb))
         if gt == 1:
             preview = f"({coords[0]:.6f}, {coords[1]:.6f})"
-        elif gt == 2:
+        elif gt == 2 and len(coords):
             preview = f"{len(coords)} pts, start ({coords[0][0]:.6f}, {coords[0][1]:.6f})"
+        elif gt == 2:
+            preview = "0 pts"
         else:
             preview = f"{len(coords)} rings, {sum(len(x) for x in coords)} pts"
         props = dict(r.props or {})

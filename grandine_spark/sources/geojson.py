@@ -22,29 +22,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..kernels.geometry import fix_winding
-from ..kernels.wkb import geom_bbox, to_wkb
-
-_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("layer", T.StringType(), True),
-        T.StructField("geom_type", T.IntegerType(), False),
-        T.StructField("wkb", T.BinaryType(), False),
-        T.StructField("minx", T.DoubleType(), False),
-        T.StructField("miny", T.DoubleType(), False),
-        T.StructField("maxx", T.DoubleType(), False),
-        T.StructField("maxy", T.DoubleType(), False),
-        T.StructField("props", T.MapType(T.StringType(), T.StringType()), False),
-    ]
-)
-
-
-def _strip_closing(ring):
-    if len(ring) > 1 and ring[0] == ring[-1]:
-        return ring[:-1]
-    return ring
+from ..kernels.wkb import geom_record, open_ring
+from . import SOURCE_SCHEMA
 
 
 def _xy(cc) -> np.ndarray:
@@ -56,6 +37,12 @@ def _xy(cc) -> np.ndarray:
     empty list is a (0, 2) array: an empty ring or line."""
     a = np.asarray(cc, float)
     return a[:, :2] if len(a) else np.zeros((0, 2))
+
+
+def _ring(cc) -> np.ndarray:
+    """A GeoJSON ring → an in-memory ring: closing point dropped, then
+    altitude."""
+    return _xy(open_ring(np.asarray(cc, float)))
 
 
 def feature_rows_from_geojson(obj: dict) -> list[dict]:
@@ -80,29 +67,17 @@ def feature_rows_from_geojson(obj: dict) -> list[dict]:
         elif gt == "MultiLineString":
             singles += [(2, _xy(ln)) for ln in cc]
         elif gt == "Polygon":
-            rings = [_xy(_strip_closing(r)) for r in cc]
-            singles.append((3, fix_winding(rings)))
+            singles.append((3, fix_winding([_ring(r) for r in cc])))
         elif gt == "MultiPolygon":
             for poly in cc:
-                rings = [_xy(_strip_closing(r)) for r in poly]
-                singles.append((3, fix_winding(rings)))
+                singles.append((3, fix_winding([_ring(r) for r in poly])))
         else:
             continue
         for gtype, coords in singles:
             if len(coords) == 0:
                 continue  # a pointless line or ringless polygon has no WKB form
-            bb = geom_bbox(gtype, coords)
             rows.append(
-                {
-                    "layer": props.get("@layer"),
-                    "geom_type": gtype,
-                    "wkb": to_wkb(gtype, coords),
-                    "minx": bb[0],
-                    "miny": bb[1],
-                    "maxx": bb[2],
-                    "maxy": bb[3],
-                    "props": props,
-                }
+                {"layer": props.get("@layer"), **geom_record(gtype, coords), "props": props}
             )
     return rows
 
@@ -116,9 +91,9 @@ def read_geojson(spark: SparkSession, path: str) -> DataFrame:
             rows = []
             for txt in pdf["value"]:
                 rows.extend(feature_rows_from_geojson(json.loads(txt)))
-            yield pd.DataFrame(rows, columns=[f.name for f in _ROW_SCHEMA.fields])
+            yield pd.DataFrame(rows, columns=[f.name for f in SOURCE_SCHEMA.fields])
 
-    return raw.mapInPandas(parse, _ROW_SCHEMA)
+    return raw.mapInPandas(parse, SOURCE_SCHEMA)
 
 
 def read_geojsonseq(spark: SparkSession, path: str) -> DataFrame:
@@ -134,9 +109,9 @@ def read_geojsonseq(spark: SparkSession, path: str) -> DataFrame:
                 if not txt:
                     continue
                 rows.extend(feature_rows_from_geojson(json.loads(txt)))
-            yield pd.DataFrame(rows, columns=[f.name for f in _ROW_SCHEMA.fields])
+            yield pd.DataFrame(rows, columns=[f.name for f in SOURCE_SCHEMA.fields])
 
-    return raw.mapInPandas(parse, _ROW_SCHEMA)
+    return raw.mapInPandas(parse, SOURCE_SCHEMA)
 
 
 def read_geocsv(

@@ -366,6 +366,7 @@ def features_from_pbf(spark, path: str):
     from pyspark.sql import functions as F
 
     from ..operators.assemble import assemble_multipolygons, assemble_ways
+    from . import FEATURE_SCHEMA
 
     nodes, ways, rels = read_pbf(spark, path)
     nds = nodes.select("node_id", "lon", "lat")
@@ -383,16 +384,11 @@ def features_from_pbf(spark, path: str):
     feats_r = assemble_multipolygons(mp, w, nds)
 
     out = feats_w.unionByName(feats_r)
+    derived = {
+        "layer": F.coalesce(F.col("props").getItem("@layer"), F.lit("default")),
+        "zoom_min": F.lit(None),
+        "zoom_max": F.lit(None),
+    }
     return out.select(
-        "feature_id",
-        F.coalesce(F.col("props").getItem("@layer"), F.lit("default")).alias("layer"),
-        "geom_type",
-        "wkb",
-        "minx",
-        "miny",
-        "maxx",
-        "maxy",
-        F.lit(None).cast("double").alias("zoom_min"),
-        F.lit(None).cast("double").alias("zoom_max"),
-        "props",
+        *[derived.get(f.name, F.col(f.name)).cast(f.dataType).alias(f.name) for f in FEATURE_SCHEMA]
     )

@@ -11,9 +11,9 @@ Gaussian city clusters (hot-cell skew driver, mirroring the reference's
 shuffle-for-skew motivation, cmd/tiler/shuffle.go:11-15). Domains are
 zipf-ish (popular-domain skew).
 
-``features``: the reference's feature model (feature_id, layer, geom_type,
-wkb, bbox, zoom range, props map) — admin polygons around the same city
-centers, road linestrings (stitchable chains), POI points. Driver-side numpy
+``features``: rows of the feature table (``FEATURE_SCHEMA``, declared in
+``sources/__init__.py``) — admin polygons around the same city centers,
+road linestrings (stitchable chains), POI points. Driver-side numpy
 (seed 42): it is the SMALL dimension side of the spatial join (broadcast).
 """
 
@@ -22,9 +22,9 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..kernels.wkb import geom_bbox, to_wkb
+from ..kernels.wkb import geom_columns
+from . import FEATURE_SCHEMA
 
 N_CITIES = 20
 LANGS = ["en", "de", "fr", "es", "pt"]
@@ -131,23 +131,6 @@ def pages(spark: SparkSession, n: int = 100_000, partitions: int | None = None) 
 # features (driver-side numpy, small dimension table)
 # --------------------------------------------------------------------------
 
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("feature_id", T.LongType(), False),
-        T.StructField("layer", T.StringType(), False),
-        T.StructField("geom_type", T.IntegerType(), False),
-        T.StructField("wkb", T.BinaryType(), False),
-        T.StructField("minx", T.DoubleType(), False),
-        T.StructField("miny", T.DoubleType(), False),
-        T.StructField("maxx", T.DoubleType(), False),
-        T.StructField("maxy", T.DoubleType(), False),
-        T.StructField("zoom_min", T.IntegerType(), True),
-        T.StructField("zoom_max", T.IntegerType(), True),
-        T.StructField("props", T.MapType(T.StringType(), T.StringType()), False),
-    ]
-)
-
-
 def _feature_rows(n_polygons: int = 200, n_roads: int = 100, n_pois: int = 200):
     rng = np.random.default_rng(42)
     rows = []
@@ -172,10 +155,8 @@ def _feature_rows(n_polygons: int = 200, n_roads: int = 100, n_pois: int = 200):
                 6,
             )
             rings.append(hole)
-        wkb = to_wkb(3, rings)
-        bb = geom_bbox(3, rings)
         props = {"@layer": "admin", "class": f"admin{i % 4}", "name": f"poly{i}"}
-        rows.append((fid, "admin", 3, wkb, *bb, 0, 99, props))
+        rows.append((fid, "admin", *geom_columns(3, rings), 0, 99, props))
         fid += 1
 
     # roads: chains of linestrings sharing endpoints with equal props
@@ -187,14 +168,12 @@ def _feature_rows(n_polygons: int = 200, n_roads: int = 100, n_pois: int = 200):
         for _ in range(int(rng.integers(3, 7))):
             pts.append(pts[-1] + rng.normal(0, 0.15, 2))
         line = np.round(np.array(pts), 6)
-        wkb = to_wkb(2, line)
-        bb = geom_bbox(2, line)
         props = {
             "@layer": "transportation",
             "class": ["primary", "secondary"][i % 2],
             "road_group": str(i // 3),  # 3 consecutive roads share props → stitch
         }
-        rows.append((fid, "transportation", 2, wkb, *bb, 5, 99, props))
+        rows.append((fid, "transportation", *geom_columns(2, line), 5, 99, props))
         fid += 1
 
     # POI points, buildings-like zoom gating on a subset
@@ -203,12 +182,11 @@ def _feature_rows(n_polygons: int = 200, n_roads: int = 100, n_pois: int = 200):
         x = float(CITY_LON[c] + rng.normal(0, 0.4))
         y = float(CITY_LAT[c] + rng.normal(0, 0.3))
         x, y = round(x, 6), round(y, 6)
-        wkb = to_wkb(1, (x, y))
         props = {"@layer": "poi", "class": f"poi{i % 5}"}
         zmin = 14 if i % 3 == 0 else 0  # @zoom:min: 14 pattern (FIXTURES.md)
         if zmin:
             props["@zoom:min"] = "14"
-        rows.append((fid, "poi", 1, wkb, x, y, x, y, zmin, 99, props))
+        rows.append((fid, "poi", *geom_columns(1, (x, y)), zmin, 99, props))
         fid += 1
 
     return rows

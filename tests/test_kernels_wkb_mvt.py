@@ -27,6 +27,25 @@ def test_wkb_line_roundtrip():
     assert t == 2 and c.tolist() == line.tolist()
 
 
+def test_wkb_empty_line_roundtrip_and_geom_columns():
+    """An empty LineString reads back as the (0, 2) array to_wkb wrote,
+    clips to nothing, and geom_columns gives it NaN bounds; for every
+    geometry geom_columns is the type, to_wkb and geom_bbox."""
+    from grandine_spark.kernels.clip import clip_geom
+    from grandine_spark.kernels.wkb import GEOM_COLUMNS, geom_columns, geom_record
+
+    t, c = from_wkb(to_wkb(2, np.zeros((0, 2))))
+    assert t == 2 and c.shape == (0, 2)
+    assert clip_geom(2, c, (0.0, 0.0, 4096.0, 4096.0)) == []
+    gt, wkb, *bb = geom_columns(2, np.zeros((0, 2)))
+    assert (gt, wkb) == (2, to_wkb(2, np.zeros((0, 2)))) and np.isnan(bb).all()
+    line = np.array([[1, 2], [3, 0], [5, 6]], float)
+    rings = [np.array([[0, 0], [10, 0], [10, 10]], float)]
+    for g, cc in ((1, (1.5, -2.25)), (2, line), (3, rings)):
+        assert geom_columns(g, cc) == (g, to_wkb(g, cc), *geom_bbox(g, cc))
+        assert geom_record(g, cc) == dict(zip(GEOM_COLUMNS, geom_columns(g, cc)))
+
+
 def test_wkb_polygon_roundtrip_ring_closing():
     # rings are closed on the wire, unclosed in memory (wkb.go:105,167)
     poly = [

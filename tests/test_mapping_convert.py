@@ -223,6 +223,7 @@ def test_inspect_features_previews(spark):
                        [(1.0, 1.0), (1.0, 2.0), (2.0, 2.0)]]),
             None,
         ),
+        (to_wkb(2, []), {}),  # an empty LineString: no start point
     ]
     df = spark.createDataFrame(rows, "wkb binary, props map<string,string>")
     lines = inspect_features(df).splitlines()
@@ -231,5 +232,6 @@ def test_inspect_features_previews(spark):
         f"{'LineString':12s} 3 pts, start (0.000000, 0.000000)  "
         "{'highway': 'primary'}",
         f"{'Polygon':12s} 2 rings, 7 pts  {{}}",
+        f"{'LineString':12s} 0 pts  {{}}",
     ]
     assert len(inspect_features(df, n=2).splitlines()) == 2

@@ -238,6 +238,62 @@ def test_features_from_pbf_to_tiles(spark, pbf_path):
     assert len(tiles) > 0 and all(len(bytes(t.tile)) > 0 for t in tiles)
 
 
+def test_every_producer_shares_the_geometry_columns(spark, pbf_path, tmp_path):
+    """The one feature table: every producer's geometry columns are
+    GEOM_FIELDS by name and type, and the tiler-ready producers
+    (synth.features, features_from_pbf) are FEATURE_SCHEMA by name and
+    type (features_from_pbf's zoom columns were once double)."""
+    import json
+    import os
+
+    from grandine_spark.functions.mapping import MappingRule, apply_mapping
+    from grandine_spark.kernels.wkb import GEOM_COLUMNS
+    from grandine_spark.operators.assemble import assemble_multipolygons, assemble_ways
+    from grandine_spark.sources import FEATURE_SCHEMA, GEOM_FIELDS, synth
+    from grandine_spark.sources.convert import convert, read_spaten
+    from grandine_spark.sources.geojson import read_geojson, read_geojsonseq
+    from grandine_spark.sources.pbf import features_from_pbf
+
+    gj = os.path.join(os.path.dirname(__file__), "fixtures", "multipolygon.geojson")
+    with open(gj) as f:
+        seq_text = "".join("\x1e" + json.dumps(ft) + "\n" for ft in json.load(f)["features"])
+    (tmp_path / "f.geojsonseq").write_text(seq_text)
+    spaten = str(tmp_path / "f.spaten")
+    convert(spark, [gj], spaten)
+    nodes, ways, rels = read_pbf(spark, pbf_path)
+    nds = nodes.select("node_id", "lon", "lat")
+    w = ways.select("way_id", "node_ids", F.col("tags").alias("props"))
+    mp = rels.select(
+        "rel_id", F.col("member_ids").alias("way_ids"), "roles", F.col("tags").alias("props")
+    )
+    rail = read_geojson(spark, gj).withColumn(
+        "props", F.create_map(F.lit("railway"), F.lit("rail"))
+    )
+    tiler_ready = {
+        "synth.features": synth.features(spark, n_polygons=2, n_roads=2, n_pois=2),
+        "features_from_pbf": features_from_pbf(spark, pbf_path),
+    }
+    producers = {
+        "read_geojson": read_geojson(spark, gj),
+        "read_geojsonseq": read_geojsonseq(spark, str(tmp_path / "f.geojsonseq")),
+        "read_spaten": read_spaten(spark, spaten),
+        "assemble_ways": assemble_ways(w, nds),
+        "assemble_multipolygons": assemble_multipolygons(mp, w, nds),
+        "apply_mapping lines": apply_mapping(rail, [MappingRule("railway", [], op="lines")]),
+        **tiler_ready,
+    }
+
+    def types(fields):
+        return [(f.name, f.dataType) for f in fields]
+
+    for name, df in producers.items():
+        geom = [f for f in df.schema if f.name in GEOM_COLUMNS]
+        assert types(geom) == types(GEOM_FIELDS), name
+        assert df.count() > 0, name
+    for name, df in tiler_ready.items():
+        assert types(df.schema) == types(FEATURE_SCHEMA), name
+
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 

@@ -292,6 +292,31 @@ def test_mismatched_type_rows_match_nothing(spark):
             assert got == want, (name, m)
 
 
+def test_empty_line_row_matches_nothing(spark):
+    """A line row whose WKB holds no point (NaN bounds, as geom_bbox gives
+    them) is near no point: radius_join on both paths equals the join over
+    the real line alone (the broadcast dim build once raised on the driver
+    reading the blob back)."""
+    from grandine_spark.kernels.wkb import geom_columns
+    from grandine_spark.operators.spatial_join import radius_join
+    from grandine_spark.sources.synth import FEATURE_SCHEMA
+
+    line = np.array([[6.0, 6.0], [9.0, 9.0]])
+    feats = spark.createDataFrame(
+        [
+            (1, "l", *geom_columns(2, np.zeros((0, 2))), None, None, {}),
+            (2, "l", *geom_columns(2, line), None, None, {}),
+        ],
+        FEATURE_SCHEMA,
+    )
+    pts = spark.createDataFrame(
+        [("a", 7.0, 7.0), ("b", 2.0, 2.0)], "url string, lon double, lat double"
+    )
+    for m in (1_000_000, 0):
+        got = radius_join(pts, feats, 0.5, max_dim_features=m).collect()
+        assert [(r.url, r.feature_id) for r in got] == [("a", 2)], m
+
+
 def _jobs_to_build(spark, build):
     """(frame, number of Spark jobs launched while ``build()`` plans it)."""
     import uuid

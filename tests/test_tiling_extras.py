@@ -201,6 +201,30 @@ def test_build_tiles_skips_empty_shell(spark):
     assert len(want) > 8 and tiles(rows) == want
 
 
+def test_build_tiles_skips_empty_line(spark):
+    """A line row with no point (NaN bounds, as geom_bbox gives them) tiles
+    nothing: next to a real line, the tiles equal the real line's alone
+    (the encoder once failed reading the blob back)."""
+    from grandine_spark.kernels.wkb import geom_columns
+
+    line = np.array([[6.0, 6.0], [9.0, 9.0]])
+    rows = [
+        (1, "roads", *geom_columns(2, np.zeros((0, 2))), 0, 99, {}),
+        (2, "roads", *geom_columns(2, line), 0, 99, {}),
+    ]
+
+    def tiles(rs, zooms):
+        df = spark.createDataFrame(rs, synth.FEATURE_SCHEMA)
+        return {
+            (r.tile_z, r.tile_x, r.tile_y): bytes(r.tile)
+            for r in build_tiles(df, zooms).collect()
+        }
+
+    for zooms in ([2], [2, 8]):
+        want = tiles(rows[1:], zooms)
+        assert want and tiles(rows, zooms) == want, zooms
+
+
 def test_build_tiles_hot_tile_cap(spark):
     """max_features_per_tile bounds every tile group (a z2 world tile cannot
     OOM one task); truncation is deterministic (lowest feature_ids kept) and
