@@ -17,6 +17,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..kernels.geometry import EARTH_RADIUS_M
+
 WGS84_LAT_MAX = 85.0511287  # lib/tile/tile.go:10-13
 
 
@@ -119,13 +121,14 @@ def point_in_bbox(px, py, minx, miny, maxx, maxy) -> Column:
 
 
 def haversine_m(lon1, lat1, lon2, lat2) -> Column:
-    """Haversine meters, R=6371000 (lib/spatial/point.go:107-123), native."""
+    """Haversine meters, R = ``EARTH_RADIUS_M`` (lib/spatial/point.go:107-123),
+    native."""
     rl1 = F.radians(lat1)
     rl2 = F.radians(lat2)
     dlat = rl2 - rl1
     dlon = F.radians(lon2) - F.radians(lon1)
     a = F.pow(F.sin(dlat / 2), 2) + F.cos(rl1) * F.cos(rl2) * F.pow(F.sin(dlon / 2), 2)
-    return F.lit(2.0) * F.atan2(F.sqrt(a), F.sqrt(F.lit(1.0) - a)) * F.lit(6371000.0)
+    return F.lit(2.0) * F.atan2(F.sqrt(a), F.sqrt(F.lit(1.0) - a)) * F.lit(EARTH_RADIUS_M)
 
 
 # --- geocoding (pages → points) ------------------------------------------

@@ -1,11 +1,16 @@
-"""Batched tile encoding — the encoders the tiler runs (operators/tiling.py),
-one call per Arrow batch of tiles, for both tile codecs.
+"""The tile encoder — the body of the tiler's ``mapInArrow``
+(operators/tiling.py:build_tiles), one call per grouped Arrow batch of
+whole tiles, for both tile codecs.
 
-Pass 1, :func:`clip_tiles`, is shared: it projects every (feature, tile)
-pair of the batch into tile pixel space and clips it to the tile. Then
-:func:`encode_tiles_mvt` merges, weaves command ints, emits varints and
-assembles protobuf layers, while :func:`encode_tiles_geojson` writes a
-FeatureCollection of the same clipped pieces.
+:func:`encode_batch` does the whole job in one function over the batch:
+one stable lexsort orders every (feature, tile) row by (tile, layer name,
+feature_id); one walk over the sorted rows collects the mercator parts to
+project (memoized per geometry), the pre-classified full-cover rectangles
+and the (tile, layer) slot ranges; the pixel affine, the polygon border
+hints and the clip then run batch-wide (pass 1). :func:`_mvt_tiles` merges,
+weaves command ints, emits varints and assembles protobuf layers, while
+:func:`_geojson_tiles` writes a FeatureCollection of the same clipped
+pieces.
 
 The MVT output is byte-identical to the scalar encoder the tests keep as
 its reference (tests/ref_kernels.py: encode_tile → assemble_layer →
@@ -13,8 +18,8 @@ encode_geometry, a direct port of the reference): every floating-point
 expression is the SAME IEEE-double operation sequence (the pixel affine
 repeats tilePoint's expression, the zigzag/varint integer identities are
 exact, and protobuf framing uses the shared kernels/protowire.py helpers),
-and tests/test_mvt_batch.py asserts tile-for-tile byte equality on seeded
-corpora plus the reference goldens.
+and tests/test_mvt_batch.py asserts tile-for-tile byte equality on Arrow
+batches in the grouped schema built from seeded corpora.
 
 Reference semantics: lib/mvt/codec.go:57-261 (EncodeTile/assembleLayer/
 encodeGeometry), lib/mvt/project.go:13-54 (tilePoint/flipFloat),
@@ -22,8 +27,8 @@ lib/tile/codec.go:17-31 (GeoJSON). The restructuring relative to the
 scalar reference encoder is purely about WHERE Python-level loops run:
 
 - mercator projection happens once per distinct geometry object (it does
-  not depend on the tile; the caller memoizes per wkb), leaving a 4-op
-  numpy affine per (feature, tile) pair, run once over the whole batch;
+  not depend on the tile; memoized per (wkb, simplify tolerance)), leaving
+  a 4-op numpy affine per (feature, tile) pair, run once over the batch;
 - clipping stays per (feature, tile) in kernels/clip.py, but the polygon
   fast-path decider (does a single-ring polygon cross the tile border?) is
   one clip.ring_border_hits_batch pass over every such pair, handed to
@@ -44,11 +49,15 @@ from __future__ import annotations
 import json
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from . import clip as _clip
 from . import geometry as _geometry
-from .mvt import EXTENT, TileParams, _encode_value, _full_rect
+from .mvt import EXTENT, TileParams, _encode_value, _full_rect, gzip_tile
 from .protowire import ld, tag, varint
+from .tilemath import resolution
+from .wkb import from_wkb
 
 _CMD_MOVETO1 = (1 & 0x7) | (1 << 3)  # MoveTo, count 1
 _CMD_CLOSE1 = (7 & 0x7) | (1 << 3)  # ClosePath, count 1
@@ -56,6 +65,11 @@ _CMD_CLOSE1 = (7 & 0x7) | (1 << 3)  # ClosePath, count 1
 # value-blob memo: props repeat across every tile a feature covers, and the
 # blob depends only on (python type, value). Bounded; worker-process scoped.
 _VALUE_BLOB_CACHE: dict = {}
+
+# all-full-cover tile memo (see encode_batch): finished tile bytes keyed by
+# (codec, gzip, ((layer, sorted props), ...)). Bounded; worker-process
+# scoped.
+_RECT_TILE_CACHE: dict = {}
 
 
 def varints_np(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -162,7 +176,8 @@ def _encode_value_memo(v) -> bytes:
 
 def mercator_of(gt: int, coords):
     """Mercator (3857) projection of a geometry's raw coords — the
-    tile-INDEPENDENT half of tilePoint, memoized per geometry by callers.
+    tile-INDEPENDENT half of tilePoint, memoized per geometry by
+    :func:`encode_batch`.
     Returns (mx, my) arrays per part: a single pair for points/lines, a
     list of pairs for polygon rings."""
     from .mvt import proj_4326_to_3857_np
@@ -181,67 +196,160 @@ def mercator_of(gt: int, coords):
     return out
 
 
-def clip_tiles(work: list[tuple[int, int, int, dict]]) -> list:
-    """Pass 1 of both tile codecs — project and clip a batch of tiles:
-    [(z, x, y, {layer: [feat, ...]})] → per tile, [(layer_name, pieces)]
-    with layers sorted by name and pieces the clipped feature dicts
-    {"geom_type", "coords", "props"} in the layer's feature order (what
-    the scalar assembleLayer hands to merge_features).
+def encode_batch(batch: pa.RecordBatch, gzip: bool, simplify: bool, codec: str):
+    """The tile encoder: one ``_grouped_tiles`` RecordBatch (tile_z,
+    tile_x, tile_y, feats list<struct<feature_id, layer_name, wkb, props,
+    _cc>>, n_total) → one TILES_SCHEMA RecordBatch (tile_z, tile_x,
+    tile_y, n_features, tile) of the tiles that encode to something.
 
-    feat dicts: {"geom_type", "coords", "props"} plus optional "cc" == 1
-    (pre-classified full cover: the piece is the clip-mask rectangle) and
-    optional "merc" — the mercator-projected twin of coords (per-geometry
-    memo computed by the caller, mercator_of; computed here when absent).
-    """
-    # ---- 1a (scalar walk): collect every to-be-projected part of the
-    # batch; the pixel-space affine then runs ONCE over the concatenation.
-    # Slots keep the per-layer feature order (cc-literals interleave with
-    # projected features) so merge_features sees the scalar path's order.
-    clip_mask = (0.0, 0.0, float(EXTENT), float(EXTENT))
+    ``_cc`` is the pre-shuffle classification (kernels/coverclass): 1 = the
+    row is provably the full-tile rectangle (no wkb: the codec emits the
+    clip mask directly), 0 = the exact project → clip path decides. Rows
+    the classifier proved empty never reach the encoder (``_grouped_tiles``
+    drops them in its collect_list)."""
+    z_arr = batch.column("tile_z").to_numpy(zero_copy_only=False)
+    x_arr = batch.column("tile_x").to_numpy(zero_copy_only=False)
+    y_arr = batch.column("tile_y").to_numpy(zero_copy_only=False)
+    n_total = batch.column("n_total").to_numpy(zero_copy_only=False)
+    feats = batch.column("feats")
+    lengths = feats.value_lengths().to_numpy(zero_copy_only=False)
+    vals = feats.flatten()
+    fid = vals.field("feature_id").to_numpy(zero_copy_only=False)
+    lenc = pc.dictionary_encode(vals.field("layer_name"))
+    layer_idx = lenc.indices.to_numpy(zero_copy_only=False)
+    layer_dict = lenc.dictionary.to_pylist()
+    wkb_list = vals.field("wkb").to_pylist()
+    # props via flat dictionary-encoded children, not to_pylist: the
+    # MapArray to_pylist materializes a fresh (key, value) tuple pair of
+    # fresh strings per entry, and was the single largest cost of the
+    # whole encode stage (measured 15.4s of a 117s serial z13 profile;
+    # this path 3.0s, list-identical output). The same feature's props
+    # repeat in every tile it covers within the batch, so the per-batch
+    # entry universe dictionary-encodes to a handful of strings — rows
+    # then share the interned string objects.
+    pr = vals.field("props")
+    lst = pr.cast(
+        pa.list_(
+            pa.struct(
+                [
+                    pa.field("key", pr.type.key_type, nullable=False),
+                    pa.field("value", pr.type.item_type),
+                ]
+            )
+        )
+    )
+    ent = pc.list_flatten(lst)
+    kd = pc.dictionary_encode(ent.field("key"))
+    vd = pc.dictionary_encode(ent.field("value"))
+    ktab = kd.dictionary.to_pylist()
+    kidx = kd.indices.to_numpy(zero_copy_only=False)
+    # null map values have null indices (to_numpy would turn them into NaN
+    # floats): point them at a trailing None entry instead, which gives
+    # to_pylist's (key, None)
+    vtab = vd.dictionary.to_pylist()
+    vtab.append(None)
+    vidx = pc.fill_null(vd.indices, len(vtab) - 1).to_numpy(zero_copy_only=False)
+    plens = pc.fill_null(pc.list_value_length(lst), 0).to_numpy(
+        zero_copy_only=False
+    )
+    poffs = np.empty(len(plens) + 1, np.int64)
+    poffs[0] = 0
+    np.cumsum(plens, out=poffs[1:])
+    props_list = [
+        [(ktab[kidx[j]], vtab[vidx[j]]) for j in range(poffs[i], poffs[i + 1])]
+        for i in range(len(plens))
+    ]
+    cc = pc.fill_null(vals.field("_cc"), 0).to_numpy(zero_copy_only=False)
+
+    # ONE order for the whole batch: (tile, layer name, feature_id), stable.
+    # Layers come out in name order and each layer's features in id order
+    # — the scalar encoder's sorted(by_layer) over a fid-sorted tile —
+    # whatever order the shuffle delivered the rows in.
+    rank = np.empty(len(layer_dict), np.int64)
+    rank[sorted(range(len(layer_dict)), key=layer_dict.__getitem__)] = np.arange(
+        len(layer_dict)
+    )
+    tile_of_row = np.repeat(np.arange(batch.num_rows), lengths)
+    order = np.lexsort((fid, rank[layer_idx], tile_of_row)).tolist()
+    bounds = np.concatenate([[0], np.cumsum(lengths)]).tolist()
+    layer_of = layer_idx.tolist()
+    cc_of = cc.tolist()
+
+    # ONE walk over the sorted rows. Per (feature, tile) row a pending
+    # entry (its props, geometry type and part count; type 0 = the
+    # full-cover rectangle, no parts) and, for exact rows, one mercator
+    # part per point list with its tile's pixel affine; per tile to encode
+    # its (layer name, first pending entry) runs.
+    #
+    # INTERIOR-TILE MEMO: a tile whose features are ALL pre-classified
+    # full-cover rectangles encodes to bytes that do not depend on (x, y,
+    # z) at all — geometry is the tile-local clip-mask rect, layers and
+    # tags depend only on (layer, props) in the sorted order. Deep-zoom
+    # interiors of the same polygon are thousands of such tiles; one
+    # encode serves them all (encode stays correct on any hit rate).
+    #
+    # Per-batch parse + projection memos: the same feature's wkb appears in
+    # EVERY tile it covers within the batch, and the mercator projection
+    # does not depend on the tile — only the cheap affine does.
+    parse_memo: dict = {}  # wkb -> (gt, coords)
+    merc_memo: dict = {}  # (wkb, eps|None) -> (gt, merc)
+    bufs: list = [None] * batch.num_rows
+    todo: list = []  # (tile index, memo key|None, [(layer, first)], end)
     pend_gt: list[int] = []
-    pend_props: list = []
+    pend_props: list[dict] = []
     pend_nparts: list[int] = []
     part_mx: list[np.ndarray] = []
     part_my: list[np.ndarray] = []
     part_params: list = []  # (x_off, x_scale, y_off, y_scale) per part
-    tile_slots: list = []  # per tile: list of (layer_name, [slot...])
-
-    for z, x, y, by_layer in work:
-        tp = TileParams(x, y, z)
+    for ti in range(batch.num_rows):
+        rows = order[bounds[ti] : bounds[ti + 1]]
+        key = None
+        if 0 not in (cc_of[i] for i in rows):
+            # codec/gzip in the key: the memo is module-scoped and shared
+            # across encoder configurations
+            key = (codec, gzip) + tuple(
+                (layer_dict[layer_of[i]], tuple(sorted(props_list[i])))
+                for i in rows
+            )
+            if key in _RECT_TILE_CACHE:
+                bufs[ti] = _RECT_TILE_CACHE[key]
+                continue
+        z = int(z_arr[ti])
+        tp = TileParams(int(x_arr[ti]), int(y_arr[ti]), z)
         params = (tp.x_offset, tp.x_scale, tp.y_offset, tp.y_scale)
-        layers_here: list = []
-        for layer_name in sorted(by_layer.keys()):
-            slots: list = []
-            for ft in by_layer[layer_name]:
-                if ft.get("cc") == 1:
-                    slots.append(
-                        (
-                            None,
-                            {
-                                "geom_type": 3,
-                                "coords": [_full_rect()],
-                                "props": ft["props"],
-                            },
-                        )
-                    )
-                    continue
-                gt = ft["geom_type"]
-                merc = ft.get("merc")
-                if merc is None:
-                    merc = mercator_of(gt, ft["coords"])
-                parts = merc if gt == 3 else [merc]
-                slots.append((len(pend_gt), None))
-                pend_gt.append(gt)
-                pend_props.append(ft["props"])
-                pend_nparts.append(len(parts))
-                for mx, my in parts:
-                    part_mx.append(mx)
-                    part_my.append(my)
-                    part_params.append(params)
-            layers_here.append((layer_name, slots))
-        tile_slots.append(layers_here)
+        eps = resolution(z, EXTENT) if simplify else None
+        layers: list = []
+        prev = -1
+        for i in rows:
+            if layer_of[i] != prev:
+                prev = layer_of[i]
+                layers.append((layer_dict[prev], len(pend_gt)))
+            pend_props.append(dict(props_list[i]))
+            if cc_of[i] == 1:
+                pend_gt.append(0)
+                pend_nparts.append(0)
+                continue
+            w = wkb_list[i]
+            ent = merc_memo.get((w, eps))
+            if ent is None:
+                parsed = parse_memo.get(w)
+                if parsed is None:
+                    parsed = parse_memo[w] = from_wkb(w)
+                gt, coords = parsed
+                if eps is not None and gt == 2:
+                    coords = _geometry.simplify_rdp(coords, eps)
+                ent = merc_memo[(w, eps)] = (gt, mercator_of(gt, coords))
+            gt, merc = ent
+            parts = merc if gt == 3 else [merc]
+            pend_gt.append(gt)
+            pend_nparts.append(len(parts))
+            for mx, my in parts:
+                part_mx.append(mx)
+                part_my.append(my)
+                part_params.append(params)
+        todo.append((ti, key, layers, len(pend_gt)))
 
-    # ---- 1b (numpy): batch affine into pixel space
+    # ---- pass 1b (numpy): batch affine into pixel space
     pix_parts: list[np.ndarray] = []
     if part_mx:
         plen = np.array([len(a) for a in part_mx], np.int64)
@@ -265,10 +373,11 @@ def clip_tiles(work: list[tuple[int, int, int, dict]]) -> list:
         starts = ends - plen
         pix_parts = [P[s:e] for s, e in zip(starts, ends)]
 
-    # ---- 1c: clip per pending feature. The polygon fast-path decider
+    # ---- pass 1c: clip per pending entry. The polygon fast-path decider
     # (does the ring cross the tile border?) runs batched first — one numpy
     # pass over every single-ring (polygon, tile) pair instead of one call
     # per pair; verdicts are exact (ring_border_hits_batch).
+    clip_mask = (0.0, 0.0, float(EXTENT), float(EXTENT))
     hints = np.full(len(pend_gt), -1, np.int8)
     sr_rings: list = []
     sr_idx: list[int] = []
@@ -284,6 +393,11 @@ def clip_tiles(work: list[tuple[int, int, int, dict]]) -> list:
     pend_clipped: list = []
     pi = 0
     for fi, (gt, nparts) in enumerate(zip(pend_gt, pend_nparts)):
+        if gt == 0:
+            # pre-classified full cover: exactly what project+clip returns
+            # for a ring that provably covers the tile
+            pend_clipped.append([(3, [_full_rect()])])
+            continue
         if gt == 1:
             arr = pix_parts[pi]
             projected = (float(arr[0, 0]), float(arr[0, 1]))
@@ -297,31 +411,54 @@ def clip_tiles(work: list[tuple[int, int, int, dict]]) -> list:
             _clip.clip_geom(gt, projected, clip_mask, None if h < 0 else bool(h))
         )
 
-    # ---- 1d: per tile and layer, the pieces in feature order
-    out: list = []
-    for layers_here in tile_slots:
+    # ---- pass 1d: per tile and layer, the clipped pieces in feature order
+    # (what the scalar assembleLayer hands to merge_features)
+    tiles: list = []
+    for _, _, layers, end in todo:
         tile_layers: list = []
-        for layer_name, slots in layers_here:
-            pieces: list[dict] = []
-            for pidx, lit in slots:
-                if lit is not None:
-                    pieces.append(lit)
-                    continue
-                props = pend_props[pidx]
-                for g, cc in pend_clipped[pidx]:
-                    pieces.append({"geom_type": g, "coords": cc, "props": props})
-            tile_layers.append((layer_name, pieces))
-        out.append(tile_layers)
-    return out
+        for j, (layer_name, first) in enumerate(layers):
+            last = layers[j + 1][1] if j + 1 < len(layers) else end
+            tile_layers.append(
+                (
+                    layer_name,
+                    [
+                        {"geom_type": g, "coords": c, "props": pend_props[p]}
+                        for p in range(first, last)
+                        for g, c in pend_clipped[p]
+                    ],
+                )
+            )
+        tiles.append(tile_layers)
+
+    encoded = _geojson_tiles(tiles) if codec == "geojson" else _mvt_tiles(tiles)
+    for (ti, key, _, _), buf in zip(todo, encoded):
+        if buf is not None and gzip:
+            buf = gzip_tile(buf)
+        if key is not None:
+            if len(_RECT_TILE_CACHE) > 100_000:
+                _RECT_TILE_CACHE.clear()
+            _RECT_TILE_CACHE[key] = buf
+        bufs[ti] = buf
+    keep = np.array([i for i, b in enumerate(bufs) if b is not None], np.int64)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(z_arr[keep], pa.int32()),
+            pa.array(x_arr[keep], pa.int64()),
+            pa.array(y_arr[keep], pa.int64()),
+            pa.array(n_total[keep], pa.int32()),
+            pa.array([bufs[i] for i in keep.tolist()], pa.binary()),
+        ],
+        names=["tile_z", "tile_x", "tile_y", "n_features", "tile"],
+    )
 
 
-def encode_tiles_geojson(work: list[tuple[int, int, int, dict]]) -> list:
-    """GeoJSON tile codec (lib/tile/codec.go:17-31) over the same pass 1 as
-    MVT: per tile, a FeatureCollection of the clipped pieces in tile pixel
-    coordinates (truncated to int, rings closed), each tagged with its
-    ``@layer``; no merge, keys sorted. bytes|None per tile."""
+def _geojson_tiles(tiles: list) -> list:
+    """GeoJSON tile codec (lib/tile/codec.go:17-31) over the clipped
+    pieces of pass 1: per tile, a FeatureCollection in tile pixel
+    coordinates (truncated to int, rings closed), each feature tagged with
+    its ``@layer``; no merge, keys sorted. bytes|None per tile."""
     out: list = []
-    for tile_layers in clip_tiles(work):
+    for tile_layers in tiles:
         feats = []
         for layer_name, pieces in tile_layers:
             for ft in pieces:
@@ -349,10 +486,10 @@ def encode_tiles_geojson(work: list[tuple[int, int, int, dict]]) -> list:
     return out
 
 
-def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
-    """Encode a batch of tiles: [(z, x, y, {layer: [feat, ...]})] → bytes|None
-    per tile, byte-identical to the scalar reference encode_tile per tile
-    (feat dicts as in clip_tiles)."""
+def _mvt_tiles(tiles: list) -> list:
+    """MVT tile codec over the clipped pieces of pass 1 (per tile, [(layer
+    name, pieces)] in layer-name order): bytes|None per tile, byte-identical
+    to the scalar reference encode_tile."""
     # ---- pass 2 (scalar): merge + per-layer dict-encode, batch collection
     feats_gt: list[int] = []  # per emitted feature
     feats_tags: list[list[int]] = []
@@ -362,7 +499,7 @@ def encode_tiles_mvt(work: list[tuple[int, int, int, dict]]) -> list:
     # per tile: list of (layer_name, keys, val_order, feat_idx_range)
     tile_layers: list[list] = []
 
-    for clipped_layers in clip_tiles(work):
+    for clipped_layers in tiles:
         out_layers: list = []
         for layer_name, clipped in clipped_layers:
             keys: dict[str, int] = {}

@@ -368,8 +368,8 @@ def _window_hash_mix(tok_hashes, n, window: int):
     hashing per window with W register ops over hashes computed once per
     token. Equality semantics: identical window text ⇒ identical mix;
     distinct windows collide with ~2^-64 probability like any 64-bit
-    hash. Requires 2 <= window <= 63 (63 distinct rotations — callers
-    validate and surface the error)."""
+    hash. Requires 2 <= window <= 63 (63 distinct rotations;
+    :func:`_dup_windows` checks it)."""
     m = F.greatest(n - F.lit(window - 1), F.lit(0))
     slices = [F.slice(tok_hashes, j + 1, m) for j in range(window)]
     zipped = F.arrays_zip(*slices)
@@ -386,6 +386,32 @@ def _window_hash_mix(tok_hashes, n, window: int):
     return F.when(n >= window, F.transform(zipped, _mix)).otherwise(
         F.array().cast("array<bigint>")
     )
+
+
+def _dup_windows(rows: DataFrame, id_col: str, toks, tok_hashes, window: int):
+    """(wins, dup): every ``window``-token window of ``rows`` as (id_col,
+    pos, win_h) with the :func:`_window_hash_mix` hash, and the hashes
+    that occur >= 2 times anywhere in ``rows`` — one partial-agg groupBy
+    on the 8-byte hash, so boilerplate skew collapses map-side. ``window``
+    must be in [2, 63]: the mix has only 63 distinct rotations."""
+    if not (2 <= window <= 63):
+        raise ValueError(
+            f"window must be in [2, 63], got {window}: "
+            "the rotate-xor window mix has only 63 distinct rotations"
+        )
+    wins = rows.select(
+        F.col(id_col),
+        F.posexplode(_window_hash_mix(tok_hashes, F.size(toks), window)).alias(
+            "pos", "win_h"
+        ),
+    )
+    dup = (
+        wins.groupBy("win_h")
+        .agg(F.count(F.lit(1)).alias("_c"))
+        .filter(F.col("_c") >= 2)
+        .select("win_h")
+    )
+    return wins, dup
 
 
 def substring_dup_stats(
@@ -435,11 +461,6 @@ def substring_dup_stats(
     positions, so a wider window would reuse rotations and let equal
     tokens at two same-rotation positions cancel out of the mix.
     """
-    if not (2 <= window <= 63):
-        raise ValueError(
-            f"substring_dup_stats window must be in [2, 63], got {window}: "
-            "the rotate-xor window mix has only 63 distinct rotations"
-        )
     toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     n_tokens = F.when(F.trim(F.col(text_col)) == "", F.lit(0)).otherwise(F.size(toks))
     # per-doc base stats are pure map-side: n_windows is DERIVED from the
@@ -453,32 +474,13 @@ def substring_dup_stats(
             n_tokens.cast("long") - F.lit(window - 1), F.lit(0).cast("long")
         ).alias("n_windows"),
     )
-    # window hash WITHOUT materializing window strings: hash each token once,
-    # then mix the W consecutive token hashes with position-distinct
-    # rotate-xor (bitwise — ANSI-safe, no overflow). Building the W-word
-    # string per window and hashing it was 60% of the operator's CPU at the
-    # bench shape; this replaces ~80-byte string assembly + string hashing
-    # per window with W register ops over hashes computed once per token.
-    # Equality semantics are unchanged: identical window text ⇒ identical
-    # mix; distinct windows collide with ~2^-64 probability like any 64-bit
-    # hash (the oracle compares output STATS, so it certifies either form).
     tok_hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    win_hashes = _window_hash_mix(tok_hashes, F.size(toks), window)
-    wins = df.select(
-        F.col(id_col),
-        F.posexplode(win_hashes).alias("pos", "win_h"),
-    )
-    # corpus-wide occurrence count per distinct window hash (partial-agg
-    # friendly), then a hash-equi INNER join: only duplicated occurrences
-    # — a sliver of the window universe at real dup rates — survive into
-    # the per-doc aggregate. The join is co-partitioned with the groupBy
-    # output; AQE broadcasts `dup` when the duplicated universe is small.
-    dup = (
-        wins.groupBy("win_h")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .filter(F.col("_c") >= 2)
-        .select("win_h")
-    )
+    wins, dup = _dup_windows(df, id_col, toks, tok_hashes, window)
+    # hash-equi INNER join against the duplicated hashes: only duplicated
+    # occurrences — a sliver of the window universe at real dup rates —
+    # survive into the per-doc aggregate. The join is co-partitioned with
+    # the groupBy output; AQE broadcasts `dup` when the duplicated universe
+    # is small.
     dup_stats = (
         wins.join(dup, "win_h")
         .groupBy(id_col)
@@ -540,8 +542,8 @@ def substring_dedup_clean(
     Scale (100 TB): the shape is the stats pass's plus one covered-
     position explode — every stage linear in corpus tokens, nothing
     quadratic, no WindowExec on a skewed key:
-      1. window hashes map-side (shared `_window_hash_mix`; window
-         STRINGS never exist),
+      1. window hashes map-side (shared `_dup_windows`; window STRINGS
+         never exist),
       2. occurrence count = ONE partial-agg groupBy on the 8-byte hash
          (boilerplate skew collapses map-side),
       3. dup-only INNER join back (a sliver at real dup rates),
@@ -553,11 +555,6 @@ def substring_dedup_clean(
          bounded by document length (a document fits a task by the same
          contract every per-doc operator here assumes).
     """
-    if not (2 <= window <= 63):
-        raise ValueError(
-            f"substring_dedup_clean window must be in [2, 63], got {window}: "
-            "the rotate-xor window mix has only 63 distinct rotations"
-        )
     text = F.col(text_col)
     # ONE split of the original-case text; lowercase per token for the
     # window hashes so positions in the hash stream and the token stream
@@ -575,18 +572,7 @@ def substring_dedup_clean(
     ne = df.filter(text.isNotNull() & (F.trim(text) != ""))
     tok_rows = ne.select(F.col(id_col), F.posexplode(toks).alias("pos", "tok"))
     tok_hashes = F.transform(toks, lambda t: F.xxhash64(F.lower(t)))
-    wins = ne.select(
-        F.col(id_col),
-        F.posexplode(_window_hash_mix(tok_hashes, F.size(toks), window)).alias(
-            "pos", "win_h"
-        ),
-    )
-    dup = (
-        wins.groupBy("win_h")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .filter(F.col("_c") >= 2)
-        .select("win_h")
-    )
+    wins, dup = _dup_windows(ne, id_col, toks, tok_hashes, window)
     covered = (
         wins.join(dup, "win_h")
         .select(

@@ -47,9 +47,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..functions import tile_exprs as TX
+from ..kernels.geometry import EARTH_RADIUS_M
 from .spatial_join import local_table
 
-EARTH_R_M = 6371000.0
 MAX_HISTOGRAM_ZOOM = 10
 # adaptive refinement: each pass goes Δz=4 finer (16×16 subcells per
 # candidate cell), restricted to the previous pass's candidates — so each
@@ -78,6 +78,12 @@ def _cell_geo(cx_arr: np.ndarray, cy_arr: np.ndarray, n: int):
     cos_max = np.where(spans_eq, 1.0, np.maximum(cos_n, cos_s))
     cos_min = np.minimum(cos_n, cos_s)
     return west, east, lat_n, lat_s, cos_min, cos_max
+
+
+def _hist_arrays(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Collected ``(cx, cy, count)`` histogram rows → (cx, cy, count) int64
+    arrays."""
+    return tuple(np.array([tuple(r) for r in rows], np.int64).reshape(-1, 3).T)
 
 
 def _plan_probe(qrows, k, total, cx_arr, cy_arr, cnt_arr, n):
@@ -190,11 +196,7 @@ def knn(
         else None
     )
     if fine_hist is not None and len(fine_hist) <= REFINE_COLLECT_CAP:
-        cx_arr = np.array([int(r.p_cx) for r in fine_hist], dtype=np.int64)
-        cy_arr = np.array([int(r.p_cy) for r in fine_hist], dtype=np.int64)
-        cnt_arr = np.array(
-            [int(r["count"]) for r in fine_hist], dtype=np.int64
-        )
+        cx_arr, cy_arr, cnt_arr = _hist_arrays(fine_hist)
         total = int(cnt_arr.sum())
         probe_rows, est = _plan_probe(
             qrows, k, total, cx_arr, cy_arr, cnt_arr, 1 << zf
@@ -207,17 +209,11 @@ def knn(
         # refinement passes, probe) — cache it now.
         pts = pts.cache()
         pts_cached = True
-        cells = (
-            pts.groupBy(
-                F.shiftright("p_cx", dz).alias("c_cx"),
-                F.shiftright("p_cy", dz).alias("c_cy"),
-            )
+        cx_arr, cy_arr, cnt_arr = _hist_arrays(
+            pts.groupBy(F.shiftright("p_cx", dz), F.shiftright("p_cy", dz))
             .count()
             .collect()
         )
-        cx_arr = np.array([int(r.c_cx) for r in cells], dtype=np.int64)
-        cy_arr = np.array([int(r.c_cy) for r in cells], dtype=np.int64)
-        cnt_arr = np.array([int(r["count"]) for r in cells], dtype=np.int64)
         total = int(cnt_arr.sum())
         probe_rows, est = _plan_probe(
             qrows, k, total, cx_arr, cy_arr, cnt_arr, n
@@ -243,18 +239,12 @@ def knn(
         packed = F.shiftleft(
             F.shiftright("p_cx", sh_parent), 32
         ) + F.shiftright("p_cy", sh_parent)
-        fine = (
+        cx_arr, cy_arr, cnt_arr = _hist_arrays(
             pts.filter(packed.isin(parents))
-            .groupBy(
-                F.shiftright("p_cx", sh_new).alias("f_cx"),
-                F.shiftright("p_cy", sh_new).alias("f_cy"),
-            )
+            .groupBy(F.shiftright("p_cx", sh_new), F.shiftright("p_cy", sh_new))
             .count()
             .collect()
         )
-        cx_arr = np.array([int(r.f_cx) for r in fine], dtype=np.int64)
-        cy_arr = np.array([int(r.f_cy) for r in fine], dtype=np.int64)
-        cnt_arr = np.array([int(r["count"]) for r in fine], dtype=np.int64)
         # total stays the CORPUS total: kk = min(k, total) must not shrink
         # to the restricted subset's size
         probe_rows, est = _plan_probe(
@@ -380,8 +370,8 @@ def _candidate_cells(
     t1_max = np.sin(np.radians(dphi_max) / 2.0) ** 2
     t2_min = cosq * cos_min * np.sin(np.radians(dlam_min) / 2.0) ** 2
     t2_max = cosq * cos_max * np.sin(np.radians(dlam_max) / 2.0) ** 2
-    lb = 2.0 * EARTH_R_M * np.arcsin(np.sqrt(np.clip(t1_min + t2_min, 0.0, 1.0)))
-    ub = 2.0 * EARTH_R_M * np.arcsin(np.sqrt(np.clip(t1_max + t2_max, 0.0, 1.0)))
+    lb = 2.0 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.clip(t1_min + t2_min, 0.0, 1.0)))
+    ub = 2.0 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.clip(t1_max + t2_max, 0.0, 1.0)))
 
     order = np.argsort(ub, kind="stable")
     csum = cnt[order].cumsum()

@@ -8,7 +8,8 @@ Spark-first:
       → layer routing                    (native coalesce, tiler.go:300-312)
       → groupBy(z, x, y)                 (the shuffle replaces the shared-
                                           memory FeatureCache index)
-      → mapInArrow(encode tiles)         (project→clip, then merge→MVT
+      → mapInArrow(encode tiles)         (kernels/mvt_batch.encode_batch:
+                                          project→clip, then merge→MVT
                                           protobuf, lib/mvt/codec.go:57-198,
                                           or a GeoJSON FeatureCollection;
                                           whole tiles per Arrow batch)
@@ -22,9 +23,9 @@ a single giant tile group is bounded by per-tile feature counts, which
 see the WHOLE group to be byte-stable (MVT dictionaries + merge are
 order-sensitive), so groups are never split (SURVEY.md §7).
 
-Feature rows entering the encode UDF are sorted by feature_id within each
-tile group — a deterministic total order, so output bytes do not depend on
-shuffle arrival order.
+The encoder orders each tile group's rows by (layer name, feature_id) — a
+deterministic total order, so output bytes do not depend on shuffle arrival
+order.
 """
 
 from __future__ import annotations
@@ -35,8 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import tile_exprs as TX
-from ..kernels.mvt import gzip_tile
-from ..kernels.wkb import from_wkb
+from ..kernels.mvt_batch import encode_batch
 from .spatial_join import local_table
 
 TILES_SCHEMA = T.StructType(
@@ -90,205 +90,6 @@ def global_bbox(features: DataFrame) -> tuple[float, float, float, float]:
         F.max("maxy").alias("maxy"),
     ).first()
     return (r.minx, r.miny, r.maxx, r.maxy)
-
-
-# worker-process scoped memo for all-full-cover tiles (see
-# _encode_record_batch); keyed by (codec, gzip, (layer, sorted props), ...)
-_RECT_TILE_CACHE: dict = {}
-
-
-def _encode_record_batch(batch, gzip: bool, simplify: bool, codec: str):
-    """The tile encoder build_tiles runs in ``mapInArrow`` (and
-    scripts/profile_encode.py feeds parquet record batches serially): one
-    grouped RecordBatch (tile_z, tile_x, tile_y, feats list<struct>,
-    n_total) → one TILES_SCHEMA RecordBatch, null tiles dropped.
-
-    Columnar extraction: the struct children come out as flat arrays —
-    feature ids and _cc as numpy arrays, layer names dictionary-encoded (a
-    handful of distinct values per batch), wkb/props converted once per
-    CHILD column (None where the pre-shuffle payload nulling dropped them)
-    — instead of one python dict per (feature, tile) row, and each tile's
-    rows sort with a numpy argsort instead of a Python sorted(). The
-    project→clip→encode work runs batch-wide in kernels/mvt_batch."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from ..kernels import mvt_batch
-    from ..kernels.geometry import simplify_rdp
-    from ..kernels.tilemath import resolution
-
-    z_arr = batch.column("tile_z").to_numpy(zero_copy_only=False)
-    x_arr = batch.column("tile_x").to_numpy(zero_copy_only=False)
-    y_arr = batch.column("tile_y").to_numpy(zero_copy_only=False)
-    n_total = batch.column("n_total").to_numpy(zero_copy_only=False)
-    feats = batch.column("feats")
-    lengths = feats.value_lengths().to_numpy(zero_copy_only=False)
-    vals = feats.flatten()
-    fid = vals.field("feature_id").to_numpy(zero_copy_only=False)
-    ld = pc.dictionary_encode(vals.field("layer_name"))
-    layer_idx = ld.indices.to_numpy(zero_copy_only=False)
-    layer_dict = ld.dictionary.to_pylist()
-    wkb_list = vals.field("wkb").to_pylist()
-    # props via flat dictionary-encoded children, not to_pylist: the
-    # MapArray to_pylist materializes a fresh (key, value) tuple pair of
-    # fresh strings per entry, and was the single largest cost of the
-    # whole encode stage (measured 15.4s of a 117s serial z13 profile;
-    # this path 3.0s, list-identical output). The same feature's props
-    # repeat in every tile it covers within the batch, so the per-batch
-    # entry universe dictionary-encodes to a handful of strings — rows
-    # then share the interned string objects. Null maps come back as []
-    # instead of to_pylist's None; both falsy, and treated identically.
-    pr = vals.field("props")
-    lst = pr.cast(
-        pa.list_(
-            pa.struct(
-                [
-                    pa.field("key", pr.type.key_type, nullable=False),
-                    pa.field("value", pr.type.item_type),
-                ]
-            )
-        )
-    )
-    ent = pc.list_flatten(lst)
-    kd = pc.dictionary_encode(ent.field("key"))
-    vd = pc.dictionary_encode(ent.field("value"))
-    ktab = kd.dictionary.to_pylist()
-    kidx = kd.indices.to_numpy(zero_copy_only=False)
-    # null map values have null indices (to_numpy would turn them into NaN
-    # floats): point them at a trailing None entry instead, which gives
-    # to_pylist's (key, None)
-    vtab = vd.dictionary.to_pylist()
-    vtab.append(None)
-    vidx = pc.fill_null(vd.indices, len(vtab) - 1).to_numpy(zero_copy_only=False)
-    plens = pc.fill_null(pc.list_value_length(lst), 0).to_numpy(
-        zero_copy_only=False
-    )
-    poffs = np.empty(len(plens) + 1, np.int64)
-    poffs[0] = 0
-    np.cumsum(plens, out=poffs[1:])
-    props_list = [
-        [(ktab[kidx[j]], vtab[vidx[j]]) for j in range(poffs[i], poffs[i + 1])]
-        for i in range(len(plens))
-    ]
-    cc = (
-        pc.fill_null(vals.field("_cc"), 0)
-        .to_numpy(zero_copy_only=False)
-        .astype(np.int8, copy=False)
-    )
-
-    # INTERIOR-TILE MEMO: a tile whose surviving features are ALL
-    # pre-classified full-cover rectangles encodes to bytes that do not
-    # depend on (x, y, z) at all — geometry is the tile-local clip-mask
-    # rect, layers/tags depend only on (layer, props) in sorted-id order.
-    # Deep-zoom interiors of the same polygon are thousands of such tiles;
-    # one encode serves them all. Worker-process scoped, size-capped
-    # (encode stays correct on any hit rate).
-    rect_cache = _RECT_TILE_CACHE
-
-    # per-batch parse + projection memos: the same feature's wkb appears
-    # in EVERY tile it covers within the batch (the shuffle hashes on tile
-    # keys, but groups of neighboring tiles share their features), and the
-    # mercator projection does not depend on the tile at all — only the
-    # cheap affine into pixel space does (mvt_batch.clip_tiles).
-    parse_memo: dict = {}  # wkb -> (gt, coords)
-    merc_memo: dict = {}  # (wkb, eps|None) -> (gt, coords', merc)
-
-    def feat_for(w: bytes, eps, props: dict) -> dict:
-        mkey = (w, eps)
-        ent = merc_memo.get(mkey)
-        if ent is None:
-            parsed = parse_memo.get(w)
-            if parsed is None:
-                parsed = parse_memo[w] = from_wkb(w)
-            gt, coords = parsed
-            if eps is not None and gt == 2:
-                coords = simplify_rdp(coords, eps)
-            merc = mvt_batch.mercator_of(gt, coords)
-            ent = merc_memo[mkey] = (gt, coords, merc)
-        gt, coords, merc = ent
-        return {"geom_type": gt, "coords": coords, "merc": merc, "props": props}
-
-    # slot per input tile: finished bytes (rect-memo hit) or an index into
-    # the batch-wide work list
-    buf_out: list = []
-    work: list = []  # (z, x, y, by_layer)
-    work_slots: list[int] = []  # buf_out index per work item
-    work_keys: list = []  # rect-memo key per work item (or None)
-    pos = 0
-    for ti in range(batch.num_rows):
-        ln = int(lengths[ti])
-        s = pos
-        pos += ln
-        z, x, y = int(z_arr[ti]), int(x_arr[ti]), int(y_arr[ti])
-        eps = resolution(z, 4096) if simplify else None
-        # deterministic order regardless of shuffle arrival (stable argsort
-        # = the scalar path's stable sorted(key=feature_id))
-        idx = s + np.argsort(fid[s : s + ln], kind="stable")
-        key = None
-        if bool((cc[idx] != 0).all()):
-            # codec/gzip in the key: the memo is module-scoped and shared
-            # across encoder configurations
-            key = (codec, gzip) + tuple(
-                (
-                    layer_dict[layer_idx[i]],
-                    tuple(sorted(props_list[i])) if props_list[i] else (),
-                )
-                for i in idx
-                if cc[i] == 1
-            )
-            if key in rect_cache:
-                buf_out.append(rect_cache[key])
-                continue
-        by_layer: dict[str, list[dict]] = {}
-        for i in idx:
-            # _cc: the vectorized pre-classification (kernels/coverclass):
-            # 2 = provably contributes nothing to this tile (the exact clip
-            # would return []); 1 = provably the full-tile rectangle (skip
-            # parse+project+clip, the codec emits it directly); 0 = the
-            # exact path decides. Byte-identical by construction.
-            c = cc[i]
-            if c == 2:
-                continue
-            p = props_list[i]
-            props = dict(p) if p is not None else {}
-            lname = layer_dict[layer_idx[i]]
-            if c == 1:
-                by_layer.setdefault(lname, []).append(
-                    {"geom_type": 3, "coords": None, "cc": 1, "props": props}
-                )
-                continue
-            by_layer.setdefault(lname, []).append(feat_for(wkb_list[i], eps, props))
-        work_slots.append(len(buf_out))
-        work_keys.append(key)
-        buf_out.append(None)
-        work.append((z, x, y, by_layer))
-
-    if work:
-        encode = (
-            mvt_batch.encode_tiles_geojson
-            if codec == "geojson"
-            else mvt_batch.encode_tiles_mvt
-        )
-        for slot, key, buf in zip(work_slots, work_keys, encode(work)):
-            if buf is not None and gzip:
-                buf = gzip_tile(buf)
-            if key is not None:
-                if len(rect_cache) > 100_000:
-                    rect_cache.clear()
-                rect_cache[key] = buf
-            buf_out[slot] = buf
-    keep = [i for i, b in enumerate(buf_out) if b is not None]
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array([int(z_arr[i]) for i in keep], pa.int32()),
-            pa.array([int(x_arr[i]) for i in keep], pa.int64()),
-            pa.array([int(y_arr[i]) for i in keep], pa.int64()),
-            pa.array([int(n_total[i]) for i in keep], pa.int32()),
-            pa.array([buf_out[i] for i in keep], pa.binary()),
-        ],
-        names=["tile_z", "tile_x", "tile_y", "n_features", "tile"],
-    )
 
 
 def _make_classifier(simplify: bool = False):
@@ -462,8 +263,9 @@ def build_tiles(
     and whole tiles are encoded in Arrow batches by a ``mapInArrow``
     encoder (one Python call per batch, no per-tile Python overhead). Tile
     encode must see the WHOLE group to be byte-stable (MVT dictionaries +
-    merge are order-sensitive), so groups are never split; rows are sorted
-    by feature_id inside the encoder for shuffle-order independence.
+    merge are order-sensitive), so groups are never split; the encoder
+    (``kernels/mvt_batch.encode_batch``) sorts each group's rows by (layer
+    name, feature_id) for shuffle-order independence.
     """
     if codec not in ("mvt", "geojson"):
         raise ValueError(f"unknown tile codec {codec!r}: use 'mvt' or 'geojson'")
@@ -478,7 +280,7 @@ def build_tiles(
 
     def encode_batches(it):
         for batch in it:
-            yield _encode_record_batch(batch, gzip, simplify, codec)
+            yield encode_batch(batch, gzip, simplify, codec)
 
     return grouped.mapInArrow(encode_batches, TILES_SCHEMA)
 
@@ -567,9 +369,9 @@ def _grouped_tiles(
         "_cc", cls(F.col("tile_z"), F.col("tile_x"), F.col("tile_y"), gated_wkb)
     )
     # Classified rows don't need their payload past this point: the
-    # encoder reads wkb ONLY on the exact path (_cc == 0) and never reads a
-    # provably-empty row's props (_cc == 2 skips before the props access;
-    # the rect-memo key uses _cc == 1 rows only). Nulling them here —
+    # encoder reads wkb ONLY on the exact path (_cc == 0), and a
+    # provably-empty row (_cc == 2) never reaches it (the collect_list
+    # below drops it). Nulling them here —
     # before the tile shuffle — drops the duplicated WKB bytes of every
     # interior (full-cover) coverage row from the exchange AND from the
     # Arrow transfer into the encode UDF, which at deep zooms is most rows
@@ -619,8 +421,7 @@ def _grouped_tiles(
     # clip would return nothing) never reach the encoder at all (38% of z13
     # coverage rows), while count(*) still counts them — n_features is the
     # tile's FULL pre-filter coverage count (the tiles_meta oracle's
-    # definition). The rect-memo condition and per-tile sort order are
-    # unaffected: cc==2 rows were skipped before building layers anyway.
+    # definition).
     return all_cov.groupBy("tile_z", "tile_x", "tile_y").agg(
         F.collect_list(
             F.when(

@@ -4,7 +4,7 @@ Builds `build_tiles`' pre-encode frame with Spark (`tiling._grouped_tiles`,
 the exact frame `build_tiles` feeds to `mapInArrow`: coverage explode,
 span-gated classifier, payload nulling, pinned tile shuffle, group),
 materializes it to parquet, then runs the EXACT executor encode function
-(`operators.tiling._encode_record_batch`, the mapInArrow body) serially on
+(`kernels.mvt_batch.encode_batch`, the mapInArrow body) serially on
 one core under cProfile, feeding it the same Arrow record batches the
 executor sees. This isolates per-row Python encode CPU from Spark
 scheduling/shuffle, so kernel-level optimizations can be measured without
@@ -56,7 +56,7 @@ def main() -> None:
 
     import pyarrow.dataset as ds
 
-    from grandine_spark.operators import tiling
+    from grandine_spark.kernels import mvt_batch
 
     tbl = ds.dataset(path).to_table().combine_chunks()
     batches = tbl.to_batches(max_chunksize=args.batch)
@@ -67,10 +67,10 @@ def main() -> None:
     )
 
     def run() -> int:
-        tiling._RECT_TILE_CACHE.clear()
+        mvt_batch._RECT_TILE_CACHE.clear()
         total = 0
         for b in batches:
-            out = tiling._encode_record_batch(b, False, False, "mvt")
+            out = mvt_batch.encode_batch(b, False, False, "mvt")
             total += out.num_rows
         return total
 

@@ -6,10 +6,13 @@ oracle (no ``test_`` prefix, so pytest does not collect it):
 - the scalar MVT encoder (``encode_tile`` → ``assemble_layer`` →
   ``encode_geometry``, ``project_coords``), a direct port of
   lib/mvt/codec.go:57-261 and lib/mvt/project.go:13-54 that
-  ``mvt_batch.encode_tiles_mvt`` must match byte for byte.
+  ``mvt_batch.encode_batch`` must match byte for byte, and the scalar
+  GeoJSON tile writer ``encode_tile_geojson`` (lib/tile/codec.go:17-31).
 """
 
 from __future__ import annotations
+
+import json
 
 import numpy as np
 
@@ -273,7 +276,7 @@ def tile_affine_np(mx: np.ndarray, my: np.ndarray, tp: TileParams):
     """The tile-local remainder of tilePoint after the mercator projection:
     scale/offset into pixel space plus the y-flip (flipFloat,
     lib/mvt/project.go:13-19, truncates to int before flipping).
-    ``mvt_batch.clip_tiles`` runs the same IEEE-double expression with the
+    ``mvt_batch.encode_batch`` runs the same IEEE-double expression with the
     per-tile scalars broadcast per point."""
     ext = float(tp.extent)
     x = (mx - tp.x_offset) / (tp.x_scale / ext) * ext
@@ -398,12 +401,12 @@ def encode_tile(features_by_layer: dict[str, list[dict]], x: int, y: int, z: int
     return bytes(out)
 
 
-def assemble_layer(name, features, x, y, z) -> bytes | None:
-    """assembleLayer (lib/mvt/codec.go:139-198): project → clip to the
-    [0,extent]² mask → MergeFeatures → dict-encode tags (first-seen order
-    over key-sorted props) → encode commands.
+def clip_layer(features, x, y, z) -> list[dict]:
+    """The first half of assembleLayer (lib/mvt/codec.go:139-198): project
+    every feature into tile pixel space and clip it to the [0,extent]² mask.
 
-    ``features``: dicts {"geom_type": int, "coords": ..., "props": dict}.
+    ``features``: dicts {"geom_type": int, "coords": ..., "props": dict},
+    or {"cc": 1, "props": dict} for a pre-classified full cover.
     """
     tp = TileParams(x, y, z)
     clip_mask = (0.0, 0.0, float(EXTENT), float(EXTENT))
@@ -421,6 +424,14 @@ def assemble_layer(name, features, x, y, z) -> bytes | None:
         projected = project_coords(ft["geom_type"], ft["coords"], tp)
         for gt, cc in clip_geom(ft["geom_type"], projected, clip_mask):
             clipped.append({"geom_type": gt, "coords": cc, "props": ft["props"]})
+    return clipped
+
+
+def assemble_layer(name, features, x, y, z) -> bytes | None:
+    """assembleLayer (lib/mvt/codec.go:139-198): project → clip to the
+    [0,extent]² mask (:func:`clip_layer`) → MergeFeatures → dict-encode
+    tags (first-seen order over key-sorted props) → encode commands."""
+    clipped = clip_layer(features, x, y, z)
 
     keys: dict[str, int] = {}
     vals: dict[tuple, int] = {}
@@ -449,3 +460,34 @@ def assemble_layer(name, features, x, y, z) -> bytes | None:
     return _encode_layer(
         name, feature_blobs, list(keys.keys()), [_encode_value(v) for v in val_order], EXTENT
     )
+
+
+def encode_tile_geojson(
+    features_by_layer: dict[str, list[dict]], x: int, y: int, z: int
+) -> bytes | None:
+    """The GeoJSON tile codec (lib/tile/codec.go:17-31): every clipped
+    piece of every layer (in name order) as one Feature in tile pixel
+    coordinates, truncated to int with rings closed, tagged with its
+    ``@layer``; no merge, keys sorted."""
+    feats = []
+    for layer_name in sorted(features_by_layer):
+        for ft in clip_layer(features_by_layer[layer_name], x, y, z):
+            gt, cc = ft["geom_type"], ft["coords"]
+            if gt == 1:
+                geom = {"type": "Point", "coordinates": [int(cc[0]), int(cc[1])]}
+            elif gt == 2:
+                geom = {
+                    "type": "LineString",
+                    "coordinates": [[int(px), int(py)] for px, py in cc],
+                }
+            else:
+                rings = [[[int(px), int(py)] for px, py in r] for r in cc]
+                geom = {"type": "Polygon", "coordinates": [r + r[:1] for r in rings]}
+            props = {k: v for k, v in ft["props"].items() if not k.startswith("@")}
+            props["@layer"] = layer_name
+            feats.append({"type": "Feature", "geometry": geom, "properties": props})
+    if not feats:
+        return None
+    return json.dumps(
+        {"type": "FeatureCollection", "features": feats}, sort_keys=True
+    ).encode()
