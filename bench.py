@@ -5,10 +5,11 @@
  "scaling": {"throughput_8": r8, "throughput_32": r32, "efficiency": e}}
 
 Headline queries run at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on local[$SPARK_GRAFT_CPUS]. The scaling section evidences the north rule's
-N→4N criterion in-sandbox: the flagship spatial join runs in subprocesses at
-local[4] and local[16], each CPU-pinned (taskset) to exactly that many CPUs
-on identical input; efficiency = (thr_4N/thr_N)/4. Pinning is required for
+on local[N], N = the CPUs this process may run on ($SPARK_GRAFT_CPUS
+overrides; ``session.local_cores``). The scaling section evidences the
+north rule's N→4N criterion in-sandbox: the flagship spatial join runs in
+subprocesses at local[4] and local[16], each CPU-pinned (taskset) to
+exactly that many CPUs on identical input; efficiency = (thr_4N/thr_N)/4. Pinning is required for
 an honest comparison because pandas-UDF stages run N JVM threads + N Python
 workers (up to 2N CPUs unpinned), exactly like executor-local Python workers
 share executor cores on a real cluster.
@@ -24,8 +25,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from grandine_spark.session import local_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = local_cores()
 SF = float(SF_DIR.rstrip("/").split("sf")[-1]) if "sf" in SF_DIR else 0.1
 # sized so the flagship join runs tens of seconds at 8 cores — large enough
 # that steady-state throughput, not fixed overhead, is what gets measured

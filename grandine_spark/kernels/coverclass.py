@@ -53,15 +53,11 @@ from __future__ import annotations
 
 import numpy as np
 
+from .tilemath import tile_edges
+
 # (S*T) cells per vectorized block — bounds the transient boolean matrix
 # for huge rings covered by very many tiles (block rows, never give up)
 _BLOCK = 4_000_000
-
-
-def _tile_lat(yy: np.ndarray, n: float) -> np.ndarray:
-    """Vectorized tile-row → latitude of the row's top edge
-    (lib/tile/tile.go:26-31)."""
-    return np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * yy / n))))
 
 
 def _clear_cells(a, b, zs, xs, ys, rdp: bool = False):
@@ -101,12 +97,7 @@ def _clear_cells(a, b, zs, xs, ys, rdp: bool = False):
         extra = res if rdp else 0.0
         for s in range(0, len(zm), step):
             idx = zm[s : s + step]
-            xz = xs[idx].astype(np.float64)
-            yz = ys[idx].astype(np.float64)
-            w = xz / n * 360.0 - 180.0
-            e = (xz + 1.0) / n * 360.0 - 180.0
-            nn = _tile_lat(yz, n)
-            ss = _tile_lat(yz + 1.0, n)
+            w, e, nn, ss = tile_edges(xs[idx], ys[idx], n)
             eps_x = 2.0 * res + extra
             eps_y = 2.0 * (nn - ss) / 4096.0 + extra
             bbox_ov = (

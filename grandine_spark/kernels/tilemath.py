@@ -21,6 +21,8 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+
 WGS84_LAT_MAX = 85.0511287  # lib/tile/tile.go:10-13
 
 
@@ -53,6 +55,16 @@ def tile_bbox(x: int, y: int, z: int) -> tuple[float, float, float, float]:
     nw_lon, nw_lat = tile_nw(x, y, z)
     se_lon, se_lat = tile_nw(x + 1, y + 1, z)
     return (nw_lon, se_lat, se_lon, nw_lat)
+
+
+def tile_edges(xs, ys, n: float):
+    """Vectorized ID.BBox (lib/tile/tile.go:19-31): cells ``(xs, ys)`` of a
+    grid ``n`` cells wide → float64 (west, east, north, south) degrees."""
+    x, y = np.asarray(xs, np.float64), np.asarray(ys, np.float64)
+    north, south = (
+        np.degrees(np.arctan(np.sinh(np.pi * (1.0 - 2.0 * yy / n)))) for yy in (y, y + 1.0)
+    )
+    return x / n * 360.0 - 180.0, (x + 1.0) / n * 360.0 - 180.0, north, south
 
 
 def coverage(

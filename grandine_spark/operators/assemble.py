@@ -28,23 +28,12 @@ from pyspark.sql import types as T
 
 from ..kernels.geometry import fix_winding
 from ..kernels.wkb import geom_columns, open_ring
+from ..session import pin_width
 from ..sources import FEATURE_SCHEMA, GEOM_FIELDS
 
 ASSEMBLED_SCHEMA = T.StructType(
     [FEATURE_SCHEMA["feature_id"], *GEOM_FIELDS, FEATURE_SCHEMA["props"]]
 )
-
-
-def _pin_width(df: DataFrame, *keys: str) -> DataFrame:
-    """Pin the shuffle width of a group feeding a Python finalize stage.
-    AQE coalesces post-shuffle partitions by BYTE size; assembly groups are
-    compact on the wire but cost Python per row (winding, WKB encode), so
-    byte-based coalescing starves the mapInPandas stage of parallelism
-    (measured 3/32 cores on the analogous tile-encode shuffle — PLANS.md).
-    An explicit keyed repartition compiles to the same single exchange,
-    tagged REPARTITION_BY_NUM, which AQE must leave at full width."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    return df.repartition(n, *keys)
 
 
 def resolve_way_coords(ways: DataFrame, nodes: DataFrame) -> DataFrame:
@@ -64,7 +53,7 @@ def resolve_way_coords(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     )
     resolved = member.join(nodes, "node_id", "inner")
     return (
-        _pin_width(resolved, "way_id")
+        pin_width(resolved, "way_id")
         .groupBy("way_id")
         .agg(
             F.first("props").alias("props"),
@@ -127,7 +116,7 @@ def assemble_multipolygons(
         F.col("m.roles").alias("role"),
     )
     resolved = member.join(resolve_way_coords(ways, nodes).drop("props"), "way_id")
-    grouped = _pin_width(resolved, "rel_id").groupBy("rel_id").agg(
+    grouped = pin_width(resolved, "rel_id").groupBy("rel_id").agg(
         F.first("props").alias("props"),
         F.array_sort(
             F.collect_list(F.struct(F.col("role"), F.col("way_id"), F.col("coords")))

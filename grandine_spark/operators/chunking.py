@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import shuffle_width
+
 # default whitespace tokenizer shared with functions/text.py token counts
 _WS = r"\s+"
 
@@ -97,9 +99,8 @@ def pack_chunks(
     tokens_col, pack_offset) where pack_offset is the chunk's first-token
     offset WITHIN its pack (= shard-stream offset mod seq_len).
 
-    ``n_shards`` defaults to the session's ``spark.sql.shuffle.partitions``
-    (falling back to ``defaultParallelism``): the packing window has
-    exactly ``n_shards`` partitions, so a small fixed default would cap
+    ``n_shards`` defaults to ``session.shuffle_width``: the packing window
+    has exactly ``n_shards`` partitions, so a small fixed default would cap
     the stage at that many tasks regardless of cluster size — at 100 TB a
     literal 8 would mean 8 WindowExec sorts over ~12 TB each. Pass an
     explicit value only when the pack-id layout itself must be
@@ -111,12 +112,7 @@ def pack_chunks(
     if seq_len <= 0:
         raise ValueError("seq_len must be positive")
     if n_shards is None:
-        try:
-            n_shards = int(
-                df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except (TypeError, ValueError):
-            n_shards = df.sparkSession.sparkContext.defaultParallelism
+        n_shards = shuffle_width(df.sparkSession)
     if n_shards <= 0:
         raise ValueError("n_shards must be positive")
     shard = (

@@ -48,6 +48,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..functions import tile_exprs as TX
 from ..kernels.geometry import EARTH_RADIUS_M
+from ..kernels.tilemath import tile_edges
 from .spatial_join import local_table
 
 MAX_HISTOGRAM_ZOOM = 10
@@ -64,13 +65,10 @@ REFINE_COLLECT_CAP = 250_000
 
 
 def _cell_geo(cx_arr: np.ndarray, cy_arr: np.ndarray, n: int):
-    """Cell edge geography for a cell list at grid width ``n`` (slippy-map
-    inverse formulas, lib/tile/tile.go:19-31) → (west, east, lat_n, lat_s,
-    cos_min, cos_max) arrays for the decomposed haversine bounds."""
-    west = cx_arr / n * 360.0 - 180.0
-    east = (cx_arr + 1) / n * 360.0 - 180.0
-    lat_n = np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * cy_arr / n))))
-    lat_s = np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * (cy_arr + 1) / n))))
+    """Cell edge geography for a cell list at grid width ``n``
+    (``tilemath.tile_edges``) → (west, east, lat_n, lat_s, cos_min,
+    cos_max) arrays for the decomposed haversine bounds."""
+    west, east, lat_n, lat_s = tile_edges(cx_arr, cy_arr, n)
     # |cos(lat)| extremes over each cell's lat range (monotone per hemisphere;
     # a cell never spans the equator unless its lat range contains 0)
     cos_n, cos_s = np.cos(np.radians(lat_n)), np.cos(np.radians(lat_s))

@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 
 from ..functions import tile_exprs as TX
 from ..kernels.mvt_batch import encode_batch
+from ..session import pin_width
 from .spatial_join import local_table
 
 TILES_SCHEMA = T.StructType(
@@ -298,21 +299,11 @@ def _grouped_tiles(
     (tile_z, tile_x, tile_y) with ``feats`` (list of feature_id,
     layer_name, wkb, props, _cc structs) and ``n_total``. ``None`` when no
     zoom has work."""
-    n_shuffle = int(
-        features.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    if features.rdd.getNumPartitions() < n_shuffle:
-        # The classifier adds real Python work to the PRE-exchange stage,
-        # whose width is otherwise the feature scan's input-partition count
-        # (a small feature table coalesces to a handful of tasks under
-        # file-based splitting). Repartitioning the FEATURE rows — cheap,
-        # proportional to features, not coverage — runs explode+classify at
-        # full width: the one coverage leg explodes every zoom downstream of
-        # this one exchange, so its partitions are the coverage's.
-        # Conditional on the input actually being narrow: a big scan is
-        # already wide, and forcing it through n_shuffle partitions would
-        # ADD a shuffle at scale for nothing.
-        features = features.repartition(n_shuffle)
+    # Pinning the FEATURE rows (far fewer than coverage rows) runs the
+    # coverage explode and the classifier's Python at the shuffle width,
+    # not the scan's, and keeps each feature's cells contiguous in one
+    # partition (classify_rows batches runs of them).
+    features = pin_width(features)
     all_cov = _routed_coverage(features, zooms, anchor_cells)
     if all_cov is None:
         return None
@@ -351,20 +342,6 @@ def _grouped_tiles(
     # WKB bytes; classify_rows leaves null runs at code 0 (the always-safe
     # exact path).
     gated_wkb = F.when(F.col("_nc") >= classify_min_cells, F.col("wkb"))
-    # Cap the UDF stage at n_shuffle tasks: each pandas-UDF TASK pays
-    # ~0.2 s of fixed CPU regardless of rows, even on a reused worker
-    # (measured: a trivial pandas UDF over 320 tasks = 1.9s wall vs 0.3s
-    # over 32). The cause is PySpark 4.1's worker_util.setup_spark_files,
-    # which calls importlib.invalidate_caches() on every task; on CPython
-    # 3.11 that makes each of the worker's 16 zipimporters re-read its
-    # archive's directory (13 over pyspark.zip, 1,328 entries; 2 over the
-    # spark-core jar, 5,359 entries). The one coverage leg has the
-    # feature scan's partition count, which the repartition above leaves
-    # as is when the scan is already wider than n_shuffle (a no-op
-    # otherwise). coalesce() concatenates whole parent partitions with NO
-    # shuffle, so a feature's cells stay contiguous (the property
-    # classify_rows' run-batching needs).
-    all_cov = all_cov.coalesce(n_shuffle)
     all_cov = all_cov.withColumn(
         "_cc", cls(F.col("tile_z"), F.col("tile_x"), F.col("tile_y"), gated_wkb)
     )
@@ -383,15 +360,9 @@ def _grouped_tiles(
         .drop("_nc")
     )
 
-    # Pin the tile shuffle's partition count (REPARTITION_BY_NUM): AQE
-    # coalesces post-shuffle partitions by BYTE size, and tile groups are
-    # tiny on the wire but expensive in Python — measured 3 of 32 cores
-    # encoding (the whole encode stage at ~10% parallelism) because ~3 MB
-    # of shuffle bytes coalesced into 3 partitions. The explicit hash
-    # repartition on the group keys satisfies both the cap-window's and the
-    # groupBy's required distribution, so the plan still has exactly ONE
-    # exchange on the coverage rows — now at full width.
-    all_cov = all_cov.repartition(n_shuffle, "tile_z", "tile_x", "tile_y")
+    # one exchange on the coverage rows, at full width: its hash keys
+    # satisfy both the cap window's and the groupBy's distribution
+    all_cov = pin_width(all_cov, "tile_z", "tile_x", "tile_y")
 
     if max_features_per_tile is not None:
         # hot-tile cap: a tile group must fit ONE task (MVT dictionaries are

@@ -1,13 +1,16 @@
-"""SparkSession factory with the engine's standard configuration.
+"""SparkSession factory with the engine's standard configuration, and the
+one place that decides how wide a job runs.
 
 Local mode stands in for a multi-executor cluster (the sandbox has no real
 cluster); partitioning/shuffle settings are chosen as they would be on a
 1000-executor deployment:
 
+- master: the one ``spark-submit --master`` set, else
+  ``local[<usable CPUs>]`` (:func:`local_cores`);
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing);
 - Arrow on (all geometry kernels run as vectorized pandas UDFs);
-- shuffle partitions sized to cores (overridable; on a real cluster this
-  would be ~2-3x total executor cores or left to AQE);
+- shuffle width ``max(defaultParallelism, 8)`` unless given, read back
+  by every operator through :func:`shuffle_width` / :func:`pin_width`;
 - broadcast threshold left at default — the polygon side of the spatial join
   is broadcast explicitly with ``F.broadcast`` when small;
 - the directory (or zip) this package was imported from is appended to the
@@ -20,7 +23,27 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark import SparkConf, SparkContext
+from pyspark.sql import DataFrame, SparkSession
+
+
+def local_cores() -> int:
+    """N of the ``local[N]`` master: ``SPARK_GRAFT_CPUS``, else the CPUs
+    this process may run on (its affinity mask, which ``taskset`` or a
+    container narrows below ``os.cpu_count()``)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def _launcher_master() -> str | None:
+    """The master ``spark-submit`` gave the JVM it hands this driver
+    through ``PYSPARK_GATEWAY_PORT``; ``None`` without a launcher or for
+    its implicit ``local[*]``."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    SparkContext._ensure_initialized()
+    master = SparkConf().get("spark.master", "local[*]")
+    return None if master == "local[*]" else master
 
 
 def get_spark(
@@ -29,16 +52,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cores, 8)
-
+    """``cores`` is N of ``local[N]`` when no launcher set a master."""
+    builder = SparkSession.builder.appName(app_name)
+    if _launcher_master() is None:
+        builder = builder.master(f"local[{cores or local_cores()}]")
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
+        builder.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # moderate Arrow batch default: the session serves BOTH ~24-byte PIP
@@ -62,8 +81,29 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    width = shuffle_partitions or max(spark.sparkContext.defaultParallelism, 8)
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
     _add_worker_path(spark.sparkContext)
     return spark
+
+
+def shuffle_width(spark: SparkSession) -> int:
+    """The width :func:`get_spark` set: every stage an operator sizes."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def pin_width(df: DataFrame, *keys: str) -> DataFrame:
+    """``df`` in exactly :func:`shuffle_width` partitions, hashed on
+    ``keys`` (round-robin without). A stage feeding Python runs at that
+    width, no wider: each Python task pays a fixed start-up cost at the
+    UDF boundary (~0.2 s CPU on a reused worker — PySpark 4.1 calls
+    ``importlib.invalidate_caches()`` per task, so every zipimporter
+    re-reads its archive; a trivial UDF took 1.9 s over 320 tasks, 0.3 s
+    over 32). And no narrower: AQE coalesces post-shuffle partitions by
+    BYTES, and groups small on the wire but costly in Python (tiles,
+    ways) fell to 3 of 32 cores. The exchange is REPARTITION_BY_NUM, which
+    AQE leaves whole; keyed, it is also the following groupBy's."""
+    return df.repartition(shuffle_width(df.sparkSession), *keys)
 
 
 def _add_worker_path(sc) -> None:

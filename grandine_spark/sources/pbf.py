@@ -365,6 +365,7 @@ def features_from_pbf(spark, path: str):
     assemble_multipolygons over their way members."""
     from pyspark.sql import functions as F
 
+    from ..functions.tile_exprs import layer_route
     from ..operators.assemble import assemble_multipolygons, assemble_ways
     from . import FEATURE_SCHEMA
 
@@ -385,7 +386,7 @@ def features_from_pbf(spark, path: str):
 
     out = feats_w.unionByName(feats_r)
     derived = {
-        "layer": F.coalesce(F.col("props").getItem("@layer"), F.lit("default")),
+        "layer": layer_route(F.col("props")),
         "zoom_min": F.lit(None),
         "zoom_max": F.lit(None),
     }

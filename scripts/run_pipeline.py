@@ -11,7 +11,9 @@ Cluster usage (north rule: two cluster sizes, N and 4N executors):
       --pages s3a://bucket/pages_iceberg --features s3a://bucket/features \
       --warehouse s3a://bucket/warehouse --zooms 2,7,14
 
-Sandbox usage (local[N] stands in for N executors):
+The master is the one spark-submit was given. Without one (plain
+``python``), local[N] stands in for N executors: N = --cores, else the CPUs
+this process may run on ($SPARK_GRAFT_CPUS overrides):
 
     python scripts/run_pipeline.py --n-pages 200000 --cores 32 \
       --warehouse /tmp/gs_warehouse
@@ -41,7 +43,9 @@ def main():
     ap.add_argument("--zooms", default="2,7,14")
     ap.add_argument("--join-zoom", type=int, default=7)
     ap.add_argument("--n-pages", type=int, default=100_000)
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", 32)))
+    ap.add_argument("--cores", type=int, default=None,
+                    help="N of a local[N] master when the launcher set no "
+                         "master (default: the launcher or the host decides)")
     ap.add_argument("--clean-text", action="store_true",
                     help="run the corpus-hygiene stage (exact dedup + "
                          "repetition filter) before geocoding")

@@ -162,3 +162,48 @@ def test_foreign_cwd_udfs_import_engine_one_worker_pool(tmp_path):
     assert out["join"] > 0 and out["same"], out
     assert out["tiles"] > 0, out
     assert out["daemons"] == 1, out
+
+
+_MASTER_SCRIPT = r"""
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from grandine_spark.session import get_spark
+
+spark = get_spark("launcher-master", cores=3)
+print(json.dumps({"master": spark.sparkContext.master,
+                  "width": int(spark.conf.get("spark.sql.shuffle.partitions"))}))
+spark.stop()
+"""
+
+
+@pytest.mark.skipif(
+    not os.path.exists(SPARK_SUBMIT), reason="spark-submit not on this image"
+)
+def test_spark_submit_master_wins_over_cores(tmp_path):
+    """The launcher decides how wide a submitted job runs: ``--master
+    local[2]`` stays local[2] though the script asks for ``cores=3``
+    (``cores`` sizes only the master of a driver nothing launched), and
+    the shuffle width follows that master (max(2, 8))."""
+    script = tmp_path / "job.py"
+    script.write_text(_MASTER_SCRIPT)
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g", PYSPARK_PYTHON=sys.executable,
+               PYSPARK_DRIVER_PYTHON=sys.executable)
+    proc = subprocess.run(
+        [SPARK_SUBMIT, "--master", "local[2]", str(script), REPO],
+        capture_output=True, text=True, timeout=300, env=env, cwd=tmp_path,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out == {"master": "local[2]", "width": 8}, out
+
+
+def test_local_cores_default_is_usable_cpus(monkeypatch):
+    """Without ``SPARK_GRAFT_CPUS`` the local master's core count is the
+    CPUs this process may run on, not a fixed figure; the variable still
+    overrides it."""
+    from grandine_spark.session import local_cores
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert local_cores() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    assert local_cores() == 5

@@ -129,6 +129,23 @@ def test_build_tiles_sha_matches_pure_python(spark):
     assert len(got) > 0 and got == want
 
 
+def test_build_tiles_plans_without_running_upstream_exchanges(spark):
+    """Planning ``build_tiles`` over a feature frame whose plan holds an
+    exchange launches no Spark job (a partition-count probe would run the
+    exchange at plan time, and the tile job would run it again), and its
+    tiles equal the plain frame's byte for byte."""
+    feats = synth.features(spark, n_polygons=25, n_roads=15, n_pois=25)
+    sc = spark.sparkContext
+    sc.setJobGroup("tiles-plan-no-job", "plan build_tiles")
+    try:
+        shuffled = build_tiles(feats.repartition(3, "feature_id"), [2, 6])
+        assert sc.statusTracker().getJobIdsForGroup("tiles-plan-no-job") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    got = _tmap(shuffled)
+    assert got and got == _tmap(build_tiles(feats, [2, 6]))
+
+
 def test_build_tiles_null_prop_value(spark):
     """A null map value in props must not crash the encoder's dictionary-
     encoded props path: every tile equals the scalar encode_tile of the same
