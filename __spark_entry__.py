@@ -14,6 +14,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from grandine_spark.session import local_frame
+
 # --- shared derivations ------------------------------------------------------
 # points from documents: rational arithmetic only → bit-identical across engines
 _POINTS_SQL = """
@@ -50,7 +52,7 @@ def _diamond_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         rad = 5.0 + (k % 4) * 2.0
         ring = [[cx + rad, cy], [cx, cy + rad], [cx - rad, cy], [cx, cy - rad]]
         rows.append((k, "admin", *geom_columns(3, [ring]), 0, 99, {"@layer": "admin"}))
-    return spark.createDataFrame(rows, FEATURE_SCHEMA)
+    return local_frame(spark, rows, FEATURE_SCHEMA)
 
 
 _TILE_X_SQL = (
@@ -165,7 +167,7 @@ def _zigzag_line_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         y0 = float((k * 29) % 150 - 75)
         line = [[x0, y0], [x0 + 3.0, y0 + 2.0], [x0 + 6.0, y0]]
         rows.append((k, "roads", *geom_columns(2, line), 0, 99, {"@layer": "roads"}))
-    return spark.createDataFrame(rows, FEATURE_SCHEMA)
+    return local_frame(spark, rows, FEATURE_SCHEMA)
 
 
 def q_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1216,7 +1218,7 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair sharing a term, score rounded to 6 dp."""
     from grandine_spark.operators.ranking import bm25_scores
 
-    qdf = spark.createDataFrame(_BM25_QUERIES, "q_id long, query string")
+    qdf = local_frame(spark, _BM25_QUERIES, "q_id long, query string")
     return bm25_scores(_docs(spark, sf_dir), qdf).select(
         "q_id", "doc_id", "score"
     )
@@ -1609,8 +1611,8 @@ def q_spaten_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ft["props"]["@layer"],
             )
         )
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "feature_id long, geom_type int, minx double, miny double, "
         "maxx double, maxy double, area double, layer string",
     )
@@ -1669,8 +1671,8 @@ def q_geojson_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ft["props"]["@layer"],
                 )
             )
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "feature_id long, geom_type int, minx double, miny double, "
         "maxx double, maxy double, area double, layer string",
     )
@@ -1695,7 +1697,7 @@ def q_tag_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lanes": str(k % 5),
         }
         rows.append((k, "raw", *geom_columns(3, [ring]), 0, 99, props))
-    feats = spark.createDataFrame(rows, FEATURE_SCHEMA)
+    feats = local_frame(spark, rows, FEATURE_SCHEMA)
     rules = [
         MappingRule(
             "highway", ["primary"],
@@ -2298,12 +2300,12 @@ def q_multipolygon_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
         rel_rows.append(
             (k, [k * 10, k * 10 + 1], ["outer", "inner"], {"type": "multipolygon"})
         )
-    nodes = spark.createDataFrame(node_rows, "node_id long, lon double, lat double")
-    ways = spark.createDataFrame(
-        way_rows, "way_id long, node_ids array<long>, props map<string,string>"
+    nodes = local_frame(spark, node_rows, "node_id long, lon double, lat double")
+    ways = local_frame(
+        spark, way_rows, "way_id long, node_ids array<long>, props map<string,string>"
     )
-    rels = spark.createDataFrame(
-        rel_rows,
+    rels = local_frame(
+        spark, rel_rows,
         "rel_id long, way_ids array<long>, roles array<string>, "
         "props map<string,string>",
     )
@@ -2325,8 +2327,8 @@ def q_multipolygon_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
                 round(area, 6),
             )
         )
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "rel_id long, n_rings int, minx double, miny double, "
         "maxx double, maxy double, area double",
     )

@@ -25,7 +25,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from grandine_spark.session import local_cores  # noqa: E402
+from grandine_spark.session import local_cores, local_frame  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = local_cores()
@@ -421,7 +421,8 @@ def main():
         reps=2,
     )
 
-    queries_df = spark.createDataFrame(
+    queries_df = local_frame(
+        spark,
         [(i, float((i * 67) % 340 - 170), float((i * 29) % 140 - 70)) for i in range(100)],
         "q_id int, lon double, lat double",
     )
@@ -567,7 +568,8 @@ def main():
     # df/dl joins
     from grandine_spark.operators.ranking import bm25_scores
 
-    bm25_q = spark.createDataFrame(
+    bm25_q = local_frame(
+        spark,
         [(0, "quick brown fox"), (1, "lorem ipsum dolor"),
          (2, "lazy dog jumps"), (3, "sit amet page"),
          (4, "over the lorem")],

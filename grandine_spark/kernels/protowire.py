@@ -13,6 +13,8 @@ import struct
 
 
 def _varint_slow(v: int) -> bytes:
+    if v < 0:  # an int64 below zero goes as its 64-bit two's complement
+        v += 1 << 64
     out = bytearray()
     while True:
         b = v & 0x7F
@@ -45,6 +47,11 @@ def read_varint(buf: bytes, i: int) -> tuple[int, int]:
         i += 1
         if not b & 0x80:
             return v, i
+
+
+def int64(v: int) -> int:
+    """An ``int64`` field's varint as the signed value it encodes."""
+    return v - (1 << 64) if v >> 63 else v
 
 
 def read_packed(buf: bytes) -> list[int]:

@@ -44,12 +44,11 @@ import math
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..functions import tile_exprs as TX
 from ..kernels.geometry import EARTH_RADIUS_M
 from ..kernels.tilemath import tile_edges
-from .spatial_join import local_table
+from ..session import local_frame
 
 MAX_HISTOGRAM_ZOOM = 10
 # adaptive refinement: each pass goes Δz=4 finer (16×16 subcells per
@@ -87,8 +86,8 @@ def _hist_arrays(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 def _plan_probe(qrows, k, total, cx_arr, cy_arr, cnt_arr, n):
     """Candidate cells per query over one histogram → (probe blocks, one
     ``(q_id, lon, lat, cx array, cy array, bound)`` per query in
-    ``local_table`` form, and the estimated joined-row volume = Σ per-query
-    candidate point counts)."""
+    ``session.local_frame`` form, and the estimated joined-row volume = Σ
+    per-query candidate point counts)."""
     geo = _cell_geo(cx_arr, cy_arr, n)
     probe_rows: list[tuple] = []
     est = 0
@@ -251,18 +250,14 @@ def knn(
         probe_z = nz
 
     # the probe carries the query id in its NATIVE type — hardcoding 'long'
-    # here crashed any string/decimal query-id column at createDataFrame.
-    # A StructType, not DDL: local_table splits a DDL string at its commas,
-    # and a decimal(p,s) type holds one. The probe is one Arrow table (a
-    # LocalRelation), so no second Python worker pool unpickles it.
-    qid_type = queries.schema[query_id].dataType
-    schema = StructType([
-        StructField("_qid", qid_type),
-        *(StructField(c, DoubleType()) for c in ("q_lon", "q_lat")),
-        *(StructField(c, LongType()) for c in ("p_cx", "p_cy")),
-        StructField("q_d", DoubleType()),
-    ])
-    probe = spark.createDataFrame(local_table(probe_rows, schema), schema)
+    # here crashed any string/decimal query-id column. The probe is one
+    # Arrow table (a LocalRelation), so no second Python worker pool
+    # unpickles it.
+    qid_type = queries.schema[query_id].dataType.simpleString()
+    probe = local_frame(
+        spark, probe_rows,
+        f"_qid {qid_type}, q_lon double, q_lat double, p_cx long, p_cy long, q_d double",
+    )
 
     # join key at the probe's zoom: the cached index is at zf, a coarse
     # probe (no refinement) keys on the shiftright-derived parent cells

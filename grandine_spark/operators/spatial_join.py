@@ -40,15 +40,15 @@ from functools import partial
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType, StructType
+from pyspark.sql.types import BooleanType
 
 from ..functions import tile_exprs as TX
 from ..kernels.geometry import points_in_polygon_np
 from ..kernels.wkb import from_wkb
+from ..session import local_frame
 
 DEFAULT_JOIN_ZOOM = 7
 
@@ -126,26 +126,6 @@ _DIM_DDL = (
 )
 
 
-def local_table(parts, schema) -> pa.Table:
-    """A driver-built frame as ONE Arrow table, for
-    ``spark.createDataFrame(table, schema)``, which Spark plans as a
-    ``LocalRelation``. (``createDataFrame`` over Python tuples plans a
-    ``LogicalRDD`` over a PythonRDD instead: its first action forks a second
-    Python worker pool, separate from the UDFs' pool, that lives as long as
-    the session.) ``parts`` are row blocks, each a tuple in ``schema`` column
-    order of equal-length arrays and scalars (a scalar fills its block);
-    ``schema`` is a ``StructType`` or a DDL string whose types hold no
-    comma (the column names are read off it)."""
-    if isinstance(schema, StructType):
-        names = schema.fieldNames()
-    else:
-        names = [c.split()[0] for c in schema.split(",")]
-    blocks = [np.broadcast_arrays(*p) for p in parts]
-    if not blocks:
-        return pa.table([pa.array([])] * len(names), names=names)
-    return pa.table([np.concatenate(c) for c in zip(*blocks)], names=names)
-
-
 def _cell_join(
     points, features, geom_type, hit, pad, z_lo, z_hi, max_cells,
     point_cols, feature_cols, max_dim_features, salt_threshold=None,
@@ -161,7 +141,7 @@ def _cell_join(
     ≤ ``max_cells`` cells; points probe every zoom in the dim's ``tile_z``
     column (``[z_lo]`` when the dim is empty). Geometry rides in the UDF
     closure, not in the rows. The driver-side dim is numpy columns per
-    feature, sent as one Arrow ``LocalRelation`` (:func:`local_table`). A
+    feature, sent as one Arrow ``LocalRelation`` (``session.local_frame``). A
     polygon's cells are classified in ONE ``coverclass.classify_poly_cells``
     call: code-2 cells (provably outside) are masked out; code-1 cells
     (provably inside) are ``full_inside``, whose points skip ray-casting
@@ -233,7 +213,7 @@ def _cell_join(
             code[(xs == 0) | (ys == 0) | (xs == edge) | (ys == edge)] = 0
         keep = code != 2
         parts.append((z, xs[keep], ys[keep], fid, *bb, code[keep] == 1))
-    dim = local_table(parts, _DIM_DDL)
+    dim = local_frame(points.sparkSession, parts, _DIM_DDL)
     sentinel = min(geom_map, default=0) - 1  # fid the UDF never resolves
     refine = _refine(hit, geom_map.get)
     fid_col = F.when(F.col("full_inside"), F.lit(sentinel)).otherwise(
@@ -241,12 +221,8 @@ def _cell_join(
     )
     # one log/tan per point at the finest zoom in use; coarser zooms are
     # shiftright-derived (slippy cells nest exactly)
-    zooms = sorted(set(dim["tile_z"].to_pylist())) or [z_lo]
-    joined = TX.explode_point_cells(points, zooms).join(
-        F.broadcast(points.sparkSession.createDataFrame(dim, _DIM_DDL)),
-        keys,
-        "inner",
-    )
+    zooms = sorted({p[0] for p in parts}) or [z_lo]
+    joined = TX.explode_point_cells(points, zooms).join(F.broadcast(dim), keys, "inner")
     return bbox_then_refine(
         joined,
         F.col("full_inside") | refine(F.col("lon"), F.col("lat"), fid_col),

@@ -37,8 +37,7 @@ from pyspark.sql import types as T
 
 from ..functions import tile_exprs as TX
 from ..kernels.mvt_batch import encode_batch
-from ..session import pin_width
-from .spatial_join import local_table
+from ..session import local_frame, pin_width
 
 TILES_SCHEMA = T.StructType(
     [
@@ -275,9 +274,7 @@ def build_tiles(
         anchor_cells, classify_min_cells,
     )
     if grouped is None:
-        return features.sparkSession.createDataFrame(
-            local_table([], TILES_SCHEMA), TILES_SCHEMA
-        )
+        return local_frame(features.sparkSession, [], TILES_SCHEMA)
 
     def encode_batches(it):
         for batch in it:
@@ -504,11 +501,11 @@ def incremental_tiles(
 
 def _cell_frame(spark, cells: set, ddl: str) -> DataFrame:
     """A set of int tuples (one per cell, in ``ddl`` column order) as a
-    ``LocalRelation`` (:func:`~.spatial_join.local_table`)."""
+    sorted ``LocalRelation``."""
     import numpy as np
 
     cols = np.array(sorted(cells), np.int64).reshape(-1, ddl.count(",") + 1).T
-    return spark.createDataFrame(local_table([tuple(cols)], ddl), ddl)
+    return local_frame(spark, [tuple(cols)], ddl)
 
 
 def incremental_tiles_delta(

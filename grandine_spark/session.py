@@ -16,15 +16,21 @@ cluster); partitioning/shuffle settings are chosen as they would be on a
 - the directory (or zip) this package was imported from is appended to the
   Python workers' ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``), so the
   engine's UDFs import on the workers even when the driver found the
-  package only through ``sys.path`` from another working directory.
+  package only through ``sys.path`` from another working directory;
+- driver data becomes a frame only through :func:`local_frame` (one Arrow
+  ``LocalRelation``), so no PythonRDD starts a second worker pool.
 """
 
 from __future__ import annotations
 
 import os
 
+import numpy as np
+import pyarrow as pa
 from pyspark import SparkConf, SparkContext
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def local_cores() -> int:
@@ -104,6 +110,35 @@ def pin_width(df: DataFrame, *keys: str) -> DataFrame:
     ways) fell to 3 of 32 cores. The exchange is REPARTITION_BY_NUM, which
     AQE leaves whole; keyed, it is also the following groupBy's."""
     return df.repartition(shuffle_width(df.sparkSession), *keys)
+
+
+def local_frame(spark: SparkSession, parts, schema) -> DataFrame:
+    """Driver data as a frame: ONE Arrow table, which Spark plans as a
+    ``LocalRelation`` and scans with no Python worker. (A frame made from
+    Python rows plans a ``LogicalRDD`` over a PythonRDD, whose first action
+    forks a second worker pool for the rest of the session.) ``parts`` are
+    row blocks, each a tuple in ``schema`` column order: a numpy array is a
+    column of its block, any other value fills it, so a Python row is a
+    block of one. ``schema`` is a ``StructType`` or a DDL string that Spark
+    parses; each column is built as its Arrow type, so maps, arrays, binary
+    and ints come out as declared."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = [[] for _ in arrow]
+    for part in parts:
+        n = max((len(v) for v in part if isinstance(v, np.ndarray)), default=1)
+        for col, v in zip(cols, part):
+            num = isinstance(v, (int, float, np.number))
+            col.append(v if isinstance(v, np.ndarray) else np.full(n, v) if num else [v] * n)
+
+    def column(blocks, typ):
+        if blocks and all(isinstance(b, np.ndarray) for b in blocks):
+            return pa.array(np.concatenate(blocks), typ)
+        return pa.array([v for b in blocks for v in b], typ)
+
+    columns = [column(c, f.type) for c, f in zip(cols, arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)
 
 
 def _add_worker_path(sc) -> None:

@@ -38,7 +38,7 @@ def read_spaten(spark: SparkSession, path: str) -> DataFrame:
     """Distributed Spaten scan: one task per file, blocks decoded executor-
     side inside the Arrow batch (same file-level parallelism as the WARC
     reader). The old form read+decoded the whole file on the driver and
-    shipped a Python feature list through createDataFrame — a driver OOM
+    shipped a Python feature list to Spark as one frame — a driver OOM
     at exactly the scale the write side was built to avoid."""
     from collections.abc import Iterator
 

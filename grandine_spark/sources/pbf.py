@@ -10,13 +10,22 @@ relations) and replaces the in-memory ElemCache with shuffle joins
 decodable (osmformat.proto contract), so blobs are the parallel unit and no
 single task ever holds the node cache.
 
+Decode shape: the driver reads only the blob headers and sends the
+(offset, size) spans as one local frame (``session.local_frame``); one
+``mapInArrow`` task seeks and decodes each blob once, into one row of
+three ``array<struct>`` columns (nodes, ways, relations); that frame is
+cached, and each of the three DataFrames inlines one column of it. A file
+cut short fails on the driver, before any task (:func:`iter_blob_spans`).
+
 Format (vendored protos, cmd/spatialize/vendor/.../OSMPBF/):
 - fileformat.proto: [4-byte BE len][BlobHeader{type=1,datasize=3}]
   [Blob{raw=1,raw_size=2,zlib_data=3}] repeated;
 - osmformat.proto: PrimitiveBlock{stringtable=1, primitivegroup=2,
   granularity=17, lat_offset=19, lon_offset=20}; PrimitiveGroup{nodes=1,
   dense=2, ways=3, relations=4}; DenseNodes delta-coded parallel arrays
-  with 0-delimited keys_vals; Way.refs / Relation.memids delta-coded.
+  with 0-delimited keys_vals; Way.refs / Relation.memids delta-coded;
+  Way.id, Relation.id and the offsets are int64 (two's complement when
+  negative).
 - coordinate formula: deg = (offset + granularity * unit) * 1e-9.
 
 No protobuf / osmium dependency: the decoder is ~150 lines over the same
@@ -25,10 +34,17 @@ minimal wire helpers the MVT encoder uses (kernels/protowire.py).
 
 from __future__ import annotations
 
+import os
 import struct
 import zlib
 
+import pyarrow as pa
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
+
 from ..kernels.protowire import (
+    int64,
     iter_fields,
     ld,
     packed_varints as _packed,
@@ -38,6 +54,7 @@ from ..kernels.protowire import (
     varint,
     zigzag64 as _zigzag64,
 )
+from ..session import local_frame
 
 _MEMBER_TYPES = {0: "node", 1: "way", 2: "relation"}
 
@@ -60,20 +77,29 @@ def _delta_decode(vals: list[int]) -> list[int]:
 def iter_blob_spans(path: str):
     """Light driver-side scan: yields (blob_type, offset, size) for every
     blob WITHOUT decompressing payloads — only headers are read, so indexing
-    a multi-GB planet file is IO-bound on a few KB per blob."""
+    a multi-GB planet file is IO-bound on a few KB per blob. A file cut
+    inside a length prefix, a header or a blob's data raises ValueError."""
     with open(path, "rb") as f:
+        end = os.fstat(f.fileno()).st_size
         while True:
+            at = f.tell()
             lenbuf = f.read(4)
-            if len(lenbuf) < 4:
+            if not lenbuf:
                 return
+            if len(lenbuf) < 4:
+                raise ValueError(f"{path}: truncated blob length prefix at byte {at}")
             (hlen,) = struct.unpack(">I", lenbuf)
             header = f.read(hlen)
+            if len(header) < hlen:
+                raise ValueError(f"{path}: truncated blob header at byte {at + 4}")
             btype, datasize = None, 0
             for field, _, v in iter_fields(header):
                 if field == 1:
                     btype = v.decode()
                 elif field == 3:
                     datasize = v
+            if f.tell() + datasize > end:
+                raise ValueError(f"{path}: blob at byte {f.tell()} runs past the end")
             yield btype, f.tell(), datasize
             f.seek(datasize, 1)
 
@@ -112,9 +138,9 @@ def decode_primitive_block(data: bytes):
         elif field == 17:
             granularity = v
         elif field == 19:
-            lat_off = v
+            lat_off = int64(v)
         elif field == 20:
-            lon_off = v
+            lon_off = int64(v)
 
     def deg(off: int, unit: int) -> float:
         return 1e-9 * (off + granularity * unit)
@@ -163,7 +189,7 @@ def decode_primitive_block(data: bytes):
                 wid, keys, vals, refs = 0, [], [], []
                 for f2, _, u in iter_fields(v):
                     if f2 == 1:
-                        wid = u
+                        wid = int64(u)
                     elif f2 == 2:
                         keys = read_packed(u)
                     elif f2 == 3:
@@ -175,7 +201,7 @@ def decode_primitive_block(data: bytes):
                 rid, keys, vals, roles, memids, types = 0, [], [], [], [], []
                 for f2, _, u in iter_fields(v):
                     if f2 == 1:
-                        rid = u
+                        rid = int64(u)
                     elif f2 == 2:
                         keys = read_packed(u)
                     elif f2 == 3:
@@ -206,6 +232,13 @@ REL_SCHEMA = (
 )
 
 
+# one decoded blob: its nodes, ways and relations as one row
+_BLOCK_DDL = (
+    f"nodes array<struct<{NODE_SCHEMA}>>, ways array<struct<{WAY_SCHEMA}>>, "
+    f"rels array<struct<{REL_SCHEMA}>>"
+)
+
+
 def read_pbf(spark, path: str):
     """path → (nodes_df, ways_df, relations_df).
 
@@ -216,18 +249,23 @@ def read_pbf(spark, path: str):
     spans = [
         (off, size) for btype, off, size in iter_blob_spans(path) if btype == "OSMData"
     ]
-    sc = spark.sparkContext
-    n_parts = max(1, min(len(spans), sc.defaultParallelism))
+    arrow = to_arrow_schema(StructType.fromDDL(_BLOCK_DDL))
 
-    def decode_partition(it):
-        for off, size in it:
-            yield decode_primitive_block(_read_blob_payload(path, off, size))
+    def decode(batches):
+        for batch in batches:
+            for off, size in zip(*batch.to_pydict().values()):
+                block = decode_primitive_block(_read_blob_payload(path, off, size))
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array([rows], f.type) for rows, f in zip(block, arrow)],
+                    schema=arrow,
+                )
 
-    blocks = sc.parallelize(spans, n_parts).mapPartitions(decode_partition).cache()
-    nodes = spark.createDataFrame(blocks.flatMap(lambda b: b[0]), NODE_SCHEMA)
-    ways = spark.createDataFrame(blocks.flatMap(lambda b: b[1]), WAY_SCHEMA)
-    rels = spark.createDataFrame(blocks.flatMap(lambda b: b[2]), REL_SCHEMA)
-    return nodes, ways, rels
+    blocks = (
+        local_frame(spark, spans, "blob_offset long, blob_size long")
+        .mapInArrow(decode, _BLOCK_DDL)
+        .cache()
+    )
+    return tuple(blocks.select(F.inline(c)) for c in ("nodes", "ways", "rels"))
 
 
 # --- encode side (fixture/sink support) ---------------------------------------
@@ -332,8 +370,6 @@ def write_pbf(
         return ld(4, body)
 
     def file_blob(btype: str, payload: bytes) -> bytes:
-        import struct
-
         if compress:
             blob = (
                 tag(2, 0) + varint(len(payload)) + ld(3, zlib.compress(payload))
@@ -363,8 +399,6 @@ def features_from_pbf(spark, path: str):
     zoom gates defaulted open). Ways become lines/areas via assemble_ways;
     relations tagged type=multipolygon become polygons-with-holes via
     assemble_multipolygons over their way members."""
-    from pyspark.sql import functions as F
-
     from ..functions.tile_exprs import layer_route
     from ..operators.assemble import assemble_multipolygons, assemble_ways
     from . import FEATURE_SCHEMA

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernels.wkb import geom_columns
+from ..session import local_frame
 from . import FEATURE_SCHEMA
 
 N_CITIES = 20
@@ -193,4 +194,4 @@ def _feature_rows(n_polygons: int = 200, n_roads: int = 100, n_pois: int = 200):
 
 
 def features(spark: SparkSession, **kw) -> DataFrame:
-    return spark.createDataFrame(_feature_rows(**kw), FEATURE_SCHEMA)
+    return local_frame(spark, _feature_rows(**kw), FEATURE_SCHEMA)

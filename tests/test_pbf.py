@@ -337,3 +337,49 @@ def test_pbf_write_read_roundtrip_property(rows):
     for i, lon, lat in rows:
         glon, glat = got[i]
         assert abs(glon - lon) <= 5.1e-8 and abs(glat - lat) <= 5.1e-8
+
+
+def test_varint_encodes_negative_int64_as_twos_complement():
+    """A negative int64 is its 64-bit two's complement on the wire: ten
+    bytes, as protobuf writes it (the shift loop never ended on one)."""
+    from grandine_spark.kernels.protowire import int64, read_varint
+
+    assert varint(-1) == b"\xff" * 9 + b"\x01"
+    for v in (-1, -5, -(1 << 63), (1 << 63) - 1, 0, 300):
+        assert int64(read_varint(varint(v), 0)[0]) == v
+
+
+def test_negative_way_and_relation_ids_roundtrip(spark, tmp_path):
+    """Way.id and Relation.id are int64: negative ids (osmium and JOSM
+    write them) survive write_pbf → read_pbf instead of decoding as
+    2^64 − n."""
+    from grandine_spark.sources.pbf import write_pbf
+
+    path = str(tmp_path / "neg.osm.pbf")
+    nodes = [(-1, 10.0, 50.0, {}), (-2, 10.1, 50.0, {}), (-3, 10.1, 50.1, {})]
+    write_pbf(path, nodes, ways=[(-5, [-1, -2, -3, -1], {"building": "yes"})],
+              relations=[(-7, [-5], ["way"], ["outer"], {"type": "multipolygon"})])
+    n, w, r = read_pbf(spark, path)
+    assert sorted(x.node_id for x in n.collect()) == [-3, -2, -1]
+    assert [(x.way_id, list(x.node_ids)) for x in w.collect()] == [(-5, [-1, -2, -3, -1])]
+    assert [(x.rel_id, list(x.member_ids)) for x in r.collect()] == [(-7, [-5])]
+
+
+@pytest.mark.parametrize("cut", ["prefix", "header", "data"])
+def test_truncated_pbf_raises_on_the_driver(spark, tmp_path, cut):
+    """A file cut inside the third blob's length prefix, its header or its
+    data is an error on the driver, before any task, not a shorter valid
+    file (the prefix cut once indexed 2 of 6 blobs quietly)."""
+    from grandine_spark.sources.pbf import write_pbf
+
+    path = tmp_path / "six.osm.pbf"
+    nodes = [(i, 10.0 + i / 100, 50.0, {}) for i in range(1, 6)]
+    write_pbf(str(path), nodes, nodes_per_block=1)
+    spans = list(iter_blob_spans(str(path)))
+    assert len(spans) == 6
+    prefix = spans[1][1] + spans[1][2]  # where the third blob starts
+    at = {"prefix": prefix + 2, "header": prefix + 5, "data": spans[2][1] + 3}[cut]
+    short = tmp_path / "short.osm.pbf"
+    short.write_bytes(path.read_bytes()[:at])
+    with pytest.raises(ValueError, match="truncated|past the end"):
+        read_pbf(spark, str(short))

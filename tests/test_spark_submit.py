@@ -127,29 +127,33 @@ bcast = sorted(map(tuple, spatial_join(points, features).collect()))
 shuffle = sorted(
     map(tuple, spatial_join(points, features, max_dim_features=0).collect()))
 tiles = build_tiles(features, [2, 6]).count()
-
-jvm = spark.sparkContext._gateway.proc.pid
-daemons = 0
-for pid in filter(str.isdigit, os.listdir("/proc")):
-    try:
-        with open(f"/proc/{pid}/stat") as f:
-            ppid = int(f.read().rsplit(")", 1)[1].split()[1])
-        with open(f"/proc/{pid}/cmdline", "rb") as f:
-            cmd = f.read()
-    except OSError:
-        continue
-    daemons += ppid == jvm and b"pyspark.daemon" in cmd
 print(json.dumps({"join": len(bcast), "same": bcast == shuffle,
-                  "tiles": tiles, "daemons": daemons}))
+                  "tiles": tiles, "daemons": daemons(spark)}))
+"""
+
+# defines daemons(spark): the pyspark.daemon processes whose parent is the
+# driver's JVM, one per Python worker pool
+_DAEMONS = r"""
+def daemons(spark):
+    jvm, n = spark.sparkContext._gateway.proc.pid, 0
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                cmd = f.read()
+        except OSError:
+            continue
+        n += ppid == jvm and b"pyspark.daemon" in cmd
+    return n
 """
 
 
-@pytest.mark.skipif(
-    not os.path.isdir("/proc"), reason="counts processes through /proc"
-)
-def test_foreign_cwd_udfs_import_engine_one_worker_pool(tmp_path):
+def _run_script(tmp_path, body: str) -> dict:
+    """Run ``body`` (after the ``daemons`` helper) as a fresh driver from
+    ``tmp_path``, with the repo root as its argv[1]; its last stdout line."""
     script = tmp_path / "job.py"
-    script.write_text(_FOREIGN_CWD_SCRIPT)
+    script.write_text("import os\n" + _DAEMONS + body)
     env = dict(os.environ, SPARK_DRIVER_MEM="2g")
     env.pop("PYTHONPATH", None)
     proc = subprocess.run(
@@ -158,9 +162,50 @@ def test_foreign_cwd_udfs_import_engine_one_worker_pool(tmp_path):
         cwd=tmp_path,  # the repo root is not the workers' cwd
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+@pytest.mark.skipif(
+    not os.path.isdir("/proc"), reason="counts processes through /proc"
+)
+def test_foreign_cwd_udfs_import_engine_one_worker_pool(tmp_path):
+    out = _run_script(tmp_path, _FOREIGN_CWD_SCRIPT)
     assert out["join"] > 0 and out["same"], out
     assert out["tiles"] > 0, out
+    assert out["daemons"] == 1, out
+
+
+# The library's own driver-built frames: synthetic features and a PBF's
+# blob spans become Arrow LocalRelations, so tiling them and decoding the
+# file (mapInArrow) share the UDFs' one worker pool.
+_LIBRARY_FRAMES_SCRIPT = r"""
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from grandine_spark.operators.tiling import build_tiles
+from grandine_spark.session import get_spark
+from grandine_spark.sources import synth
+from grandine_spark.sources.pbf import features_from_pbf, write_pbf
+
+spark = get_spark("library-frames", cores=2)
+nodes = [(1, 10.0, 50.0, {}), (2, 10.1, 50.0, {}), (3, 10.1, 50.1, {}),
+         (4, 10.0, 50.1, {})]
+write_pbf("f.osm.pbf", nodes, ways=[(7, [1, 2, 3, 4, 1], {"building": "yes"}),
+                                    (8, [1, 3], {"highway": "primary"})])
+feats = synth.features(spark, n_polygons=20, n_roads=10, n_pois=10)
+tiles = build_tiles(feats, [2, 5]).count()
+pbf = features_from_pbf(spark, "f.osm.pbf").count()
+print(json.dumps({"tiles": tiles, "pbf": pbf, "daemons": daemons(spark)}))
+"""
+
+
+@pytest.mark.skipif(
+    not os.path.isdir("/proc"), reason="counts processes through /proc"
+)
+def test_library_driver_frames_one_worker_pool(tmp_path):
+    """``synth.features`` and ``read_pbf`` start no Python worker pool of
+    their own: one ``pyspark.daemon`` runs under the JVM after both."""
+    out = _run_script(tmp_path, _LIBRARY_FRAMES_SCRIPT)
+    assert out["tiles"] > 0 and out["pbf"] == 2, out
     assert out["daemons"] == 1, out
 
 
